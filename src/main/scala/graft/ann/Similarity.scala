@@ -1,8 +1,11 @@
 package graft.ann
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructField, StructType}
 
 /** Similarity search over an embedding column (array<float>).
   *
@@ -264,27 +267,6 @@ object Similarity {
       .select("probe_id", "neighbor_id", "dot", "rank")
   }
 
-  /** Lloyd k-means over the embedding column, expressed as iterated
-    * broadcast-assign + elementwise-mean aggregation — no driver-side
-    * vectors, no RNG (seeds are a deterministic hash sample). Used to
-    * learn IVF centroids; `iters` of 2-5 is plenty for routing quality.
-    *
-    * WHEN IT PAYS: learned centroids balance the inverted lists, so each
-    * probed list is SMALLER — at equal `nProbe` recall therefore drops
-    * vs a hash sample's fat lists (66 vs 73 on the sf0.01 pin), which is
-    * a cost artifact, not a quality loss. At equal SCANNED ROWS learned
-    * wins on the same fixture (89 vs 73 at ~60% scan; its cost/recall
-    * curve dominates throughout) AND balanced lists mean predictable
-    * per-probe latency at scale. Compare variants with [[ivfScanCost]]
-    * at your recall target; expect roughly `nProbe_learned ≈
-    * nProbe_sampled x (sampled scan share / balanced share)` for the
-    * same budget.
-    *
-    * Scale shape per iteration: one broadcast join (corpus x k centroids,
-    * map-side), one shuffle keyed on (centroid, dim) for the means. Run
-    * on a sample for very large corpora — routing centroids don't need
-    * the full corpus.
-    */
   /** Collect a (tiny) centroid table into literal columns for map-only
     * assignment: nLists x dim floats always fit the driver — the same
     * assumption every k-means implementation makes. Handles float/double
@@ -292,7 +274,6 @@ object Similarity {
     */
   private[ann] def centroidLiterals(centroids: DataFrame): Array[(Any, Column)] = {
     import org.apache.spark.sql.catalyst.util.ArrayData
-    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
     val elemT = centroids.schema("centroid_vec").dataType
       .asInstanceOf[ArrayType].elementType
     val cents = centroids.collect().map { r =>
@@ -312,59 +293,221 @@ object Similarity {
     cents
   }
 
+  /** One `struct(c = cosine, id)` per centroid, orderable: struct order
+    * ranks by cosine, ties to the larger id. A NaN cosine (a zero-norm
+    * vector or centroid: 0/0) ranks below every number — Spark orders
+    * NaN above +Infinity, so an unguarded zero centroid would win every
+    * argmax. When every score is NaN, all tie and the largest id wins.
+    */
+  private def scoredCentroids(cents: Array[(Any, Column)], vec: Column): Array[Column] =
+    cents.map { case (cid, cv) =>
+      struct(nanvl(cosine(vec, cv), lit(Double.NegativeInfinity)).as("c"),
+        lit(cid).as("id"))
+    }
+
   /** Argmax-cosine centroid id as a static codegen expression (ties to
     * the largest id, matching max_by over struct(cos, id)).
     */
   private def bestCentroid(cents: Array[(Any, Column)], vec: Column): Column = {
-    val scored = cents.map { case (cid, cv) =>
-      struct(cosine(vec, cv).as("c"), lit(cid).as("id"))
-    }
+    val scored = scoredCentroids(cents, vec)
     (if (scored.length == 1) scored.head
      else greatest(scored.toIndexedSeq: _*)).getField("id")
   }
 
+  /** The `nProbe` best-cosine centroid ids of `vec`, one row each
+    * (probe-side fan-out), in [[scoredCentroids]] order. */
+  private def topCentroids(cents: Array[(Any, Column)], vec: Column,
+                           nProbe: Int): Column =
+    explode(slice(reverse(sort_array(array(
+      scoredCentroids(cents, vec).toIndexedSeq: _*))), 1, nProbe).getField("id"))
+
+  /** Lloyd k-means over the embedding column — no RNG, a deterministic
+    * hash-rank seed set; the `m = 1` call of [[lloydBlocks]], returned as
+    * the local `(centroid_id, centroid_vec)` table (`centroid_id` = the
+    * seed row's id, `centroid_vec` array<double>). Used to learn IVF
+    * centroids; `iters` of 2-5 is plenty for routing quality.
+    *
+    * WHEN IT PAYS: learned centroids balance the inverted lists, so each
+    * probed list is SMALLER — at equal `nProbe` recall therefore drops
+    * vs a hash sample's fat lists (66 vs 73 on the sf0.01 pin), which is
+    * a cost artifact, not a quality loss. At equal SCANNED ROWS learned
+    * wins on the same fixture (89 vs 73 at ~60% scan; its cost/recall
+    * curve dominates throughout) AND balanced lists mean predictable
+    * per-probe latency at scale. Compare variants with [[ivfScanCost]]
+    * at your recall target; expect roughly `nProbe_learned ≈
+    * nProbe_sampled x (sampled scan share / balanced share)` for the
+    * same budget.
+    *
+    * Scale shape: one seed job plus one map-side job per iteration (see
+    * [[lloydBlocks]]). Run on a sample for very large corpora — routing
+    * centroids don't need the full corpus.
+    */
   def kmeansCentroids(
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
       k: Int,
       iters: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("__id"), col(vecCol).as("__v"))
-    // exactly-k seeds: hash-rank the (sample-sized) corpus and take the
-    // bottom k — a probability filter would yield a Binomial count, not k
-    // lineage truncation per iteration (localCheckpoint, not persist):
-    // iterative loops otherwise re-analyze a growing plan per action and
-    // can recompute partially-cached lineage — see
-    // Dedup.connectedComponents for the measured failure mode
-    var centroids = c
-      .withColumn("__rk", pmod(xxhash64(col("__id")), lit(1000000007L)))
-      .orderBy("__rk", "__id")
-      .limit(k)
-      .select(col("__id").as("centroid_id"),
-        expr("transform(__v, x -> CAST(x AS DOUBLE))").as("centroid_vec"))
-      .localCheckpoint()
+    val (ids, cents) = lloydBlocks(corpus, idCol, vecCol, 1, k, iters)
+    val dim = if (ids.isEmpty) 0 else cents.length / ids.length
+    val rows = ids.indices.map(c =>
+      Row(ids(c), cents.slice(c * dim, (c + 1) * dim).toSeq))
+    corpus.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("centroid_id", corpus.select(col(idCol)).schema.head.dataType),
+      StructField("centroid_vec", ArrayType(DoubleType, containsNull = false)))))
+  }
 
-    for (_ <- 1 to iters) {
-      // assignment is map-only (literal centroid tree, see ivfTopK) — the
-      // crossJoin + vector-keyed groupBy it replaces shuffled
-      // |corpus| x k full vectors per Lloyd iteration
-      val assigned = c.withColumn("centroid_id",
-        bestCentroid(centroidLiterals(centroids), col("__v")))
-      val means = assigned
-        .select(col("centroid_id"), posexplode(col("__v")).as(Seq("__pos", "__x")))
-        .groupBy("centroid_id", "__pos")
-        .agg(avg(col("__x")).as("__m"))
-        .groupBy("centroid_id")
-        .agg(array_sort(collect_list(struct(col("__pos"), col("__m")))).as("__pm"))
-        .select(col("centroid_id"),
-          expr("transform(__pm, p -> p.__m)").as("__new_vec"))
-      // clusters that lost every member keep their previous centroid
-      centroids = centroids.join(means, Seq("centroid_id"), "left")
-        .select(col("centroid_id"),
-          coalesce(col("__new_vec"), col("centroid_vec")).as("centroid_vec"))
-        .localCheckpoint()
+  /** Grouped Lloyd k-means: `m` independent k-means problems, one per
+    * `dim / m`-wide block of the vector column, trained together —
+    * product-quantization codebooks ([[Pq.pqCodebooksKmeans]]), and plain
+    * k-means at `m = 1` ([[kmeansCentroids]]).
+    *
+    *  - Seeds: the bottom `k` rows by `pmod(xxhash64(id), 1e9+7)`, then
+    *    id — no RNG, and exactly `k` (fewer on a smaller corpus). The
+    *    rank depends only on the id, so every block starts from the same
+    *    seed rows, and centroid `c` of every block belongs to the seed of
+    *    id rank `c` (ascending).
+    *  - Assignment: per block, argmax cosine with the NaN and tie rules
+    *    of [[scoredCentroids]] (NaN lowest, ties to the larger seed id).
+    *  - Update: the members' mean, summed in double; a centroid that
+    *    loses every member keeps its position.
+    *
+    * Scale shape: one seed job (a top-k), then ONE job per iteration —
+    * a map-side pass over the corpus against the broadcast m·k·dsub
+    * centroid array that emits per-partition (block, centroid) sums and
+    * counts, merged by `treeReduce` (the MLlib KMeans shape). The driver
+    * holds m·k·dsub doubles, the size [[centroidLiterals]] already
+    * assumes. Partial sums merge in task-completion order, so centroids
+    * repeat to the last few ulps, not bit for bit.
+    *
+    * @return the seed ids in ascending order, and the centroids
+    *         block-major: block `j`'s centroid `c` (0-based) starts at
+    *         `(j * ids.length + c) * dsub`
+    */
+  private[ann] def lloydBlocks(corpus: DataFrame, idCol: String,
+                               vecCol: String, m: Int, k: Int,
+                               iters: Int): (Array[Any], Array[Double]) = {
+    val isDouble = corpus.select(col(vecCol)).schema.head.dataType match {
+      case ArrayType(DoubleType, _) => true
+      case ArrayType(FloatType, _) => false
+      case t => throw new IllegalArgumentException(
+        s"k-means expects ARRAY<FLOAT|DOUBLE> vectors, got ${t.sql}")
     }
-    centroids
+    val byId = Ordering.fromLessThan[Row]((a, b) =>
+      a.get(0).asInstanceOf[Comparable[Any]].compareTo(b.get(0)) < 0)
+    val seeds = corpus
+      .orderBy(pmod(xxhash64(col(idCol)), lit(1000000007L)), col(idCol))
+      .limit(k)
+      .select(col(idCol), col(vecCol).cast("array<double>"))
+      .collect().sorted(byId)
+    if (seeds.isEmpty) return (Array.empty, Array.empty)
+    val kk = seeds.length
+    val dim = seeds.head.getSeq[Double](1).length
+    require(dim % m == 0, s"dim $dim must split into $m blocks")
+    val dsub = dim / m
+    // seed c's block j is block j's starting centroid c
+    var cents = new Array[Double](m * kk * dsub)
+    for (c <- 0 until kk; (x, i) <- seeds(c).getSeq[Double](1).zipWithIndex)
+      cents(((i / dsub) * kk + c) * dsub + i % dsub) = x
+
+    val sc = corpus.sparkSession.sparkContext
+    val rows = corpus.select(col(vecCol)).queryExecution.toRdd
+    for (_ <- 1 to iters) {
+      val bc = sc.broadcast(cents)
+      val (sums, counts) = rows.mapPartitions { it =>
+        val cb = bc.value
+        val cn = blockNorms(cb, cb.length / dsub, dsub)
+        val sums = new Array[Double](cb.length)
+        val counts = new Array[Long](m * kk)
+        val x = new Array[Double](dim)
+        it.foreach { r =>
+          if (!r.isNullAt(0)) {
+            val a = r.getArray(0)
+            if (a.numElements() != dim)
+              throw new IllegalArgumentException(
+                s"k-means: vector dimensions differ (${a.numElements()} vs $dim)")
+            var i = 0
+            while (i < dim) {
+              x(i) = if (isDouble) a.getDouble(i) else a.getFloat(i).toDouble
+              i += 1
+            }
+            val xn = blockNorms(x, m, dsub)
+            var j = 0
+            while (j < m) {
+              val s = j * kk + nearestCosine(x, j * dsub, xn(j), cb, cn,
+                j * kk, kk, dsub)
+              counts(s) += 1
+              var d = 0
+              while (d < dsub) {
+                sums(s * dsub + d) += x(j * dsub + d)
+                d += 1
+              }
+              j += 1
+            }
+          }
+        }
+        Iterator.single((sums, counts))
+      }.treeReduce { case ((s1, c1), (s2, c2)) =>
+        var i = 0
+        while (i < s1.length) { s1(i) += s2(i); i += 1 }
+        i = 0
+        while (i < c1.length) { c1(i) += c2(i); i += 1 }
+        (s1, c1)
+      }
+      bc.destroy()
+      val next = cents.clone()
+      for (s <- 0 until m * kk if counts(s) > 0; d <- 0 until dsub)
+        next(s * dsub + d) = sums(s * dsub + d) / counts(s)
+      cents = next
+    }
+    (seeds.map(_.get(0)), cents)
+  }
+
+  /** `sqrt(Σ v²)` of each of the first `n` `dsub`-wide blocks of `v` —
+    * the norms [[graft.functions.CosineSim]] computes, in the same
+    * order, so cosines below are bit-identical to it. */
+  private def blockNorms(v: Array[Double], n: Int,
+                         dsub: Int): Array[Double] = {
+    val out = new Array[Double](n)
+    var b = 0
+    while (b < n) {
+      var acc = 0.0
+      var d = 0
+      while (d < dsub) {
+        val y = v(b * dsub + d)
+        acc += y * y
+        d += 1
+      }
+      out(b) = math.sqrt(acc)
+      b += 1
+    }
+    out
+  }
+
+  /** Index (0-based, within `k`) of the best-cosine centroid for the
+    * block of `x` at `xo` (norm `xNorm`) among centroids `c0 until c0 + k`
+    * of `cb` (norms `cn`): a NaN cosine ranks lowest, ties go to the
+    * larger index — [[scoredCentroids]]'s order. */
+  private def nearestCosine(x: Array[Double], xo: Int, xNorm: Double,
+                            cb: Array[Double], cn: Array[Double], c0: Int,
+                            k: Int, dsub: Int): Int = {
+    var best = 0
+    var bestScore = Double.NegativeInfinity
+    var c = 0
+    while (c < k) {
+      val co = (c0 + c) * dsub
+      var dot = 0.0
+      var d = 0
+      while (d < dsub) {
+        dot += x(xo + d) * cb(co + d)
+        d += 1
+      }
+      val cos = dot / (xNorm * cn(c0 + c))
+      val score = if (cos.isNaN) Double.NegativeInfinity else cos
+      if (score >= bestScore) { best = c; bestScore = score }
+      c += 1
+    }
+    best
   }
 
   /** IVF-style ANN: partition the corpus into `nLists` centroid-owned
@@ -456,14 +599,8 @@ object Similarity {
       df.withColumn("centroid_id", bestCentroid(cents, col(vecCol)))
         .select(col(idCol), col(vecCol), col("centroid_id"))
     } else {
-      // top `keep` centroids: sort the scored structs descending and
-      // explode the head slice — probe-side only, fan-out = nProbe
-      val scored = cents.map { case (cid, cv) =>
-        struct(cosine(col(vecCol), cv).as("c"), lit(cid).as("id"))
-      }
-      df.withColumn("centroid_id",
-          explode(slice(reverse(sort_array(array(scored.toIndexedSeq: _*))),
-            1, keep).getField("id")))
+      // top `keep` centroids — probe-side only, fan-out = nProbe
+      df.withColumn("centroid_id", topCentroids(cents, col(vecCol), keep))
         .select(col(idCol), col(vecCol), col("centroid_id"))
     }
   }
@@ -482,14 +619,9 @@ object Similarity {
       k: Int,
       nProbe: Int,
       excludeSelf: Boolean = true): DataFrame = {
-    val cents = centroidLiterals(centroids)
-    val scoredC = cents.map { case (cid, cv) =>
-      struct(cosine(col("__pv"), cv).as("c"), lit(cid).as("id"))
-    }
     val probed = probes.select(col(idCol).as("probe_id"), col(vecCol).as("__pv"))
       .withColumn("centroid_id",
-        explode(slice(reverse(sort_array(array(scoredC.toIndexedSeq: _*))),
-          1, nProbe).getField("id")))
+        topCentroids(centroidLiterals(centroids), col("__pv"), nProbe))
 
     val joined = lists.join(broadcast(probed), "centroid_id")
     val scored0 = joined.withColumn("cos", cosine(col("__pv"), col("__cv")))
@@ -527,14 +659,9 @@ object Similarity {
       idCol: String,
       vecCol: String,
       nProbe: Int): DataFrame = {
-    val cents = centroidLiterals(centroids)
-    val scoredC = cents.map { case (cid, cv) =>
-      struct(cosine(col("__pv"), cv).as("c"), lit(cid).as("id"))
-    }
     val probed = probes.select(col(idCol).as("probe_id"), col(vecCol).as("__pv"))
       .withColumn("centroid_id",
-        explode(slice(reverse(sort_array(array(scoredC.toIndexedSeq: _*))),
-          1, nProbe).getField("id")))
+        topCentroids(centroidLiterals(centroids), col("__pv"), nProbe))
     // list sizes: nLists rows — broadcast into the probe-side join
     val sizes = lists.groupBy("centroid_id").agg(count(lit(1)).as("__lsz"))
     probed.join(broadcast(sizes), Seq("centroid_id"), "left")

@@ -210,6 +210,27 @@ class SimilaritySpec extends SparkSuite {
     listsP.unpersist()
   }
 
+  test("a zero-norm centroid never wins the cosine argmax (NaN ranks lowest)") {
+    // cosine against a zero vector is 0/0 = NaN, which Spark orders above
+    // every number: unguarded, centroid 9 would take every vector and
+    // every probe's first list
+    val cents = Seq((9L, Seq(0.0, 0.0, 0.0)), (1L, Seq(1.0, 0.0, 0.0)),
+      (2L, Seq(0.0, 1.0, 0.0))).toDF("centroid_id", "centroid_vec")
+    val data = vecs.union(Seq((5L, Seq(0.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding"))
+    val (_, lists) = Similarity.ivfIndex(data, "vec_id", "embedding", 3, Some(cents))
+    val listOf = lists.select("neighbor_id", "centroid_id").as[(Long, Long)]
+      .collect().toMap
+    // 0/4 -> 1, 1 -> 1 (cos 0.994), 2 -> 2; 3 is orthogonal to both
+    // (cos 0, a tie: the larger id); 5 is zero itself, every score NaN,
+    // all tie and the largest id (9) keeps the tie rule
+    assert(listOf == Map(0L -> 1L, 1L -> 1L, 2L -> 2L, 3L -> 2L, 4L -> 1L, 5L -> 9L))
+    val probed = Similarity.ivfScanCost(cents, lists, vecs.filter(col("vec_id") <= 2),
+        "vec_id", "embedding", nProbe = 1)
+      .as[(Long, Long)].collect().toMap
+    // each probe's one list is its own (sizes 3 and 2), never the zero one
+    assert(probed == Map(0L -> 3L, 1L -> 3L, 2L -> 2L))
+  }
+
   test("portable LSH weights match the md5 SQL formulation") {
     // pinned from DuckDB:
     //   CAST(concat('0x', substring(md5(seed), 1, 15)) AS BIGINT)

@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftPlanShim, SparkSession}
+import org.apache.spark.sql.connector.catalog.{Identifier, Table}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+
+import graft.sources.{GraftIcebergTable, GraftMetaTable}
 
 /** SQL-first entry point: register every testdata/ETL table as a temp view
   * so users can work in plain `spark.sql` on top of the same engine
@@ -36,35 +40,30 @@ object Catalog {
         registerIcebergTable(spark, t, dir)
     }
 
-  /** Register ONE IcebergLite table as a SQL name. In a session built
-    * with `spark.sql.extensions=graft.GraftExtensions` the view is a
-    * planning-time scan node ([[graft.plans.IcebergScanNode]]): a SQL
-    * `WHERE` file-skips through manifest bounds / partition transforms /
-    * Bloom sidecars exactly like the [[graft.sources.IcebergLite.readTableWhere]]
-    * API, every query reads the table's CURRENT snapshot, and
-    * `FOR VERSION AS OF` / `FOR TIMESTAMP AS OF` time-travel. Without
-    * the extensions the view falls back to a materialized full read of
-    * the snapshot as of registration (no file skipping, no time travel
-    * — the pre-r15 behavior). */
+  /** Register ONE IcebergLite table as a SQL name: a temp view over a
+    * V2 relation of the same [[graft.sources.GraftIcebergTable]] a
+    * `graft.<ns>.<table>` catalog name resolves to, so both names plan
+    * through one scan builder — a `WHERE` file-skips through manifest
+    * bounds / partition transforms / Bloom sidecars, and every query
+    * reads the table's CURRENT snapshot. With
+    * `spark.sql.extensions=graft.GraftExtensions` the name also takes
+    * `FOR VERSION AS OF` / `FOR TIMESTAMP AS OF` and SQL DML (both
+    * rewritten at parse time, see plans/IcebergScan.scala and
+    * plans/IcebergWrite.scala). The operational metadata tables ride
+    * along as `<name>__<kind>` views (temp-view names can't carry
+    * Iceberg's `$`), current per query like the data view. */
   def registerIcebergTable(spark: SparkSession, name: String,
-                           tableDir: String): Unit =
-    if (spark.conf.get("spark.sql.extensions", "")
-        .contains("graft.GraftExtensions")) {
-      org.apache.spark.sql.GraftPlanShim
-        .ofRows(spark, graft.plans.IcebergScanNode.forTable(spark, tableDir))
-        .createOrReplaceTempView(name)
-      graft.plans.IcebergSqlTables.put(spark, name, tableDir)
-      // the operational metadata tables ride along as `<name>__<kind>`
-      // views (temp-view names can't carry Iceberg's `$`), resolved
-      // per query like the data view
-      Seq("snapshots", "manifests", "files", "partitions", "refs",
-          "history").foreach { kind =>
-        org.apache.spark.sql.GraftPlanShim
-          .ofRows(spark,
-            graft.plans.IcebergScanNode.forMetaTable(spark, tableDir, kind))
-          .createOrReplaceTempView(s"${name}__$kind")
-      }
-    } else
-      graft.sources.IcebergLite.readTable(spark, tableDir)
-        .createOrReplaceTempView(name)
+                           tableDir: String): Unit = {
+    def view(n: String, table: Table): Unit =
+      GraftPlanShim.ofRows(spark,
+        DataSourceV2Relation.create(table, None, None))
+        .createOrReplaceTempView(n)
+    def ident(n: String) = Identifier.of(Array.empty[String], n)
+    view(name, new GraftIcebergTable(ident(name), tableDir, None))
+    graft.plans.IcebergSqlTables.put(spark, name, tableDir)
+    GraftMetaTable.Kinds.foreach { kind =>
+      val n = s"${name}__$kind"
+      view(n, new GraftMetaTable(ident(n), tableDir, kind))
+    }
+  }
 }

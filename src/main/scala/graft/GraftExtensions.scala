@@ -9,7 +9,8 @@ import graft.functions.{MinHashSig, RollingFingerprint, SimHashSig}
 /** Session extensions registering graft's native expressions so they are
   * callable from SQL / `expr(...)` in any session configured with
   * `spark.sql.extensions=graft.GraftExtensions`, plus the ASOF JOIN SQL
-  * syntax (parser extension, see [[graft.sql.GraftSqlParser]]).
+  * syntax and the parse-time time-travel / DML rewrites over registered
+  * Iceberg names (parser extension, see [[graft.sql.GraftSqlParser]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -17,10 +18,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new graft.sql.GraftSqlParser(session, delegate))
     // whole-operator as-of join (logical node -> sort-merge SparkPlan)
     ext.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
-    // IcebergLite SQL scan planning: after the pushdown fixpoints have
-    // moved filters to the leaves, map them onto manifest-bounds /
-    // partition-transform / Bloom file skipping (plans/IcebergScan.scala)
-    ext.injectPreCBORule(session => new graft.plans.IcebergScanRule(session))
     // writeTo(...).overwritePartitions() on graft catalog tables: no V1
     // dynamic-overwrite writer exists in Spark, so the resolved plan
     // rewrites to the IcebergLite partition-replace command

@@ -1,279 +1,34 @@
 package graft.plans
 
-import org.apache.spark.sql.{GraftPlanShim, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{MultiInstanceRelation, RelationTimeTravel, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal, Or, StartsWith}
-import org.apache.spark.sql.catalyst.planning.PhysicalOperation
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project, Statistics}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.{DataFrame, GraftPlanShim, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.IcebergLite
-
-/** SQL scan planning for IcebergLite tables — the piece that makes the
-  * CATALOG route (`spark.sql` over a registered table) plan like the
-  * API route ([[IcebergLite.readTableWhere]]): a `WHERE` on a
-  * registered table file-skips through manifest bounds, partition
-  * transforms, and Bloom sidecars instead of scanning every live file.
-  * The reference's users get exactly this from their Iceberg catalog
-  * (spark_events_by_time.py:49-96: `spark.read.table` + `WHERE` plans
-  * ~1/N of a day-partitioned table); without it a registered view is a
-  * full-table scan at 100 TB no matter what the query asks.
-  *
-  * Shape: [[graft.Catalog.registerIcebergTable]] registers a temp view
-  * whose plan is ONE [[IcebergScanNode]] leaf (table dir + optional
-  * pinned snapshot; the schema is fixed at registration). The leaf
-  * carries no data — [[IcebergScanRule]], injected as a PRE-CBO rule
-  * (after every predicate-pushdown fixpoint, so the filters that CAN
-  * reach the leaf HAVE), collects the Project/Filter stack above each
-  * leaf, maps the supported conjuncts onto [[IcebergLite.Pred]]s, and
-  * splices in the analyzed plan of `readTableWhere` (pruned file set,
-  * MOR deletes applied) with the original filter retained on top —
-  * pruning is a superset guarantee, the row filter still runs, and
-  * SparkOptimizer's later PartitionPruning/PushDownPredicates batch
-  * plus FileSourceStrategy's PhysicalOperation push it on into the
-  * parquet scans (row-group skipping, column pruning) as usual.
-  *
-  * Because the leaf defers `readMeta` to optimization time, a
-  * registered view reads the table's snapshot AS OF EACH QUERY, not as
-  * of registration — the stale-standing-session surprise of the old
-  * materialized registration is gone. `FOR VERSION AS OF n` /
-  * `FOR TIMESTAMP AS OF ts` on a registered name resolve through
-  * [[IcebergTimeTravelRewrite]] at parse time to a snapshot-pinned
-  * leaf ([[IcebergLite.snapshotIdAsOf]] for timestamps).
-  */
-case class IcebergScanNode(
-    tableDir: String,
-    snapshotId: Option[Long],
-    output: Seq[Attribute],
-    rowCountHint: Long,
-    /** a metadata-table kind ("snapshots", "manifests", "files",
-      * "partitions", "refs", "history") makes the leaf resolve through
-      * [[IcebergLite.metaTable]] instead of the data read — the SQL
-      * surface for the operational tables, current AS OF EACH QUERY
-      * like the data view. */
-    metaKind: Option[String] = None) extends LeafNode
-    with MultiInstanceRelation {
-  override def newInstance(): IcebergScanNode =
-    copy(output = output.map(_.newInstance()))
-  // manifest-accounted rows × declared row width: enough signal for
-  // optimizer-stage decisions; physical join selection runs after the
-  // rule replaced this leaf with the real (sized) file relation
-  override def computeStats(): Statistics = Statistics(
-    sizeInBytes = BigInt(rowCountHint).max(1) *
-      DataTypeUtils.fromAttributes(output).defaultSize,
-    rowCount = Some(BigInt(rowCountHint)))
-  override def simpleString(maxFields: Int): String =
-    s"IcebergScanNode $tableDir" + snapshotId.map(s => s" @$s").getOrElse("")
-}
-
-object IcebergScanNode {
-  /** A leaf for the table's CURRENT schema (+ optional pinned
-    * snapshot). Row-count hint comes from manifest-list accounting —
-    * no data is read. */
-  def forTable(spark: SparkSession, tableDir: String,
-               snapshotId: Option[Long] = None): IcebergScanNode = {
-    val schema = IcebergLite.tableSchema(spark, tableDir)
-    IcebergScanNode(tableDir, snapshotId,
-      DataTypeUtils.toAttributes(schema),
-      IcebergLite.tableRowCount(spark, tableDir))
-  }
-
-  /** A leaf for one of the table's METADATA tables; schema fixed at
-    * registration, rows resolved per query. */
-  def forMetaTable(spark: SparkSession, tableDir: String,
-                   kind: String): IcebergScanNode =
-    IcebergScanNode(tableDir, None,
-      DataTypeUtils.toAttributes(
-        IcebergLite.metaTable(spark, tableDir, kind).schema),
-      rowCountHint = 64, metaKind = Some(kind))
-}
-
-/** Replaces every [[IcebergScanNode]] with the pruned-file read plan
-  * for the filters sitting above it. Injected via
-  * `injectPreCBORule` ([[graft.GraftExtensions]]) — runs ONCE, after
-  * the operator-optimization fixpoints have pushed filters down to the
-  * leaves and before join reordering / physical planning. */
-class IcebergScanRule(spark: SparkSession) extends Rule[LogicalPlan] {
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!plan.exists(_.isInstanceOf[IcebergScanNode])) plan
-    else plan.transformDown {
-      // transformDown so the OUTERMOST Project/Filter stack claims the
-      // leaf (transformUp would resolve the bare leaf first and lose
-      // the filters); the spliced result contains no IcebergScanNode,
-      // so descendants of a rewrite never re-match
-      case PhysicalOperation(projects, filters, scan: IcebergScanNode) =>
-        val preds =
-          if (scan.metaKind.isDefined) Nil
-          else filters.flatMap(IcebergScanRule.extract(_, scan))
-        val read = scan.metaKind match {
-          case Some(kind) =>
-            IcebergLite.metaTable(spark, scan.tableDir, kind, scan.snapshotId)
-          case None if preds.nonEmpty =>
-            IcebergLite.readTableWhere(spark, scan.tableDir, preds,
-              scan.snapshotId)
-          case None =>
-            IcebergLite.readTable(spark, scan.tableDir, scan.snapshotId)
-        }
-        // splice the subtree OPTIMIZED (its own QueryExecution), not
-        // merely analyzed: this rule runs pre-CBO, AFTER the optimizer's
-        // replace/eliminate batches, so an analyzed subtree could carry
-        // operators those batches must rewrite (ResolvedHint from the
-        // equality-delete broadcast, Deduplicate from its distinct) —
-        // each an INTERNAL_ERROR at physical planning. The subtree holds
-        // no IcebergScanNode, so its optimization never re-enters here.
-        val resolved = GraftPlanShim.optimizedPlan(read)
-        val byName = resolved.output.map(a => a.name -> a).toMap
-        // re-key the fresh relation's columns onto the leaf's exprIds so
-        // the retained filters/projections resolve unchanged
-        val remap = Project(scan.output.map { o =>
-          val n = byName.getOrElse(o.name, throw new IllegalStateException(
-            s"registered Iceberg view column ${o.name} no longer in " +
-              s"${scan.tableDir}'s schema — re-register the view after " +
-              "schema evolution"))
-          Alias(n, o.name)(exprId = o.exprId)
-        }, resolved)
-        val filtered =
-          if (filters.isEmpty) remap
-          else Filter(filters.reduce(And), remap)
-        if (projects == scan.output) filtered else Project(projects, filtered)
-    }
-}
-
-object IcebergScanRule {
-
-  /** Conjuncts → [[IcebergLite.Pred]]s, CONSERVATIVELY: anything not
-    * expressible prunes nothing (the row filter above still applies).
-    * Strict comparisons relax to their inclusive bound — pruning is a
-    * superset guarantee, so `>` pruning as `>=` is correct and still
-    * skips every file strictly outside the range. */
-  private[plans] def extract(e: Expression,
-                             scan: IcebergScanNode): Seq[IcebergLite.Pred] = {
-    def value(a: AttributeReference, v: Any): Option[Any] =
-      if (v == null || !scan.outputSet.contains(a)) None
-      else (a.dataType, v) match {
-        case (StringType, s: UTF8String) => Some(s.toString)
-        case (IntegerType | LongType | FloatType | DoubleType, n) => Some(n)
-        // Catalyst timestamps are epoch micros, dates epoch days —
-        // exactly the Number readings IcebergTransforms.applyValue
-        // takes, so hidden partitioning prunes time ranges
-        case (TimestampType, micros) => Some(micros)
-        case (DateType, days) => Some(days)
-        case _ => None // decimal/binary/nested: no bound ordering — scan
-      }
-    e match {
-      case And(l, r) => extract(l, scan) ++ extract(r, scan)
-      case EqualTo(a: AttributeReference, Literal(v, _)) =>
-        value(a, v).map(IcebergLite.EqTo(a.name, _)).toSeq
-      case EqualTo(Literal(v, _), a: AttributeReference) =>
-        value(a, v).map(IcebergLite.EqTo(a.name, _)).toSeq
-      case EqualNullSafe(a: AttributeReference, Literal(v, _)) =>
-        value(a, v).map(IcebergLite.EqTo(a.name, _)).toSeq
-      case EqualNullSafe(Literal(v, _), a: AttributeReference) =>
-        value(a, v).map(IcebergLite.EqTo(a.name, _)).toSeq
-      case GreaterThanOrEqual(a: AttributeReference, Literal(v, _)) =>
-        value(a, v).map(IcebergLite.GtEq(a.name, _)).toSeq
-      case GreaterThan(a: AttributeReference, Literal(v, _)) =>
-        value(a, v).map(IcebergLite.GtEq(a.name, _)).toSeq
-      case LessThanOrEqual(a: AttributeReference, Literal(v, _)) =>
-        value(a, v).map(IcebergLite.LtEq(a.name, _)).toSeq
-      case LessThan(a: AttributeReference, Literal(v, _)) =>
-        value(a, v).map(IcebergLite.LtEq(a.name, _)).toSeq
-      case GreaterThanOrEqual(Literal(v, _), a: AttributeReference) =>
-        value(a, v).map(IcebergLite.LtEq(a.name, _)).toSeq
-      case GreaterThan(Literal(v, _), a: AttributeReference) =>
-        value(a, v).map(IcebergLite.LtEq(a.name, _)).toSeq
-      case LessThanOrEqual(Literal(v, _), a: AttributeReference) =>
-        value(a, v).map(IcebergLite.GtEq(a.name, _)).toSeq
-      case LessThan(Literal(v, _), a: AttributeReference) =>
-        value(a, v).map(IcebergLite.GtEq(a.name, _)).toSeq
-      // IN lists / OR-of-equalities map onto AnyOf: a file skips only
-      // when EVERY listed value is excluded for it (bounds, partition,
-      // or Bloom). NULL list members can't match a row, so they drop;
-      // an inconvertible member abandons the pred (conservative).
-      case in: In => eqSet(in, scan)
-        .map { case (c, vs) => IcebergLite.AnyOf(c, vs) }.toSeq
-      case in: InSet => eqSet(in, scan)
-        .map { case (c, vs) => IcebergLite.AnyOf(c, vs) }.toSeq
-      case or: Or => eqSet(or, scan)
-        .map { case (c, vs) => IcebergLite.AnyOf(c, vs) }.toSeq
-      // LIKE 'prefix%' → [prefix, nextPrefix) on the string bounds
-      case StartsWith(a: AttributeReference, Literal(v, _))
-          if a.dataType == StringType && scan.outputSet.contains(a) &&
-            v != null =>
-        IcebergLite.prefixPreds(a.name, v.asInstanceOf[UTF8String].toString)
-      case _ => Nil
-    }
-  }
-
-  /** An expression as a set of equality alternatives on ONE column —
-    * In/InSet values, a single equality, or an Or tree of those.
-    * None when any branch doesn't reduce (never prune on a guess).
-    * Capped at 1000 values to bound planning cost. */
-  private def eqSet(e: Expression,
-                    scan: IcebergScanNode): Option[(String, Seq[Any])] = {
-    def value(a: AttributeReference, v: Any): Option[Any] =
-      if (!scan.outputSet.contains(a)) None
-      else (a.dataType, v) match {
-        case (StringType, s: UTF8String) => Some(s.toString)
-        case (IntegerType | LongType | FloatType | DoubleType, n) => Some(n)
-        case (TimestampType, micros) => Some(micros)
-        case (DateType, days) => Some(days)
-        case _ => None
-      }
-    def values(a: AttributeReference, vs: Iterable[Any])
-        : Option[(String, Seq[Any])] = {
-      val nonNull = vs.filter(_ != null).toSeq
-      if (nonNull.size > 1000) None
-      else {
-        val conv = nonNull.map(value(a, _))
-        if (conv.exists(_.isEmpty)) None
-        else Some(a.name -> conv.flatten)
-      }
-    }
-    e match {
-      case EqualTo(a: AttributeReference, Literal(v, _)) if v != null =>
-        values(a, Seq(v))
-      case EqualTo(Literal(v, _), a: AttributeReference) if v != null =>
-        values(a, Seq(v))
-      case In(a: AttributeReference, list)
-          if list.forall(_.isInstanceOf[Literal]) =>
-        values(a, list.map(_.asInstanceOf[Literal].value))
-      case InSet(a: AttributeReference, hset) => values(a, hset)
-      case Or(l, r) =>
-        for {
-          (cl, vl) <- eqSet(l, scan)
-          (cr, vr) <- eqSet(r, scan)
-          if cl == cr && vl.size + vr.size <= 1000
-        } yield (cl, vl ++ vr)
-      case _ => None
-    }
-  }
-}
+import graft.sources.{GraftIcebergTable, GraftNativeBatchScan, GraftTableCatalog, IcebergLite}
 
 /** Plan observables for the SQL route — what the pruning tests and the
   * scale bench pin instead of trusting that skipping "should" happen. */
 object IcebergSqlAudit {
-  /** Parquet files the frame's OPTIMIZED plan will scan (sum over its
-    * file-source relations; for a MOR table this includes delete
-    * files). Forces optimization, which is where [[IcebergScanRule]]
-    * plans the file set. */
-  def scannedFiles(df: org.apache.spark.sql.DataFrame): Int =
+  /** Data files the frame's native Iceberg scans plan (sum over the
+    * [[GraftNativeBatchScan]]s of its OPTIMIZED plan — optimization is
+    * where the V2 scan builder prunes the file set). The catalog's V1
+    * fallback (time travel, multi-generation schemas, over-cap deletes)
+    * plans its files only when it runs, and counts 0. */
+  def scannedFiles(df: DataFrame): Int =
     GraftPlanShim.optimizedPlan(df).collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.inputFiles.length
-          case _ => 0
-        }
+      case DataSourceV2ScanRelation(_, scan: GraftNativeBatchScan, _, _, _) =>
+        scan.plannedFiles.size
     }.sum
 }
 
-/** Session-scoped name → table-dir registry for SQL time travel
-  * (weak-keyed: entries die with their session). */
+/** Session-scoped name → table-dir registry for the parse-time time
+  * travel and DML rewrites (weak-keyed: entries die with their
+  * session). */
 object IcebergSqlTables {
   private val bySession =
     new java.util.WeakHashMap[SparkSession,
@@ -295,7 +50,8 @@ object IcebergSqlTables {
   * ts` over names registered through [[graft.Catalog.registerIcebergTable]]:
   * Spark's parser yields [[RelationTimeTravel]], which its analyzer
   * refuses for temp views, so the graft parser extension resolves it
-  * here to a snapshot-pinned [[IcebergScanNode]] before analysis.
+  * here, before analysis, to the registered view's V2 relation pinned
+  * to the snapshot (the catalog's time-travel read).
   * Timestamps accept a string literal (`'2026-01-01 00:00:00'` local /
   * ISO-8601 instant) or an integer epoch-millis literal, matching the
   * wall-clock snapshot-log [[IcebergLite.readTableAsOf]] reads;
@@ -309,24 +65,16 @@ object IcebergTimeTravelRewrite {
       case RelationTimeTravel(u: UnresolvedRelation, ts, version)
           if u.multipartIdentifier.size == 1 &&
             IcebergSqlTables.get(spark, u.multipartIdentifier.head).isDefined =>
-        val dir = IcebergSqlTables.get(spark, u.multipartIdentifier.head).get
+        val name = u.multipartIdentifier.head
+        val dir = IcebergSqlTables.get(spark, name).get
         val snap = version match {
-          case Some(v) =>
-            // numeric = snapshot id; otherwise a named ref (branch or
-            // tag head — the Iceberg `VERSION AS OF 'audit'` surface)
-            v.toLongOption.getOrElse {
-              IcebergLite.tableRefs(spark, dir).get(v)
-                .map(_._1)
-                .getOrElse(throw new IllegalArgumentException(
-                  s"VERSION AS OF on ${u.multipartIdentifier.head}: '$v' " +
-                    "is neither a snapshot id nor a named ref (have " +
-                    IcebergLite.tableRefs(spark, dir).keys.toSeq.sorted
-                      .mkString(", ") + ")"))
-            }
+          case Some(v) => GraftTableCatalog.versionSnapshot(spark, name, dir, v)
           case None =>
             IcebergLite.snapshotIdAsOf(spark, dir, evalTimestampMs(ts.get))
         }
-        IcebergScanNode.forTable(spark, dir, Some(snap))
+        DataSourceV2Relation.create(new GraftIcebergTable(
+          Identifier.of(Array.empty[String], name), dir, Some(snap)),
+          None, None)
     }
 
   private def evalTimestampMs(e: Expression): Long = e match {

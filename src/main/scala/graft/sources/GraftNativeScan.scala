@@ -38,9 +38,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * (bounds / transforms / Blooms) already happened in
   * [[IcebergLite.nativeScanInfo]]'s planning pass.
   *
-  * Eligibility is decided by [[IcebergLite.nativeScanInfo]] (no
-  * outstanding MOR deletes, single schema/spec generation); everything
-  * else falls back to the exact V1 route. Disable with
+  * Outstanding merge-on-read deletes are applied in the reader
+  * (position deletes by parquet row index, equality deletes by key set
+  * with the sequence check); such scans read rows, not ColumnarBatches.
+  *
+  * Eligibility is decided by [[IcebergLite.nativeScanInfo]] (current
+  * snapshot, single schema/spec generation, delete state under the
+  * `spark.graft.nativeScan.morDeletes.*` caps); everything else falls
+  * back to the exact V1 route. Disable with
   * `spark.graft.nativeScan.enabled=false`.
   */
 class GraftNativeBatchScan(spark: SparkSession, tableName: String,
@@ -60,11 +65,9 @@ class GraftNativeBatchScan(spark: SparkSession, tableName: String,
     * already applied), minus the manifest-accounted POSITION-delete
     * rows (equality deletes stay uncounted: their row impact is
     * unknowable without reading — the residual overcount only
-    * under-broadcasts, the safe direction); size mirrors the
-    * registered-view route (plans/IcebergScan.computeStats): rows ×
-    * the PRUNED read schema's default row width, so column pruning
-    * shrinks the estimate the way the broadcast decision needs. No
-    * data is read.
+    * under-broadcasts, the safe direction); size is rows × the PRUNED
+    * read schema's default row width, so column pruning shrinks the
+    * estimate the way the broadcast decision needs. No data is read.
     */
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
@@ -221,7 +224,8 @@ class GraftNativeBatchScan(spark: SparkSession, tableName: String,
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
-    s"GraftNativeScan $tableName (${info.files.size} files)"
+    s"GraftNativeScan $tableName (${info.files.size} files) " +
+      s"PushedFilters: ${pushed.mkString("[", ", ", "]")}"
 
   private def catalystValue(v: Any): Any = v match {
     case null => null
@@ -350,15 +354,12 @@ class GraftNativeBatchScan(spark: SparkSession, tableName: String,
     // session's supportBatch gate says the result schema is batchable,
     // ship the batch-mode reader too; Spark then plans the scan
     // columnar (ColumnarToRow above the BatchScan) and the row path
-    // stays as the factory-level fallback. Kill-switch mirrors the
-    // scan's own: spark.graft.nativeScan.columnar.enabled=false.
+    // stays as the factory-level fallback.
     // Outstanding MOR deletes force the row path for the WHOLE scan:
     // delete application is a row-level filter, and Spark requires all
     // input partitions of one scan to agree on row-vs-columnar
     // (restored by compact/maintenance, which clears the deletes).
-    val columnarWanted = info.deletes.isEmpty &&
-      spark.conf.get("spark.graft.nativeScan.columnar.enabled", "true")
-        .toBoolean
+    val columnarWanted = info.deletes.isEmpty
     val batchFn =
       if (columnarWanted && GraftParquetShim.supportsBatchRead(spark,
             StructType(readerOut.toArray)))

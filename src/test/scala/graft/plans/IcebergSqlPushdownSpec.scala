@@ -1,12 +1,15 @@
 package graft.plans
 
+import org.apache.spark.sql.GraftPlanShim
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 
 import graft.{Catalog, SparkSuite}
-import graft.sources.IcebergLite
+import graft.sources.{GraftNativeBatchScan, IcebergLite}
 
-/** SQL scan planning for registered IcebergLite tables
-  * (plans/IcebergScan.scala): a `WHERE` on the registered name must
+/** SQL scan planning for registered IcebergLite tables (V2 relations
+  * over GraftIcebergTable, see Catalog.registerIcebergTable): a `WHERE`
+  * on the registered name must
   * file-skip like the readTableWhere API (pinned via the optimized
   * plan's file count, never assumed), reads must follow the CURRENT
   * snapshot, and `FOR VERSION/TIMESTAMP AS OF` must time-travel. */
@@ -243,20 +246,23 @@ class IcebergSqlPushdownSpec extends SparkSuite {
   }
 
   test("the retained filter reaches the parquet scan: PushedFilters + pruned columns") {
-    // the splice keeps the row filter ABOVE the pruned relation; the
-    // later pushdown batch + FileSourceStrategy must still land it in
-    // the scan (row-group skipping) and prune the read schema to the
-    // projected columns — otherwise the SQL route pays full-width IO
-    // inside each surviving file
+    // the row filter must land in the scan (parquet row-group skipping)
+    // and the read schema must shrink to the columns the query needs —
+    // otherwise the SQL route pays full-width IO inside each surviving
+    // file
     val dir = rangedTable()
     Catalog.registerIcebergTable(spark, "sql_pushed_t", dir)
     val df = spark.sql("SELECT n FROM sql_pushed_t WHERE id >= 21")
-    val physical = df.queryExecution.executedPlan.toString
-    assert(physical.contains("PushedFilters") &&
-      physical.contains("GreaterThanOrEqual(id,21)"),
-      s"filter not pushed into the scan:\n$physical")
-    assert(!physical.contains("tag"),
-      s"unprojected column survived into the scan:\n$physical")
+    val scans = GraftPlanShim.optimizedPlan(df).collect {
+      case DataSourceV2ScanRelation(_, s: GraftNativeBatchScan, _, _, _) => s
+    }
+    assert(scans.size == 1, s"expected one native scan:\n$scans")
+    val scan = scans.head
+    assert(scan.readSchema().fieldNames.toSeq == Seq("id", "n"),
+      s"read schema not pruned: ${scan.readSchema().simpleString}")
+    assert(scan.description().contains("GreaterThanOrEqual(id,21)"),
+      s"filter not pushed into the scan: ${scan.description()}")
+    assert(scan.plannedFiles.size == 1)
     assert(df.collect().map(_.getLong(0)).sorted.toSeq ==
       (21 to 30).map(_ * 10L))
   }

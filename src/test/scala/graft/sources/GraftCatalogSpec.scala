@@ -134,6 +134,46 @@ class GraftCatalogSpec extends SparkSuite {
       .head().getLong(0) === 100L)
   }
 
+  test("catalog-route time ranges prune through days(ts) (java.sql and java.time filter values)") {
+    val day = 86400000000L // micros
+    (0 until 5).map(d => (new java.sql.Timestamp((d * day + 1000000L) / 1000L),
+        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(d)), d.toLong))
+      .toDF("ts", "d", "v")
+      .writeTo("gcat.wt_days").using("iceberg")
+      .partitionedBy(days(col("ts"))).create()
+    val total = graft.plans.IcebergSqlAudit.scannedFiles(
+      spark.sql("SELECT * FROM gcat.wt_days"))
+    assert(total == 5, s"expected one file per day, planned $total")
+    // spark.sql.datetime.java8API.enabled picks the filter values'
+    // external form: java.sql.Timestamp/Date off, Instant/LocalDate on
+    Seq("false", "true").foreach { java8 =>
+      spark.conf.set("spark.sql.datetime.java8API.enabled", java8)
+      try {
+        def check(where: String): Unit = {
+          val q = spark.sql(s"SELECT count(*) AS c FROM gcat.wt_days WHERE $where")
+          val kept = graft.plans.IcebergSqlAudit.scannedFiles(q)
+          assert(kept == 2, s"java8API=$java8, $where: planned $kept of $total")
+          assert(q.head().getLong(0) === 2L)
+        }
+        check("ts >= TIMESTAMP '1970-01-04 00:00:00+00:00'") // day() transform
+        check("d >= DATE '1970-01-04'")                      // date bounds
+      } finally spark.conf.unset("spark.sql.datetime.java8API.enabled")
+    }
+  }
+
+  test("a filter on a nested struct field scans instead of throwing") {
+    spark.sql("""SELECT 1L AS id, named_struct('x', 3, 'y', 'a') AS s
+                 UNION ALL SELECT 2L, named_struct('x', 4, 'y', 'b')""")
+      .writeTo("gcat.wt_nested").using("iceberg").create()
+    graft.Catalog.registerIcebergTable(spark, "gcat_nested_v",
+      s"$warehouse/wt_nested")
+    Seq("gcat.wt_nested", "gcat_nested_v").foreach { t =>
+      val got = spark.sql(s"SELECT id FROM $t WHERE s.x = 3")
+        .collect().map(_.getLong(0)).toSeq
+      assert(got === Seq(1L), s"$t: $got")
+    }
+  }
+
   test("maintenance procedures run as CALL gcat.system.<proc>(...)") {
     batch(1 to 6).writeTo("gcat.wt9").using("iceberg").create()
     batch(7 to 9).writeTo("gcat.wt9").append()

@@ -139,13 +139,7 @@ object BenchScale {
     // NOTE: env only reaches the forked JVM from `sbt -batch` (a
     // long-lived `sbt -client` server keeps its launch-time env).
     val scaleFast = sys.env.get("SPARK_GRAFT_SCALE_FAST").contains("1")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session(s"local[$cpus]")
 
     // One-time corpus materialization (not timed): at a real deployment
     // this is the input lake, not part of query latency.

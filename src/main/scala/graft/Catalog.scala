@@ -49,9 +49,11 @@ object Catalog {
     * `spark.sql.extensions=graft.GraftExtensions` the name also takes
     * `FOR VERSION AS OF` / `FOR TIMESTAMP AS OF` and SQL DML (both
     * rewritten at parse time, see plans/IcebergScan.scala and
-    * plans/IcebergWrite.scala). The operational metadata tables ride
-    * along as `<name>__<kind>` views (temp-view names can't carry
-    * Iceberg's `$`), current per query like the data view. */
+    * plans/IcebergWrite.scala), resolved from this view: once the name
+    * is rebound or dropped, neither reaches the table. The operational
+    * metadata tables ride along as `<name>__<kind>` views (temp-view
+    * names can't carry Iceberg's `$`), current per query like the data
+    * view. */
   def registerIcebergTable(spark: SparkSession, name: String,
                            tableDir: String): Unit = {
     def view(n: String, table: Table): Unit =
@@ -60,7 +62,6 @@ object Catalog {
         .createOrReplaceTempView(n)
     def ident(n: String) = Identifier.of(Array.empty[String], n)
     view(name, new GraftIcebergTable(ident(name), tableDir, None))
-    graft.plans.IcebergSqlTables.put(spark, name, tableDir)
     GraftMetaTable.Kinds.foreach { kind =>
       val n = s"${name}__$kind"
       view(n, new GraftMetaTable(ident(n), tableDir, kind))

@@ -29,6 +29,27 @@ object Tables {
     .config("spark.sql.parquet.compression.codec", "zstd")
     .config("spark.sql.adaptive.enabled", "true")
 
+  private val LocalN = """local\[(\d+)\]""".r
+
+  /** The one session every graft main and test suite starts from:
+    * [[configure]]'s settings plus the graft extensions, no UI, WARN
+    * logging, and — for a `local[n]` master — `n` shuffle partitions
+    * (one per core instead of Spark's 200). Returns the active session
+    * when one exists, with its runtime SQL settings updated.
+    */
+  def session(master: String): SparkSession = {
+    val b = configure(SparkSession.builder()
+      .master(master)
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.ui.enabled", "false"))
+    val spark = (master match {
+      case LocalN(n) => b.config("spark.sql.shuffle.partitions", n)
+      case _ => b
+    }).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Inferred-schema cache: `spark.read.parquet` with no schema runs a
     * whole Spark JOB per call to read footers (schema inference), and the
     * bench/verify mains reconstruct each table's frame per query per rep

@@ -123,11 +123,7 @@ object ConvertCli {
 
     val preexisting = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).isDefined
-    val spark = Tables.configure(SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
 
     val written = run(spark, cfg)
 

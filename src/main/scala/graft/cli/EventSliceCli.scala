@@ -51,11 +51,7 @@ object EventSliceCli {
 
     val preexisting = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).isDefined
-    val spark = Tables.configure(SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
 
     // run filter prunes partitions (run_id derives from the partition keys)
     val daslogs = spark.read.parquet(s"$parquetDir/daslogs")

@@ -1,10 +1,10 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, GraftPlanShim, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, RelationTimeTravel, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,23 +26,37 @@ object IcebergSqlAudit {
     }.sum
 }
 
-/** Session-scoped name → table-dir registry for the parse-time time
-  * travel and DML rewrites (weak-keyed: entries die with their
-  * session). */
-object IcebergSqlTables {
-  private val bySession =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, String]]()
-  def put(spark: SparkSession, name: String, tableDir: String): Unit =
-    bySession.synchronized {
-      bySession.computeIfAbsent(spark,
-        _ => scala.collection.mutable.Map.empty)
-        .update(name.toLowerCase(java.util.Locale.ROOT), tableDir)
-    }
-  def get(spark: SparkSession, name: String): Option[String] =
-    bySession.synchronized {
-      Option(bySession.get(spark))
-        .flatMap(_.get(name.toLowerCase(java.util.Locale.ROOT)))
+/** The one resolver the parse-time time-travel and DML rewrites use to
+  * decide whether a SQL name is a graft Iceberg table, read from the
+  * session itself so it cannot drift from what `SELECT` sees. */
+object IcebergSqlNames {
+  /** The table dir `parts` names in this session, if it is a writable
+    * graft Iceberg table: a single-part name is a temp view holding the
+    * V2 relation [[graft.Catalog.registerIcebergTable]] stores (a view
+    * rebound to another frame, or dropped, resolves to nothing); a
+    * `<cat>.<ns...>.<table>` name is loaded through the session's
+    * catalog `<cat>`. */
+  def tableDir(spark: SparkSession, parts: Seq[String]): Option[String] =
+    parts match {
+      case Seq(n) =>
+        spark.sessionState.catalog.getRawTempView(n).flatMap(_.plan).collect {
+          case DataSourceV2Relation(t: GraftIcebergTable, _, _, _, _, _)
+              if t.snapshotId.isEmpty => t.tableDir
+        }
+      case cat +: path if path.nonEmpty =>
+        val catalogs = spark.sessionState.catalogManager
+        if (!catalogs.isCatalogRegistered(cat)) None
+        else catalogs.catalog(cat) match {
+          case tc: TableCatalog =>
+            try tc.loadTable(Identifier.of(path.init.toArray, path.last)) match {
+              case t: GraftIcebergTable => Some(t.tableDir)
+              case _ => None
+            } catch {
+              case _: NoSuchTableException | _: NoSuchNamespaceException => None
+            }
+          case _ => None
+        }
+      case _ => None
     }
 }
 
@@ -62,19 +76,19 @@ object IcebergTimeTravelRewrite {
   def apply(spark: SparkSession, plan: LogicalPlan): LogicalPlan =
     if (!plan.exists(_.isInstanceOf[RelationTimeTravel])) plan
     else plan.transformDown {
-      case RelationTimeTravel(u: UnresolvedRelation, ts, version)
-          if u.multipartIdentifier.size == 1 &&
-            IcebergSqlTables.get(spark, u.multipartIdentifier.head).isDefined =>
+      case tt @ RelationTimeTravel(u: UnresolvedRelation, ts, version)
+          if u.multipartIdentifier.size == 1 =>
         val name = u.multipartIdentifier.head
-        val dir = IcebergSqlTables.get(spark, name).get
-        val snap = version match {
-          case Some(v) => GraftTableCatalog.versionSnapshot(spark, name, dir, v)
-          case None =>
-            IcebergLite.snapshotIdAsOf(spark, dir, evalTimestampMs(ts.get))
+        IcebergSqlNames.tableDir(spark, Seq(name)).fold(tt: LogicalPlan) { dir =>
+          val snap = version match {
+            case Some(v) => GraftTableCatalog.versionSnapshot(spark, name, dir, v)
+            case None =>
+              IcebergLite.snapshotIdAsOf(spark, dir, evalTimestampMs(ts.get))
+          }
+          DataSourceV2Relation.create(new GraftIcebergTable(
+            Identifier.of(Array.empty[String], name), dir, Some(snap)),
+            None, None)
         }
-        DataSourceV2Relation.create(new GraftIcebergTable(
-          Identifier.of(Array.empty[String], name), dir, Some(snap)),
-          None, None)
     }
 
   private def evalTimestampMs(e: Expression): Long = e match {

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, GraftColumnShim, GraftPlanShim, Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation, UnresolvedTable}
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, Cast, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -130,10 +130,8 @@ object IcebergWriteRewrite {
             condition.map(c => ExprBox(stripQualifier(c, quals))))
         case None => plan
       }
-    case TruncateTable(u: org.apache.spark.sql.catalyst.analysis.UnresolvedTable) =>
-      // TRUNCATE wraps an UnresolvedTable (an analysis node, not a
-      // relation) — resolve its name through the same two routes
-      byIdentifier(spark, u.multipartIdentifier) match {
+    case TruncateTable(u: UnresolvedTable) =>
+      registered(spark, u) match {
         case Some((name, dir)) => IcebergTruncateCommand(name, dir)
         case None => plan
       }
@@ -145,53 +143,25 @@ object IcebergWriteRewrite {
     case _ => plan
   }
 
-  /** The (registered-name, table-dir) of a relation name this rewrite
-    * owns, seen through any alias: a single-part name registered via
-    * [[graft.Catalog.registerIcebergTable]], or a catalog-qualified
-    * name under a configured [[graft.sources.GraftTableCatalog]]
-    * (`<cat>.<table>` / `<cat>.<ns>.<table>`) — UPDATE and MERGE have
-    * no native V2 path without SupportsRowLevelOperations, so catalog
-    * names route through the SAME commands as registered views. */
+  /** The (name, table-dir) of a relation this rewrite owns, seen
+    * through any alias: a name [[IcebergSqlNames.tableDir]] resolves —
+    * a temp view registered via [[graft.Catalog.registerIcebergTable]],
+    * or a table loaded through a catalog (`<cat>.<ns...>.<table>`).
+    * With the graft extensions both name kinds route through these
+    * commands (row counts as results, the MOR delete/update modes);
+    * only a session without them takes the table's V2 row-level path
+    * (SupportsRowLevelOperations), the one route open to stock Spark. */
   private def registered(spark: SparkSession,
-                         plan: LogicalPlan): Option[(String, String)] =
+                         plan: LogicalPlan): Option[(String, String)] = {
+    def byName(parts: Seq[String]) =
+      IcebergSqlNames.tableDir(spark, parts).map(parts.mkString(".") -> _)
     plan match {
-      case u: UnresolvedRelation if u.multipartIdentifier.size == 1 =>
-        val n = u.multipartIdentifier.head
-        IcebergSqlTables.get(spark, n).map(dir => (n, dir))
-      case u: UnresolvedRelation if u.multipartIdentifier.size <= 3 =>
-        graftCatalogDir(spark, u.multipartIdentifier.head,
-          u.multipartIdentifier.tail)
-          .map(dir => (u.multipartIdentifier.mkString("."), dir))
+      case u: UnresolvedRelation => byName(u.multipartIdentifier)
+      case u: UnresolvedTable => byName(u.multipartIdentifier) // TRUNCATE
       case SubqueryAlias(_, child) => registered(spark, child)
       case _ => None
     }
-
-  /** A bare multipart identifier through the same two routes
-    * [[registered]] resolves relations by. */
-  private def byIdentifier(spark: SparkSession,
-                           parts: Seq[String]): Option[(String, String)] =
-    parts match {
-      case Seq(n) => IcebergSqlTables.get(spark, n).map(dir => (n, dir))
-      case _ if parts.size <= 3 =>
-        graftCatalogDir(spark, parts.head, parts.tail)
-          .map(dir => (parts.mkString("."), dir))
-      case _ => None
-    }
-
-  /** The table dir of `<cat>.<path...>` when `<cat>` is configured as a
-    * [[graft.sources.GraftTableCatalog]] and the table exists. */
-  private def graftCatalogDir(spark: SparkSession, cat: String,
-                              path: Seq[String]): Option[String] =
-    spark.conf.getOption(s"spark.sql.catalog.$cat")
-      .filter(_ == classOf[graft.sources.GraftTableCatalog].getName)
-      .flatMap(_ => spark.conf.getOption(s"spark.sql.catalog.$cat.warehouse"))
-      .map(w => (w +: path).mkString("/"))
-      .filter { dir =>
-        val hint = new org.apache.hadoop.fs.Path(dir,
-          "metadata/version-hint.text")
-        hint.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(hint)
-      }
+  }
 
   /** Table name + any alias wrapped around the relation — the
     * qualifiers a WHERE may legally carry. For catalog-qualified names

@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, StagedTable, StagingTableCatalog, SupportsNamespaces, SupportsRead, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.{Expressions, Literal, Transform}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsDynamicOverwrite, SupportsOverwrite, V1Write, Write, WriteBuilder}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsOverwrite, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
@@ -37,8 +37,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `df.writeTo(...).append()`, `.overwrite(cond)` (metadata-only
   * truncate for literal-true, exact-predicate delete otherwise), and
   * `.overwritePartitions()` (DYNAMIC overwrite — replace exactly the
-  * partitions the batch touches via [[IcebergLite.overwritePartitions]]),
-  * `spark.table`, `SELECT ... FOR
+  * partitions the batch touches via [[IcebergLite.overwritePartitions]];
+  * Spark has no V1 writer for it, so it needs the graft extensions'
+  * `IcebergDynamicOverwriteRule`), `spark.table`, `SELECT ... FOR
   * VERSION AS OF` (snapshot id or named ref) / `FOR TIMESTAMP AS OF`,
   * `ALTER TABLE ADD/RENAME COLUMN` and type widening, SHOW TABLES /
   * DROP TABLE. Table properties `sort-order` and `bloom-columns`
@@ -59,9 +60,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * travel, multi-generation schemas, over-cap delete states) fall back
   * to a `V1Scan` over [[IcebergLite.readTableWhere]]. Names registered
   * through [[graft.Catalog.registerIcebergTable]] are V2 relations over
-  * this same table, and UPDATE / MERGE / DELETE over either name route
-  * at parse time onto the same commands (plans/IcebergWrite.scala), so
-  * the two naming routes cannot drift.
+  * this same table. SQL DML splits by session, not by name kind: with
+  * the graft extensions, INSERT / DELETE / UPDATE / MERGE / TRUNCATE
+  * over either name route at parse time onto one set of commands
+  * (plans/IcebergWrite.scala: row counts as results, the MOR
+  * delete/update modes); a session without them takes this table's V2
+  * row-level path (`SupportsRowLevelOperations`), the only route stock
+  * Spark has.
   */
 class GraftTableCatalog extends TableCatalog with StagingTableCatalog
     with SupportsNamespaces
@@ -501,7 +506,7 @@ object GraftTableCatalog {
 /** One IcebergLite table seen through the V2 `Table` interface;
   * `snapshotId` pins a time-travel read (write capabilities drop). */
 class GraftIcebergTable(ident: Identifier, val tableDir: String,
-                        snapshotId: Option[Long])
+                        val snapshotId: Option[Long])
     extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.TruncatableTable
@@ -720,15 +725,11 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
   // ---- write: V1Write onto the distributed appendSnapshot -----------------
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder with SupportsOverwrite with SupportsDynamicOverwrite {
+    new WriteBuilder with SupportsOverwrite {
       private var overwriteBy: Option[Array[Filter]] = None
-      private var dynamic = false
 
       override def overwrite(filters: Array[Filter]): WriteBuilder = {
         overwriteBy = Some(filters); this
-      }
-      override def overwriteDynamicPartitions(): WriteBuilder = {
-        dynamic = true; this
       }
 
       override def build(): Write = new V1Write {
@@ -739,11 +740,6 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
               val target = IcebergLite.tableSchema(s, tableDir)
               val aligned = graft.plans.IcebergWriteAlign.byName(
                 s"write to ${name()}", data, target)
-              if (dynamic) {
-                // replace exactly the partitions the batch touches
-                IcebergLite.overwritePartitions(s, tableDir, aligned)
-                return
-              }
               // every overwrite shape commits as ONE snapshot (no
               // delete-landed-but-batch-never-did crash window, no
               // eager source materialization): full replace for

@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 /** Bridge into the `classic` Dataset internals (analyzed plan extraction
   * and Dataset construction from a LogicalPlan) for graft's custom
   * logical operators — the Spark-4 equivalents of the long-standing
-  * `Dataset.ofRows` / `df.logicalPlan` internal APIs.
+  * `Dataset.ofRows` / `df.logicalPlan` internal APIs — plus the
+  * listener-bus drain [[graft.tools.JobProfile]] times against.
   */
 object GraftPlanShim {
   def analyzedPlan(df: Dataset[_]): LogicalPlan =
@@ -14,4 +15,9 @@ object GraftPlanShim {
     df.asInstanceOf[classic.Dataset[_]].queryExecution.optimizedPlan
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  /** Block until every listener has seen every event posted so far
+    * (`private[spark]` on the context), so a listener removed after an
+    * action has recorded all of that action's jobs and stages. */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

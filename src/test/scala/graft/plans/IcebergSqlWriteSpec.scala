@@ -413,6 +413,35 @@ class IcebergSqlWriteSpec extends SparkSuite {
     assert(!eDel.isInstanceOf[IllegalArgumentException])
   }
 
+  test("a rebound or dropped registered name no longer reaches the table") {
+    def fresh(name: String): String = {
+      val dir = tmp()
+      IcebergLite.createTable(spark, Seq((1L, 10L), (2L, 20L)).toDF("id", "n"),
+        dir)
+      Catalog.registerIcebergTable(spark, name, dir)
+      dir
+    }
+    def rows(dir: String) = IcebergLite.readTable(spark, dir).count()
+
+    // rebound to an ordinary frame: SELECT reads the frame, and DML must
+    // not write through to the table the name used to name
+    val rebound = fresh("sqlw_rebound")
+    Seq((1L, 10L)).toDF("id", "n").createOrReplaceTempView("sqlw_rebound")
+    intercept[Exception](spark.sql("DELETE FROM sqlw_rebound WHERE id = 1"))
+    intercept[Exception](spark.sql("INSERT INTO sqlw_rebound VALUES (3, 30)"))
+    assert(rows(rebound) === 2L)
+
+    val dropped = fresh("sqlw_dropped")
+    val snap = IcebergLite.metaTable(spark, dropped, "snapshots")
+      .select("snapshot_id").head().getLong(0)
+    spark.catalog.dropTempView("sqlw_dropped")
+    intercept[Exception](spark.sql("INSERT INTO sqlw_dropped VALUES (3, 30)"))
+    intercept[Exception](spark.sql("DELETE FROM sqlw_dropped WHERE id = 1"))
+    intercept[Exception](
+      spark.sql(s"SELECT * FROM sqlw_dropped VERSION AS OF $snap"))
+    assert(rows(dropped) === 2L)
+  }
+
   // ---- r18: atomic single-snapshot DML ------------------------------------
 
   test("atomic DML: MERGE / MOR UPDATE / INSERT OVERWRITE are ONE snapshot each") {

@@ -19,16 +19,6 @@ object Catalog {
       Tables.load(spark, dir, t).createOrReplaceTempView(t)
     }
 
-  /** Register the outputs of a NexusPipeline/ConvertCli run (the 8 typed
-    * tables) as temp views named by their routing table names.
-    */
-  def registerEtlOutput(spark: SparkSession, outDir: String): Unit =
-    graft.etl.NexusSchemas.byTable.keys.foreach { t =>
-      val path = s"$outDir/$t"
-      if (new java.io.File(path).exists())
-        spark.read.parquet(path).createOrReplaceTempView(t)
-    }
-
   /** Register an IcebergLite warehouse
     * ([[graft.etl.NexusPipeline.processAndWriteIceberg]] output) as temp
     * views — the reference's `spark.read.table` route

@@ -194,11 +194,8 @@ final class IncrementalIvfIndex(
     */
   def assignmentQuality(batch: DataFrame, idCol: String, vecCol: String,
                         minCos: Double): DataFrame = {
-    val scored = Similarity.centroidLiterals(centroids).map { case (_, cv) =>
-      Similarity.cosine(col(vecCol), cv)
-    }
-    val best = if (scored.length == 1) scored.head
-               else greatest(scored.toIndexedSeq: _*)
+    val best = Similarity.nearestCentroid(
+      Similarity.centroidLiterals(centroids), col(vecCol)).getField("c")
     batch.select(best.as("__best"))
       .agg(count(lit(1)).as("n_vectors"),
         avg(col("__best")).as("avg_best_cos"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.dedup.Dedup.FatBlocks
 
 /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
   * deduplication by CLUSTER BLOCKING — k-means-partition the embedding
@@ -25,8 +26,8 @@ import graft.dedup.Dedup
   * Scale shape (100 TB): assignment is the literal-centroid codegen
   * argmax (zero shuffle, see ivfIndex); the only wide op is one shuffle
   * keyed on `centroid_id`; within-cell pairing is bounded by
-  * `maxClusterSize` (same liveness valve + same SILENT-loss caveat as
-  * the sign-sketch path — a skipped cell is enumerated by
+  * `maxClusterSize` (the same [[Dedup.FatBlocks]] valve and SILENT-loss
+  * caveat as the sign-sketch path — a skipped cell is enumerated by
   * [[skippedClusters]], and exact-duplicate mass belongs to
   * `embed_dedup_exact`'s quantized-key groupBy run first). At the
   * paper's k (50k) cells are ~corpus/50k wide — the cap is a guard
@@ -54,17 +55,10 @@ object SemDedup {
       centroids: DataFrame,
       minCos: Double,
       maxClusterSize: Int = Dedup.DefaultMaxBucketSize): DataFrame = {
-    val assigned = assignedWithCos(corpus, idCol, vecCol, centroids)
-      .select(col("id"), col("v"), col("centroid_id"))
-    val capped = if (maxClusterSize > 0) {
-      // the fat-cell list is bounded by |corpus| / maxClusterSize rows —
-      // broadcast anti-join, same valve shape as the LSH paths
-      val fat = assigned.groupBy("centroid_id")
-        .agg(count(lit(1)).as("__csz"))
-        .filter(col("__csz") > maxClusterSize)
-        .select("centroid_id")
-      assigned.join(broadcast(fat), Seq("centroid_id"), "left_anti")
-    } else assigned
+    val assigned = blocked(corpus, idCol, vecCol, centroids)
+    val capped =
+      if (maxClusterSize <= 0) assigned
+      else FatBlocks(assigned, Seq("centroid_id"), maxClusterSize).drop(assigned)
     val a = capped.alias("a")
     val b = capped.alias("b")
     a.join(b, col("a.centroid_id") === col("b.centroid_id") &&
@@ -78,8 +72,9 @@ object SemDedup {
   /** The cells a capped [[candidates]] run SKIPPED, as
     * `(centroid_id, n_vectors)` — non-empty means pairs were dropped
     * (cluster blocking has no second chance for a skipped cell; cf.
-    * [[Similarity.cosineDedupSkippedBuckets]]). One aggregate on the
-    * same shuffle key; run alongside any capped production pass.
+    * [[Similarity.cosineDedupSkippedBuckets]]). It is the [[FatBlocks]]
+    * list the candidates anti-join against, over the same assignment;
+    * run it alongside any capped production pass.
     */
   def skippedClusters(
       corpus: DataFrame,
@@ -88,11 +83,9 @@ object SemDedup {
       centroids: DataFrame,
       maxClusterSize: Int = Dedup.DefaultMaxBucketSize): DataFrame = {
     require(maxClusterSize > 0, "audit is for capped runs (maxClusterSize > 0)")
-    Similarity.assignCentroids(
-        corpus.select(col(idCol).as("id"), col(vecCol).as("v")),
-        "id", "v", centroids, keep = 1)
-      .groupBy("centroid_id").agg(count(lit(1)).as("n_vectors"))
-      .filter(col("n_vectors") > maxClusterSize)
+    FatBlocks(blocked(corpus, idCol, vecCol, centroids), Seq("centroid_id"),
+        maxClusterSize)
+      .list.withColumnRenamed("n_rows", "n_vectors")
   }
 
   /** The corpus with semantic duplicates removed, PAPER POLICY: within
@@ -129,24 +122,26 @@ object SemDedup {
     docs.join(losers, Seq(idCol), "left_anti")
   }
 
+  /** `(id, v, centroid_id)`: the corpus blocked into its cells — the one
+    * frame [[candidates]] pairs and [[skippedClusters]] sizes. */
+  private def blocked(corpus: DataFrame, idCol: String, vecCol: String,
+                      centroids: DataFrame): DataFrame =
+    assignedWithCos(corpus, idCol, vecCol, centroids)
+      .select(col("id"), col("v"), col("centroid_id"))
+
   /** Corpus rows as `(id, v, centroid_id, cos_centroid)` — one map-only
-    * pass; both the assignment argmax and the kept cosine evaluate the
-    * literal-centroid codegen tree.
+    * pass over [[Similarity.nearestCentroid]], the literal-centroid
+    * codegen argmax IVF assignment uses.
     */
   private def assignedWithCos(
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
       centroids: DataFrame): DataFrame = {
-    val cents = Similarity.centroidLiterals(centroids)
-    val scored = cents.map { case (cid, cv) =>
-      struct(Similarity.cosine(col("v"), cv).as("c"), lit(cid).as("id"))
-    }
-    val bestStruct =
-      if (scored.length == 1) scored.head
-      else greatest(scored.toIndexedSeq: _*)
+    val best = Similarity.nearestCentroid(
+      Similarity.centroidLiterals(centroids), col("v"))
     corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("__b", bestStruct)
+      .withColumn("__b", best)
       .select(col("id"), col("v"),
         col("__b").getField("id").as("centroid_id"),
         col("__b").getField("c").as("cos_centroid"))

@@ -7,6 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructField, StructType}
 
+import graft.dedup.Dedup.FatBlocks
+
 /** Similarity search over an embedding column (array<float>).
   *
   * Two tiers, as a 100 TB pipeline needs both:
@@ -26,7 +28,7 @@ object Similarity {
   /** cos(a, b) over two array<float> columns via the native codegen
     * expression [[graft.functions.CosineSim]] — one fused loop, index-order
     * accumulation (bit-identical to a fold, ~10x an interpreted
-    * aggregate/zip_with pipeline).
+    * aggregate/zip_with pipeline). NULL when a side has zero norm.
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.CosineSim.col(a, b)
@@ -294,24 +296,23 @@ object Similarity {
   }
 
   /** One `struct(c = cosine, id)` per centroid, orderable: struct order
-    * ranks by cosine, ties to the larger id. A NaN cosine (a zero-norm
-    * vector or centroid: 0/0) ranks below every number — Spark orders
-    * NaN above +Infinity, so an unguarded zero centroid would win every
-    * argmax. When every score is NaN, all tie and the largest id wins.
+    * ranks by cosine, ties to the larger id. An undefined cosine (a
+    * zero-norm vector or centroid) is NULL, which ranks below every
+    * number; when every score is NULL, all tie and the largest id wins.
     */
   private def scoredCentroids(cents: Array[(Any, Column)], vec: Column): Array[Column] =
     cents.map { case (cid, cv) =>
-      struct(nanvl(cosine(vec, cv), lit(Double.NegativeInfinity)).as("c"),
-        lit(cid).as("id"))
+      struct(cosine(vec, cv).as("c"), lit(cid).as("id"))
     }
 
-  /** Argmax-cosine centroid id as a static codegen expression (ties to
-    * the largest id, matching max_by over struct(cos, id)).
+  /** The best-cosine centroid of `vec` as `struct(c, id)` — THE cosine
+    * argmax (a static codegen expression, [[scoredCentroids]] order):
+    * IVF assignment, SemDeDup cells and the routing-quality monitor all
+    * read it.
     */
-  private def bestCentroid(cents: Array[(Any, Column)], vec: Column): Column = {
+  private[ann] def nearestCentroid(cents: Array[(Any, Column)], vec: Column): Column = {
     val scored = scoredCentroids(cents, vec)
-    (if (scored.length == 1) scored.head
-     else greatest(scored.toIndexedSeq: _*)).getField("id")
+    if (scored.length == 1) scored.head else greatest(scored.toIndexedSeq: _*)
   }
 
   /** The `nProbe` best-cosine centroid ids of `vec`, one row each
@@ -367,8 +368,9 @@ object Similarity {
     *    rank depends only on the id, so every block starts from the same
     *    seed rows, and centroid `c` of every block belongs to the seed of
     *    id rank `c` (ascending).
-    *  - Assignment: per block, argmax cosine with the NaN and tie rules
-    *    of [[scoredCentroids]] (NaN lowest, ties to the larger seed id).
+    *  - Assignment: per block, argmax cosine with the rules of
+    *    [[scoredCentroids]] (an undefined cosine lowest, ties to the
+    *    larger seed id).
     *  - Update: the members' mean, summed in double; a centroid that
     *    loses every member keeps its position.
     *
@@ -486,8 +488,8 @@ object Similarity {
 
   /** Index (0-based, within `k`) of the best-cosine centroid for the
     * block of `x` at `xo` (norm `xNorm`) among centroids `c0 until c0 + k`
-    * of `cb` (norms `cn`): a NaN cosine ranks lowest, ties go to the
-    * larger index — [[scoredCentroids]]'s order. */
+    * of `cb` (norms `cn`): an undefined (NaN) cosine ranks lowest, ties
+    * go to the larger index — [[scoredCentroids]]'s order. */
   private def nearestCosine(x: Array[Double], xo: Int, xNorm: Double,
                             cb: Array[Double], cn: Array[Double], c0: Int,
                             k: Int, dsub: Int): Int = {
@@ -596,7 +598,7 @@ object Similarity {
       vecCol: String, centroids: DataFrame, keep: Int): DataFrame = {
     val cents = centroidLiterals(centroids)
     if (keep == 1) {
-      df.withColumn("centroid_id", bestCentroid(cents, col(vecCol)))
+      df.withColumn("centroid_id", nearestCentroid(cents, col(vecCol)).getField("id"))
         .select(col(idCol), col(vecCol), col("centroid_id"))
     } else {
       // top `keep` centroids — probe-side only, fan-out = nProbe
@@ -722,8 +724,9 @@ object Similarity {
     * groupBy) run first, or to a higher `bits` resolution. Pass
     * `maxBucketSize = 0` for exhaustive pairing on a corpus you control —
     * and because the loss is otherwise SILENT, check
-    * [[cosineDedupSkippedBuckets]] (same arguments): a non-empty result
-    * enumerates exactly the buckets whose pairs this call dropped.
+    * [[cosineDedupSkippedBuckets]] (same arguments): it returns the
+    * valve's own skip list, so a non-empty result enumerates exactly the
+    * buckets whose pairs this call dropped.
     */
   def cosineDedupCandidates(
       corpus: DataFrame,
@@ -733,15 +736,10 @@ object Similarity {
       dim: Int,
       minCos: Double,
       maxBucketSize: Int = graft.dedup.Dedup.DefaultMaxBucketSize): DataFrame = {
-    val b0 = withLshBucket(corpus.select(col(idCol).as("id"), col(vecCol).as("v")), "v", bits, dim)
-    val b = if (maxBucketSize > 0) {
-      // anti-join against the (tiny, usually empty) fat-bucket list —
-      // bounded by |corpus| / maxBucketSize rows, so it broadcasts
-      val fat = b0.groupBy("lsh_bucket").agg(count(lit(1)).as("__bsz"))
-        .filter(col("__bsz") > maxBucketSize)
-        .select("lsh_bucket")
-      b0.join(broadcast(fat), Seq("lsh_bucket"), "left_anti")
-    } else b0
+    val b0 = sketchBlocked(corpus, idCol, vecCol, bits, dim)
+    val b =
+      if (maxBucketSize <= 0) b0
+      else FatBlocks(b0, Seq("lsh_bucket"), maxBucketSize).drop(b0)
     val a = b.alias("a")
     val c = b.alias("b")
     a.join(c, col("a.lsh_bucket") === col("b.lsh_bucket") && col("a.id") < col("b.id"))
@@ -754,9 +752,9 @@ object Similarity {
     * `(lsh_bucket, n_vectors)` — the recall-loss audit for the
     * single-bucket sketch, where a skipped bucket's pairs are permanently
     * lost (no bands to recover them). Empty result = the cap was a no-op
-    * and the candidate set is exhaustive. One aggregate pass over the
-    * sketch (same shuffle key as the candidate join); run it alongside
-    * any capped production dedup and alert on non-empty.
+    * and the candidate set is exhaustive. It is the [[FatBlocks]] list
+    * the candidates anti-join against, over the same sketch frame; run it
+    * alongside any capped production dedup and alert on non-empty.
     */
   def cosineDedupSkippedBuckets(
       corpus: DataFrame,
@@ -766,8 +764,15 @@ object Similarity {
       dim: Int,
       maxBucketSize: Int = graft.dedup.Dedup.DefaultMaxBucketSize): DataFrame = {
     require(maxBucketSize > 0, "audit is for capped runs (maxBucketSize > 0)")
-    withLshBucket(corpus.select(col(idCol).as("id"), col(vecCol).as("v")), "v", bits, dim)
-      .groupBy("lsh_bucket").agg(count(lit(1)).as("n_vectors"))
-      .filter(col("n_vectors") > maxBucketSize)
+    FatBlocks(sketchBlocked(corpus, idCol, vecCol, bits, dim),
+        Seq("lsh_bucket"), maxBucketSize)
+      .list.withColumnRenamed("n_rows", "n_vectors")
   }
+
+  /** `(id, v, lsh_bucket)`: the corpus blocked by its sign sketch — the
+    * one frame [[cosineDedupCandidates]] pairs and its audit sizes. */
+  private def sketchBlocked(corpus: DataFrame, idCol: String, vecCol: String,
+                            bits: Int, dim: Int): DataFrame =
+    withLshBucket(corpus.select(col(idCol).as("id"), col(vecCol).as("v")),
+      "v", bits, dim)
 }

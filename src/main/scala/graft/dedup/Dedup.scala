@@ -30,6 +30,40 @@ object Dedup {
     */
   val DefaultMaxBucketSize: Int = 1000
 
+  /** The fat-block valve — the ONE definition every size-capped blocking
+    * step shares (MinHash bands, sign-sketch buckets, SemDeDup cells):
+    * within-block pairing is quadratic in block size, so the blocks of
+    * `blocked` (keyed by `keys`) holding more than `cap` rows are skipped.
+    * [[list]] is both the skip list and the audit of what was skipped, so
+    * the report comes from the computation that causes the loss.
+    *
+    * Plan shape: the list is bounded by |blocked| / cap rows (usually
+    * empty) and broadcasts, so the valve costs one partial-agg pass plus
+    * a map-side anti filter, never a second full shuffle of `blocked`
+    * (the semi-join-against-OK-blocks formulation measured ~0.3 s extra
+    * at sf0.1).
+    */
+  private[graft] final case class FatBlocks(blocked: DataFrame,
+      keys: Seq[String], cap: Int) {
+    require(cap > 0, s"block cap must be positive, got $cap")
+
+    /** The blocks holding more than `cap` rows, as `(keys..., n_rows)`. */
+    lazy val list: DataFrame =
+      blocked.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n_rows"))
+        .filter(col("n_rows") > cap)
+
+    /** `df` without the rows of a fat block (a broadcast anti-join). */
+    def drop(df: DataFrame): DataFrame =
+      df.join(broadcast(list.select(keys.map(col): _*)), keys, "left_anti")
+  }
+
+  /** Corpus size from which the MinHash paths run the sig-agreement
+    * prefilter ([[sigAgreementPrefilter]]): below it the two signature
+    * joins cost more than the exact verify they save (measured +0.3 s at
+    * 5k docs vs -100 s at 500k).
+    */
+  private val PrefilterMinDocs = 50000L
+
   // ---------------------------------------------------------------- exact
 
   /** Exact dedup by content hash: one shuffle on the 256-bit digest.
@@ -325,17 +359,12 @@ object Dedup {
     // all.count() here is a full scan of the largest table per daily
     // batch, paid for two boolean decisions.
     val nDocs = corpusSize.getOrElse(all.count())
-    val capped = if (maxBucketSize > 0 && nDocs > maxBucketSize) {
-      val fat = bandedAll.groupBy("band_id", "band_hash")
-        .agg(count(lit(1)).as("__bsz"))
-        .filter(col("__bsz") > maxBucketSize)
-        .select("band_id", "band_hash")
-      // fat list bounded by |banded| / maxBucketSize rows -> broadcast
-      // anti-join, map-side on both inputs; skipped when the whole
-      // corpus fits inside one cap (no bucket can exceed it)
-      (df: DataFrame) =>
-        df.join(broadcast(fat), Seq("band_id", "band_hash"), "left_anti")
-    } else identity[DataFrame] _
+    // skipped when the whole corpus fits inside one cap (no bucket can
+    // exceed it)
+    val capped: DataFrame => DataFrame =
+      if (maxBucketSize > 0 && nDocs > maxBucketSize)
+        FatBlocks(bandedAll, Seq("band_id", "band_hash"), maxBucketSize).drop
+      else identity
     // The natural plan shuffles BOTH join sides on (band_id, band_hash) —
     // an O(corpus) shuffle per fold. The incremental contract is
     // delta ≪ corpus, so a maintaining caller sets `broadcastDelta` when
@@ -354,8 +383,7 @@ object Dedup {
       .select(least(col("a.id"), col("b.id")).as("id_a"),
               greatest(col("a.id"), col("b.id")).as("id_b"))
       .distinct()
-    val prefiltered = if (nDocs < 50000) candidates else {
-      val prefilterAt = math.max(0.0, minJaccard - prefilterMargin)
+    val prefiltered = if (nDocs < PrefilterMinDocs) candidates else {
       // `all` is typically a parquet-backed maintained table here (not a
       // caller-persisted frame like minHashCandidatesFromSigs'), so
       // joining it twice re-scans the corpus twice per fold. Fetch the
@@ -367,12 +395,7 @@ object Dedup {
       val sigLookup = all.select("id", "minhash_sig")
         .join(ids, Seq("id"), "left_semi")
         .localCheckpoint()
-      cand
-        .join(sigLookup.select(col("id").as("id_a"), col("minhash_sig").as("sig_a")), "id_a")
-        .join(sigLookup.select(col("id").as("id_b"), col("minhash_sig").as("sig_b")), "id_b")
-        .filter(graft.functions.SigAgreement.col(col("sig_a"), col("sig_b"))
-          >= prefilterAt)
-        .select("id_a", "id_b")
+      sigAgreementPrefilter(cand, sigLookup, minJaccard, prefilterMargin)
     }
     verifyPairs(prefiltered, all, minJaccard)
   }
@@ -414,45 +437,16 @@ object Dedup {
     // signatures, and the native BandHashes explode is cheaper than
     // building + reading an 8M-row cache (persisting it measured 2x
     // SLOWER end-to-end at 500k docs).
-    // The valve joins against the FAT-bucket list, not the OK list: a
-    // bucket must hold > maxBucketSize rows to appear, so the list is
-    // bounded by |banded| / maxBucketSize rows (usually empty) and
-    // broadcasts — the cap then costs one partial-agg pass plus a
-    // map-side anti filter, never a second full shuffle of the banded
-    // rows (the semi-join-against-OK formulation measured ~0.3 s extra
-    // at sf0.1 — fixed overhead a 3 s pipeline notices). When the corpus
-    // itself has <= maxBucketSize docs no bucket CAN exceed the cap, so
-    // the valve is skipped outright (nDocs is counted anyway for the
-    // prefilter decision, and the count materializes the caller's
-    // persisted signature frame before the heavy branches read it).
+    // When the corpus itself has <= maxBucketSize docs no bucket CAN
+    // exceed the cap, so the valve is skipped outright (nDocs is counted
+    // anyway for the prefilter decision, and the count materializes the
+    // caller's persisted signature frame before the heavy branches read
+    // it).
     val nDocs = sigs.count()
     val candidates = cappedBucketPairs(bandedAll, nDocs, maxBucketSize)
-    // Banding's S-curve has a heavy low-similarity tail (one colliding
-    // band admits the pair no matter how dissimilar): on a 500k-doc
-    // corpus 90% of distinct candidates had true Jaccard < 0.1. Those
-    // must not reach the exact verify — its shingle-set join is the
-    // expensive step. The signature-agreement estimator (64 long
-    // compares on the ALREADY-persisted sigs) prefilters them; the
-    // margin keeps the estimator's sampling noise (sigma ~ 1/sqrt(k))
-    // from dropping true pairs: a j=minJaccard pair estimating below
-    // minJaccard - 0.2 is a >3-sigma event at k=64. The oracle (exact
-    // Jaccard recomputed independently) certifies recall end to end.
-    //
-    // ADAPTIVE: below ~50k docs the two sig joins cost more than the
-    // verify they would save (measured +0.3 s at 5k docs vs -100 s at
-    // 500k), so small corpora go straight to the exact verify — same
-    // results either way, the prefilter only prunes pairs the
-    // minJaccard cut would drop anyway. (nDocs was counted above, before
-    // the valve decision.)
-    val prefiltered = if (nDocs < 50000) candidates else {
-      val prefilterAt = math.max(0.0, minJaccard - prefilterMargin)
-      candidates
-        .join(sigs.select(col("id").as("id_a"), col("minhash_sig").as("sig_a")), "id_a")
-        .join(sigs.select(col("id").as("id_b"), col("minhash_sig").as("sig_b")), "id_b")
-        .filter(graft.functions.SigAgreement.col(col("sig_a"), col("sig_b"))
-          >= prefilterAt)
-        .select("id_a", "id_b")
-    }
+    val prefiltered =
+      if (nDocs < PrefilterMinDocs) candidates
+      else sigAgreementPrefilter(candidates, sigs, minJaccard, prefilterMargin)
     // exact verify on the survivors: single-pass native Jaccard (no
     // intermediate intersect/union arrays) over the shingle sets carried
     // on the SAME signature frame — no second scan of the corpus.
@@ -512,22 +506,18 @@ object Dedup {
     * [[minHashCandidatesPortable]] (and mirrored literally by the
     * `dedup_minhash` oracle SQL: `HAVING COUNT(*) > cap`, `a.id <
     * b.id`). Buckets holding more than `maxBucketSize` rows are dropped
-    * via a broadcast anti-join against the fat list (bounded by
-    * |banded| / maxBucketSize rows, usually empty — see the plan notes
-    * at the production call site); `maxBucketSize = 0` disables the
-    * valve, and a corpus of <= maxBucketSize docs skips it outright
-    * (no bucket CAN exceed the cap). A cap change edited here cannot
-    * silently diverge the claimed cross-engine identity.
+    * by the [[FatBlocks]] valve; `maxBucketSize = 0` disables it, and a
+    * corpus of <= maxBucketSize docs skips it outright (no bucket CAN
+    * exceed the cap). A cap change edited here cannot silently diverge
+    * the claimed cross-engine identity.
     */
   private def cappedBucketPairs(bandedAll: DataFrame, nDocs: Long,
       maxBucketSize: Int): DataFrame = {
-    val banded = if (maxBucketSize > 0 && nDocs > maxBucketSize) {
-      val fat = bandedAll.groupBy("band_id", "band_hash")
-        .agg(count(lit(1)).as("__bsz"))
-        .filter(col("__bsz") > maxBucketSize)
-        .select("band_id", "band_hash")
-      bandedAll.join(broadcast(fat), Seq("band_id", "band_hash"), "left_anti")
-    } else bandedAll
+    val banded =
+      if (maxBucketSize > 0 && nDocs > maxBucketSize)
+        FatBlocks(bandedAll, Seq("band_id", "band_hash"), maxBucketSize)
+          .drop(bandedAll)
+      else bandedAll
     val a = banded.alias("a")
     val b = banded.alias("b")
     a.join(b,
@@ -536,6 +526,33 @@ object Dedup {
         col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
+  }
+
+  /** The sig-agreement prefilter of the MinHash paths (corpora of at
+    * least [[PrefilterMinDocs]] docs): banding's S-curve has a heavy
+    * low-similarity tail (one colliding band admits the pair no matter
+    * how dissimilar) — on a 500k-doc corpus 90% of distinct candidates
+    * had true Jaccard < 0.1 — and those must not reach the exact verify,
+    * whose shingle-set join is the expensive step. The signature-
+    * agreement estimator (64 long compares per pair) keeps the pairs
+    * estimated at `minJaccard - prefilterMargin` or more; the margin
+    * keeps the estimator's sampling noise (sigma ~ 1/sqrt(k)) from
+    * dropping true pairs: a j=minJaccard pair estimating below
+    * minJaccard - 0.2 is a >3-sigma event at k=64. The prefilter only
+    * prunes pairs the minJaccard cut would mostly drop anyway; the
+    * oracle (exact Jaccard recomputed independently) certifies recall
+    * end to end. `sigs` holds `(id, minhash_sig)` for every id in
+    * `candidates`.
+    */
+  private def sigAgreementPrefilter(candidates: DataFrame, sigs: DataFrame,
+      minJaccard: Double, prefilterMargin: Double): DataFrame = {
+    val prefilterAt = math.max(0.0, minJaccard - prefilterMargin)
+    candidates
+      .join(sigs.select(col("id").as("id_a"), col("minhash_sig").as("sig_a")), "id_a")
+      .join(sigs.select(col("id").as("id_b"), col("minhash_sig").as("sig_b")), "id_b")
+      .filter(graft.functions.SigAgreement.col(col("sig_a"), col("sig_b"))
+        >= prefilterAt)
+      .select("id_a", "id_b")
   }
 
   /** Exact-Jaccard verify of candidate pairs against a signature table's
@@ -912,14 +929,21 @@ object Dedup {
     * min-label propagation: each vertex adopts the smallest id reachable
     * so far; converges in O(diameter) joins. This resolves TRANSITIVE
     * duplicate chains (a~b, b~c => one cluster) that pairwise dropping
-    * handles only approximately. Everything is DataFrame joins — no graph
-    * library, no driver-side union-find — so it scales with the shuffle.
+    * handles only approximately. Graphs of more than 200k edges run as
+    * DataFrame joins — no graph library — so they scale with the
+    * shuffle; smaller ones solve with a driver-side union-find.
     *
     * @param pairs (id_a, id_b) undirected candidate edges
     * @return (id, component) — component = min id in the cluster;
     *         isolated ids absent from `pairs` are not returned
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame =
+    connectedComponents(pairs, maxIter, localMaxEdges = 200000L)
+
+  /** [[connectedComponents]] with the driver union-find's edge cap
+    * explicit (0 forces the distributed loop). */
+  private[graft] def connectedComponents(pairs: DataFrame, maxIter: Int,
+      localMaxEdges: Long): DataFrame = {
     // Iterative algorithms MUST truncate lineage each round: with plain
     // persist the logical plan under every action still carries the whole
     // upstream pipeline (re-analysis/canonicalization per iteration blew
@@ -936,7 +960,7 @@ object Dedup {
       .localCheckpoint()
     // BOUNDED duplicate graphs solve on the driver: the edge count is
     // EXACT (observed on the checkpoint job, no extra action) and the
-    // cap is a hard conf'd bound, so this is the same driver-cost class
+    // cap is a hard bound, so this is the same driver-cost class
     // as the Ranking stitch or the Packing solve — O(edges α) union-find
     // over a few MB, replacing the iterative loop's ~5 jobs/round fixed
     // cost (the dominant per-action price of small curation pipelines).
@@ -946,9 +970,7 @@ object Dedup {
       case Some(n: java.lang.Number) => n.longValue()
       case _ => 0L
     }
-    val localCap = pairs.sparkSession.conf
-      .get("spark.graft.cc.localMaxEdges", "200000").toLong
-    if (nEdges <= localCap) return localComponents(edges)
+    if (nEdges <= localMaxEdges) return localComponents(edges)
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("component", col("id"))
       .localCheckpoint()

@@ -13,6 +13,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * interpreted `aggregate`/`zip_with` passes. Deterministic index-order
   * accumulation in double precision — bit-identical to the fold-based
   * definition.
+  *
+  * An undefined cosine is NULL, never NaN: a zero-norm side makes it
+  * 0/0 (as do non-finite elements). NULL fails every `>=` filter, sorts
+  * last under `desc` and lowest in a struct argmax, so no caller needs
+  * its own guard; a NaN would pass `cos >= minCos` and rank first.
   */
 case class CosineSim(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -29,18 +34,23 @@ case class CosineSim(left: Expression, right: Expression)
       s"graft_cosine expects ARRAY<FLOAT|DOUBLE> args, got " +
         s"(${left.dataType.sql}, ${right.dataType.sql})")
   override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
   override def prettyName: String = "graft_cosine"
 
   private lazy val leftDouble = elem(left.dataType).get
   private lazy val rightDouble = elem(right.dataType).get
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    CosineSim.compute(a.asInstanceOf[ArrayData], leftDouble,
+  override protected def nullSafeEval(a: Any, b: Any): Any = {
+    val c = CosineSim.compute(a.asInstanceOf[ArrayData], leftDouble,
       b.asInstanceOf[ArrayData], rightDouble)
+    if (c.isNaN) null else c
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.CosineSim.compute($a, $leftDouble, $b, $rightDouble)")
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      ${ev.value} = graft.functions.CosineSim.compute($a, $leftDouble, $b, $rightDouble);
+      ${ev.isNull} = Double.isNaN(${ev.value});
+    """)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSim =
@@ -48,6 +58,7 @@ case class CosineSim(left: Expression, right: Expression)
 }
 
 object CosineSim {
+  /** The raw cosine: NaN where undefined (the expression turns it NULL). */
   def compute(a: ArrayData, aDouble: Boolean, b: ArrayData, bDouble: Boolean): Double = {
     // Mixed-dimension embeddings (vectors from different models) must not
     // silently score by prefix — the truncated norms make the result look

@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (STREAMINFO metadata block). The audio companion of [[ImageHeaders]]:
   * stream parameters live in the container header by spec, so
   * extracting them needs byte slicing only — the sample decoder itself
-  * stays env-stubbed ([[Multimodal.FakeCodec]]).
+  * is [[Multimodal.decodeAudio]].
   *
   * Format references (public specs):
   *  - WAV (RIFF, Microsoft/IBM 1991; WAVEFORMATEX docs): `RIFF`

@@ -15,8 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * descriptor). This replaces the declared "deterministic fake" for the
   * dimension-extraction step of the multimodal family — dimensions live
   * in the container header by spec, so extracting them needs byte
-  * slicing only, not a pixel decoder (which stays env-stubbed:
-  * [[Multimodal.FakeCodec]]).
+  * slicing only, not a pixel decoder (that is
+  * [[Multimodal.decodeImages]]).
   *
   * Format references (public specs):
   *  - PNG (RFC 2083 / W3C): 8-byte signature `89 50 4E 47 0D 0A 1A 0A`,

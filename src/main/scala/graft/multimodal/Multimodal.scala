@@ -1,11 +1,10 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Multimodal column handling: media payloads as opaque `binary` columns
-  * with a typed metadata struct, plus batch decode / feature-extract /
-  * frame-sample plumbing.
+/** Multimodal column handling: media payloads as opaque `binary` columns,
+  * decoded map-side to pixel/sample facts, frames and features.
   *
   * The pixel/sample decode boundary is REAL for PNG, JPEG, GIF,
   * WebP-lossless, WAV and FLAC: `decodeImages`/`gifFrames`/
@@ -13,11 +12,8 @@ import org.apache.spark.sql.functions._
   * [[WebpCodec]] and `decodeAudio` wires [[WavCodec]]/[[FlacCodec]] —
   * pure-JVM spec codecs with oracle-checked output. Formats without a
   * codec yet (lossy WebP/VP8, lossy audio) null through or refuse by
-  * name; `toMediaBlobs`
-  * keeps a deterministic `FakeCodec` payload generator purely for fixture
-  * synthesis. Everything around the codec call — schema, batched
-  * `mapPartitions` execution, partitioning, frame explode — is the real
-  * Spark-side design.
+  * name. Byte-exact media dedup is [[graft.dedup.Dedup.exactGroups]]
+  * over the binary column.
   *
   * Scale notes: payloads never pass through a shuffle here (decode is
   * map-side); metadata-only queries prune the binary column at the parquet
@@ -25,45 +21,6 @@ import org.apache.spark.sql.functions._
   * than inside the blob.
   */
 object Multimodal {
-
-  case class MediaMeta(contentType: String, byteLen: Long, width: Int,
-                       height: Int, nFrames: Int)
-  case class MediaRow(media_id: Long, content: Array[Byte], meta: MediaMeta)
-  case class MediaFeatures(media_id: Long, contentType: String, byteLen: Long,
-                           width: Int, height: Int, nFrames: Int,
-                           brightness: Double, checksum: Long)
-  case class Frame(media_id: Long, frame_idx: Int, frame: Array[Byte])
-
-  /** STUB decode: a real implementation parses the container header. This
-    * fake derives deterministic dimensions from the payload so tests can
-    * assert exact values end-to-end.
-    */
-  object FakeCodec {
-    def decode(content: Array[Byte]): MediaMeta = {
-      val len = content.length.toLong
-      MediaMeta(
-        contentType = "application/x-graft-fake",
-        byteLen = len,
-        width = (len % 640).toInt + 1,
-        height = (len % 480).toInt + 1,
-        nFrames = (len / 256).toInt + 1)
-    }
-  }
-
-  /** Build media blobs from any table with an id and a string payload
-    * (stand-in for reading real image bytes; the binary column shape is
-    * what matters).
-    */
-  def toMediaBlobs(spark: SparkSession, df: DataFrame, idCol: String,
-                   payloadCol: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long").as("media_id"),
-              col(payloadCol).cast("binary").as("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        MediaRow(id, bytes, FakeCodec.decode(bytes))
-      })
-  }
 
   /** (id, text) → (id, content) synthetic container corpus: the shared
     * scaffold for planting decoder inputs over the documents table (the
@@ -83,97 +40,7 @@ object Multimodal {
       .toDF(idCol, "content")
   }
 
-  /** Batched feature extraction over partitions — the `mapPartitions`
-    * shape a vectorized decoder needs (amortized codec init per batch,
-    * no per-row driver involvement).
-    */
-  def extractFeatures(spark: SparkSession, media: Dataset[MediaRow]): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      // per-partition "codec" init happens once here
-      rows.map { r =>
-        var sum = 0L
-        var checksum = 1125899906842597L
-        var i = 0
-        while (i < r.content.length) {
-          sum += r.content(i) & 0xff
-          checksum = checksum * 31 + (r.content(i) & 0xff)
-          i += 1
-        }
-        val brightness = if (r.content.isEmpty) 0.0 else sum.toDouble / r.content.length
-        MediaFeatures(r.media_id, r.meta.contentType, r.meta.byteLen,
-          r.meta.width, r.meta.height, r.meta.nFrames, brightness, checksum)
-      }
-    }
-  }
-
-  /** STUB resize: a real implementation re-encodes pixels; this
-    * deterministic fake subsamples every k-th payload byte so tests can
-    * assert exact output, while the Spark-side shape (map-side batch
-    * transform, metadata rewrite, no shuffle) is the real design.
-    */
-  def resize(spark: SparkSession, media: Dataset[MediaRow],
-             targetWidth: Int, targetHeight: Int): Dataset[MediaRow] = {
-    require(targetWidth > 0 && targetHeight > 0,
-      "target dimensions must be positive")
-    import spark.implicits._
-    media.mapPartitions(_.map { r =>
-      val srcPixels = math.max(1, r.meta.width * r.meta.height)
-      val dstPixels = targetWidth * targetHeight
-      val k = math.max(1, srcPixels / math.max(1, dstPixels))
-      val out = r.content.indices.collect { case i if i % k == 0 => r.content(i) }.toArray
-      MediaRow(r.media_id, out,
-        r.meta.copy(byteLen = out.length.toLong,
-          width = targetWidth, height = targetHeight))
-    })
-  }
-
-  /** Frame sampling: every `stride`-th fixed-size slice of the payload
-    * becomes a frame row (explode is distributed; frames inherit the
-    * parent's partitioning).
-    */
-  def sampleFrames(spark: SparkSession, media: Dataset[MediaRow],
-                   frameBytes: Int, stride: Int): Dataset[Frame] = {
-    require(frameBytes > 0 && stride > 0,
-      "frameBytes and stride must be positive")
-    import spark.implicits._
-    media.flatMap { r =>
-      val n = r.content.length
-      (0 until r.meta.nFrames by stride).iterator.flatMap { f =>
-        val start = f * frameBytes
-        if (start >= n) Iterator.empty
-        else Iterator.single(Frame(r.media_id, f,
-          java.util.Arrays.copyOfRange(r.content, start, math.min(start + frameBytes, n))))
-      }
-    }
-  }
-
-  /** Exact media dedup: group by the payload checksum (computed map-side
-    * in extractFeatures), keep the lowest media_id — the binary column
-    * never shuffles, only (checksum, id) pairs do. Composition of the
-    * multimodal and dedup families.
-    */
-  def dedupByChecksum(spark: SparkSession, media: Dataset[MediaRow]): DataFrame = {
-    val feats = extractFeatures(spark, media).toDF()
-      .select(col("media_id"), col("checksum"))
-    feats.groupBy("checksum")
-      .agg(min(col("media_id")).as("keep_media_id"),
-        count(lit(1)).as("n_copies"))
-  }
-
-  /** Metadata-only projection — must prune `content` at the scan when the
-    * dataset is parquet-backed (binary never read).
-    */
-  def metaTable(media: Dataset[MediaRow]): DataFrame =
-    media.toDF().select(
-      col("media_id"),
-      col("meta.contentType").as("content_type"),
-      col("meta.byteLen").as("byte_len"),
-      col("meta.width").as("width"),
-      col("meta.height").as("height"),
-      col("meta.nFrames").as("n_frames"))
-
-  // ---- REAL pixel path (PNG — the de-stubbed codec boundary) -------------
+  // ---- pixel path ----------------------------------------------------------
 
   /** Decode an image binary column (PNG via [[PngCodec]], baseline JPEG
     * via [[JpegCodec]], GIF via [[GifCodec]], WebP-lossless via
@@ -183,8 +50,7 @@ object Multimodal {
     * substrate — rederivable from a generator's pixel formula), and the
     * three perceptual hashes of the FIRST frame. Undecodable payloads
     * yield a NULL-featured row (the caller's filter decides); decode
-    * runs map-side in the same batched `mapPartitions` shape as the
-    * stub path. */
+    * runs map-side in one batched `mapPartitions` pass. */
   def decodeImages(spark: SparkSession, df: DataFrame, idCol: String,
                    contentCol: String): DataFrame = {
     import spark.implicits._
@@ -242,9 +108,8 @@ object Multimodal {
   /** REAL frame sampling for animated GIF: one row per decoded frame
     * with its logical-screen placement and exact per-channel sums plus
     * a position-weighted channel-0 sum (order-sensitive — catches a
-    * mis-deinterlaced raster that plain sums cannot). Map-side explode,
-    * frames inherit the parent's partitioning — the [[sampleFrames]]
-    * plumbing with the codec boundary de-stubbed. */
+    * mis-deinterlaced raster that plain sums cannot). Map-side explode;
+    * frames inherit the parent's partitioning. */
   def gifFrames(spark: SparkSession, df: DataFrame, idCol: String,
                 contentCol: String): DataFrame = {
     import spark.implicits._
@@ -409,8 +274,7 @@ object Multimodal {
 
   /** REAL frame sampling for MJPEG video: every `stride`-th frame
     * decodes to one row with exact per-channel sums and the frame's
-    * perceptual hash — the [[sampleFrames]] plumbing with the codec
-    * boundary de-stubbed (the [[gifFrames]] twin for video). Map-side
+    * perceptual hash (the [[gifFrames]] twin for video). Map-side
     * explode; only sampled frames pay JPEG decode. */
   def videoFrames(spark: SparkSession, df: DataFrame, idCol: String,
                   contentCol: String, stride: Int = 1): DataFrame = {

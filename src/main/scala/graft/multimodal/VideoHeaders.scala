@@ -14,8 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * structure of an ISO base-media file (MP4/MOV). Completes the
   * image/audio/video header triad ([[ImageHeaders]], [[AudioHeaders]]):
   * presentation parameters live in `moov` metadata by spec, so
-  * extracting them is a box walk, not a frame decode (which stays
-  * env-stubbed: [[Multimodal.FakeCodec]]).
+  * extracting them is a box walk, not a frame decode (that is
+  * [[Multimodal.videoFrames]], for MJPEG).
   *
   * Format reference (public spec ISO/IEC 14496-12):
   *  - a file is a sequence of boxes `size(4,BE) type(4) payload`;

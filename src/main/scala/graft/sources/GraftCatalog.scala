@@ -665,11 +665,8 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
         // so CDC/upsert tables keep statistics, DPP and the direct
         // parquet read): reports KeyGroupedPartitioning for
         // storage-partitioned joins and reads through ParquetFileFormat
-        // directly. Falls back to the exact V1 route otherwise;
-        // kill-switch: spark.graft.nativeScan.enabled=false.
-        if (snapshotId.isEmpty &&
-            spark.conf.get("spark.graft.nativeScan.enabled", "true")
-              .toBoolean) {
+        // directly. Falls back to the exact V1 route otherwise.
+        if (snapshotId.isEmpty) {
           IcebergLite.nativeScanInfo(spark, tableDir, preds,
               allowDeletes = true) match {
             case Some(info) =>
@@ -686,7 +683,7 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
         // metadata read could only ever cost. Join statistics live on
         // the native BatchScan, which now also covers MOR-deleted
         // tables; this fallback serves time travel, multi-generation
-        // schemas, over-cap delete states and the kill-switch.
+        // schemas and over-cap delete states.
         new V1Scan {
           override def readSchema(): StructType = readSchema0
           override def toV1TableScan[T <: BaseRelation with TableScan](

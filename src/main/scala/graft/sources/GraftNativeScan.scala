@@ -45,8 +45,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Eligibility is decided by [[IcebergLite.nativeScanInfo]] (current
   * snapshot, single schema/spec generation, delete state under the
   * `spark.graft.nativeScan.morDeletes.*` caps); everything else falls
-  * back to the exact V1 route. Disable with
-  * `spark.graft.nativeScan.enabled=false`.
+  * back to the exact V1 route.
   */
 class GraftNativeBatchScan(spark: SparkSession, tableName: String,
                            info: IcebergLite.NativeScanInfo,

@@ -3323,22 +3323,6 @@ object IcebergLite {
     })
   }
 
-  /** Live row count when PROVABLE from metadata alone — see
-    * [[exactAggsFromMetadata]]. */
-  def exactRowCountFromMetadata(spark: SparkSession,
-                                tableDir: String): Option[Long] =
-    exactAggsFromMetadata(spark, tableDir, Seq(MetaCount))
-      .map(_.head.asInstanceOf[Long])
-
-  /** Exact MIN/MAX of one column when PROVABLE from metadata alone —
-    * see [[exactAggsFromMetadata]]. `Some(None)` = provably empty
-    * table (SQL NULL aggregate). */
-  def exactMinMaxFromMetadata(spark: SparkSession, tableDir: String,
-                              colName: String, wantMax: Boolean)
-      : Option[Option[Any]] =
-    exactAggsFromMetadata(spark, tableDir,
-      Seq(MetaMinMax(colName, wantMax))).map(vs => Option(vs.head))
-
   // ---- schema evolution (v1-legal, metadata-only commits) ----------------
   //
   // Evolution changes METADATA only — no snapshot, no data rewrite

@@ -97,6 +97,23 @@ class IncrementalIvfIndexSpec extends SparkSuite {
     assert(off._3 > 0, "drifted vectors below the threshold must be counted")
   }
 
+  test("assignmentQuality with a zero-norm centroid stays finite and counts n_below") {
+    val idx = new IncrementalIvfIndex(spark, tmpIndex("zero"), nLists = 3)
+    val cents = Seq((9L, Seq(0.0, 0.0, 0.0)), (1L, Seq(1.0, 0.0, 0.0)),
+      (2L, Seq(0.0, 1.0, 0.0))).toDF("centroid_id", "centroid_vec")
+    val batch = Seq((0L, Seq(1.0f, 0.0f, 0.0f)), (1L, Seq(0.6f, 0.8f, 0.0f)),
+      (2L, Seq(0.0f, 1.0f, 0.0f)), (3L, Seq(0.0f, 0.0f, 1.0f)))
+      .toDF("vec_id", "embedding")
+    idx.init(batch, "vec_id", "embedding", learnedCentroids = Some(cents))
+    // best cosines 1.0, 0.8, 1.0, 0.0: the zero centroid scores none
+    val (n, avgBest, below) = idx.assignmentQuality(batch, "vec_id",
+        "embedding", minCos = 0.5)
+      .as[(Long, Double, Long)].head()
+    assert(n === 4L)
+    assert(math.abs(avgBest - 0.7) < 1e-6, s"avg_best_cos $avgBest")
+    assert(below === 1L)
+  }
+
   test("streaming sink folds micro-batches into the maintained index") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val dir = tmpIndex("stream")

@@ -62,6 +62,33 @@ class SemDedupSpec extends SparkSuite {
     assert(audit.contains(0L))
   }
 
+  test("a zero-norm centroid wins no cell: the audit lists exactly the dropped cells") {
+    // unguarded, centroid 9's NaN cosine won every argmax: one cell of
+    // all six vectors, over the cap, and an audit naming another cell
+    val withZero = centroids.union(
+      Seq((9L, Seq(0.0, 0.0, 0.0))).toDF("centroid_id", "centroid_vec"))
+    def pairs(cap: Int) = SemDedup.candidates(vecs, "vec_id", "embedding",
+        withZero, minCos = 0.999, maxClusterSize = cap)
+      .select("id_a", "id_b", "centroid_id").as[(Long, Long, Long)].collect().toSet
+    val capped = pairs(3)
+    assert(capped.map(p => (p._1, p._2)) === Set((10L, 11L)))
+    val dropped = (pairs(0) -- capped).map(_._3)
+    val audit = SemDedup.skippedClusters(vecs, "vec_id", "embedding",
+        withZero, maxClusterSize = 3)
+      .select("centroid_id").as[Long].collect().toSet
+    assert(dropped === Set(0L))
+    assert(audit === dropped)
+  }
+
+  test("a zero-norm vector never pairs") {
+    val zeros = Seq((30L, Seq(0.0f, 0.0f, 0.0f)), (31L, Seq(0.0f, 0.0f, 0.0f)))
+      .toDF("vec_id", "embedding")
+    val got = SemDedup.candidates(vecs.union(zeros), "vec_id", "embedding",
+        centroids, minCos = 0.999)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(got === Set((0L, 1L), (0L, 2L), (1L, 2L), (10L, 11L)))
+  }
+
   test("candidate set is cluster-blocked, not all-pairs") {
     // a cross-cell near-dup pair is NOT found (the documented blocking
     // trade: recall lives and dies with centroid quality)

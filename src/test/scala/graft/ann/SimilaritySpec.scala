@@ -231,6 +231,41 @@ class SimilaritySpec extends SparkSuite {
     assert(probed == Map(0L -> 3L, 1L -> 3L, 2L -> 2L))
   }
 
+  test("a zero-norm side makes the cosine NULL, codegen and interpreted") {
+    val df = Seq((Seq(0.0f, 0.0f), Seq(3.0f, 4.0f)), (Seq(1.0f, 0.0f), Seq(0.0f, 0.0f)),
+      (Seq(1.0f, 0.0f), Seq(1.0f, 0.0f))).toDF("a", "b")
+    val got = df.select(Similarity.cosine(col("a"), col("b")))
+      .as[Option[Double]].collect().toSeq
+    assert(got === Seq(None, None, Some(1.0)))
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val zero = Literal.create(Seq(0.0, 0.0),
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))
+    assert(graft.functions.CosineSim(zero, zero).eval() == null)
+  }
+
+  test("a zero-norm corpus vector never ranks first and never pairs") {
+    // its cosine to anything is undefined; as a NaN it passed every
+    // `cos >= minCos` and sorted first under `desc`
+    val zeros = Seq((5L, Seq(0.0f, 0.0f, 0.0f)), (6L, Seq(0.0f, 0.0f, 0.0f)))
+      .toDF("vec_id", "embedding")
+    val data = vecs.union(zeros)
+    val probe = vecs.filter(col("vec_id") === 0)
+    def first(topK: org.apache.spark.sql.DataFrame) =
+      topK.filter(col("rank") === 1).select("neighbor_id").as[Long].collect().toSeq
+    assert(first(Similarity.bruteForceTopK(data, probe, "vec_id", "embedding",
+      k = 3)) === Seq(4L))
+    val cents = Seq((1L, Seq(1.0, 0.0, 0.0)), (2L, Seq(0.0, 1.0, 0.0)))
+      .toDF("centroid_id", "centroid_vec")
+    val (c, lists) = Similarity.ivfIndex(data, "vec_id", "embedding", 2, Some(cents))
+    assert(first(Similarity.ivfSearchIndex(c, lists, probe, "vec_id",
+      "embedding", k = 3, nProbe = 2)) === Seq(4L))
+    val pairs = Similarity.cosineDedupCandidates(data, "vec_id", "embedding",
+        bits = 2, dim = 3, minCos = 0.99)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(pairs.contains((0L, 4L)))
+    assert(!pairs.exists(p => p._1 >= 5L || p._2 >= 5L), s"zero vector paired: $pairs")
+  }
+
   test("portable LSH weights match the md5 SQL formulation") {
     // pinned from DuckDB:
     //   CAST(concat('0x', substring(md5(seed), 1, 15)) AS BIGINT)

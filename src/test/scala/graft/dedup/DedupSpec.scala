@@ -256,12 +256,8 @@ class DedupSpec extends SparkSuite {
     assert(jobs.get() <= 3,
       s"bounded CC ran ${jobs.get()} jobs (expected ≤3: checkpoint, " +
         "collect, result action)")
-    val loop =
-      try {
-        spark.conf.set("spark.graft.cc.localMaxEdges", "0")
-        Dedup.connectedComponents(pairs)
-          .select("id", "component").as[(String, String)].collect().toMap
-      } finally spark.conf.unset("spark.graft.cc.localMaxEdges")
+    val loop = Dedup.connectedComponents(pairs, 20, localMaxEdges = 0L)
+      .select("id", "component").as[(String, String)].collect().toMap
     assert(fast === loop)
     assert(fast("a") === "a" && fast("b") === "a" && fast("c") === "a" &&
       fast("d") === "a")

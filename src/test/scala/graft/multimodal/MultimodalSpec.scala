@@ -1,82 +1,39 @@
 package graft.multimodal
 
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSuite
+import graft.dedup.Dedup
 
 class MultimodalSpec extends SparkSuite {
   import spark.implicits._
 
-  private def payloads = Seq(
-    (1L, "a" * 300), (2L, "bc" * 150), (3L, "short")).toDF("id", "payload")
-
-  test("toMediaBlobs produces binary content with typed metadata") {
-    val media = Multimodal.toMediaBlobs(spark, payloads, "id", "payload")
-    val rows = media.collect().map(r => r.media_id -> r).toMap
-    assert(rows(1L).content.length === 300)
-    assert(rows(1L).meta === Multimodal.FakeCodec.decode(rows(1L).content))
-    assert(rows(1L).meta.byteLen === 300L)
-    assert(rows(3L).meta.nFrames === 1)
-  }
-
-  test("extractFeatures runs batched per-partition and is deterministic") {
-    val media = Multimodal.toMediaBlobs(spark, payloads, "id", "payload")
-    val f1 = Multimodal.extractFeatures(spark, media).collect().sortBy(_.media_id)
-    val f2 = Multimodal.extractFeatures(spark, media).collect().sortBy(_.media_id)
-    assert(f1.toSeq === f2.toSeq)
-    assert(f1.head.brightness === 'a'.toDouble) // all-'a' payload
-    assert(f1.map(_.checksum).distinct.length === 3)
-  }
-
-  test("sampleFrames slices payload into frame rows") {
-    val media = Multimodal.toMediaBlobs(spark, payloads, "id", "payload")
-    val frames = Multimodal.sampleFrames(spark, media, frameBytes = 100, stride = 1)
-      .collect().filter(_.media_id == 1L).sortBy(_.frame_idx)
-    // 300 bytes, nFrames = 300/256 + 1 = 2, frames at 0,1 => bytes [0,100),[100,200)
-    assert(frames.length === 2)
-    assert(frames(0).frame.length === 100)
-    assert(new String(frames(0).frame) === "a" * 100)
-  }
-
-  test("metaTable projects metadata without touching the payload") {
-    val media = Multimodal.toMediaBlobs(spark, payloads, "id", "payload")
-    val meta = Multimodal.metaTable(media)
-    assert(meta.columns.toSeq ===
-      Seq("media_id", "content_type", "byte_len", "width", "height", "n_frames"))
-    assert(meta.count() === 3)
-  }
-
-  test("resize stub subsamples payload and rewrites metadata") {
-    val media = Multimodal.toMediaBlobs(spark, payloads, "id", "payload")
-    val resized = Multimodal.resize(spark, media, targetWidth = 10, targetHeight = 10)
-      .collect().map(r => r.media_id -> r).toMap
-    val src = media.collect().map(r => r.media_id -> r).toMap
-    resized.foreach { case (id, r) =>
-      assert(r.meta.width === 10 && r.meta.height === 10)
-      assert(r.meta.byteLen === r.content.length.toLong)
-      assert(r.content.length <= src(id).content.length)
-    }
-    // deterministic: first byte always kept
-    assert(resized(1L).content.head === 'a'.toByte)
-  }
-
-  test("dedupByChecksum groups identical payloads, keeps min id") {
-    val withDup = Seq((1L, "a" * 300), (2L, "bc" * 150), (9L, "a" * 300))
-      .toDF("id", "payload")
-    val media = Multimodal.toMediaBlobs(spark, withDup, "id", "payload")
-    val groups = Multimodal.dedupByChecksum(spark, media)
-      .select("keep_media_id", "n_copies").as[(Long, Long)].collect().toSet
+  test("byte-exact media dedup is exactGroups over a binary column") {
+    val media = Seq((1L, "a" * 300), (2L, "bc" * 150), (9L, "a" * 300))
+      .map { case (id, s) => (id, s.getBytes("UTF-8")) }
+      .toDF("id", "content")
+    val groups = Dedup.exactGroups(media, "content", "id")
+      .select("keep_id", "n_copies").as[(Long, Long)].collect().toSet
     assert(groups === Set((1L, 2L), (2L, 1L)))
   }
 
   test("parquet-backed metadata query prunes the binary column at the scan") {
     val dir = java.nio.file.Files.createTempDirectory("graft_media").toString
-    Multimodal.toMediaBlobs(spark, payloads, "id", "payload").write
-      .mode("overwrite").parquet(dir)
-    val meta = Multimodal.metaTable(spark.read.parquet(dir).as[Multimodal.MediaRow])
+    val payload = "pixels".getBytes("UTF-8")
+    Seq((1L, ImageFixtures.png(64, 48, payload)),
+        (2L, ImageFixtures.jpeg(33, 17, payload)),
+        (3L, ImageFixtures.gif(5, 7, payload)))
+      .toDF("id", "content")
+      .withColumn("dims", ImageDims.col(col("content")))
+      .write.mode("overwrite").parquet(dir)
+    val meta = spark.read.parquet(dir)
+      .select(col("id"), col("dims.format"), col("dims.width"), col("dims.height"))
     val plan = meta.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     val readSchema = plan.linesIterator.find(_.startsWith("ReadSchema")).get
-    assert(!readSchema.contains("content:binary"),
+    assert(!readSchema.contains("content"),
       s"binary payload read for a metadata-only query: $readSchema")
-    assert(meta.count() === 3)
+    assert(meta.as[(Long, String, Int, Int)].collect().sortBy(_._1).toSeq ===
+      Seq((1L, "png", 64, 48), (2L, "jpeg", 33, 17), (3L, "gif", 5, 7)))
   }
 }

@@ -1,15 +1,16 @@
 package graft.sources
 
-import org.apache.spark.sql.GraftParquetShim
+import org.apache.spark.sql.{DataFrame, GraftParquetShim}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 
 /** The NATIVE V2 read/write path (GraftNativeScan / GraftNativeWrite /
-  * SupportsRowLevelOperations): value-equality with the V1 route,
-  * storage-partitioned joins with ZERO Exchange, and stock-analyzer
-  * row-level DML with NO graft session extensions installed. */
+  * SupportsRowLevelOperations): value-equality with a direct
+  * IcebergLite read, storage-partitioned joins with ZERO Exchange, and
+  * stock-analyzer row-level DML with NO graft session extensions
+  * installed. */
 class GraftNativeSpec extends SparkSuite {
   import spark.implicits._
 
@@ -18,6 +19,12 @@ class GraftNativeSpec extends SparkSuite {
   spark.conf.set("spark.sql.catalog.ncat",
     classOf[GraftTableCatalog].getName)
   spark.conf.set("spark.sql.catalog.ncat.warehouse", wh)
+
+  /** A catalog table read directly through IcebergLite (the engine the
+    * catalog's V1 fallback wraps): the reference a native-scan result
+    * must equal row for row. */
+  private def lite(table: String): DataFrame =
+    IcebergLite.readTable(spark, s"$wh/$table")
 
   private def docs(n: Int) = (1 to n)
     .map(i => (i.toLong, s"w${i % 7}", s"body $i ${"x" * (i % 13)}",
@@ -33,18 +40,14 @@ class GraftNativeSpec extends SparkSuite {
       .withColumn("n", col("n") + 1000L)
       .writeTo("ncat.nat_docs").append()
 
-    def readAll(native: Boolean): Seq[(Long, String, Long)] = {
-      spark.conf.set("spark.graft.nativeScan.enabled", native.toString)
-      try spark.table("ncat.nat_docs")
-        .filter(col("id") <= 400 && col("lang") =!= "w3")
+    def readAll(t: DataFrame): Seq[(Long, String, Long)] =
+      t.filter(col("id") <= 400 && col("lang") =!= "w3")
         .select(col("id"), col("lang"), col("n"))
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
         .toSeq.sorted
-      finally spark.conf.set("spark.graft.nativeScan.enabled", "true")
-    }
-    val native = readAll(native = true)
-    val v1 = readAll(native = false)
-    assert(native === v1)
+    val native = readAll(spark.table("ncat.nat_docs"))
+    assert(native === readAll(IcebergLite.readTableWhere(spark,
+      s"$wh/nat_docs", Seq(IcebergLite.LtEq("id", 400L)))))
     assert(native.nonEmpty)
     // the native route actually engaged (plan shape, not just values)
     val plan = spark.table("ncat.nat_docs").queryExecution.executedPlan
@@ -188,7 +191,8 @@ class GraftNativeSpec extends SparkSuite {
         new java.math.BigDecimal(s"${i}.25"), s"w${i % 3}", i))
       .toDF("id", "ts", "d", "amt", "lang", "n")
       .writeTo("ncat.col_mat").append()
-    def q = spark.table("ncat.col_mat")
+    def q = agg(spark.table("ncat.col_mat"))
+    def agg(t: DataFrame) = t
       .filter(col("id") <= 200)
       .groupBy("lang")
       .agg(sum(col("amt")).as("s"), max(col("ts")).as("m"),
@@ -203,14 +207,11 @@ class GraftNativeSpec extends SparkSuite {
       assert(scans.head.supportsColumnar,
         s"temporal/decimal/partitioned schema fell back to rows:\n$plan")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-    val got = q.collect().map(r => (r.getString(0), r.getDecimal(1),
-      r.getTimestamp(2), r.getDate(3).toString, r.getLong(4))).sortBy(_._1)
-    spark.conf.set("spark.graft.nativeScan.enabled", "false")
-    val want =
-      try q.collect().map(r => (r.getString(0), r.getDecimal(1),
-        r.getTimestamp(2), r.getDate(3).toString, r.getLong(4))).sortBy(_._1)
-      finally spark.conf.set("spark.graft.nativeScan.enabled", "true")
-    assert(got === want)
+    def rows(t: DataFrame) = t.collect()
+      .map(r => (r.getString(0), r.getDecimal(1), r.getTimestamp(2),
+        r.getDate(3).toString, r.getLong(4))).sortBy(_._1).toSeq
+    val got = rows(q)
+    assert(got === rows(agg(lite("col_mat"))))
     assert(got.length === 3)
   }
 
@@ -356,9 +357,9 @@ class GraftNativeSpec extends SparkSuite {
     spark.sql("""CREATE TABLE ncat.col_scan (id BIGINT, lang STRING,
                  n BIGINT) USING iceberg PARTITIONED BY (lang)""")
     docs(300).select("id", "lang", "n").writeTo("ncat.col_scan").append()
-    def q = spark.table("ncat.col_scan")
-      .filter(col("id") <= 200).groupBy("lang")
-      .agg(sum(col("n")).as("s"))
+    def agg(t: DataFrame) =
+      t.filter(col("id") <= 200).groupBy("lang").agg(sum(col("n")).as("s"))
+    def q = agg(spark.table("ncat.col_scan"))
     // plan: the BatchScan reports columnar support, so Spark inserts
     // ColumnarToRow above it instead of the scan unwrapping batches
     // row-by-row itself (AQE off for the assertion — its wrapper hides
@@ -375,17 +376,12 @@ class GraftNativeSpec extends SparkSuite {
       assert(plan.toString.contains("ColumnarToRow"),
         s"no ColumnarToRow above the scan:\n$plan")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-    // values: identical to the V1 route (identity partition column
-    // re-attachment included, since lang is a partition column)
-    val got = q.collect().map(r => (r.getString(0), r.getLong(1))).sorted
-    spark.conf.set("spark.graft.nativeScan.enabled", "false")
-    val want =
-      try spark.table("ncat.col_scan")
-        .filter(col("id") <= 200).groupBy("lang")
-        .agg(sum(col("n")).as("s"))
-        .collect().map(r => (r.getString(0), r.getLong(1))).sorted
-      finally spark.conf.set("spark.graft.nativeScan.enabled", "true")
-    assert(got === want)
+    // values: identical to a direct IcebergLite read (identity partition
+    // column re-attachment included, since lang is a partition column)
+    def rows(t: DataFrame) =
+      t.collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+    val got = rows(q)
+    assert(got === rows(agg(lite("col_scan"))))
     assert(got.nonEmpty)
   }
 
@@ -508,17 +504,12 @@ class GraftNativeSpec extends SparkSuite {
     docs(40).withColumn("n", col("n") + 5000L)
       .writeTo("ncat.nat_morscan").append()
 
-    def readAll(native: Boolean): Seq[(Long, String, Long)] = {
-      spark.conf.set("spark.graft.nativeScan.enabled", native.toString)
-      try spark.table("ncat.nat_morscan")
-        .select(col("id"), col("lang"), col("n"))
+    def readAll(t: DataFrame): Seq[(Long, String, Long)] =
+      t.select(col("id"), col("lang"), col("n"))
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
         .toSeq.sorted
-      finally spark.conf.set("spark.graft.nativeScan.enabled", "true")
-    }
-    val native = readAll(native = true)
-    val v1 = readAll(native = false)
-    assert(native === v1)
+    val native = readAll(spark.table("ncat.nat_morscan"))
+    assert(native === readAll(lite("nat_morscan")))
     // independent expectation: survivors = (401..∞ none) — base docs
     // minus id%7==0 minus id in 1..100, plus the 40 re-appended rows
     val base = (1 to 400).filter(i => i % 7 != 0 && i > 100)
@@ -531,23 +522,20 @@ class GraftNativeSpec extends SparkSuite {
       s"expected the native batch scan on the MOR table in:\n$plan")
     // column pruning that EXCLUDES the equality key column still
     // applies the deletes (the key rides as an extra reader column)
-    def langOnly(native: Boolean): Seq[String] = {
-      spark.conf.set("spark.graft.nativeScan.enabled", native.toString)
-      try spark.table("ncat.nat_morscan").select("lang", "n")
+    def langOnly(t: DataFrame): Seq[String] =
+      t.select("lang", "n")
         .collect().map(r => s"${r.getString(0)}:${r.getLong(1)}")
         .toSeq.sorted
-      finally spark.conf.set("spark.graft.nativeScan.enabled", "true")
-    }
-    assert(langOnly(native = true) === langOnly(native = false))
+    assert(langOnly(spark.table("ncat.nat_morscan")) ===
+      langOnly(lite("nat_morscan")))
     // filters pushed onto a position-deleted file stay exact (the row
     // index is computed under row-group skipping, not row counting)
-    def filtered(native: Boolean): Seq[Long] = {
-      spark.conf.set("spark.graft.nativeScan.enabled", native.toString)
-      try spark.table("ncat.nat_morscan").filter(col("id") > 350)
+    def filtered(t: DataFrame): Seq[Long] =
+      t.filter(col("id") > 350)
         .select("id").collect().map(_.getLong(0)).toSeq.sorted
-      finally spark.conf.set("spark.graft.nativeScan.enabled", "true")
-    }
-    assert(filtered(native = true) === filtered(native = false))
+    assert(filtered(spark.table("ncat.nat_morscan")) === filtered(
+      IcebergLite.readTableWhere(spark, s"$wh/nat_morscan",
+        Seq(IcebergLite.GtEq("id", 351L)))))
   }
 
   test("MOR position deletes on a NESTED schema (parquet-mr row-index path) ≡ V1") {
@@ -561,16 +549,12 @@ class GraftNativeSpec extends SparkSuite {
       .writeTo("ncat.nat_mor_nested").append()
     IcebergLite.deleteWhereMOR(spark, s"$wh/nat_mor_nested",
       col("id") % 3 === 0)
-    def readAll(native: Boolean): Seq[(Long, String, Long)] = {
-      spark.conf.set("spark.graft.nativeScan.enabled", native.toString)
-      try spark.table("ncat.nat_mor_nested")
-        .selectExpr("id", "tags[0] AS t0", "n")
+    def readAll(t: DataFrame): Seq[(Long, String, Long)] =
+      t.selectExpr("id", "tags[0] AS t0", "n")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
         .toSeq.sorted
-      finally spark.conf.set("spark.graft.nativeScan.enabled", "true")
-    }
-    val native = readAll(native = true)
-    assert(native === readAll(native = false))
+    val native = readAll(spark.table("ncat.nat_mor_nested"))
+    assert(native === readAll(lite("nat_mor_nested")))
     assert(native.size === 67)
     assert(spark.table("ncat.nat_mor_nested").queryExecution.executedPlan
       .toString.contains("GraftNativeScan"))
@@ -653,14 +637,10 @@ class GraftNativeSpec extends SparkSuite {
     val plan = j.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"MOR dim did not auto-broadcast:\n$plan")
-    // and the values are the V1 route's
-    spark.conf.set("spark.graft.nativeScan.enabled", "false")
-    val want =
-      try spark.table("ncat.stat_fact2")
-        .join(spark.table("ncat.stat_dim2"), "k")
-        .groupBy("name").agg(sum(col("v")).as("s"))
-        .collect().map(r => (r.getString(0), r.getLong(1))).sorted
-      finally spark.conf.set("spark.graft.nativeScan.enabled", "true")
+    // and the values are a direct IcebergLite read's
+    val want = lite("stat_fact2").join(lite("stat_dim2"), "k")
+      .groupBy("name").agg(sum(col("v")).as("s"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).sorted
     val got = j.collect().map(r => (r.getString(0), r.getLong(1))).sorted
     assert(got === want)
   }
@@ -704,16 +684,15 @@ class GraftNativeSpec extends SparkSuite {
     assert(n === 0L, s"temporal metadata min/max read $n file records")
 
     // the recorded temporal bounds also serve ordinary value queries
-    // identically on both routes (sanity: bounds don't mis-prune)
-    def hot(native: Boolean): Long = {
-      spark.conf.set("spark.graft.nativeScan.enabled", native.toString)
-      try spark.table("ncat.mm_temporal")
-        .filter(col("d") >= java.sql.Date.valueOf("2032-05-10"))
-        .count()
-      finally spark.conf.set("spark.graft.nativeScan.enabled", "true")
-    }
-    assert(hot(native = true) === hot(native = false))
-    assert(hot(native = true) === 5L)
+    // as a direct IcebergLite read does (sanity: bounds don't mis-prune)
+    def hot(t: DataFrame): Long =
+      t.filter(col("d") >= java.sql.Date.valueOf("2032-05-10")).count()
+    val native = hot(spark.table("ncat.mm_temporal"))
+    assert(native === hot(IcebergLite.readTableWhere(spark,
+      s"$wh/mm_temporal",
+      GraftTableCatalog.filterPreds(org.apache.spark.sql.sources
+        .GreaterThanOrEqual("d", java.sql.Date.valueOf("2032-05-10"))))))
+    assert(native === 5L)
   }
 
   test("native DML on a MOR-deleted table refuses with a real message") {

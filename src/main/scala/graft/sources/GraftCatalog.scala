@@ -49,8 +49,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Write path: `V1Write` → [[IcebergLite.appendSnapshot]] — the same
   * distributed write the API route uses (file clustering from the
-  * persisted sort order, per-file bounds + bloom sidecars in one
-  * read-back pass); nothing is buffered on the driver. Read path: the
+  * persisted sort order, per-file bounds + bloom sidecars collected by
+  * the write tasks); nothing is buffered on the driver. Read path: the
   * pushed filters map ([[GraftTableCatalog.filterPreds]]) onto
   * manifest-bounds / partition-transform / Bloom FILE SKIPPING, and
   * the surviving files are read by the native V2 batch scan

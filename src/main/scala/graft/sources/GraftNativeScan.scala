@@ -295,8 +295,7 @@ class GraftNativeBatchScan(spark: SparkSession, tableName: String,
     * deletes grouped per data file as sorted row indexes, equality
     * deletes as catalyst-valued key sets. Paths normalize through
     * [[GraftNativeReaderFactory.normPath]] so manifest renderings and
-    * the `input_file_name()` strings recorded at delete time compare
-    * scheme-insensitively. */
+    * the paths recorded at delete time compare scheme-insensitively. */
   private lazy val morSets: Option[(Map[String, Array[Long]],
       Seq[(Long, Seq[(Int, DataType)], Set[Seq[Any]])])] =
     info.deletes.map { d =>
@@ -523,10 +522,11 @@ case class GraftNativeReaderFactory(
 }
 
 object GraftNativeReaderFactory {
-  /** Scheme-insensitive path identity: manifest `file_path` strings and
-    * the `input_file_name()` renderings recorded inside position-delete
-    * files can disagree on scheme/authority ("file:/x" vs "file:///x")
-    * while naming the same file. */
+  /** Scheme-insensitive path identity, the one rule file matches use:
+    * manifest `file_path` strings and the paths recorded inside
+    * position-delete files can disagree on scheme/authority ("file:/x"
+    * from the data-file writer, "file:///x" in tables whose entries were
+    * read back through `input_file_name()`) while naming the same file. */
   def normPath(p: String): String = {
     val u = new org.apache.hadoop.fs.Path(p).toUri
     val path = u.getPath

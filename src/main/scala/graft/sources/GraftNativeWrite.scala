@@ -12,10 +12,13 @@ import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, S
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
-import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{DataType, DateType, DoubleType, FloatType, IntegerType, LongType, StringType, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.sketch.BloomFilter
 
 /** A serializable Hadoop `Configuration` (the standard write/readFields
   * envelope) — ships the session conf to executor DataWriters. */
@@ -49,16 +52,17 @@ class GraftHadoopConf(@transient var value: Configuration)
   * short-circuits fully filter-expressible DELETEs onto the
   * metadata-only `SupportsDeleteV2` path before any of this runs.
   *
-  * Executor `DataWriter`s write parquet through the session-configured
-  * `ParquetFileFormat` factory in the SAME partitionBy directory
-  * layout the DataFrame route produces (identity partition columns
-  * move into the directory key; fanout writers roll a file per
-  * partition tuple), so native-written files are indistinguishable
-  * from API-written ones — one read path serves both. The write
-  * requires a distribution CLUSTERED on the partition transforms
+  * Executor `DataWriter`s are the ONE writer every IcebergLite write
+  * uses ([[GraftDataWriterFactory]]): parquet through the
+  * session-configured `ParquetFileFormat` factory in the partitionBy
+  * directory layout, each file collecting its manifest statistics
+  * (rows, size, bounds, Bloom bits) in the task, so the commit builds
+  * its entries from the task messages and reads nothing back. The
+  * write requires a distribution CLUSTERED on the partition transforms
   * (resolved through [[GraftFunctions]]) to keep the file count
-  * bounded at fleet scale, and the table's persisted sort order as the
-  * within-partition ordering. */
+  * bounded at fleet scale, and each task ordered by the partition
+  * transforms and then the table's persisted sort order, so a task
+  * keeps one file open at a time. */
 class GraftRowLevelOperation(tableName: String, tableDir: String,
                              cmd: Command)
     extends RowLevelOperation {
@@ -120,8 +124,9 @@ class GraftRowLevelOperation(tableName: String, tableDir: String,
 }
 
 /** The group-replacement `Write`: clustered on the partition
-  * transforms, ordered by the persisted sort columns, committed as ONE
-  * snapshot that drops the scanned groups and adopts the staged files. */
+  * transforms, ordered by them and then the persisted sort columns,
+  * committed as ONE snapshot that drops the scanned groups and adopts
+  * the staged files. */
 class GraftReplaceGroupsWrite(spark: SparkSession, tableName: String,
                               tableDir: String, writeSchema: StructType,
                               info: IcebergLite.NativeScanInfo,
@@ -136,10 +141,12 @@ class GraftReplaceGroupsWrite(spark: SparkSession, tableName: String,
       info.specItems.map(GraftTableCatalog.toTransform)
         .toArray[org.apache.spark.sql.connector.expressions.Expression])
 
+  // partition transforms first: each task's rows arrive clustered by
+  // partition, so the writer keeps one file open
   override def requiredOrdering(): Array[SortOrder] =
-    info.sortCols.map(c =>
-      Expressions.sort(Expressions.column(c), SortDirection.ASCENDING))
-      .toArray
+    (info.specItems.map(GraftTableCatalog.toTransform) ++
+      info.sortCols.map(Expressions.column))
+      .map(e => Expressions.sort(e, SortDirection.ASCENDING)).toArray
 
   override def toBatch: BatchWrite = {
     // the staging dir is keyed to the snapshot this statement will
@@ -147,51 +154,47 @@ class GraftReplaceGroupsWrite(spark: SparkSession, tableName: String,
     // "-w" keeps it clear of same-snapshot API writes
     val snapshotId = IcebergLite.nextSnapshotIdOf(spark, tableDir)
     val stagingDir = s"$tableDir/data/s$snapshotId-w"
-    new GraftReplaceBatchWrite(spark, tableName, tableDir, stagingDir,
-      writeSchema, info, replacedFiles)
+    new GraftReplaceBatchWrite(spark, tableDir, stagingDir, writeSchema,
+      replacedFiles)
   }
 }
 
-/** Commit message: the parquet files one task wrote. */
-case class GraftWriteCommit(files: Seq[String]) extends WriterCommitMessage
+/** One data file a write task produced, with what its manifest entry
+  * records — all computed in the task while the rows were written:
+  * the partition values (typed, as the transforms computed them), the
+  * row count, the size after close, per-column lower/upper bounds
+  * (Iceberg single-value bytes) and per-column Bloom bits, each keyed
+  * by the column's field id. */
+case class GraftDataFile(path: String, partition: Seq[Any], rowCount: Long,
+                         sizeBytes: Long,
+                         lowerBounds: Seq[(Int, Array[Byte])],
+                         upperBounds: Seq[(Int, Array[Byte])],
+                         blooms: Seq[(Int, Array[Byte])])
 
-class GraftReplaceBatchWrite(spark: SparkSession, tableName: String,
-                             tableDir: String, stagingDir: String,
-                             writeSchema: StructType,
-                             info: IcebergLite.NativeScanInfo,
+/** Commit message: the data files one task wrote. */
+case class GraftWriteCommit(files: Seq[GraftDataFile]) extends WriterCommitMessage
+
+class GraftReplaceBatchWrite(spark: SparkSession, tableDir: String,
+                             stagingDir: String, writeSchema: StructType,
                              replacedFiles: () => Set[String])
     extends BatchWrite {
 
   override def createBatchWriterFactory(phys: PhysicalWriteInfo)
-      : DataWriterFactory = {
-    val identityNames = info.spec.collect {
-      case (pf, _) if pf.transform == "identity" => pf.sourceCol
-    }.toSet
-    val fileIdx = writeSchema.fields.zipWithIndex
-      .collect { case (f, i) if !identityNames(f.name) => i }.toSeq
-    val fileSchema = StructType(fileIdx.map(writeSchema.fields(_)))
-    val specEval = info.spec.map { case (pf, _) =>
-      val srcIdx = writeSchema.fieldIndex(pf.sourceCol)
-      (pf.name, pf.transform, writeSchema.fields(srcIdx).dataType, srcIdx)
-    }
-    val (owf, jobConf) =
-      GraftParquetShim.parquetWriterFactory(spark, fileSchema)
-    GraftDataWriterFactory(owf, new GraftHadoopConf(jobConf),
-      stagingDir, writeSchema, fileIdx, fileSchema, specEval)
-  }
+      : DataWriterFactory =
+    IcebergLite.dataWriterFactory(spark, tableDir, stagingDir, writeSchema)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     // ONE snapshot: carried untouched files + the staged replacement
-    // files (entries derived by the same read-back pass the DataFrame
-    // writer uses — bounds, partition values, Bloom sidecars). Only
-    // files named by COMMITTED task messages adopt — a crashed
-    // speculative attempt's strays stay orphans.
+    // files, whose entries are the statistics the write tasks collected
+    // (the same writer the DataFrame route uses). Only files named by
+    // COMMITTED task messages adopt — a crashed speculative attempt's
+    // strays stay orphans.
     val staged = messages.toSeq.flatMap {
       case GraftWriteCommit(files) => files
       case _ => Nil
     }
     IcebergLite.commitReplaceGroups(spark, tableDir, replacedFiles(),
-      stagingDir, staged)
+      staged)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -202,29 +205,185 @@ class GraftReplaceBatchWrite(spark: SparkSession, tableName: String,
   }
 }
 
-/** Fanout parquet writer factory: one rolled file per partition tuple
-  * per task (the bounded-file-count shape required clustering makes
-  * cheap), writing through the session's parquet OutputWriterFactory. */
+/** The one data-file writer of every IcebergLite write (the DataFrame
+  * API's appends and rewrites, the merge-on-read delete files and the
+  * native V2 row-level write): one parquet file per partition tuple per
+  * task ([[GraftClusteredDataWriter]]), written through the session's
+  * parquet `OutputWriterFactory` in the partitionBy directory layout
+  * (identity partition columns move into the directory key and out of
+  * the files; derived transform values exist only as directory keys),
+  * each file collecting its manifest statistics as rows pass. `partitions` is (partition field
+  * name, transform, source type, source index); `bounded` and `blooms`
+  * are (source index, type, field id) of the columns whose bounds /
+  * Bloom filters the manifest records. */
 case class GraftDataWriterFactory(owf: OutputWriterFactory,
                                   conf: GraftHadoopConf,
-                                  stagingDir: String,
+                                  dataDir: String,
+                                  fileName: String,
                                   writeSchema: StructType,
                                   fileIdx: Seq[Int],
                                   fileSchema: StructType,
-                                  specEval: Seq[(String, String, DataType, Int)])
+                                  partitions: Seq[(String, String, DataType, Int)],
+                                  bounded: Seq[(Int, DataType, Int)],
+                                  blooms: Seq[(Int, DataType, Int)])
     extends DataWriterFactory {
 
   override def createWriter(partitionId: Int,
                             taskId: Long): DataWriter[InternalRow] =
-    new GraftFanoutDataWriter(owf, conf.value, stagingDir, writeSchema,
-      fileIdx, fileSchema, specEval, partitionId, taskId)
+    new GraftClusteredDataWriter(this, conf.value, partitionId, taskId)
+
+  /** The DataFrame route's task body: every row of one partition
+    * through one writer, committed or aborted as a unit. */
+  def writeTask(partitionId: Int, taskId: Long,
+                rows: Iterator[InternalRow]): Seq[GraftDataFile] = {
+    val w = new GraftClusteredDataWriter(this, conf.value, partitionId, taskId)
+    try {
+      rows.foreach(w.write)
+      w.commit().files
+    } catch {
+      case t: Throwable =>
+        w.abort()
+        throw t
+    } finally w.close()
+  }
 }
 
-class GraftFanoutDataWriter(owf: OutputWriterFactory, conf: Configuration,
-                            stagingDir: String, writeSchema: StructType,
-                            fileIdx: Seq[Int], fileSchema: StructType,
-                            specEval: Seq[(String, String, DataType, Int)],
-                            partitionId: Int, taskId: Long)
+object GraftDataWriterFactory {
+  // fixed across all writers of a table: probes must hash identically
+  val BloomExpectedItems = 100000L
+  val BloomFpp = 0.03
+
+  /** The writer for `writeSchema` rows of a table with partition
+    * `spec`, column field ids `fieldIds` and Bloom columns `bloomCols`,
+    * landing under `dataDir`. Bounds cover every primitive column with
+    * a total order the spec's single-value serialization covers (none
+    * when `fieldIds` is empty); Bloom columns must be int/long/string. */
+  def forTable(spark: SparkSession, dataDir: Path, writeSchema: StructType,
+               spec: Seq[IcebergTransforms.PartField],
+               fieldIds: Map[String, Int],
+               bloomCols: Seq[String]): GraftDataWriterFactory = {
+    val identityNames = spec.filter(_.transform == "identity")
+      .map(_.sourceCol).toSet
+    spec.filter(_.transform != "identity").foreach(pf =>
+      require(!writeSchema.fieldNames.contains(pf.name),
+        s"partition field ${pf.name} collides with a data column"))
+    val fileIdx = writeSchema.fields.indices
+      .filterNot(i => identityNames(writeSchema.fields(i).name))
+    val fileSchema = StructType(fileIdx.map(writeSchema.fields(_)))
+    val partitions = spec.map { pf =>
+      val i = writeSchema.fieldIndex(pf.sourceCol)
+      (pf.name, pf.transform, writeSchema.fields(i).dataType, i)
+    }
+    val bounded = writeSchema.fields.toSeq.zipWithIndex.collect {
+      case (f, i) if fieldIds.contains(f.name) && (f.dataType match {
+          case IntegerType | LongType | FloatType | DoubleType |
+               StringType | DateType | TimestampType => true
+          case _ => false
+        }) => (i, f.dataType, fieldIds(f.name))
+    }
+    val blooms = bloomCols.map { c =>
+      require(writeSchema.fieldNames.contains(c),
+        s"bloom column $c not in schema")
+      val dt = writeSchema(c).dataType
+      require(dt == IntegerType || dt == LongType || dt == StringType,
+        s"bloom column $c has type ${dt.simpleString} (int/long/string only)")
+      (writeSchema.fieldIndex(c), dt, fieldIds(c))
+    }
+    val (owf, jobConf) =
+      GraftParquetShim.parquetWriterFactory(spark, fileSchema)
+    val qualified = dataDir.getFileSystem(jobConf).makeQualified(dataDir)
+    // file names: part-<task partition>-<write uuid>-<task attempt>-<k><ext>
+    val fileName = s"part-%05d-${java.util.UUID.randomUUID}-%d-%d" +
+      GraftParquetShim.fileExtension(owf, jobConf)
+    GraftDataWriterFactory(owf, new GraftHadoopConf(jobConf),
+      qualified.toString, fileName, writeSchema, fileIdx, fileSchema,
+      partitions, bounded, blooms)
+  }
+}
+
+/** One open data file: its parquet writer, its partition values, and
+  * the statistics its rows have added so far — per bounded column the
+  * running (min, max) in Spark's `min`/`max` order (the first of equal
+  * values stays, as for -0.0 vs 0.0; NaN sorts above every number), and
+  * per Bloom column the filter of its values. Strings keep their
+  * 17-code-point prefix: truncation is monotone in UTF-8 byte order, so
+  * the prefixes of the extremes bound the column, and the 17th point
+  * tells the manifest whether the top value was truncated. */
+private final class OpenDataFile(val writer: OutputWriter,
+                                 val partition: Seq[Any],
+                                 f: GraftDataWriterFactory) {
+  private var rows = 0L
+  private val orders = f.bounded.map(b => TypeUtils.getInterpretedOrdering(b._2))
+  private val lo, hi = new Array[Any](f.bounded.size)
+  private val blooms = f.blooms.map(_ =>
+    BloomFilter.create(GraftDataWriterFactory.BloomExpectedItems,
+      GraftDataWriterFactory.BloomFpp))
+
+  private def prefix(v: Any): Any = v match {
+    case s: UTF8String => if (s.numChars() <= 17) s.copy() else s.substring(0, 17)
+    case other => other
+  }
+
+  def add(row: InternalRow, off: Int): Unit = {
+    rows += 1
+    var i = 0
+    while (i < orders.length) {
+      val (src, dt, _) = f.bounded(i)
+      val v = row.get(src + off, dt)
+      if (v != null) {
+        // a prefix is ≤ its value, so only v < lo can lower the min's
+        // prefix; v > hi raises the max's unless it merely extends it
+        if (lo(i) == null) { lo(i) = prefix(v); hi(i) = lo(i) }
+        else {
+          if (orders(i).lt(v, lo(i))) lo(i) = prefix(v)
+          if (orders(i).gt(v, hi(i)) && !(v match {
+              case s: UTF8String => s.startsWith(hi(i).asInstanceOf[UTF8String]) &&
+                hi(i).asInstanceOf[UTF8String].numChars() == 17
+              case _ => false
+            })) hi(i) = prefix(v)
+        }
+      }
+      i += 1
+    }
+    f.blooms.zip(blooms).foreach { case ((src, dt, _), bf) =>
+      if (!row.isNullAt(src + off)) dt match {
+        case StringType => bf.putBinary(row.getUTF8String(src + off).getBytes)
+        case LongType => bf.putLong(row.getLong(src + off))
+        case _ => bf.putLong(row.getInt(src + off).toLong)
+      }
+    }
+  }
+
+  /** Close the file and describe it for its manifest entry. */
+  def finish(conf: Configuration): GraftDataFile = {
+    writer.close()
+    val p = new Path(writer.path())
+    val size = p.getFileSystem(conf).getFileStatus(p).getLen
+    GraftParquetShim.countOutput(size, rows)
+    val bounds = f.bounded.indices.filter(lo(_) != null).map { i =>
+      val (_, dt, fid) = f.bounded(i)
+      def ext(v: Any) = if (dt == StringType) v.toString else v
+      (fid, IcebergLite.boundPair(dt, ext(lo(i)), ext(hi(i))))
+    }
+    GraftDataFile(writer.path(), partition, rows, size,
+      bounds.flatMap { case (fid, (l, _)) => l.map(fid -> _) },
+      bounds.flatMap { case (fid, (_, h)) => h.map(fid -> _) },
+      f.blooms.zip(blooms).map { case ((_, _, fid), bf) =>
+        val bo = new java.io.ByteArrayOutputStream()
+        bf.writeTo(bo)
+        fid -> bo.toByteArray
+      })
+  }
+}
+
+/** Writes one task's rows, which arrive CLUSTERED by partition (every
+  * route sorts each task by the partition transform values first): ONE
+  * parquet file open at a time, closed as soon as the partition values
+  * change. A partition tuple that comes back after its file closed
+  * gets a new file, so unclustered input still writes correctly, only
+  * into more files. */
+class GraftClusteredDataWriter(f: GraftDataWriterFactory, conf: Configuration,
+                               partitionId: Int, taskId: Long)
     extends DataWriter[InternalRow] {
 
   // Spark's plain writing task hands the ReplaceData query output RAW,
@@ -235,88 +394,95 @@ class GraftFanoutDataWriter(owf: OutputWriterFactory, conf: Configuration,
   // write-operation rows, so the op code never drops a row here; the
   // guard refuses anything unexpected rather than mis-writing.
   private var off = -1
-  private var proj: UnsafeProjection = _
+  private var proj: InternalRow => InternalRow = _
   private def bind(row: InternalRow): Unit = {
-    off = row.numFields - writeSchema.size
+    off = row.numFields - f.writeSchema.size
     require(off == 0 || off == 1,
       s"row layout ${row.numFields} fields vs write schema " +
-        s"${writeSchema.size} — unsupported shape")
-    proj = UnsafeProjection.create(fileIdx.map(i =>
-      BoundReference(i + off, writeSchema.fields(i).dataType,
-        writeSchema.fields(i).nullable)).toIndexedSeq)
+        s"${f.writeSchema.size} — unsupported shape")
+    proj =
+      if (off == 0 && f.fileIdx == f.writeSchema.indices) identity
+      else UnsafeProjection.create(f.fileIdx.map(i =>
+        BoundReference(i + off, f.writeSchema.fields(i).dataType,
+          f.writeSchema.fields(i).nullable)).toIndexedSeq)
   }
-  private val open = mutable.LinkedHashMap.empty[String,
-    org.apache.spark.sql.execution.datasources.OutputWriter]
-  private val ext = {
-    // extension needs a TaskAttemptContext: synthesize one once
-    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-      conf, new org.apache.hadoop.mapreduce.TaskAttemptID(
-        new org.apache.hadoop.mapreduce.TaskID(
-          new org.apache.hadoop.mapreduce.JobID("graft", 0),
-          org.apache.hadoop.mapreduce.TaskType.MAP, partitionId), 0))
-    owf.getFileExtension(ctx)
-  }
+  private val done = mutable.ArrayBuffer.empty[GraftDataFile]
+  // the open file and the partition SOURCE values of the last row: a
+  // row with the same values skips the transforms
+  private var cur: OpenDataFile = _
+  private var curSrc: Seq[Any] = Nil
 
-  /** One row's partition directory (Hive p=v layout, Spark escaping),
-    * "" for unpartitioned tables. */
-  private def dirOf(row: InternalRow): String =
-    specEval.map { case (name, transform, srcType, srcIdx0) =>
-      val srcIdx = srcIdx0 + off
-      val v =
-        if (row.isNullAt(srcIdx)) null
-        else IcebergTransforms.applyValue(transform, srcType,
-          srcType match {
-            case StringType => row.getUTF8String(srcIdx).toString
-            case LongType => row.getLong(srcIdx)
-            case IntegerType => row.getInt(srcIdx)
-            case org.apache.spark.sql.types.DateType => row.getInt(srcIdx)
-            case org.apache.spark.sql.types.TimestampType =>
-              row.getLong(srcIdx)
-            case other => sys.error(
-              s"native write over partition source ${other.simpleString}")
-          })
-      val rendered =
-        if (v == null) "__HIVE_DEFAULT_PARTITION__"
-        else GraftParquetShim.escapePathName(v.toString)
-      s"$name=$rendered"
-    }.mkString("/")
+  private def sources(row: InternalRow): Seq[Any] =
+    f.partitions.map { case (_, _, dt, src) => row.get(src + off, dt) }
+
+  /** The partition values of source values `src`, through the
+    * transforms. An empty string lands in the default partition and
+    * reads back NULL, so the manifest records NULL for it too. */
+  private def partitionValues(src: Seq[Any]): Seq[Any] =
+    f.partitions.zip(src).map {
+      case (_, null) => null
+      case ((_, transform, dt, _), v) =>
+        IcebergTransforms.applyValue(transform, dt, v match {
+          case s: UTF8String => s.toString
+          case other => other
+        }) match {
+          case "" => null
+          case pv => pv
+        }
+    }
+
+  /** A new file for partition `values`, in their Hive `name=value`
+    * directory. */
+  private def open(values: Seq[Any]): OpenDataFile = {
+    val dir = f.partitions.zip(values).map { case ((name, _, _, _), v) =>
+      GraftParquetShim.partitionPathString(name,
+        if (v == null) null else v.toString) + "/"
+    }.mkString
+    val k = done.size
+    new OpenDataFile(GraftParquetShim.newOutputWriter(f.owf, conf,
+      s"${f.dataDir}/$dir" + f.fileName.format(partitionId, taskId, k),
+      f.fileSchema, partitionId, k), values, f)
+  }
 
   override def write(row: InternalRow): Unit = {
     if (off < 0) bind(row)
-    val dir = dirOf(row)
-    val w = open.getOrElseUpdate(dir, {
-      val base = if (dir.isEmpty) stagingDir else s"$stagingDir/$dir"
-      GraftParquetShim.newOutputWriter(owf, conf,
-        s"$base/part-$partitionId-$taskId-${open.size}$ext", fileSchema,
-        partitionId, open.size)
-    })
-    w.write(proj(row))
+    val src = sources(row)
+    if (cur == null || src != curSrc) {
+      // UTF8Strings may point into the reused row buffer: keep copies
+      curSrc = src.map {
+        case s: UTF8String => s.copy()
+        case other => other
+      }
+      val values = partitionValues(curSrc)
+      if (cur == null || values != cur.partition) {
+        if (cur != null) done += cur.finish(conf)
+        cur = open(values)
+      }
+    }
+    cur.add(row, off)
+    cur.writer.write(proj(row))
   }
 
-  override def commit(): WriterCommitMessage = {
-    val files = open.values.map(_.path()).toSeq
-    open.values.foreach(_.close())
-    open.clear()
-    GraftWriteCommit(files)
+  override def commit(): GraftWriteCommit = {
+    if (cur != null) done += cur.finish(conf)
+    cur = null
+    GraftWriteCommit(done.toSeq)
   }
 
   override def abort(): Unit = {
-    val files = open.values.map(_.path()).toSeq
-    open.values.foreach { w =>
-      try w.close() catch { case _: Exception => () }
-    }
-    open.clear()
-    files.foreach { f =>
-      val p = new Path(f)
+    val files = done.map(_.path) ++ Option(cur).map(_.writer.path())
+    close()
+    done.clear()
+    files.foreach { p0 =>
+      val p = new Path(p0)
       try p.getFileSystem(conf).delete(p, false)
       catch { case _: Exception => () }
     }
   }
 
   override def close(): Unit = {
-    open.values.foreach { w =>
-      try w.close() catch { case _: Exception => () }
-    }
-    open.clear()
+    if (cur != null)
+      try cur.writer.close() catch { case _: Exception => () }
+    cur = null
   }
 }

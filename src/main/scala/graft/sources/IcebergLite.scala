@@ -7,7 +7,7 @@ import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileStream, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftParquetShim, SparkSession}
 import org.apache.spark.sql.types._
 
 /** Iceberg TABLE-FORMAT read/write without the Iceberg runtime — the
@@ -275,6 +275,23 @@ object IcebergLite {
         case _ => None
       }
     }
+
+  /** A column's manifest (lower, upper) bound bytes from its file-level
+    * (min, max). Strings arrive as 17-code-point prefixes: the lower
+    * bound is the 16-point prefix (≤ every value); the upper is the
+    * exact value when nothing was truncated, else the incremented
+    * prefix (> every prefix-sharing value), and no upper bound at all
+    * when no code point can be incremented (conservative). */
+  private[sources] def boundPair(dt: DataType, lo: Any, hi: Any)
+      : (Option[Array[Byte]], Option[Array[Byte]]) = dt match {
+    case StringType =>
+      val l = lo.toString
+      val h = hi.toString
+      (boundBytes(dt, cpTake(l, 16)),
+        (if (h.codePointCount(0, h.length) <= 16) Some(h)
+         else incrementPrefix(cpTake(h, 16))).flatMap(boundBytes(dt, _)))
+    case _ => (boundBytes(dt, lo), boundBytes(dt, hi))
+  }
 
   /** Decode a stored bound against the CURRENT column type. The byte
     * LENGTH carries the width the value was written at, so bounds
@@ -600,12 +617,6 @@ object IcebergLite {
     // exactly-once: a commit key already in the snapshot log means this
     // batch landed before a checkpoint replay — the fold is a no-op
     if (commitKey.exists(k => prior.exists(hasCommitKey(_, k)))) return
-    // an empty batch (idle micro-batch, delta filter matching nothing)
-    // appends nothing — writing it would crash the empty-dir read-back
-    if (df.isEmpty) {
-      require(prior.isDefined, "cannot create a table from an empty batch")
-      return
-    }
     // Against a live table the batch must match the DECLARED schema
     // (names + types in order) and the commit re-uses the table's
     // schema json VERBATIM — evolved field ids are never re-derived
@@ -640,14 +651,20 @@ object IcebergLite {
       .readTree(schemaJs)).map(f2 => f2._2 -> f2._1).toMap
     // bloom filters: an explicit bloomFor becomes the NEW persisted
     // contract; callers that name none inherit the table property
-    // (the sortBy discipline). The filters ride writeDataFiles' bounds
-    // pass — one read-back serves both.
+    // (the sortBy discipline). The write tasks build them with the
+    // bounds.
     val effectiveBloom =
       if (bloomFor.nonEmpty) bloomFor
       else prior.map(_.bloomCols).getOrElse(Nil)
     val (entries, bloomPath) = writeDataFiles(spark, df, root, snapshotId,
       spec, entrySchema, fieldIds, distribute = effectiveSort.isEmpty,
-      bloomCols = effectiveBloom)
+      bloomCols = effectiveBloom, sortCols = effectiveSort)
+    // an empty batch (idle micro-batch, delta filter matching nothing)
+    // wrote no file and appends nothing
+    if (entries.isEmpty) {
+      require(prior.isDefined, "cannot create a table from an empty batch")
+      return
+    }
 
     // 2. manifest for this snapshot's files
     val manifestPath = new Path(metaDir, f"manifest-$snapshotId%05d.avro")
@@ -741,19 +758,16 @@ object IcebergLite {
       } finally df.unpersist()
     }
 
-  /** Spark-distributed data-file write for one snapshot + the manifest
-    * entries describing what landed (status ADDED), including per-file
-    * COLUMN BOUNDS (spec fields 125/128) for scan pruning — one extra
-    * min/max pair per primitive column in the same per-file aggregate
-    * that was already computing record counts. `fieldIds` maps column
-    * name → field id in the TABLE schema (evolution-stable). */
-  /** Write the batch's parquet files and derive their manifest entries
-    * (per-file row counts + column bounds) from ONE read-back pass.
-    * When `bloomCols` is nonempty the per-file Bloom filters ride the
-    * SAME groupBy as aggregate columns ([[BloomLongAgg]]/
-    * [[BloomStringAgg]]) and the sidecar avro is written here — the
-    * batch is never read back a second time. Returns (manifest entries,
-    * bloom sidecar path if one was written). */
+  /** Write the batch's parquet files for one snapshot through the one
+    * data-file writer ([[GraftDataWriterFactory]]) as ONE job, and
+    * build their manifest entries (status ADDED) from the statistics
+    * the write tasks collected — row counts, sizes, partition values,
+    * column bounds (spec fields 125/128) and, when `bloomCols` is
+    * nonempty, the Bloom sidecar avro written here. Nothing is read
+    * back. `fieldIds` maps column name → field id in the TABLE schema
+    * (evolution-stable). An empty batch writes no file and returns no
+    * entry. Returns (manifest entries, bloom sidecar path if one was
+    * written). */
   private def writeDataFiles(spark: SparkSession, df: DataFrame, root: Path,
                              snapshotId: Long,
                              spec: TypedSpec,
@@ -761,118 +775,75 @@ object IcebergLite {
                              fieldIds: Map[String, Int],
                              distribute: Boolean = false,
                              bloomCols: Seq[String] = Nil,
-                             dirSuffix: String = "")
+                             dirSuffix: String = "",
+                             sortCols: Seq[String] = Nil)
       : (Seq[GenericRecord], Option[String]) = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
-    val f = fs(spark, root)
-    val dataDir = new Path(root, s"data/s$snapshotId$dirSuffix")
-    // HIDDEN partitioning: non-identity transforms derive their
-    // partition value as an extra column (computed inside the scan —
-    // bucket is a native codegen expression), which Spark's partitionBy
-    // then moves OUT of the files into the directory key; the source
-    // column stays in the files, the derived one never enters the
-    // table schema
-    val partNames = spec.map(_._1.name)
-    val withDerived = spec.foldLeft(df) { case (acc, (pf, _)) =>
-      if (pf.transform == "identity") acc
-      else {
-        require(!df.schema.fieldNames.contains(pf.name),
-          s"partition field ${pf.name} collides with a data column")
-        acc.withColumn(pf.name, IcebergTransforms.column(spark, pf.transform,
-          col(pf.sourceCol), df.schema(pf.sourceCol).dataType))
-      }
+    import org.apache.spark.sql.functions.col
+    val partCols = spec.map { case (pf, _) =>
+      IcebergTransforms.column(spark, pf.transform, col(pf.sourceCol),
+        df.schema(pf.sourceCol).dataType)
     }
     // HASH distribution mode (the Iceberg default for partitioned
-    // writes): cluster the batch by its partition key so each
+    // writes): cluster the batch by its partition values so each
     // partition is written by ONE task — without it every task writes
     // a file into every partition dir and a 1000-executor append
     // explodes into files × executors small files. Range-clustered
-    // (sorted) appends skip it: they are already distributed.
-    val distributed =
-      if (distribute && partNames.nonEmpty)
-        withDerived.repartition(partNames.map(col): _*)
-      else withDerived
-    val writer = if (partNames.nonEmpty)
-      distributed.write.partitionBy(partNames: _*) else distributed.write
-    writer.mode("overwrite").parquet(dataDir.toString)
-    deriveDataEntries(spark, root, spark.read.parquet(dataDir.toString),
-      snapshotId, spec, entrySchema, fieldIds, df.schema, bloomCols,
-      dirSuffix)
+    // (sorted) appends skip it: they are already distributed. Each
+    // task is then sorted by its partition values (the table's sort
+    // order after them), so the writer keeps one file open at a time.
+    val clustered =
+      if (spec.isEmpty) df
+      else (if (distribute) df.repartition(partCols: _*) else df)
+        .sortWithinPartitions(partCols ++ sortCols.map(col): _*)
+    val files = writeFiles(spark, clustered,
+      new Path(root, s"data/s$snapshotId$dirSuffix"), spec.map(_._1),
+      fieldIds, bloomCols)
+    dataEntries(spark, root, files, snapshotId, spec, entrySchema,
+      bloomCols, dirSuffix)
   }
 
-  /** The READ-BACK half of [[writeDataFiles]], reusable over any
-    * directory of parquet files in the partitionBy layout (the NATIVE
-    * V2 writer stages files the same way): per-file rows, bounds,
-    * partition values, and Bloom sidecars — manifest entries
-    * indistinguishable from the DataFrame route's. */
-  private def deriveDataEntries(spark: SparkSession, root: Path,
-                                back: DataFrame, snapshotId: Long,
-                                spec: TypedSpec, entrySchema: Schema,
-                                fieldIds: Map[String, Int],
-                                boundsSchema: StructType,
-                                bloomCols: Seq[String],
-                                bloomSuffix: String = "")
+  /** Run the one data-file writer over `df` as ONE job: the files the
+    * committed tasks wrote under `dataDir`, with their statistics. */
+  private def writeFiles(spark: SparkSession, df: DataFrame, dataDir: Path,
+                         spec: Seq[IcebergTransforms.PartField],
+                         fieldIds: Map[String, Int],
+                         bloomCols: Seq[String]): Seq[GraftDataFile] = {
+    val factory = GraftDataWriterFactory.forTable(spark, dataDir, df.schema,
+      spec, fieldIds, bloomCols)
+    GraftParquetShim.runWrite(df, s"IcebergLite write ${factory.dataDir}") {
+      (ctx, rows) => factory.writeTask(ctx.partitionId, ctx.taskAttemptId, rows)
+    }.toSeq.flatten
+  }
+
+  /** The writer factory of a NATIVE V2 write into the table at
+    * `tableDir`: the current contract (spec, field ids, Bloom columns)
+    * over the statement's write schema, landing under `dataDir`. */
+  def dataWriterFactory(spark: SparkSession, tableDir: String,
+                        dataDir: String,
+                        writeSchema: StructType): GraftDataWriterFactory = {
+    val meta = readMeta(spark, tableDir)
+    GraftDataWriterFactory.forTable(spark, new Path(dataDir), writeSchema,
+      meta.partitionSpec, meta.fieldIds, meta.bloomCols)
+  }
+
+  /** Manifest entries (status ADDED) for written data files, plus the
+    * Bloom sidecar when the table has Bloom columns: records sorted by
+    * file path, one per (file, column). */
+  private def dataEntries(spark: SparkSession, root: Path,
+                          written: Seq[GraftDataFile], snapshotId: Long,
+                          spec: TypedSpec, entrySchema: Schema,
+                          bloomCols: Seq[String], bloomSuffix: String)
       : (Seq[GenericRecord], Option[String]) = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
-    val f = fs(spark, root)
-    val partNames = spec.map(_._1.name)
-    // boundable columns: primitive types with a total order the spec's
-    // single-value serialization covers
-    val bounded = boundsSchema.fields.toSeq
-      .filter(fd => fieldIds.contains(fd.name))
-      .filter(fd => fd.dataType match {
-        case IntegerType | LongType | FloatType | DoubleType |
-             StringType | DateType | TimestampType => true
-        case _ => false
-      })
-
-    // per-file rows + bounds via a tiny metadata read of what was
-    // written. Strings aggregate as 17-CODE-POINT prefixes (truncation
-    // is monotone in UTF-8 binary order, so min/max over prefixes
-    // still bound the column) — the Iceberg truncate(16) discipline:
-    // manifests stay KB-sized even over document columns, and the
-    // 17th point tells the driver whether the top value was truncated.
-    def boundCol(fd: StructField) = fd.dataType match {
-      case StringType =>
-        org.apache.spark.sql.functions.substring(col(fd.name), 1, 17)
-      case _ => col(fd.name)
-    }
-    // bloom columns ride the same per-file aggregation (one read-back
-    // serves bounds AND filters); int casts to long so build-side
-    // putLong matches the probe's mightContainLong
-    val bloomTyped = bloomCols.map { c =>
-      require(boundsSchema.fieldNames.contains(c),
-        s"bloom column $c not in schema")
-      val dt = boundsSchema(c).dataType
-      require(dt == IntegerType || dt == LongType || dt == StringType,
-        s"bloom column $c has type ${dt.simpleString} (int/long/string only)")
-      (c, dt, fieldIds(c))
-    }
-    val bloomAggs = bloomTyped.map { case (c, dt, _) =>
-      (if (dt == StringType) bloomStringUdaf(col(c))
-       else bloomLongUdaf(col(c).cast(LongType))).as(s"__bf_$c")
-    }
-    val aggs = count(lit(1)).as("__n") +:
-      (bounded.flatMap(fd => Seq(min(boundCol(fd)).as(s"__lo_${fd.name}"),
-        max(boundCol(fd)).as(s"__hi_${fd.name}"))) ++ bloomAggs)
-    val touched = (partNames ++ bounded.map(_.name) ++ bloomCols).distinct
-    val perFile = back
-      .select(input_file_name().as("f") +: touched.map(col): _*)
-      .groupBy("f", partNames: _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-
+    val files = written.sortBy(_.path)
     val bloomPath =
-      if (bloomTyped.isEmpty || perFile.isEmpty) None
+      if (bloomCols.isEmpty || files.isEmpty) None
       else {
-        val bloomAt = 2 + partNames.size + bounded.size * 2
-        val records = perFile.toSeq.sortBy(_.getString(0)).flatMap { row =>
-          bloomTyped.zipWithIndex.map { case ((_, _, fid), i) =>
+        val records = files.flatMap { df =>
+          df.blooms.map { case (fid, bits) =>
             val r = new GenericData.Record(BloomSidecarSchema)
-            r.put("file_path", row.getString(0))
+            r.put("file_path", df.path)
             r.put("field_id", fid)
-            r.put("bits", java.nio.ByteBuffer.wrap(
-              row.getAs[Array[Byte]](bloomAt + i)))
+            r.put("bits", java.nio.ByteBuffer.wrap(bits))
             r
           }
         }
@@ -882,68 +853,34 @@ object IcebergLite {
           Map("bloom-cols" -> bloomCols.mkString(",")))
         Some(p.toString)
       }
-
     val fileSchema = entrySchema.getField("data_file").schema()
     val partSchema = fileSchema.getField("partition").schema()
-    val boundsItemSchemaLo = fileSchema.getField("lower_bounds").schema()
-      .getTypes.get(1).getElementType
-    val boundsItemSchemaHi = fileSchema.getField("upper_bounds").schema()
-      .getTypes.get(1).getElementType
-    val entries = perFile.toSeq.map { row =>
-      val filePath = row.getString(0)
+    def boundsOf(field: String, kvs: Seq[(Int, Array[Byte])]) = {
+      val itemSchema = fileSchema.getField(field).schema()
+        .getTypes.get(1).getElementType
+      val out = new java.util.ArrayList[GenericRecord]()
+      kvs.foreach { case (fid, bytes) =>
+        val r = new GenericData.Record(itemSchema)
+        r.put("key", fid)
+        r.put("value", java.nio.ByteBuffer.wrap(bytes))
+        out.add(r)
+      }
+      out
+    }
+    val entries = files.map { df =>
       val e = new GenericData.Record(entrySchema)
       e.put("status", 1) // ADDED
       e.put("snapshot_id", snapshotId)
       val d = new GenericData.Record(fileSchema)
-      d.put("file_path", filePath)
+      d.put("file_path", df.path)
       d.put("file_format", "PARQUET")
       val part = new GenericData.Record(partSchema)
-      spec.zipWithIndex.foreach { case ((pf, dt), i) =>
-        // partition-dir read-back re-infers types (1001 comes back as
-        // Integer) — coerce to the DECLARED spec type for the avro union
-        val raw = row.get(i + 1)
-        part.put(pf.name, (dt, raw) match {
-          case (_, null) => null
-          case (IntegerType, n: java.lang.Number) =>
-            java.lang.Integer.valueOf(n.intValue())
-          case (LongType, n: java.lang.Number) =>
-            java.lang.Long.valueOf(n.longValue())
-          case (StringType, v) => v.toString
-          case (_, v) => v
-        })
-      }
+      spec.zip(df.partition).foreach { case ((pf, _), v) => part.put(pf.name, v) }
       d.put("partition", part)
-      val nIdx = 1 + partNames.size
-      d.put("record_count", row.getLong(nIdx))
-      d.put("file_size_in_bytes",
-        f.getFileStatus(new Path(new java.net.URI(filePath))).getLen)
-      def kvs(loNotHi: Boolean, itemSchema: Schema) = {
-        val out = new java.util.ArrayList[GenericRecord]()
-        bounded.zipWithIndex.foreach { case (fd, bi) =>
-          val v0 = row.get(nIdx + 1 + bi * 2 + (if (loNotHi) 0 else 1))
-          val v: Option[Any] = (fd.dataType, v0) match {
-            case (_, null) => None
-            case (StringType, s: String) =>
-              // lower: the 16-point prefix (≤ every value). upper: the
-              // exact value when nothing was truncated, else the
-              // incremented prefix (> every prefix-sharing value);
-              // no safe increment → no upper bound (conservative).
-              if (loNotHi) Some(cpTake(s, 16))
-              else if (s.codePointCount(0, s.length) <= 16) Some(s)
-              else incrementPrefix(cpTake(s, 16)).map(identity[Any])
-            case (_, other) => Some(other)
-          }
-          v.flatMap(boundBytes(fd.dataType, _)).foreach { bytes =>
-            val r = new GenericData.Record(itemSchema)
-            r.put("key", fieldIds(fd.name))
-            r.put("value", java.nio.ByteBuffer.wrap(bytes))
-            out.add(r)
-          }
-        }
-        out
-      }
-      d.put("lower_bounds", kvs(loNotHi = true, boundsItemSchemaLo))
-      d.put("upper_bounds", kvs(loNotHi = false, boundsItemSchemaHi))
+      d.put("record_count", df.rowCount)
+      d.put("file_size_in_bytes", df.sizeBytes)
+      d.put("lower_bounds", boundsOf("lower_bounds", df.lowerBounds))
+      d.put("upper_bounds", boundsOf("upper_bounds", df.upperBounds))
       e.put("data_file", d)
       e
     }
@@ -1298,6 +1235,9 @@ object IcebergLite {
     /** The table schema json verbatim — committed unchanged by appends
       * and rewrites so evolved field ids are never re-derived. */
     def schemaJs: String = schemaNode.toString
+    /** Column name → field id in the current schema. */
+    def fieldIds: Map[String, Int] =
+      topFields(schemaNode).map(f2 => f2._2 -> f2._1).toMap
   }
 
   private def readMeta(spark: SparkSession, tableDir: String,
@@ -1554,6 +1494,34 @@ object IcebergLite {
       (f.get("id").asInt(), f.get("name").asText(),
         sparkType(f.get("type")), f.get("required").asBoolean())).toSeq
 
+  /** `__file`: the manifest's own `file_path` string for the file a row
+    * was read from, so matches against manifest entries, position-delete
+    * rows and Bloom sidecars compare strings the table recorded, whatever
+    * rendering wrote them (`file:/…` from the data-file writer, `file:///…`
+    * from an `input_file_name()` read-back). `input_file_name()` is a URL
+    * (`%`-encoded), decoded to a `Path` to meet the manifest strings in
+    * [[GraftNativeReaderFactory.normPath]]. */
+  private def manifestPathOf(paths: Seq[String]): org.apache.spark.sql.Column =
+    org.apache.spark.sql.functions.udf(new ManifestPath(paths.map(p =>
+      GraftNativeReaderFactory.normPath(p) -> p).toMap))
+      .apply(org.apache.spark.sql.functions.input_file_name())
+
+  /** URL → manifest string; rows arrive file by file, so the last answer
+    * is kept. */
+  private final class ManifestPath(byId: Map[String, String])
+      extends (String => String) with Serializable {
+    @transient @volatile private var last: (String, String) = _
+    def apply(url: String): String = {
+      val l = last
+      if (l != null && l._1 == url) return l._2
+      val p = byId.getOrElse(GraftNativeReaderFactory.normPath(
+        new Path(new java.net.URI(url)).toString),
+        sys.error(s"$url is not a file of the scanned manifests"))
+      last = (url, p)
+      p
+    }
+  }
+
   /** Read a subset of the table's files with `__file`/`__pos`
     * provenance columns (file path + within-file row position — the
     * address a position delete names), projected to the CURRENT schema
@@ -1563,21 +1531,28 @@ object IcebergLite {
     * predates read as NULL (adds). */
   private def readRaw(spark: SparkSession, meta: TableMeta,
                       files: Seq[(String, String)]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, input_file_name, lit}
+    import org.apache.spark.sql.functions.{col, lit}
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val current = topFields(meta.schemaNode)
+    val filePath = manifestPathOf(files.map(_._1))
     files.groupBy(_._2).map { case (schemaJs, group) =>
       val fileFields = topFields(om.readTree(schemaJs))
       val byId = fileFields.map(f2 => f2._1 -> f2).toMap
       val paths = group.map(_._1)
+      // the write-time schema is the read schema: no footer read to
+      // infer it, and identity partition columns take their DECLARED
+      // types from the directory strings ("007" stays a string, never
+      // re-inferred as the int 7)
+      val reader = spark.read.schema(StructType(fileFields.map(f2 =>
+        StructField(f2._2, f2._3, nullable = true))))
       // `_metadata` resolves only on the file-source relation — capture
       // the provenance columns per branch, BEFORE any union
       def withProv(df: DataFrame): DataFrame = df
-        .withColumn("__file", input_file_name())
+        .withColumn("__file", filePath)
         .withColumn("__pos", col("_metadata.row_index"))
       val raw =
         if (meta.specs.forall(_._2.isEmpty))
-          withProv(spark.read.parquet(paths: _*))
+          withProv(reader.parquet(paths: _*))
         else {
           val bySnapDir = paths.groupBy(fp =>
             fp.substring(0, fp.indexOf("/data/s") +
@@ -1589,16 +1564,14 @@ object IcebergLite {
           // derived column is dropped, and identity partition columns
           // exist in every group (dir or file)
           bySnapDir.map { case (base, fs2) =>
-            withProv(spark.read.option("basePath", base).parquet(fs2: _*))
+            withProv(reader.option("basePath", base).parquet(fs2: _*))
           }.reduce(_.unionByName(_, allowMissingColumns = true))
         }
       raw.select(current.toIndexedSeq.map { case (id, name, dt, _) =>
         byId.get(id) match {
           case Some((_, fileName, _, _)) =>
-            // cast off the ACTUAL read-back type, not the manifest-
-            // declared one: partition-dir inference re-types values
-            // (a long partition value reads back as int) and narrow
-            // physical types (smallint) canonicalize to int
+            // the file's write-time type; a column widened since
+            // (int → long, float → double) casts up to the current one
             val c = col(fileName)
             (if (raw.schema(fileName).dataType.catalogString == dt.catalogString) c
              else c.cast(dt)).as(name)
@@ -1779,67 +1752,77 @@ object IcebergLite {
                                meta: TableMeta, snapshotId: Long,
                                predicate: org.apache.spark.sql.Column)
       : Option[(Seq[RewriteGroup], Long)] = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not, sum => sum0}
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
     val files = liveFileEntries(spark, meta)
     if (files.isEmpty) return None
-
-    // one column-pruned scan over the CANDIDATE files (the predicate
-    // mined for bounds/partition/Bloom skipping — a partition-targeted
-    // delete scans its partition, never the table) finds the files
-    // containing LIVE matches (merge-on-read deletes applied first — a
-    // row already deleted by position cannot match again) and the
-    // matched count per file
-    val cand = candidateFiles(spark, meta, predicate, files)
-    val hitAgg =
-      if (cand.isEmpty) Array.empty[org.apache.spark.sql.Row]
-      else applyDeletes(spark, meta, readRaw(spark, meta, cand))
-        .filter(coalesce(predicate, lit(false)))
-        .groupBy("__file").agg(sum0(lit(1L)).as("__m"))
-        .collect()
-    val nDeleted = hitAgg.map(_.getLong(1)).sum
-    // files referenced by outstanding position deletes rewrite too —
-    // after this snapshot every delete is physically applied, so the
-    // new manifest list legitimately drops the delete manifests
-    val deleteRefs: Set[String] = {
-      val dels = liveDeleteFiles(spark, meta)
-      if (dels.isEmpty) Set.empty
-      else spark.read.parquet(dels: _*).select("file_path").distinct()
-        .collect().map(_.getString(0)).toSet
-    }
-    val liveSet = files.map(_._1).toSet
-    val hits = hitAgg.map(_.getString(0)).toSet ++ (deleteRefs & liveSet) ++
-      (eqAffectedFiles(spark, meta) & liveSet)
+    val (nDeleted, hits) = cowTargets(spark, meta, files, predicate)
     if (hits.isEmpty) return None
-
-    val schema = declaredSchema(meta)
-    val spec = typedSpec(meta.partitionSpec, schema)
-    val entrySchema = manifestEntrySchema(spec)
-
     // rewrite ONLY the hit files (projected to the current schema —
     // a rewrite is the one moment old-schema rows get rewritten new)
     val survivors = applyDeletes(spark, meta,
         readRaw(spark, meta, files.filter(e => hits(e._1))))
       .filter(not(coalesce(predicate, lit(false))))
       .drop("__file", "__pos")
-    val survivorCount = survivors.count()
-    val (newEntries, newBloomPath) =
-      if (survivorCount == 0) (Seq.empty[GenericRecord], None)
-      else writeDataFiles(spark, survivors, root, snapshotId,
-        spec, entrySchema,
-        topFields(meta.schemaNode).map(f2 => f2._2 -> f2._1).toMap,
-        bloomCols = meta.bloomCols)
+    Some((rewriteGroups(spark, root, meta, snapshotId, survivors,
+      p => !hits.contains(p)), nDeleted))
+  }
 
-    // untouched files carry over by reference as EXISTING entries,
-    // grouped by their SOURCE manifest's schema AND spec so an
-    // old-generation file stays readable through its own id→name
-    // mapping and prunable through its own partition shape
-    val newBloom = newBloomPath.toSeq
-    val groups = carryExisting(spark, meta, p => !hits.contains(p)) ++
-      (if (newEntries.nonEmpty)
-        Seq(RewriteGroup(meta.schemaJs, meta.defaultSpecId, entrySchema,
-          newEntries, newBloom))
-      else Nil)
-    Some((groups, nDeleted))
+  /** What a copy-on-write DML statement rewrites: (live rows matching
+    * `predicate`, files to rewrite). One column-pruned scan over the
+    * CANDIDATE files (the predicate mined for bounds/partition/Bloom
+    * skipping — a partition-targeted statement scans its partition,
+    * never the table) finds the files holding LIVE matches (merge-on-
+    * read deletes applied first — a row already deleted cannot match
+    * again); the files an outstanding delete still names rewrite too. */
+  private def cowTargets(spark: SparkSession, meta: TableMeta,
+                         files: Seq[(String, String)],
+                         predicate: org.apache.spark.sql.Column)
+      : (Long, Set[String]) = {
+    import org.apache.spark.sql.functions.{coalesce, lit, sum}
+    val cand = candidateFiles(spark, meta, predicate, files)
+    val hitAgg =
+      if (cand.isEmpty) Array.empty[org.apache.spark.sql.Row]
+      else applyDeletes(spark, meta, readRaw(spark, meta, cand))
+        .filter(coalesce(predicate, lit(false)))
+        .groupBy("__file").agg(sum(lit(1L)).as("__m"))
+        .collect()
+    (hitAgg.map(_.getLong(1)).sum,
+      hitAgg.map(_.getString(0)).toSet ++ deleteNamedFiles(spark, meta, files))
+  }
+
+  /** Live data files an outstanding merge-on-read delete still names:
+    * referenced by a position delete, or predating a live equality
+    * delete. A rewrite snapshot drops the delete manifests (every delete
+    * goes physical), so these files must rewrite with the deletes
+    * applied, or deleted rows would resurrect. */
+  private def deleteNamedFiles(spark: SparkSession, meta: TableMeta,
+                               files: Seq[(String, String)]): Set[String] = {
+    val dels = liveDeleteFiles(spark, meta)
+    val posRefs =
+      if (dels.isEmpty) Set.empty[String]
+      else spark.read.parquet(dels: _*).select("file_path").distinct()
+        .collect().map(_.getString(0)).toSet
+    (posRefs ++ eqAffectedFiles(spark, meta)) & files.map(_._1).toSet
+  }
+
+  /** The manifest groups of a rewrite snapshot: `rows` written as new
+    * files under the table's current contract, plus every live file
+    * `keep` accepts carried by reference as EXISTING entries (grouped by
+    * their SOURCE manifest's schema AND spec, so an old-generation file
+    * stays readable through its own id→name mapping and prunable
+    * through its own partition shape). */
+  private def rewriteGroups(spark: SparkSession, root: Path, meta: TableMeta,
+                            snapshotId: Long, rows: DataFrame,
+                            keep: String => Boolean): Seq[RewriteGroup] = {
+    val spec = typedSpec(meta.partitionSpec, declaredSchema(meta))
+    val entrySchema = manifestEntrySchema(spec)
+    val (entries, bloomPath) = writeDataFiles(spark, rows, root, snapshotId,
+      spec, entrySchema, meta.fieldIds, bloomCols = meta.bloomCols,
+      sortCols = meta.sortOrderCols)
+    carryExisting(spark, meta, keep) ++
+      (if (entries.isEmpty) Nil
+      else Seq(RewriteGroup(meta.schemaJs, meta.defaultSpecId, entrySchema,
+        entries, bloomPath.toSeq)))
   }
 
   /** ATOMIC overwrite-by-predicate: copy-on-write delete of the rows
@@ -1944,42 +1927,15 @@ object IcebergLite {
                   predicate: org.apache.spark.sql.Column,
                   assignments: Seq[(String, org.apache.spark.sql.Column)])
       : Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, sum => sum0, when => when0}
+    import org.apache.spark.sql.functions.{coalesce, col, lit, when => when0}
     val root = new Path(tableDir)
     val meta = readMeta(spark, tableDir)
     val files = liveFileEntries(spark, meta)
     if (files.isEmpty) return 0L // empty table: nothing to update
     val schema = declaredSchema(meta)
     val assignMap = validAssignments(schema, assignments)
-
-    // one column-pruned scan over the CANDIDATE files (bounds/
-    // partition/Bloom-mined from the predicate) finds the files
-    // containing LIVE matches (merge-on-read deletes applied first)
-    // and the match count per file
-    val cand = candidateFiles(spark, meta, predicate, files)
-    val hitAgg =
-      if (cand.isEmpty) Array.empty[org.apache.spark.sql.Row]
-      else applyDeletes(spark, meta, readRaw(spark, meta, cand))
-        .filter(coalesce(predicate, lit(false)))
-        .groupBy("__file").agg(sum0(lit(1L)).as("__m"))
-        .collect()
-    val nUpdated = hitAgg.map(_.getLong(1)).sum
+    val (nUpdated, hits) = cowTargets(spark, meta, files, predicate)
     if (nUpdated == 0) return 0L
-    // files referenced by outstanding position/equality deletes rewrite
-    // too — after this snapshot every delete is physically applied, so
-    // the new manifest list legitimately drops the delete manifests
-    val deleteRefs: Set[String] = {
-      val dels = liveDeleteFiles(spark, meta)
-      if (dels.isEmpty) Set.empty
-      else spark.read.parquet(dels: _*).select("file_path").distinct()
-        .collect().map(_.getString(0)).toSet
-    }
-    val liveSet = files.map(_._1).toSet
-    val hits = hitAgg.map(_.getString(0)).toSet ++ (deleteRefs & liveSet) ++
-      (eqAffectedFiles(spark, meta) & liveSet)
-
-    val spec = typedSpec(meta.partitionSpec, schema)
-    val entrySchema = manifestEntrySchema(spec)
     val snapshotId = meta.nextSnapshotId
 
     // rewrite ONLY the hit files: matching rows take the assignments
@@ -1995,15 +1951,9 @@ object IcebergLite {
           case None => col(f.name)
         }
       }: _*)
-    val (newEntries, newBloomPath) =
-      writeDataFiles(spark, rewritten, root, snapshotId, spec, entrySchema,
-        topFields(meta.schemaNode).map(f2 => f2._2 -> f2._1).toMap,
-        bloomCols = meta.bloomCols)
-    val groups = carryExisting(spark, meta, p => !hits.contains(p)) ++
-      Seq(RewriteGroup(meta.schemaJs, meta.defaultSpecId, entrySchema,
-        newEntries, newBloomPath.toSeq))
-    commitRewrite(spark, root, meta, snapshotId, groups,
-      operation = "overwrite")
+    commitRewrite(spark, root, meta, snapshotId,
+      rewriteGroups(spark, root, meta, snapshotId, rewritten,
+        p => !hits.contains(p)), operation = "overwrite")
     nUpdated
   }
 
@@ -2136,100 +2086,66 @@ object IcebergLite {
       appendDf = Some(updated), operation = "overwrite")._1
   }
 
-  /** Manifest entries over already-written DELETE parquet files (a
-    * content=1/2 manifest's body): one entry per file, unpartitioned
-    * (a delete file belongs to no partition). */
-  private def deleteFileEntries(spark: SparkSession, root: Path,
-                                snapshotId: Long,
-                                perFile: Seq[(String, Long)])
-      : (Schema, Seq[GenericRecord]) = {
-    val delEntrySchema = manifestEntrySchema(Nil)
-    val fileSchema = delEntrySchema.getField("data_file").schema()
-    val partSchema = fileSchema.getField("partition").schema()
-    val f = fs(spark, root)
-    val entries = perFile.map { case (path, n) =>
-      val e = new GenericData.Record(delEntrySchema)
-      e.put("status", 1)
-      e.put("snapshot_id", snapshotId)
-      val d = new GenericData.Record(fileSchema)
-      d.put("file_path", path)
-      d.put("file_format", "PARQUET")
-      d.put("partition", new GenericData.Record(partSchema))
-      d.put("record_count", n)
-      d.put("file_size_in_bytes", f.getFileStatus(
-        new Path(new java.net.URI(path))).getLen)
-      e.put("data_file", d)
-      e
-    }
-    (delEntrySchema, entries)
+  /** STAGE one merge-on-read delete manifest for `snapshotId`: the
+    * frame's rows as delete parquet under `data/<dirName>` (through the
+    * one data-file writer, unpartitioned — a delete file belongs to no
+    * partition) and ONE content=`content` manifest over them — NO commit
+    * (the [[commitRowDelta]] single-snapshot discipline). Returns the
+    * manifest ref + delete-row count; `None` when the frame is empty. */
+  private def stageDeleteManifest(spark: SparkSession, root: Path,
+                                  meta: TableMeta, snapshotId: Long,
+                                  rows: DataFrame, dirName: String,
+                                  content: Int,
+                                  extraMeta: Map[String, String])
+      : Option[(MRef, Long)] = {
+    val files = writeFiles(spark, rows, new Path(root, s"data/$dirName"),
+      Nil, Map.empty, Nil)
+    val n = files.map(_.rowCount).sum
+    if (n == 0) return None
+    val entrySchema = manifestEntrySchema(Nil)
+    val (entries, _) = dataEntries(spark, root, files, snapshotId, Nil,
+      entrySchema, Nil, "")
+    val manifestPath = new Path(new Path(root, "metadata"),
+      f"manifest-$snapshotId%05d-${if (content == 1) "del" else "eqdel"}.avro")
+    val manifestLen = writeAvro(spark, manifestPath, entrySchema, entries,
+      Map("schema" -> meta.schemaJs, "format-version" -> "1",
+        "content" -> "deletes") ++ extraMeta)
+    Some((MRef(manifestPath.toString, manifestLen, entries.size, snapshotId,
+      n, content = content, specId = meta.defaultSpecId), n))
   }
 
-  /** STAGE position deletes for `snapshotId`: write `(file_path, pos)`
-    * rows as delete parquet + ONE content=1 manifest — NO commit (the
-    * [[commitRowDelta]] single-snapshot discipline). Returns the
-    * manifest ref + delete-row count; `None` when `positions` is empty. */
+  /** STAGE position deletes: `(file_path, pos)` rows, one content=1
+    * manifest. */
   private def stagePositionDeletes(spark: SparkSession, root: Path,
                                    meta: TableMeta, snapshotId: Long,
                                    positions: DataFrame)
-      : Option[(MRef, Long)] = {
-    import org.apache.spark.sql.functions.{count, input_file_name, lit}
-    val delDir = new Path(root, s"data/deletes-s$snapshotId")
-    positions.write.mode("overwrite").parquet(delDir.toString)
-    val perFile = spark.read.parquet(delDir.toString)
-      .groupBy(input_file_name().as("f")).agg(count(lit(1)).as("n"))
-      .collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
-    val nDeleted = perFile.map(_._2).sum
-    if (nDeleted == 0) return None
-    val (delEntrySchema, entries) =
-      deleteFileEntries(spark, root, snapshotId, perFile)
-    val manifestPath = new Path(new Path(root, "metadata"),
-      f"manifest-$snapshotId%05d-del.avro")
-    val manifestLen = writeAvro(spark, manifestPath, delEntrySchema, entries,
-      Map("schema" -> meta.schemaJs, "format-version" -> "1",
-        "content" -> "deletes"))
-    Some((MRef(manifestPath.toString, manifestLen, entries.size, snapshotId,
-      nDeleted, content = 1, specId = meta.defaultSpecId), nDeleted))
-  }
+      : Option[(MRef, Long)] =
+    stageDeleteManifest(spark, root, meta, snapshotId, positions,
+      s"deletes-s$snapshotId", content = 1, Map.empty)
 
-  /** STAGE an equality delete for `snapshotId`: the key frame's
-    * distinct rows as delete parquet + ONE content=2 manifest carrying
-    * the key columns by name + field id — NO commit. Key columns must
-    * exist in the table schema. Returns the manifest ref + distinct key
-    * count; `None` when the key frame is empty. */
+  /** STAGE an equality delete: the key frame's distinct rows, one
+    * content=2 manifest carrying the key columns by name + field id. Key
+    * columns must exist in the table schema. Returns the manifest ref +
+    * distinct key count; `None` when the key frame is empty. */
   private def stageEqualityDelete(spark: SparkSession, root: Path,
                                   meta: TableMeta, snapshotId: Long,
                                   keys: DataFrame): Option[(MRef, Long)] = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name, lit}
+    import org.apache.spark.sql.functions.col
     val declared = declaredSchema(meta)
     val keyCols = keys.schema.fieldNames.toSeq
     require(keyCols.nonEmpty, "equality delete needs at least one key column")
     keyCols.foreach(c => require(declared.fieldNames.contains(c),
       s"equality column $c not in the table schema"))
-    val delDir = new Path(root, s"data/eqdel-s$snapshotId")
     // cast to the DECLARED types so the MOR join is type-exact even if
     // the caller hands narrower literals
     val casted = keys.select(keyCols.map(c =>
       col(c).cast(declared(c).dataType).as(c)): _*).distinct()
-    casted.write.mode("overwrite").parquet(delDir.toString)
-    val perFile = spark.read.parquet(delDir.toString)
-      .groupBy(input_file_name().as("f")).agg(count(lit(1)).as("n"))
-      .collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
-    val nKeys = perFile.map(_._2).sum
-    if (nKeys == 0) return None
-    val (delEntrySchema, entries) =
-      deleteFileEntries(spark, root, snapshotId, perFile)
-    val manifestPath = new Path(new Path(root, "metadata"),
-      f"manifest-$snapshotId%05d-eqdel.avro")
     // key columns ride the manifest metadata by NAME + field id (ids are
     // the evolution-stable identity; names are what the MOR join uses)
-    val fieldIds = topFields(meta.schemaNode).map(f2 => f2._2 -> f2._1).toMap
-    val manifestLen = writeAvro(spark, manifestPath, delEntrySchema, entries,
-      Map("schema" -> meta.schemaJs, "format-version" -> "1",
-        "content" -> "deletes",
-        "equality-cols" -> keyCols.mkString(","),
-        "equality-ids" -> keyCols.map(fieldIds).mkString(",")))
-    Some((MRef(manifestPath.toString, manifestLen, entries.size, snapshotId,
-      nKeys, content = 2, specId = meta.defaultSpecId), nKeys))
+    stageDeleteManifest(spark, root, meta, snapshotId, casted,
+      s"eqdel-s$snapshotId", content = 2,
+      Map("equality-cols" -> keyCols.mkString(","),
+        "equality-ids" -> keyCols.map(meta.fieldIds).mkString(",")))
   }
 
   /** STAGE a data append for an EXISTING table under the table's own
@@ -2256,7 +2172,6 @@ object IcebergLite {
       if (effectiveSort.isEmpty) df0
       else df0.repartitionByRange(effectiveSort.map(c0): _*)
         .sortWithinPartitions(effectiveSort.map(c0): _*)
-    if (df.isEmpty) return None
     val declared = declaredSchema(meta)
     require(declared.fields.map(f2 => (f2.name, canonType(f2.dataType)))
         .sameElements(df.schema.fields.map(f2 =>
@@ -2265,11 +2180,12 @@ object IcebergLite {
         s"schema ${declared.simpleString}")
     val spec = typedSpec(meta.partitionSpec, df.schema)
     val entrySchema = manifestEntrySchema(spec)
-    val fieldIds = topFields(meta.schemaNode).map(f2 => f2._2 -> f2._1).toMap
     // "-a" keeps this dir clear of a same-snapshot COW rewrite's s<id>
     val (entries, bloomPath) = writeDataFiles(spark, df, root, snapshotId,
-      spec, entrySchema, fieldIds, distribute = effectiveSort.isEmpty,
-      bloomCols = meta.bloomCols, dirSuffix = s"-a$attempt")
+      spec, entrySchema, meta.fieldIds, distribute = effectiveSort.isEmpty,
+      bloomCols = meta.bloomCols, dirSuffix = s"-a$attempt",
+      sortCols = effectiveSort)
+    if (entries.isEmpty) return None
     val manifestPath = new Path(new Path(root, "metadata"),
       f"manifest-$snapshotId%05d$attempt.avro")
     val manifestLen = writeAvro(spark, manifestPath, entrySchema, entries,
@@ -2551,34 +2467,24 @@ object IcebergLite {
 
   /** ATOMIC group replacement — the commit half of the NATIVE V2
     * row-level write (ReplaceData): drop `replacedFiles` (the files the
-    * operation's scan planned), adopt `stagedFiles` (written by
-    * executor DataWriters under `stagingDir` in partitionBy layout),
-    * and commit ONE snapshot. Entries for the new files derive from
-    * the same read-back pass [[writeDataFiles]] uses (bounds,
-    * partition values, Bloom sidecars), so a native-written file is
-    * indistinguishable from an API-written one. Returns the appended
-    * row count. */
+    * operation's scan planned), adopt `stagedFiles` (written by the
+    * executor DataWriters, with the statistics they collected), and
+    * commit ONE snapshot. The staged files' entries come from the same
+    * writer statistics the DataFrame route's entries do, so a
+    * native-written file is indistinguishable from an API-written one.
+    * Returns the appended row count. */
   def commitReplaceGroups(spark: SparkSession, tableDir: String,
                           replacedFiles: Set[String],
-                          stagingDir: String,
-                          stagedFiles: Seq[String]): Long = {
+                          stagedFiles: Seq[GraftDataFile]): Long = {
     val root = new Path(tableDir)
     val meta = readMeta(spark, tableDir)
     val schema = declaredSchema(meta)
     val spec = typedSpec(meta.partitionSpec, schema)
     val entrySchema = manifestEntrySchema(spec)
     val snapshotId = meta.nextSnapshotId
-    val fieldIds = topFields(meta.schemaNode).map(f2 => f2._2 -> f2._1).toMap
     if (replacedFiles.isEmpty && stagedFiles.isEmpty) return 0L
-    val (entries, bloomPath) =
-      if (stagedFiles.isEmpty) (Seq.empty[GenericRecord], None)
-      else deriveDataEntries(spark, root,
-        // basePath keeps partition-directory inference rooted at the
-        // staging dir while reading ONLY the files the committed tasks
-        // wrote (a crashed speculative attempt's strays never adopt)
-        spark.read.option("basePath", stagingDir).parquet(stagedFiles: _*),
-        snapshotId, spec, entrySchema, fieldIds, schema, meta.bloomCols,
-        bloomSuffix = "-w")
+    val (entries, bloomPath) = dataEntries(spark, root, stagedFiles,
+      snapshotId, spec, entrySchema, meta.bloomCols, bloomSuffix = "-w")
     val groups = carryExisting(spark, meta, p => !replacedFiles.contains(p)) ++
       (if (entries.nonEmpty)
         Seq(RewriteGroup(meta.schemaJs, meta.defaultSpecId, entrySchema,
@@ -2586,8 +2492,7 @@ object IcebergLite {
       else Nil)
     commitRewrite(spark, root, meta, snapshotId, groups,
       operation = "overwrite")
-    entries.map(_.get("data_file").asInstanceOf[GenericRecord]
-      .get("record_count").asInstanceOf[Long]).sum
+    stagedFiles.map(_.rowCount).sum
   }
 
   /** Rewrite every live file into one fresh snapshot — the small-file
@@ -2598,22 +2503,13 @@ object IcebergLite {
     val meta = readMeta(spark, tableDir)
     val files = liveFileEntries(spark, meta)
     require(files.nonEmpty, "table has no data files")
-    val schema = declaredSchema(meta)
-    val spec = typedSpec(meta.partitionSpec, schema)
-    val entrySchema = manifestEntrySchema(spec)
     val snapshotId = meta.nextSnapshotId
     // merge-on-read deletes apply HERE — compaction is the pass that
     // makes them physical (the new list carries no delete manifests)
     val all = applyDeletes(spark, meta, readRaw(spark, meta, files))
       .drop("__file", "__pos")
-    val (entries, newBloomPath) = writeDataFiles(spark, all, root, snapshotId,
-      spec, entrySchema,
-      topFields(meta.schemaNode).map(f2 => f2._2 -> f2._1).toMap,
-      bloomCols = meta.bloomCols)
-    val newBloom = newBloomPath.toSeq
     commitRewrite(spark, root, meta, snapshotId,
-      Seq(RewriteGroup(meta.schemaJs, meta.defaultSpecId, entrySchema,
-        entries, newBloom)),
+      rewriteGroups(spark, root, meta, snapshotId, all, _ => false),
       operation = "replace")
   }
 
@@ -2631,13 +2527,10 @@ object IcebergLite {
     val meta = readMeta(spark, tableDir)
     val files = liveFileEntries(spark, meta)
     require(files.nonEmpty, "table has no data files")
-    val schema = declaredSchema(meta)
-    val spec = typedSpec(meta.partitionSpec, schema)
-    val entrySchema = manifestEntrySchema(spec)
     val snapshotId = meta.nextSnapshotId
 
     // small files from the MANIFEST metadata (no file-system stats) +
-    // the position-delete-referenced ones
+    // the files an outstanding delete names (so the deletes go physical)
     val small = mutable.LinkedHashSet.empty[String]
     meta.manifests.filter(_.content == 0).foreach { m =>
       readManifest(spark, new Path(m.path))._1
@@ -2646,36 +2539,16 @@ object IcebergLite {
         .filter(_.get("file_size_in_bytes").asInstanceOf[Long] < smallerThanBytes)
         .foreach(d => small += d.get("file_path").toString)
     }
-    val dels = liveDeleteFiles(spark, meta)
-    if (dels.nonEmpty)
-      spark.read.parquet(dels: _*).select("file_path").distinct()
-        .collect().map(_.getString(0))
-        .filter(files.map(_._1).toSet).foreach(small += _)
-    // files a live EQUALITY delete still applies to rewrite too (the
-    // new list drops the delete manifests, so the merge goes physical)
-    (eqAffectedFiles(spark, meta) & files.map(_._1).toSet)
-      .foreach(small += _)
+    small ++= deleteNamedFiles(spark, meta, files)
     if (small.isEmpty) return 0L
 
     val packed = applyDeletes(spark, meta,
         readRaw(spark, meta, files.filter(e => small.contains(e._1))))
       .drop("__file", "__pos")
-    val (newEntries, newBloomPath) =
-      if (packed.isEmpty) (Seq.empty[GenericRecord], None)
-      else writeDataFiles(spark, packed.coalesce(
-          math.max(1, spark.sparkContext.defaultParallelism / 4)),
-        root, snapshotId, spec, entrySchema,
-        topFields(meta.schemaNode).map(f2 => f2._2 -> f2._1).toMap,
-        bloomCols = meta.bloomCols)
-
-    val newBloom = newBloomPath.toSeq
-    val groups = carryExisting(spark, meta, p => !small.contains(p)) ++
-      (if (newEntries.nonEmpty)
-        Seq(RewriteGroup(meta.schemaJs, meta.defaultSpecId, entrySchema,
-          newEntries, newBloom))
-      else Nil)
-    commitRewrite(spark, root, meta, snapshotId, groups,
-      operation = "replace")
+      .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4))
+    commitRewrite(spark, root, meta, snapshotId,
+      rewriteGroups(spark, root, meta, snapshotId, packed,
+        p => !small.contains(p)), operation = "replace")
     small.size.toLong
   }
 
@@ -2710,7 +2583,7 @@ object IcebergLite {
     val cutoff =
       if (olderThanMs <= 0L) Long.MaxValue
       else System.currentTimeMillis() - olderThanMs
-    def norm(p2: String): String = new Path(new java.net.URI(p2)).toUri.getPath
+    def norm(p2: String): String = GraftNativeReaderFactory.normPath(p2)
     // every file referenced by ANY snapshot, by kind — ONE read per
     // manifest (records + the bloom-paths header from the same bytes)
     val refLists = meta.snapshots.map(s2 => norm(s2._2)).toSet
@@ -2898,7 +2771,7 @@ object IcebergLite {
     val droppedBlooms = bloomsOf(droppedRefs.flatMap(_._1).toSet)
     val f = fs(spark, root)
     (droppedRefs.flatMap(_._2).toSet -- keptFiles).foreach(fp =>
-      f.delete(new Path(new java.net.URI(fp)), false))
+      f.delete(new Path(fp), false))
     (droppedRefs.flatMap(_._1).toSet -- keptManifests).foreach(m =>
       f.delete(new Path(m), false))
     (droppedBlooms -- keptBlooms).foreach(b =>
@@ -2925,7 +2798,8 @@ object IcebergLite {
   // in a time-sorted table) proves nothing by bounds and scans
   // everything. Per-file Bloom filters close that gap: for each data
   // file and each declared bloom column, a fixed-parameter Bloom filter
-  // over the file's values lands in a SIDECAR avro next to the
+  // over the file's values (built by the write task as it writes,
+  // [[GraftDataWriterFactory]]) lands in a SIDECAR avro next to the
   // manifest (puffin-style — filters are 10-100 KB each, far too big
   // for manifest entries at 100 TB file counts), referenced from the
   // manifest avro header ("bloom-paths"). readTableWhere's EqTo leg
@@ -2937,10 +2811,6 @@ object IcebergLite {
 
   /** Table property naming the Bloom-filtered columns. */
   private val BloomColsProp = "graft-bloom-cols"
-  // fixed across all writers of a table: mergeInPlace requires
-  // identical parameters, and probes must hash identically
-  private val BloomExpectedItems = 100000L
-  private val BloomFpp = 0.03
 
   private val BloomSidecarSchema: Schema = new Schema.Parser().parse("""
     {"type": "record", "name": "bloom_entry", "fields": [
@@ -2948,78 +2818,6 @@ object IcebergLite {
       {"name": "field_id", "type": "int"},
       {"name": "bits", "type": "bytes"}
     ]}""")
-
-  /** Bloom bits as an AGGREGATE (r15 — the builder's documented
-    * follow-up, VERDICT r14 task 3): the filter build rides the SAME
-    * groupBy-per-file pass that computes the manifest min/max bounds in
-    * [[writeDataFiles]], so an append with bloom columns reads its
-    * batch back ONCE instead of twice. Typed `Aggregator`s (a genuine
-    * can't-express-with-builtins case): the buffer is the live
-    * BloomFilter object (serialized only at partial/merge boundaries),
-    * the output its spec serialization — byte-identical probe semantics
-    * to the old two-pass build (putLong/putString ↔
-    * mightContainLong/mightContainString). NULL inputs are skipped,
-    * matching the old pass. */
-  private class BloomLongAgg extends org.apache.spark.sql.expressions
-      .Aggregator[java.lang.Long,
-        org.apache.spark.util.sketch.BloomFilter, Array[Byte]] {
-    def zero: org.apache.spark.util.sketch.BloomFilter =
-      org.apache.spark.util.sketch.BloomFilter
-        .create(BloomExpectedItems, BloomFpp)
-    def reduce(b: org.apache.spark.util.sketch.BloomFilter,
-               a: java.lang.Long): org.apache.spark.util.sketch.BloomFilter = {
-      if (a != null) b.putLong(a.longValue())
-      b
-    }
-    def merge(x: org.apache.spark.util.sketch.BloomFilter,
-              y: org.apache.spark.util.sketch.BloomFilter)
-        : org.apache.spark.util.sketch.BloomFilter = {
-      x.mergeInPlace(y); x
-    }
-    def finish(b: org.apache.spark.util.sketch.BloomFilter): Array[Byte] = {
-      val bo = new java.io.ByteArrayOutputStream()
-      b.writeTo(bo); bo.toByteArray
-    }
-    def bufferEncoder: org.apache.spark.sql.Encoder[
-        org.apache.spark.util.sketch.BloomFilter] =
-      org.apache.spark.sql.Encoders.javaSerialization(
-        classOf[org.apache.spark.util.sketch.BloomFilter])
-    def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-      org.apache.spark.sql.Encoders.BINARY
-  }
-
-  private class BloomStringAgg extends org.apache.spark.sql.expressions
-      .Aggregator[String,
-        org.apache.spark.util.sketch.BloomFilter, Array[Byte]] {
-    def zero: org.apache.spark.util.sketch.BloomFilter =
-      org.apache.spark.util.sketch.BloomFilter
-        .create(BloomExpectedItems, BloomFpp)
-    def reduce(b: org.apache.spark.util.sketch.BloomFilter,
-               a: String): org.apache.spark.util.sketch.BloomFilter = {
-      if (a != null) b.putString(a)
-      b
-    }
-    def merge(x: org.apache.spark.util.sketch.BloomFilter,
-              y: org.apache.spark.util.sketch.BloomFilter)
-        : org.apache.spark.util.sketch.BloomFilter = {
-      x.mergeInPlace(y); x
-    }
-    def finish(b: org.apache.spark.util.sketch.BloomFilter): Array[Byte] = {
-      val bo = new java.io.ByteArrayOutputStream()
-      b.writeTo(bo); bo.toByteArray
-    }
-    def bufferEncoder: org.apache.spark.sql.Encoder[
-        org.apache.spark.util.sketch.BloomFilter] =
-      org.apache.spark.sql.Encoders.javaSerialization(
-        classOf[org.apache.spark.util.sketch.BloomFilter])
-    def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-      org.apache.spark.sql.Encoders.BINARY
-  }
-
-  private lazy val bloomLongUdaf = org.apache.spark.sql.functions.udaf(
-    new BloomLongAgg, org.apache.spark.sql.Encoders.LONG)
-  private lazy val bloomStringUdaf = org.apache.spark.sql.functions.udaf(
-    new BloomStringAgg, org.apache.spark.sql.Encoders.STRING)
 
   /** Load sidecars into (file_path, field_id) → filter. */
   private def loadBlooms(spark: SparkSession, paths: Seq[String])
@@ -3413,7 +3211,7 @@ object IcebergLite {
     val root = new Path(tableDir)
     // sort order and bloom columns are held as NAMES; a rename changes
     // the name, so route old-name → field-id (old schema) → new-name
-    val oldIds = topFields(meta.schemaNode).map(f2 => f2._2 -> f2._1).toMap
+    val oldIds = meta.fieldIds
     val newNames = topFields(schema).map(f2 => f2._1 -> f2._2).toMap
     val sortCols = meta.sortOrderCols.map(c => newNames(oldIds(c)))
     val props = meta.props.map {

@@ -110,6 +110,12 @@ object GraftParquetShim {
     (factory, job.getConfiguration)
   }
 
+  /** The file extension (codec + `.parquet`) the factory's writers use
+    * under `conf`. */
+  def fileExtension(factory: OutputWriterFactory, conf: Configuration): String =
+    factory.getFileExtension(new TaskAttemptContextImpl(conf,
+      new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0)))
+
   /** Open one parquet `OutputWriter` at `path` on an EXECUTOR — the
     * TaskAttemptContext is synthesized from the serialized conf (graft
     * drives its own commit protocol through IcebergLite manifests, so
@@ -122,12 +128,36 @@ object GraftParquetShim {
     factory.newInstance(path, schema, new TaskAttemptContextImpl(conf, attemptId))
   }
 
-  /** Hive-compatible partition-directory escaping — the SAME escaping
-    * `df.write.partitionBy` produces, so native-writer directories
-    * round-trip through Spark's partition inference. */
-  def escapePathName(value: String): String =
+  /** Count a written data file in the running task's output metrics
+    * (what Spark's own file writers report per task). */
+  def countOutput(bytes: Long, records: Long): Unit =
+    Option(org.apache.spark.TaskContext.get()).foreach { ctx =>
+      val om = ctx.taskMetrics().outputMetrics
+      om.setBytesWritten(om.bytesWritten + bytes)
+      om.setRecordsWritten(om.recordsWritten + records)
+    }
+
+  /** One Hive-style partition directory name, `col=value`, with the
+    * escaping `df.write.partitionBy` applies (a null or empty value
+    * lands in the default partition), so writer directories round-trip
+    * through Spark's partition discovery. */
+  def partitionPathString(col: String, value: String): String =
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      .escapePathName(value)
+      .getPartitionPathString(col, value)
+
+  /** Run `task` over every partition of the frame's executed plan as
+    * ONE tracked SQL execution (the shape of a `df.write` action): one
+    * result per partition, from the task attempt the scheduler accepted
+    * — a failed or losing speculative attempt reports nothing. */
+  def runWrite[U: scala.reflect.ClassTag](df: DataFrame, name: String)(
+      task: (org.apache.spark.TaskContext, Iterator[InternalRow]) => U)
+      : Array[U] = {
+    val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+      Some(name)) {
+      qe.sparkSession.sparkContext.runJob(qe.toRdd, task)
+    }
+  }
 
   /** A bare `SparkSession` on the existing SparkContext with NO session
     * extensions and a FRESH session state — the "third-party tool" twin

@@ -102,6 +102,90 @@ class DedupSpec extends SparkSuite {
     assert(uncapped.count { case (a, b) => a >= 100L && b >= 100L } === 60 * 59 / 2)
   }
 
+  test("fat-bucket valve: both MinHash paths equal a plain-Scala replay of the cap") {
+    // a corpus over the cap with a planted fat bucket: 20 identical docs
+    // fill one bucket per band, and 14 one-word variants of another
+    // text collide in SOME bands (fat there) and split in others (their
+    // pairs survive through the small buckets). The replay is the
+    // oracle SQL's own shape: HAVING COUNT(*) > cap drops a bucket,
+    // a.id < b.id pairs inside the rest, exact Jaccard verifies.
+    val cap = 12
+    val words = "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11".split(' ')
+    val fat = (0L until 20L).map(i => (100L + i,
+      "slow column agg table batch window slow vector fast scan sort window"))
+    val variants = (0L until 14L).map(i => (200L + i,
+      words.updated((i % words.length).toInt, s"v$i").mkString(" ")))
+    val unique = (0L until 46L).map(i => (i, (0 until 12)
+      .map(j => s"u${i}x${(i * 7 + j * 13) % 97}").mkString(" ")))
+    val near = Seq((300L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+      (301L, "alpha beta gamma delta epsilon zeta eta theta iota lambda"))
+    val corpus = (fat ++ variants ++ unique ++ near).toDF("doc_id", "text")
+    assert(corpus.count() > cap)
+
+    /** The cap and pairing, replayed over collected band rows. */
+    def replay(banded: Seq[(Long, Int, String)], sh: Map[Long, Set[String]],
+               minJaccard: Double)
+        : (Set[(Int, String, Long)], Map[(Long, Long), Double]) = {
+      val buckets = banded.groupBy(b => (b._2, b._3))
+      val fatList = buckets.collect {
+        case ((band, h), rows) if rows.size > cap => (band, h, rows.size.toLong)
+      }.toSet
+      val pairs = buckets.filter(_._2.size <= cap).values.flatMap { rows =>
+        val ids = rows.map(_._1).distinct.sorted
+        for (a <- ids; b <- ids if a < b) yield (a, b)
+      }.toSet
+      val verified = pairs.iterator.map { case (a, b) =>
+        val j = (sh(a) & sh(b)).size.toDouble / (sh(a) | sh(b)).size
+        (a, b) -> j
+      }.filter(_._2 >= minJaccard).toMap
+      (fatList, verified)
+    }
+    def collectBanded(df: org.apache.spark.sql.DataFrame) =
+      // the portable path hashes bands to strings, the native one to longs
+      df.select(col("id"), col("band_id").cast("int"),
+          col("band_hash").cast("string"))
+        .as[(Long, Int, String)].collect().toSeq
+    def check(banded: org.apache.spark.sql.DataFrame,
+              sigs: org.apache.spark.sql.DataFrame,
+              got: org.apache.spark.sql.DataFrame): Unit = {
+      val sh = sigs.select("id", "sh").as[(Long, Seq[String])].collect()
+        .map(r => r._1 -> r._2.toSet).toMap
+      val (fatList, pairs) = replay(collectBanded(banded), sh, 0.5)
+      val list = Dedup.FatBlocks(banded, Seq("band_id", "band_hash"), cap).list
+        .select(col("band_id").cast("int"), col("band_hash").cast("string"),
+          col("n_rows"))
+        .as[(Int, String, Long)].collect().toSet
+      assert(list === fatList)
+      assert(fatList.nonEmpty && fatList.exists(_._3 == 20L))
+      val gotPairs = got.select("id_a", "id_b", "jaccard")
+        .as[(Long, Long, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
+      assert(gotPairs.keySet === pairs.keySet)
+      gotPairs.foreach { case (k, j) => assert(math.abs(j - pairs(k)) < 1e-12, k) }
+      // the planted fat cluster pairs nowhere; the ordinary pair survives
+      assert(!pairs.keySet.exists { case (a, b) => a >= 100L && a < 120L })
+      assert(pairs.contains((300L, 301L)))
+    }
+
+    val sigs = Dedup.signatureTable(corpus, "text", "doc_id", 3, 64)
+    val banded = Dedup.withBands(sigs.select("id", "minhash_sig"), 64, 16)
+      .select(col("id"), col("band.band_id").as("band_id"),
+        col("band.band_hash").as("band_hash"))
+    check(banded, sigs, Dedup.minHashCandidates(corpus, "text", "doc_id",
+      shingleSize = 3, numHashes = 64, bands = 16, minJaccard = 0.5,
+      maxBucketSize = cap))
+
+    val psigs = corpus.select(col("doc_id").as("id"), array_distinct(
+        graft.functions.WordShingles.col(col("text"), 3)).as("sh"))
+      .withColumn("minhash_sig",
+        graft.functions.PortableMinHashSig.col(col("sh"), 32))
+    val pbanded = psigs.select(col("id"), posexplode(
+        graft.functions.PortableBandHashes.col(col("minhash_sig"), 8))
+      .as(Seq("band_id", "band_hash")))
+    check(pbanded, psigs, Dedup.minHashCandidatesPortable(corpus, "text",
+      "doc_id", shingleSize = 3, numHashes = 32, bands = 8, minJaccard = 0.5,
+      maxBucketSize = cap))
+  }
+
   test("default maxBucketSize cap is on and reproduces the exhaustive result " +
        "on ordinary corpora") {
     // The safe-by-default cap (DefaultMaxBucketSize) must be a no-op when

@@ -714,4 +714,34 @@ class GraftNativeSpec extends SparkSuite {
     assert(messages(e).exists(_.contains("merge-on-read")),
       messages(e).mkString(" | "))
   }
+
+  test("native DELETE / UPDATE over partition values Spark escapes in directory names") {
+    // the staged replacement files land in escaped directories; the
+    // commit must record them as written so the table stays readable
+    val bare = GraftParquetShim.bareSession(spark)
+    bare.conf.set("spark.sql.catalog.ncat",
+      classOf[GraftTableCatalog].getName)
+    bare.conf.set("spark.sql.catalog.ncat.warehouse", wh)
+    bare.sql("""CREATE TABLE ncat.nat_esc (id BIGINT, code STRING,
+                n BIGINT) USING iceberg PARTITIONED BY (code)""")
+    val codes = Seq("2024-01-01 00:00:00", "a b", "x/y", "k=v", "50%")
+    val rows = (0 until 20).map(i => (i.toLong, codes(i % codes.size), i * 10L))
+    rows.toDF("id", "code", "n").writeTo("ncat.nat_esc").append()
+    // subquery conditions: not filter-convertible, so both statements
+    // take the group-based ReplaceData route (commitReplaceGroups)
+    bare.sql("""DELETE FROM ncat.nat_esc WHERE id IN
+                (SELECT id FROM ncat.nat_esc WHERE id % 4 = 0)""")
+    bare.sql("""UPDATE ncat.nat_esc SET n = -n WHERE id IN
+                (SELECT id FROM ncat.nat_esc WHERE id % 3 = 0)""")
+    val expected = rows.filterNot(_._1 % 4 == 0).map { case (i, c, n) =>
+      (i, c, if (i % 3 == 0) -n else n) }
+    def read(df: DataFrame) = df.select("id", "code", "n").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sortBy(_._1)
+    assert(read(bare.table("ncat.nat_esc")) === expected)
+    assert(read(lite("nat_esc")) === expected)
+    codes.foreach { c =>
+      assert(bare.table("ncat.nat_esc").where(col("code") === c).count() ===
+        expected.count(_._2 == c).toLong, c)
+    }
+  }
 }

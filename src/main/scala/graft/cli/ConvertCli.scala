@@ -1,10 +1,11 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
-import graft.etl.NexusPipeline
+import graft.etl.{NexusEtl, NexusPipeline, NexusSchemas}
 
 /** Conversion CLI — the reference's `nexus-processor` entry point
   * (cli.py:17-66) re-expressed over the distributed pipeline. Instead of
@@ -96,10 +97,7 @@ object ConvertCli {
           .withColumn("event_offsets", expr(s"slice(event_offsets, 1, $m)"))
           .withColumn("event_index", expr(s"filter(event_index, x -> x < $m)"))
       }
-      NexusPipeline.RunBundle(
-        metadata = in("metadata"), sample = in("sample"),
-        instrument = in("instrument"), software = in("software"),
-        users = in("users"), daslogs = in("daslogs"), eventBanks = banks)
+      landingBundle(name => if (name == "event_banks") banks else in(name))
     }
 
     val tables = NexusPipeline.processRuns(spark, bundle)
@@ -109,10 +107,33 @@ object ConvertCli {
       }
     tables.map { case (table, df) =>
       val path = s"${cfg.outputDir}/$table"
-      graft.etl.NexusEtl.writeTable(df, path, table,
+      NexusEtl.writeTable(df, path, table,
         partitionByRun = true, maxRecordsPerFile = cfg.maxEventsPerFile)
       table -> path
     }
+  }
+
+  /** Edge adapter for the parquet landing zone (the frames named in
+    * the header): undeclared fields arrive as plain columns, attributes
+    * as `file_attr_*`/`entry_attr_*` columns; one schema-only fold turns
+    * them into the table-shaped [[NexusPipeline.RunBundle]]. */
+  def landingBundle(frame: String => DataFrame): NexusPipeline.RunBundle = {
+    def withExtras(name: String, schema: StructType): DataFrame = {
+      val df = frame(name)
+      df.withColumn("additional_fields",
+        NexusEtl.additionalFieldsMap(df, schema.fieldNames.toIndexedSeq))
+    }
+    val meta = frame("metadata")
+    NexusPipeline.RunBundle(
+      metadata = meta
+        .withColumn("file_attributes", NexusEtl.attributeMap(meta, "file_attr_"))
+        .withColumn("entry_attributes", NexusEtl.attributeMap(meta, "entry_attr_")),
+      sample = withExtras("sample", NexusSchemas.sample),
+      instrument = withExtras("instrument", NexusSchemas.instrument),
+      software = withExtras("software", NexusSchemas.software),
+      users = withExtras("users", NexusSchemas.users),
+      daslogs = frame("daslogs"),
+      eventBanks = frame("event_banks"))
   }
 
   def main(args: Array[String]): Unit = {

@@ -1,7 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.Hdf5
 import graft.sources.Hdf5.{H5Dataset, H5Group, H5Value}
@@ -21,10 +22,10 @@ import graft.sources.Hdf5.{H5Dataset, H5Group, H5Value}
   * per-concern projections don't re-decode; at warehouse scale the
   * decoded frame lands in parquet first (`decodedToParquet`) — the same
   * first-touch discipline as `CorpusIO.toParquet` — and every later pass
-  * gets column pruning. Attribute/field-name vocabularies (NOT data) are
-  * collected driver-side to shape dynamic columns; they are bounded by
-  * the NeXus dictionary, the same bounded-model argument as the
-  * trigram-profile and BPE-merge-table collects.
+  * gets column pruning. The decoded attribute/field maps stay maps:
+  * shaping them into the bundle is a per-row projection against the
+  * declared fields of [[NexusSchemas]], so it runs no job and a run's
+  * maps never depend on the other runs in its batch.
   */
 object NexusH5 {
 
@@ -227,66 +228,41 @@ object NexusH5 {
                        maxEvents: Option[Int] = None): Unit =
     readRuns(spark, dir, maxEvents).write.mode("overwrite").parquet(outDir)
 
-  /** Dynamic map → prefixed columns, shaping the decoded attribute maps
-    * into the `file_attr_*`/`entry_attr_*`/field columns
-    * [[NexusPipeline]] expects. Key vocabulary (names only, never data)
-    * is collected driver-side — bounded by the NeXus dictionary. */
-  private def mapToColumns(df: DataFrame, mapCol: String, prefix: String,
-                           drop: Boolean = true): DataFrame = {
-    val keys = df.select(explode(map_keys(col(mapCol))).as("k"))
-      .distinct().collect().map(_.getString(0)).sorted
-    val withCols = keys.foldLeft(df) { (d, k) =>
-      d.withColumn(s"$prefix$k", element_at(col(mapCol), k))
-    }
-    if (drop) withCols.drop(mapCol) else withCols
-  }
-
   /** Shape a decoded-run frame into the [[NexusPipeline.RunBundle]] the
-    * distributed conversion consumes. */
+    * distributed conversion consumes — a pure projection, no job: each
+    * concern map's declared fields become columns (`element_at`), its
+    * other keys stay in `additional_fields` (`map_filter`), and the
+    * file/entry attribute maps pass straight through. */
   def toRunBundle(runs: Dataset[DecodedRun]): NexusPipeline.RunBundle = {
     val df = runs.toDF()
     val keys = Seq(col("instrument_id"), col("run_number"))
 
-    val metadata = {
-      val scalars = MetadataScalarFields.filterNot(_ == "run_number")
-      val base = df.select(keys ++
-        Seq(col("source_file"), col("source_path"),
-          col("file_attrs"), col("entry_attrs")) ++
-        scalars.map(f => element_at(col("metadata"), f).as(f)): _*)
-        .withColumn("ingestion_time",
-          date_format(current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss"))
-      mapToColumns(mapToColumns(base, "file_attrs", "file_attr_"),
-        "entry_attrs", "entry_attr_")
+    def shaped(rows: DataFrame, m: Column, schema: StructType): DataFrame = {
+      val declared = NexusSchemas.valueFields(schema)
+      rows.select(keys ++ declared.map(f => element_at(m, f).as(f)) :+
+        map_filter(m, (k, _) => !k.isin(declared: _*)).as("additional_fields"): _*)
     }
+    def exploded(arrCol: String): DataFrame =
+      df.select(keys :+ explode(col(arrCol)).as("x"): _*)
 
-    def concernFrame(mapCol: String): DataFrame =
-      mapToColumns(df.select(keys :+ col(mapCol): _*), mapCol, "")
-
-    def explodedFrame(arrCol: String): DataFrame =
-      mapToColumns(
-        df.select(keys :+ explode(col(arrCol)).as("m"): _*), "m", "")
-
-    val daslogs = df
-      .select(keys :+ explode(col("daslogs")).as("l"): _*)
-      .select(keys ++ Seq(
-        col("l.log_name"), col("l.device_name"), col("l.device_id"),
-        col("l.average_value"), col("l.min_value"), col("l.max_value"),
-        col("l.time"), col("l.value"), col("l.veto_pulse_time")): _*)
-
-    val eventBanks = df
-      .select(keys :+ explode(col("banks")).as("b"): _*)
-      .select(keys ++ Seq(
-        col("b.bank"), col("b.event_ids"), col("b.event_offsets"),
-        col("b.event_index"), col("b.total_counts")): _*)
+    val metadata = df.select(keys ++ Seq(
+        col("source_file"), col("source_path"),
+        date_format(current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss").as("ingestion_time"),
+        col("file_attrs").as("file_attributes"),
+        col("entry_attrs").as("entry_attributes")) ++
+      NexusSchemas.valueFields(NexusSchemas.metadata)
+        .filter(MetadataScalarFields.contains)
+        .map(f => element_at(col("metadata"), f).as(f)): _*)
 
     NexusPipeline.RunBundle(
       metadata = metadata,
-      sample = concernFrame("sample"),
-      instrument = concernFrame("instrument"),
-      software = explodedFrame("software"),
-      users = explodedFrame("users"),
-      daslogs = NexusEtl.explodeDaslogs(daslogs),
-      eventBanks = eventBanks)
+      sample = shaped(df, col("sample"), NexusSchemas.sample),
+      instrument = shaped(df, col("instrument"), NexusSchemas.instrument),
+      software = shaped(exploded("software"), col("x"), NexusSchemas.software),
+      users = shaped(exploded("users"), col("x"), NexusSchemas.users),
+      daslogs = NexusEtl.explodeDaslogs(
+        exploded("daslogs").select("instrument_id", "run_number", "x.*")),
+      eventBanks = exploded("banks").select("instrument_id", "run_number", "x.*"))
   }
 
   /** End to end: a directory of `.nxs.h5` files → the 8 typed tables —

@@ -18,13 +18,17 @@ import graft.ops.EventTime
   * (instrument_id, run_number).
   *
   * Input column contract (see RunBundle): every frame carries
-  * `instrument_id` + `run_number`; remaining columns follow the reference
-  * field names (schemas.py). Unknown columns land in `additional_fields`,
-  * `file_attr_*`/`entry_attr_*` columns become attribute maps.
+  * `instrument_id` + `run_number`, its table's declared fields
+  * ([[NexusSchemas]]) as columns and everything undeclared already in
+  * the table's map columns, so shaping a concern is keys + `conformTo`.
   */
 object NexusPipeline {
 
-  /** One DataFrame per extraction concern (parquet.py:821-882 order).
+  /** One DataFrame per extraction concern (parquet.py:821-882 order),
+    * keyed by `instrument_id` + `run_number` and shaped like its table:
+    * declared fields as columns, undeclared values already in its map
+    * columns (`file_attributes`/`entry_attributes` on `metadata`,
+    * `additional_fields` on the other four; schemas.py:346/367).
     * `daslogs` is one row per log POINT; a reader that surfaces per-log
     * `time`/`value`/`veto_pulse_time` series arrays goes through
     * [[NexusEtl.explodeDaslogs]] first.
@@ -43,19 +47,6 @@ object NexusPipeline {
   private def keyed(df: DataFrame): DataFrame =
     NexusEtl.withRunKeys(df, col("instrument_id"), col("run_number"))
 
-  private val MetadataKnown = Seq("instrument_id", "run_number", "run_id",
-    "title", "start_time", "end_time", "duration", "proton_charge",
-    "total_counts", "experiment_identifier", "definition", "source_file",
-    "source_path", "ingestion_time")
-  private val SampleKnown = Seq("instrument_id", "run_number", "run_id",
-    "name", "nature", "chemical_formula", "mass", "temperature")
-  private val InstrumentKnown = Seq("instrument_id", "run_number", "run_id",
-    "name", "beamline", "instrument_xml_data")
-  private val SoftwareKnown = Seq("instrument_id", "run_number", "run_id",
-    "component", "name", "version")
-  private val UsersKnown = Seq("instrument_id", "run_number", "run_id",
-    "user_id", "name", "facility_user_id", "role")
-
   /** Project a frame onto a target schema: present columns cast to the
     * schema type, absent ones become typed nulls (the reference fills
     * missing HDF5 fields with None the same way).
@@ -65,19 +56,6 @@ object NexusPipeline {
       if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
-
-  private def shaped(df: DataFrame, known: Seq[String],
-                     schema: org.apache.spark.sql.types.StructType,
-                     withAttrs: Boolean = false): DataFrame = {
-    val k = keyed(df)
-    val attrs =
-      if (withAttrs)
-        k.withColumn("file_attributes", NexusEtl.attributeMap(k, "file_attr_"))
-          .withColumn("entry_attributes", NexusEtl.attributeMap(k, "entry_attr_"))
-      else
-        k.withColumn("additional_fields", NexusEtl.additionalFieldsMap(k, known))
-    conformTo(attrs, schema)
-  }
 
   /** The full conversion: normalize each concern, correlate events to
     * pulses (parquet.py:864-882 builds pulse_times from the proton_charge
@@ -116,11 +94,11 @@ object NexusPipeline {
       NexusSchemas.eventSummary)
 
     Map(
-      "experiment_runs" -> shaped(bundle.metadata, MetadataKnown, NexusSchemas.metadata, withAttrs = true),
-      "sample" -> shaped(bundle.sample, SampleKnown, NexusSchemas.sample),
-      "instrument" -> shaped(bundle.instrument, InstrumentKnown, NexusSchemas.instrument),
-      "software" -> shaped(bundle.software, SoftwareKnown, NexusSchemas.software),
-      "users" -> shaped(bundle.users, UsersKnown, NexusSchemas.users),
+      "experiment_runs" -> conformTo(keyed(bundle.metadata), NexusSchemas.metadata),
+      "sample" -> conformTo(keyed(bundle.sample), NexusSchemas.sample),
+      "instrument" -> conformTo(keyed(bundle.instrument), NexusSchemas.instrument),
+      "software" -> conformTo(keyed(bundle.software), NexusSchemas.software),
+      "users" -> conformTo(keyed(bundle.users), NexusSchemas.users),
       "daslogs" -> daslogs,
       "events" -> events,
       "event_summary" -> eventSummary)

@@ -138,6 +138,13 @@ object NexusSchemas {
     "events" -> events,
     "event_summary" -> eventSummary)
 
+  /** The fields a producer fills from a run's decoded values: all a
+    * table declares but the run keys and the map columns the undeclared
+    * keys go to. */
+  def valueFields(s: StructType): Seq[String] =
+    s.fields.toSeq.filterNot(f => partitionKeys.exists(_.name == f.name) ||
+      f.dataType.isInstanceOf[MapType]).map(_.name)
+
   /** Fields excluding the partition columns (schemas.py:217). */
   def fieldsWithoutPartition(s: StructType): Seq[StructField] =
     s.filterNot(f => f.name == "instrument_id" || f.name == "run_number").toSeq

@@ -1813,12 +1813,13 @@ object IcebergLite {
     * through its own partition shape). */
   private def rewriteGroups(spark: SparkSession, root: Path, meta: TableMeta,
                             snapshotId: Long, rows: DataFrame,
-                            keep: String => Boolean): Seq[RewriteGroup] = {
+                            keep: String => Boolean,
+                            distribute: Boolean = false): Seq[RewriteGroup] = {
     val spec = typedSpec(meta.partitionSpec, declaredSchema(meta))
     val entrySchema = manifestEntrySchema(spec)
     val (entries, bloomPath) = writeDataFiles(spark, rows, root, snapshotId,
-      spec, entrySchema, meta.fieldIds, bloomCols = meta.bloomCols,
-      sortCols = meta.sortOrderCols)
+      spec, entrySchema, meta.fieldIds, distribute = distribute,
+      bloomCols = meta.bloomCols, sortCols = meta.sortOrderCols)
     carryExisting(spark, meta, keep) ++
       (if (entries.isEmpty) Nil
       else Seq(RewriteGroup(meta.schemaJs, meta.defaultSpecId, entrySchema,
@@ -2542,13 +2543,16 @@ object IcebergLite {
     small ++= deleteNamedFiles(spark, meta, files)
     if (small.isEmpty) return 0L
 
-    val packed = applyDeletes(spark, meta,
+    // clustered by partition value, as appends are: one task (one file)
+    // per partition, the partitions spread over the tasks; an
+    // unpartitioned table is one partition value, so it packs into one
+    val rows = applyDeletes(spark, meta,
         readRaw(spark, meta, files.filter(e => small.contains(e._1))))
       .drop("__file", "__pos")
-      .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4))
+    val packed = if (meta.partitionSpec.isEmpty) rows.coalesce(1) else rows
     commitRewrite(spark, root, meta, snapshotId,
       rewriteGroups(spark, root, meta, snapshotId, packed,
-        p => !small.contains(p)), operation = "replace")
+        p => !small.contains(p), distribute = true), operation = "replace")
     small.size.toLong
   }
 

@@ -183,6 +183,64 @@ class NexusH5Spec extends SparkSuite {
       === "NXS").count() == expected)
   }
 
+  test("a run's stored maps hold only its own keys; map keys never replace run keys") {
+    import spark.implicits._
+    def run(n: Long, sample: Map[String, String],
+            fileAttrs: Map[String, String]) = NexusH5.DecodedRun(
+      instrument_id = "X", run_number = n,
+      source_file = s"run_$n.nxs.h5", source_path = s"in/run_$n.nxs.h5",
+      metadata = Map("title" -> s"Run $n", "run_number" -> n.toString),
+      file_attrs = fileAttrs, entry_attrs = Map("NX_class" -> "NXentry"),
+      sample = sample, instrument = Map("name" -> "X", "beamline" -> s"BL$n"),
+      users = Seq(Map("user_id" -> "user1", "name" -> s"User $n")),
+      software = Seq(Map("component" -> "writer", "version" -> s"$n.0")),
+      daslogs = Nil, banks = Nil)
+    // run 1's sample map has a key run 2's lacks; run 2's has `run_number`
+    val runs = Seq(
+      run(1L, Map("name" -> "A", "container" -> "can1"),
+        Map("file_name" -> "run_1.nxs.h5", "HDF5_Version" -> "1.10")),
+      run(2L, Map("name" -> "B", "run_number" -> "999"),
+        Map("file_name" -> "run_2.nxs.h5"))).toDS()
+    val out = NexusPipeline.processRuns(spark, NexusH5.toRunBundle(runs))
+    val sample = out("sample")
+      .select("run_id", "run_number", "name", "additional_fields")
+      .as[(String, Long, String, Map[String, String])].collect().sortBy(_._1)
+    assert(sample.toSeq === Seq(
+      ("X:1", 1L, "A", Map("container" -> "can1")),
+      ("X:2", 2L, "B", Map("run_number" -> "999"))))
+    val attrs = out("experiment_runs")
+      .select("run_id", "file_attributes", "entry_attributes")
+      .as[(String, Map[String, String], Map[String, String])]
+      .collect().sortBy(_._1)
+    assert(attrs.toSeq === Seq(
+      ("X:1", Map("file_name" -> "run_1.nxs.h5", "HDF5_Version" -> "1.10"),
+        Map("NX_class" -> "NXentry")),
+      ("X:2", Map("file_name" -> "run_2.nxs.h5"),
+        Map("NX_class" -> "NXentry"))))
+    Seq("sample", "instrument", "software", "users").foreach { t =>
+      val keys = out(t).select("instrument_id", "run_number", "run_id")
+        .as[(String, Long, String)].collect().toSet
+      assert(keys === Set(("X", 1L, "X:1"), ("X", 2L, "X:2")), s"table $t")
+    }
+  }
+
+  test("toRunBundle submits no Spark job") {
+    val runs = NexusH5.readRuns(spark, dir)
+    Thread.sleep(300) // drain readRuns' own jobs off the listener bus
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      NexusH5.toRunBundle(runs)
+      Thread.sleep(300) // drain the listener bus
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(jobs.get() === 0, s"toRunBundle ran ${jobs.get()} jobs")
+  }
+
   test("decoded frame lands in parquet for first-touch conversion") {
     val out = java.nio.file.Files.createTempDirectory("graft_nxs_pq").toString
     NexusH5.decodedToParquet(spark, dir, out)

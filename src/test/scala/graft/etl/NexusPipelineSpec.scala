@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
+import graft.cli.ConvertCli
 
 /** End-to-end conversion test mirroring the reference's integration tests
   * (tests/test_parquet.py TestProcessNexusFile): one run in, eight typed
@@ -14,30 +15,32 @@ import graft.SparkSuite
 class NexusPipelineSpec extends SparkSuite {
   import spark.implicits._
 
-  private def bundle = NexusPipeline.RunBundle(
-    metadata = Seq(
+  // column-shaped frames (prefixed attribute columns, undeclared
+  // fields as plain columns) through the landing-zone adapter
+  private def bundle = ConvertCli.landingBundle(Map(
+    "metadata" -> Seq(
       ("REF_L", 218386L, "my title", 42.5, "IPTS-1234", "h5-v2", "fmt9"))
       .toDF("instrument_id", "run_number", "title", "duration",
         "experiment_identifier", "file_attr_h5_version", "entry_attr_format"),
-    sample = Seq(("REF_L", 218386L, "water", 1.25, "extra-val"))
+    "sample" -> Seq(("REF_L", 218386L, "water", 1.25, "extra-val"))
       .toDF("instrument_id", "run_number", "name", "mass", "custom_field"),
-    instrument = Seq(("REF_L", 218386L, "REF_L", "BL-4B"))
+    "instrument" -> Seq(("REF_L", 218386L, "REF_L", "BL-4B"))
       .toDF("instrument_id", "run_number", "name", "beamline"),
-    software = Seq(("REF_L", 218386L, "dasmon", "dasmon", "1.2"))
+    "software" -> Seq(("REF_L", 218386L, "dasmon", "dasmon", "1.2"))
       .toDF("instrument_id", "run_number", "component", "name", "version"),
-    users = Seq(("REF_L", 218386L, "user1", "Ada", "u-77", "PI"))
+    "users" -> Seq(("REF_L", 218386L, "user1", "Ada", "u-77", "PI"))
       .toDF("instrument_id", "run_number", "user_id", "name", "facility_user_id", "role"),
-    daslogs = Seq(
+    "daslogs" -> Seq(
       ("REF_L", 218386L, "proton_charge", 0.0, "12.5"),
       ("REF_L", 218386L, "proton_charge", 1.0, "12.7"),
       ("REF_L", 218386L, "proton_charge", 2.0, "12.6"),
       ("REF_L", 218386L, "chopper_speed", 0.5, "rpm-unparseable"))
       .toDF("instrument_id", "run_number", "log_name", "time", "value"),
-    eventBanks = Seq(
+    "event_banks" -> Seq(
       ("REF_L", 218386L, "bank1_events", Seq(100L, 101L, 102L, 103L),
         Seq(10.0, 20.0, 30.0, 40.0), Seq(0L, 1L, 3L)))
       .toDF("instrument_id", "run_number", "bank", "event_ids",
-        "event_offsets", "event_index"))
+        "event_offsets", "event_index")))
 
   test("processRuns emits all eight tables conforming to their schemas") {
     val out = NexusPipeline.processRuns(spark, bundle)

@@ -1701,23 +1701,47 @@ class IcebergLiteSpec extends SparkSuite {
 
   test("compactSmallFiles over many partitions writes one file per partition") {
     // three appends spread every partition over three files; the
-    // compaction packs all of them into ONE task, whose rows arrive in
-    // file order (partitions interleaved): the task sorts by partition
-    // first, so its writer finishes each partition's file before the
-    // next opens
+    // compaction clusters the packed rows by partition value, as appends
+    // do: each partition's rows meet in one task, which writes its one
+    // file, and the partitions spread over several write tasks. The
+    // incompressible padding keeps the shuffle above the size at which
+    // adaptive execution would coalesce it into one task.
     val dir = tmp()
     val parts = 40
-    def batch(k: Int) = (0 until parts).map(p => (k * parts + p.toLong, s"p$p"))
-      .toDF("id", "part")
-    IcebergLite.createTable(spark, batch(0), dir, partitionBy = Seq("part"))
-    (1 to 2).foreach(k => IcebergLite.appendSnapshot(spark, batch(k), dir,
+    val perPart = 50
+    val rnd = new scala.util.Random(7)
+    def batch(k: Int) = (0 until parts * perPart).map(i =>
+        (k * parts * perPart + i.toLong, s"p${i % parts}",
+          rnd.alphanumeric.take(1000).mkString))
+      .toDF("id", "part", "pad")
+    val batches = (0 until 3).map(k => batch(k).cache())
+    IcebergLite.createTable(spark, batches(0), dir, partitionBy = Seq("part"))
+    batches.tail.foreach(b => IcebergLite.appendSnapshot(spark, b, dir,
       partitionBy = Seq("part")))
     val files = () => IcebergLite.metaTable(spark, dir, "files")
       .select(col("partition").getItem("part")).as[String].collect().toSeq
     assert(files().size === 3 * parts)
-    assert(IcebergLite.compactSmallFiles(spark, dir, 1L << 30) === 3L * parts)
+    // tasks that wrote output, per stage, during the compaction
+    val writers = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null &&
+            te.taskMetrics.outputMetrics.bytesWritten > 0)
+          writers.merge(te.stageId, 1, _ + _)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(IcebergLite.compactSmallFiles(spark, dir, 1L << 30) === 3L * parts)
+      Thread.sleep(300) // drain the listener bus
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(writers.size === 1, s"write stages: $writers")
+    assert(writers.values.iterator.next() > 1,
+      s"the rewrite wrote from one task: $writers")
     assert(files().sorted === (0 until parts).map(p => s"p$p").sorted)
-    assert(IcebergLite.readTable(spark, dir).as[(Long, String)].collect()
-      .toSet === (0 until 3).flatMap(k => batch(k).as[(Long, String)].collect()).toSet)
+    assert(IcebergLite.readTable(spark, dir).select("id", "part")
+      .as[(Long, String)].collect().toSet ===
+      batches.flatMap(_.select("id", "part").as[(Long, String)].collect()).toSet)
+    batches.foreach(_.unpersist())
   }
 }

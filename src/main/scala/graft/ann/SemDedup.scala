@@ -58,7 +58,7 @@ object SemDedup {
     val assigned = blocked(corpus, idCol, vecCol, centroids)
     val capped =
       if (maxClusterSize <= 0) assigned
-      else FatBlocks(assigned, Seq("centroid_id"), maxClusterSize).drop(assigned)
+      else FatBlocks(assigned, Seq("centroid_id"), maxClusterSize).kept
     val a = capped.alias("a")
     val b = capped.alias("b")
     a.join(b, col("a.centroid_id") === col("b.centroid_id") &&
@@ -73,7 +73,7 @@ object SemDedup {
     * `(centroid_id, n_vectors)` — non-empty means pairs were dropped
     * (cluster blocking has no second chance for a skipped cell; cf.
     * [[Similarity.cosineDedupSkippedBuckets]]). It is the [[FatBlocks]]
-    * list the candidates anti-join against, over the same assignment;
+    * list of the cap the candidates apply, over the same assignment;
     * run it alongside any capped production pass.
     */
   def skippedClusters(

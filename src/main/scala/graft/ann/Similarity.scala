@@ -739,7 +739,7 @@ object Similarity {
     val b0 = sketchBlocked(corpus, idCol, vecCol, bits, dim)
     val b =
       if (maxBucketSize <= 0) b0
-      else FatBlocks(b0, Seq("lsh_bucket"), maxBucketSize).drop(b0)
+      else FatBlocks(b0, Seq("lsh_bucket"), maxBucketSize).kept
     val a = b.alias("a")
     val c = b.alias("b")
     a.join(c, col("a.lsh_bucket") === col("b.lsh_bucket") && col("a.id") < col("b.id"))
@@ -753,7 +753,7 @@ object Similarity {
     * single-bucket sketch, where a skipped bucket's pairs are permanently
     * lost (no bands to recover them). Empty result = the cap was a no-op
     * and the candidate set is exhaustive. It is the [[FatBlocks]] list
-    * the candidates anti-join against, over the same sketch frame; run it
+    * of the cap the candidates apply, over the same sketch frame; run it
     * alongside any capped production dedup and alert on non-empty.
     */
   def cosineDedupSkippedBuckets(

@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -116,18 +116,25 @@ object ConvertCli {
   /** Edge adapter for the parquet landing zone (the frames named in
     * the header): undeclared fields arrive as plain columns, attributes
     * as `file_attr_*`/`entry_attr_*` columns; one schema-only fold turns
-    * them into the table-shaped [[NexusPipeline.RunBundle]]. */
+    * them into the table-shaped [[NexusPipeline.RunBundle]]. A frame has
+    * a column for every key any run of its batch carries, so a NULL cell
+    * means the run lacks that key: the maps keep only non-NULL entries,
+    * as the H5 route stores them, and a run's maps never depend on the
+    * other runs of its batch. */
   def landingBundle(frame: String => DataFrame): NexusPipeline.RunBundle = {
+    def present(m: Column): Column = map_filter(m, (_, v) => v.isNotNull)
     def withExtras(name: String, schema: StructType): DataFrame = {
       val df = frame(name)
-      df.withColumn("additional_fields",
-        NexusEtl.additionalFieldsMap(df, schema.fieldNames.toIndexedSeq))
+      df.withColumn("additional_fields", present(
+        NexusEtl.additionalFieldsMap(df, schema.fieldNames.toIndexedSeq)))
     }
     val meta = frame("metadata")
     NexusPipeline.RunBundle(
       metadata = meta
-        .withColumn("file_attributes", NexusEtl.attributeMap(meta, "file_attr_"))
-        .withColumn("entry_attributes", NexusEtl.attributeMap(meta, "entry_attr_")),
+        .withColumn("file_attributes",
+          present(NexusEtl.attributeMap(meta, "file_attr_")))
+        .withColumn("entry_attributes",
+          present(NexusEtl.attributeMap(meta, "entry_attr_"))),
       sample = withExtras("sample", NexusSchemas.sample),
       instrument = withExtras("instrument", NexusSchemas.instrument),
       software = withExtras("software", NexusSchemas.software),

@@ -2,7 +2,8 @@ package graft.dedup
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
@@ -37,11 +38,13 @@ object Dedup {
     * [[list]] is both the skip list and the audit of what was skipped, so
     * the report comes from the computation that causes the loss.
     *
-    * Plan shape: the list is bounded by |blocked| / cap rows (usually
-    * empty) and broadcasts, so the valve costs one partial-agg pass plus
-    * a map-side anti filter, never a second full shuffle of `blocked`
-    * (the semi-join-against-OK-blocks formulation measured ~0.3 s extra
-    * at sf0.1).
+    * Plan shape: [[kept]] counts each block with a window partitioned by
+    * `keys`, so the count runs on the one exchange by `keys` that the
+    * within-block self-join reuses for both of its sides — no aggregate
+    * of its own (the earlier broadcast anti-join against [[list]] ran
+    * that aggregate once under each join side: two more full shuffles of
+    * the blocked rows, which cannot combine map-side because block keys
+    * are nearly all distinct).
     */
   private[graft] final case class FatBlocks(blocked: DataFrame,
       keys: Seq[String], cap: Int) {
@@ -52,7 +55,17 @@ object Dedup {
       blocked.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n_rows"))
         .filter(col("n_rows") > cap)
 
-    /** `df` without the rows of a fat block (a broadcast anti-join). */
+    /** `blocked` without the rows of a fat block, partitioned by `keys`.
+      * A row with a NULL key is never dropped (no key equals NULL). */
+    lazy val kept: DataFrame =
+      blocked
+        .withColumn("__block_rows",
+          count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+        .filter(col("__block_rows") <= cap || keys.map(col(_).isNull).reduce(_ || _))
+        .drop("__block_rows")
+
+    /** `df` — another frame over the same keys — without the rows of a fat
+      * block of `blocked` (a broadcast anti-join against [[list]]). */
     def drop(df: DataFrame): DataFrame =
       df.join(broadcast(list.select(keys.map(col): _*)), keys, "left_anti")
   }
@@ -143,12 +156,17 @@ object Dedup {
       idCol: String,
       shingleSize: Int = 3,
       numHashes: Int = 64): DataFrame =
-    withMinHashSignature(
-        withShingles(docs.select(col(idCol), col(textCol)), textCol, shingleSize),
-        numHashes)
-      .select(col(idCol).as("id"),
-        array_distinct(col("shingles")).as("sh"),
-        col("minhash_sig"))
+    withSignature(docs.select(col(idCol), col(textCol)), textCol,
+        shingleSize, numHashes)
+      .select(col(idCol).as("id"), col("sh"), col("minhash_sig"))
+
+  /** `df` plus the [[signatureTable]] columns `sh` and `minhash_sig` of
+    * its `textCol`. */
+  private def withSignature(df: DataFrame, textCol: String,
+      shingleSize: Int, numHashes: Int): DataFrame =
+    withMinHashSignature(withShingles(df, textCol, shingleSize), numHashes)
+      .withColumn("sh", array_distinct(col("shingles")))
+      .drop("shingles")
 
   /** Candidate duplicate pairs (id_a < id_b) with exact Jaccard verify on
     * the shingle sets, computed only within LSH buckets.
@@ -188,15 +206,78 @@ object Dedup {
       minJaccard: Double = 0.5,
       prefilterMargin: Double = 0.2,
       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val sigs = signatureTable(docs, textCol, idCol, shingleSize, numHashes)
-      .persist()
-    // Materialize (cheap: candidate pairs only), then release the cached
-    // signatures — repeated invocations in a long-lived session would
-    // otherwise accumulate cached blocks until LRU eviction thrashes.
-    val out = minHashCandidatesFromSigs(sigs, numHashes, bands, minJaccard,
-      prefilterMargin, maxBucketSize).localCheckpoint()
-    sigs.unpersist()
-    out
+    // the signatures feed banding and the verify: materialize them once,
+    // with the corpus size observed on that same job
+    val (sigs, nDocs) = countedCheckpoint(
+      signatureTable(docs, textCol, idCol, shingleSize, numHashes))
+    val (pairs, nPairs) = bandPairs(sigs, nDocs, numHashes, bands,
+      minJaccard, prefilterMargin, maxBucketSize)
+    verifyPairs(pairs, sigs, minJaccard, bounded(nPairs)).localCheckpoint()
+  }
+
+  /** Duplicate marks for a corpus: every column of `docs` but the text,
+    * plus `dup_reason` — "exact_dup" on all but the smallest id of each
+    * identical text (sha-256), "near_dup" on all but the smallest id of
+    * each transitive near-duplicate cluster of the rest (MinHash LSH
+    * with the [[minHashCandidates]] defaults, exact Jaccard at least
+    * `minJaccard`, closed by [[connectedComponents]]), NULL on survivors.
+    * These are the marks of [[exactGroups]] followed by
+    * [[minHashCandidates]] and [[connectedComponents]] over the exact
+    * survivors, taken in a fixed handful of jobs:
+    *  - the exact mark, the shingle sets and the signatures land in ONE
+    *    checkpoint, which observes the survivor count;
+    *  - the band pairs land in a second, which observes the pair count;
+    *  - a bounded pair set ([[LocalMaxEdges]]) is verified by one collect
+    *    that feeds the driver union-find; a larger one is checkpointed
+    *    and runs the distributed loop.
+    */
+  private[graft] def markDuplicates(docs: DataFrame, textCol: String,
+      idCol: String, minJaccard: Double, maxBucketSize: Int): DataFrame = {
+    val (numHashes, bands) = (64, 16)
+    val dupGroups = exactGroups(docs, textCol, idCol)
+      .filter(col("n_copies") > 1).select("content_hash", "keep_id")
+    val exact = coalesce(col(idCol) =!= col("keep_id"), lit(false))
+    // only survivors are shingled: the exact copies' text goes in as NULL
+    val (marked, nDocs) = countedCheckpoint(
+      withSignature(
+          docs.withColumn("content_hash", sha2(col(textCol), 256))
+            .join(dupGroups, Seq("content_hash"), "left")
+            .withColumn("__exact", exact)
+            .withColumn(textCol, when(!col("__exact"), col(textCol))),
+          textCol, 3, numHashes)
+        .drop(textCol, "content_hash", "keep_id"),
+      count(when(!col("__exact"), lit(1))))
+    val sigs = marked.filter(!col("__exact"))
+      .select(col(idCol).as("id"), col("sh"), col("minhash_sig"))
+    val (pairs, nPairs) = bandPairs(sigs, nDocs, numHashes, bands,
+      minJaccard, prefilterMargin = 0.2, maxBucketSize)
+    val verified = verifyPairs(pairs, sigs, minJaccard, bounded(nPairs))
+      .select("id_a", "id_b")
+    val comps =
+      if (bounded(nPairs)) localComponents(verified.collect(),
+        sigs.schema("id"), docs.sparkSession)
+      else connectedComponents(verified.localCheckpoint(), maxIter = 20,
+        LocalMaxEdges)
+    val near = comps.filter(col("id") =!= col("component"))
+      .select(col("id").as("__near"))
+    marked.join(near, marked(idCol) === col("__near"), "left")
+      .select(docs.columns.filter(_ != textCol).map(col) :+
+        when(col("__exact"), "exact_dup")
+          .when(col("__near").isNotNull, "near_dup").as("dup_reason"): _*)
+  }
+
+  /** `df` materialized (an eager local checkpoint) with `tally` (an
+    * aggregate, row count by default) observed on that same job — a
+    * tally with no job of its own. */
+  private def countedCheckpoint(df: DataFrame,
+      tally: Column = count(lit(1))): (DataFrame, Long) = {
+    val obs = new Observation()
+    val ck = df.observe(obs, tally.as("n")).localCheckpoint()
+    val n = obs.get.get("n") match {
+      case Some(n: java.lang.Number) => n.longValue()
+      case _ => 0L // NULL: an aggregate like sum over zero rows
+    }
+    (ck, n)
   }
 
   /** C4/RefinedWeb-style corpus-wide SEGMENT dedup: split every document
@@ -397,7 +478,8 @@ object Dedup {
         .localCheckpoint()
       sigAgreementPrefilter(cand, sigLookup, minJaccard, prefilterMargin)
     }
-    verifyPairs(prefiltered, all, minJaccard)
+    val (pairs, nPairs) = countedCheckpoint(prefiltered)
+    verifyPairs(pairs, all, minJaccard, bounded(nPairs))
   }
 
   /** [[minHashCandidates]] over a precomputed (persisted or materialized)
@@ -420,37 +502,39 @@ object Dedup {
       minJaccard: Double = 0.5,
       prefilterMargin: Double = 0.2,
       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val bandedAll = withBands(sigs.select("id", "minhash_sig"), numHashes, bands)
+    val (pairs, nPairs) = bandPairs(sigs, sigs.count(), numHashes, bands,
+      minJaccard, prefilterMargin, maxBucketSize)
+    verifyPairs(pairs, sigs, minJaccard, bounded(nPairs))
+  }
+
+  /** The capped within-bucket pairs of a signature table of `nDocs` rows
+    * ([[cappedBucketPairs]]), pruned by the sig-agreement prefilter from
+    * [[PrefilterMinDocs]] docs on, materialized with their count observed
+    * on the same job.
+    *
+    * Skew valve, ON by default ([[DefaultMaxBucketSize]]): pair formation
+    * is QUADRATIC in bucket size, so one pathological bucket (boilerplate
+    * cluster, template spam) can dominate — or wedge — the whole job at
+    * crawl scale. Buckets above the cap are skipped; a true near-dup pair
+    * in a skipped bucket is still found via any of its other bands-1 band
+    * collisions (P[miss] ~ (1-j^r)^(bands-1), negligible at j >=
+    * minJaccard), and identical-text clusters — the usual cause of huge
+    * buckets — belong to the exact-dedup stage that runs first in the
+    * curation pipeline. maxBucketSize = 0 is the exhaustive-pairing
+    * opt-in. The banded rows are NOT persisted: the native BandHashes
+    * explode feeds the one band exchange directly (persisting them
+    * measured 2x SLOWER end-to-end at 500k docs).
+    */
+  private def bandPairs(sigs: DataFrame, nDocs: Long, numHashes: Int,
+      bands: Int, minJaccard: Double, prefilterMargin: Double,
+      maxBucketSize: Int): (DataFrame, Long) = {
+    val banded = withBands(sigs.select("id", "minhash_sig"), numHashes, bands)
       .select(col("id"), col("band.band_id").as("band_id"),
               col("band.band_hash").as("band_hash"))
-    // Skew valve, ON by default (DefaultMaxBucketSize): pair formation is
-    // QUADRATIC in bucket size, so one pathological bucket (boilerplate
-    // cluster, template spam) can dominate — or wedge — the whole job at
-    // crawl scale. With maxBucketSize > 0, buckets above the cap are
-    // skipped; a true near-dup pair in a skipped bucket is still found
-    // via any of its other bands-1 band collisions (P[miss] ~
-    // (1-j^r)^(bands-1), negligible at j >= minJaccard), and
-    // identical-text clusters — the usual cause of huge buckets — belong
-    // to the exact-dedup stage that runs first in the curation pipeline.
-    // maxBucketSize = 0 is the exhaustive-pairing opt-in.
-    // NOT persisted: both self-join sides re-derive this from the cached
-    // signatures, and the native BandHashes explode is cheaper than
-    // building + reading an 8M-row cache (persisting it measured 2x
-    // SLOWER end-to-end at 500k docs).
-    // When the corpus itself has <= maxBucketSize docs no bucket CAN
-    // exceed the cap, so the valve is skipped outright (nDocs is counted
-    // anyway for the prefilter decision, and the count materializes the
-    // caller's persisted signature frame before the heavy branches read
-    // it).
-    val nDocs = sigs.count()
-    val candidates = cappedBucketPairs(bandedAll, nDocs, maxBucketSize)
-    val prefiltered =
-      if (nDocs < PrefilterMinDocs) candidates
-      else sigAgreementPrefilter(candidates, sigs, minJaccard, prefilterMargin)
-    // exact verify on the survivors: single-pass native Jaccard (no
-    // intermediate intersect/union arrays) over the shingle sets carried
-    // on the SAME signature frame — no second scan of the corpus.
-    verifyPairs(prefiltered, sigs, minJaccard)
+    val pairs = cappedBucketPairs(banded, maxBucketSize)
+    countedCheckpoint(
+      if (nDocs < PrefilterMinDocs) pairs
+      else sigAgreementPrefilter(pairs, sigs, minJaccard, prefilterMargin))
   }
 
   /** [[minHashCandidates]] on the ENGINE-PORTABLE md5 double-hash
@@ -490,15 +574,13 @@ object Dedup {
         graft.functions.WordShingles.col(col(textCol), shingleSize)).as("sh"))
       .withColumn("minhash_sig",
         graft.functions.PortableMinHashSig.col(col("sh"), numHashes))
-      .persist()
+      .localCheckpoint()
     val bandedAll = sigs.select(col("id"), posexplode(
         graft.functions.PortableBandHashes.col(col("minhash_sig"), bands))
         .as(Seq("band_id", "band_hash")))
-    val nDocs = sigs.count()
-    val candidates = cappedBucketPairs(bandedAll, nDocs, maxBucketSize)
-    val out = verifyPairs(candidates, sigs, minJaccard).localCheckpoint()
-    sigs.unpersist()
-    out
+    val (pairs, nPairs) =
+      countedCheckpoint(cappedBucketPairs(bandedAll, maxBucketSize))
+    verifyPairs(pairs, sigs, minJaccard, bounded(nPairs)).localCheckpoint()
   }
 
   /** Fat-bucket liveness cap + within-bucket pairing — the ONE
@@ -506,26 +588,28 @@ object Dedup {
     * [[minHashCandidatesPortable]] (and mirrored literally by the
     * `dedup_minhash` oracle SQL: `HAVING COUNT(*) > cap`, `a.id <
     * b.id`). Buckets holding more than `maxBucketSize` rows are dropped
-    * by the [[FatBlocks]] valve; `maxBucketSize = 0` disables it, and a
-    * corpus of <= maxBucketSize docs skips it outright (no bucket CAN
-    * exceed the cap). A cap change edited here cannot silently diverge
-    * the claimed cross-engine identity.
+    * by the [[FatBlocks]] valve, whose bucket count rides the band
+    * exchange the self-join reuses for both sides; `maxBucketSize = 0`
+    * disables it. A cap change edited here cannot silently diverge the
+    * claimed cross-engine identity. A pair colliding in several bands
+    * comes out once per band ([[verifyPairs]] keeps one).
     */
-  private def cappedBucketPairs(bandedAll: DataFrame, nDocs: Long,
+  private def cappedBucketPairs(bandedAll: DataFrame,
       maxBucketSize: Int): DataFrame = {
     val banded =
-      if (maxBucketSize > 0 && nDocs > maxBucketSize)
-        FatBlocks(bandedAll, Seq("band_id", "band_hash"), maxBucketSize)
-          .drop(bandedAll)
+      if (maxBucketSize > 0)
+        FatBlocks(bandedAll, Seq("band_id", "band_hash"), maxBucketSize).kept
       else bandedAll
+    // a sort-merge join: both sides read the one band exchange, already
+    // sorted by the window; a broadcast side (what adaptive execution
+    // picks for a small exchange) would cost a job and a second window
     val a = banded.alias("a")
-    val b = banded.alias("b")
+    val b = banded.alias("b").hint("merge")
     a.join(b,
         col("a.band_id") === col("b.band_id") &&
         col("a.band_hash") === col("b.band_hash") &&
         col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
   }
 
   /** The sig-agreement prefilter of the MinHash paths (corpora of at
@@ -556,35 +640,48 @@ object Dedup {
   }
 
   /** Exact-Jaccard verify of candidate pairs against a signature table's
-    * `sh` column. The shingle side is semi-join pruned to the ids that
-    * actually appear in a pair BEFORE the join shuffles: at real-corpus
+    * `sh` column: `(id_a, id_b, jaccard)`, one row per distinct pair at
+    * or above `minJaccard`. Each pair goes in as its two sides
+    * `(id_a, id_b, id)`; ONE join fetches every side's shingle set and a
+    * group-by on the pair brings the two sets together (dropping the
+    * repeats of a pair found in several bands).
+    *
+    * Only the shingle sets of ids in some pair may move: at real-corpus
     * candidate rates most documents are in no pair, and not shuffling
-    * their (large) shingle arrays measured 13.3 s -> 4.8 s on the 1M-doc
-    * verify stage.
+    * their (large) arrays measured 13.3 s -> 4.8 s on the 1M-doc verify
+    * stage. `broadcastPairs` (the pair set is [[bounded]]) broadcasts the
+    * sides, so the join runs map-side in the `sigs` scan and `sigs` never
+    * shuffles; otherwise a semi-join on the paired ids prunes `sigs`
+    * before the join shuffles it.
     */
   private def verifyPairs(pairs: DataFrame, sigs: DataFrame,
-                          minJaccard: Double): DataFrame = {
-    // The pair frame feeds TWO consumers (the referenced-id set and the
-    // verify join itself) — materialize it once at this seam or both
-    // branches re-execute the banding self-join upstream (measured 3x the
-    // whole candidates stage when left lazy).
-    val p = pairs.localCheckpoint()
-    val ids = p.select(col("id_a").as("id"))
-      .unionByName(p.select(col("id_b").as("id"))).distinct()
-    // the lookup feeds BOTH payload joins (sh_a, sh_b) — materialize it
-    // or the corpus-wide semi-join scan runs twice; it holds only the
-    // candidate-involved rows (<= 2 x |pairs|), so the checkpoint is
-    // small even when `sigs` is a parquet-backed maintained table
-    val sh = sigs.join(ids, Seq("id"), "left_semi").select("id", "sh")
-      .localCheckpoint()
-    p
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
+      minJaccard: Double, broadcastPairs: Boolean): DataFrame = {
+    val sides = pairs.select(col("id_a"), col("id_b"), col("id_a").as("id"))
+      .unionByName(pairs.select(col("id_a"), col("id_b"), col("id_b").as("id")))
+    val sh = sigs.select("id", "sh")
+    val fetched =
+      if (broadcastPairs) broadcast(sides).join(sh, "id")
+      else sides.join(
+        sh.join(sides.select("id").distinct(), Seq("id"), "left_semi"), "id")
+    def shOf(side: String) =
+      first(when(col("id") === col(side), col("sh")), ignoreNulls = true)
+    fetched
+      .groupBy("id_a", "id_b")
+      .agg(shOf("id_a").as("sh_a"), shOf("id_b").as("sh_b"))
       .withColumn("jaccard",
         graft.functions.JaccardSim.col(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= minJaccard)
       .select("id_a", "id_b", "jaccard")
   }
+
+  /** Edge count up to which a duplicate graph is bounded: its pairs
+    * broadcast into the verify join and its components solve in the
+    * driver union-find (O(edges α) over a few MB — the same driver-cost
+    * class as the Ranking stitch or the Packing solve). */
+  private val LocalMaxEdges = 200000L
+
+  /** A set of `nPairs` pairs (`2 * nPairs` directed edges) is bounded. */
+  private def bounded(nPairs: Long): Boolean = 2 * nPairs <= LocalMaxEdges
 
   /** Near-dedup: drop the higher-id member of every verified pair. */
   def minHashDedup(docs: DataFrame, textCol: String, idCol: String,
@@ -938,7 +1035,7 @@ object Dedup {
     *         isolated ids absent from `pairs` are not returned
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame =
-    connectedComponents(pairs, maxIter, localMaxEdges = 200000L)
+    connectedComponents(pairs, maxIter, LocalMaxEdges)
 
   /** [[connectedComponents]] with the driver union-find's edge cap
     * explicit (0 forces the distributed loop). */
@@ -952,25 +1049,20 @@ object Dedup {
     // materializes eagerly and replaces the plan with the stored blocks.
     // (On a real cluster prefer reliable checkpoints / an explicit
     // intermediate table for fault tolerance.)
-    val edgeObs = new org.apache.spark.sql.Observation()
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      .observe(edgeObs, count(lit(1)).as("n"))
-      .localCheckpoint()
+    //
     // BOUNDED duplicate graphs solve on the driver: the edge count is
     // EXACT (observed on the checkpoint job, no extra action) and the
-    // cap is a hard bound, so this is the same driver-cost class
-    // as the Ranking stitch or the Packing solve — O(edges α) union-find
-    // over a few MB, replacing the iterative loop's ~5 jobs/round fixed
-    // cost (the dominant per-action price of small curation pipelines).
-    // Graphs past the cap — the 100 TB shape, where duplicate pairs are
-    // unbounded — run the distributed loop exactly as before.
-    val nEdges = edgeObs.get.get("n") match {
-      case Some(n: java.lang.Number) => n.longValue()
-      case _ => 0L
-    }
-    if (nEdges <= localMaxEdges) return localComponents(edges)
+    // cap is a hard bound ([[LocalMaxEdges]]), replacing the iterative
+    // loop's ~5 jobs/round fixed cost (the dominant per-action price of
+    // small curation pipelines). Graphs past the cap — the 100 TB shape,
+    // where duplicate pairs are unbounded — run the distributed loop.
+    val (edges, nEdges) = countedCheckpoint(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+        .distinct())
+    if (nEdges <= localMaxEdges)
+      return localComponents(edges.collect(), edges.schema("src"),
+        edges.sparkSession)
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("component", col("id"))
       .localCheckpoint()
@@ -999,18 +1091,12 @@ object Dedup {
       // the convergence count rides the CHECKPOINT materialization as an
       // observed metric — the previous limit(1).count() paid a whole
       // extra job per iteration just to ask "did anything change"
-      val obs = new org.apache.spark.sql.Observation()
-      val next = propagated.join(byLabel, Seq("component"), "left")
-        .select(col("id"), col("__old"),
-          least(col("component"), coalesce(col("__cc2"), col("component")))
-            .as("component"))
-        .observe(obs, sum(when(col("component") =!= col("__old"), 1L)
-          .otherwise(0L)).as("changed"))
-        .localCheckpoint()
-      val changed = obs.get.get("changed") match {
-        case Some(n: java.lang.Number) => n.longValue()
-        case _ => 0L // empty frame: sum over zero rows is NULL
-      }
+      val (next, changed) = countedCheckpoint(
+        propagated.join(byLabel, Seq("component"), "left")
+          .select(col("id"), col("__old"),
+            least(col("component"), coalesce(col("__cc2"), col("component")))
+              .as("component")),
+        count(when(col("component") =!= col("__old"), lit(1))))
       labels = next.drop("__old")
       converged = changed == 0
       iter += 1
@@ -1023,19 +1109,21 @@ object Dedup {
     labels
   }
 
-  /** Exact union-find over a COLLECTED (cap-bounded, see caller) edge
-    * set — identical contract to the distributed loop: every vertex of
-    * `edges` labeled with the MIN id of its component, id-type-generic
-    * (ids are Comparable: long/int/string across the dedup APIs). */
-  private def localComponents(edges: DataFrame): DataFrame = {
-    val srcField = edges.schema("src")
+  /** Exact union-find over COLLECTED (cap-bounded, see callers) edges —
+    * rows whose first two fields are the two ids — with the distributed
+    * loop's contract: every vertex labeled with the MIN id of its
+    * component, id-type-generic (ids are Comparable: long/int/string
+    * across the dedup APIs; `idField` types the output). Repeated and
+    * reversed edges are harmless. */
+  private def localComponents(edges: Array[Row], idField: StructField,
+      spark: org.apache.spark.sql.SparkSession): DataFrame = {
     val parent = mutable.HashMap.empty[Any, Any]
     def find(x: Any): Any = {
       var r = x
       while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
       r
     }
-    edges.collect().foreach { row =>
+    edges.foreach { row =>
       val a = row.get(0); val b = row.get(1)
       parent.getOrElseUpdate(a, a)
       parent.getOrElseUpdate(b, b)
@@ -1057,14 +1145,11 @@ object Dedup {
       val r = find(v)
       if (minOf.get(r).forall(m => lt(v, m))) minOf(r) = v
     }
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      new java.util.ArrayList[org.apache.spark.sql.Row](parent.size)
-    parent.keys.foreach { v =>
-      rows.add(org.apache.spark.sql.Row(v, minOf(find(v))))
-    }
-    edges.sparkSession.createDataFrame(rows, StructType(Seq(
-      StructField("id", srcField.dataType, srcField.nullable),
-      StructField("component", srcField.dataType, srcField.nullable))))
+    val rows = new java.util.ArrayList[Row](parent.size)
+    parent.keys.foreach(v => rows.add(Row(v, minOf(find(v)))))
+    spark.createDataFrame(rows, StructType(Seq(
+      StructField("id", idField.dataType, idField.nullable),
+      StructField("component", idField.dataType, idField.nullable))))
   }
 
   /** Cluster-aware near-dedup: build candidate pairs (MinHash LSH), close

@@ -6,8 +6,11 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import com.ibm.icu.lang.UCharacter
 
 /** Language-profile scoring in ONE byte-level pass: counts every profile
   * substring (overlapping start positions, same semantics as the
@@ -25,6 +28,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * left-associated order as the previous `reduce(_ + _)` over
   * `count * weight` terms, so results (and the DuckDB oracles derived
   * from them) are bit-identical.
+  *
+  * The kernel scores the LOWERCASED text, lowering it itself exactly as
+  * Spark's `lower()` would (see [[TrigramLangScore.Compiled.eval]]), so
+  * callers pass the raw column. Spark 4.1's `lower()` goes through
+  * `CollationAwareUTF8String`, whose static initializer builds an ICU
+  * title-case table over every code point: 1.5-1.7 s on one thread of a
+  * 4-vCPU VM in a fresh JVM, paid inside the first scan that lowers
+  * anything while the other tasks block on the class init. The kernel
+  * never touches that class.
   */
 case class TrigramLangScore(
     child: Expression,
@@ -41,7 +53,9 @@ case class TrigramLangScore(
     StructField("lang", StringType, nullable = false)))
   override def prettyName: String = "graft_lang_score"
 
-  @transient private lazy val compiled = TrigramLangScore.Compiled(profiles)
+  // read when first evaluated, as `Lower` reads it
+  @transient private lazy val compiled = TrigramLangScore.Compiled(profiles,
+    SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED))
 
   override protected def nullSafeEval(input: Any): Any =
     compiled.eval(input.asInstanceOf[UTF8String])
@@ -58,11 +72,18 @@ case class TrigramLangScore(
 
 object TrigramLangScore {
 
+  /** Lowercase of the ASCII bytes (index = byte value 0-127). */
+  private val AsciiLower: Array[Byte] =
+    Array.tabulate[Byte](128)(b => Character.toLowerCase(b).toByte)
+
   /** Profile table precompiled to byte patterns, grouped per language in
     * ascending language order with entries in profile order (the same
     * grouping `langIdNgramCols` used for its Column reduce).
+    * `icuCase` is the session's `spark.sql.icu.caseMappings.enabled`,
+    * which picks the lowercase mapping of non-ASCII text as in `Lower`.
     */
-  final case class Compiled(profiles: Seq[(String, String, Double)]) {
+  final case class Compiled(profiles: Seq[(String, String, Double)],
+                            icuCase: Boolean) {
     private val langs: Array[String] =
       profiles.map(_._1).distinct.sorted.toArray
     private val langUtf8: Array[UTF8String] =
@@ -75,23 +96,38 @@ object TrigramLangScore {
 
     /** Overlapping occurrence count (every start position — byte-level is
       * UTF-8 safe: a valid pattern never matches at a non-boundary).
+      * `fold` lowercases `A`-`Z` of an all-ASCII `text` inside the
+      * compare.
       */
-    private def countOcc(text: Array[Byte], pat: Array[Byte]): Int = {
+    private def countOcc(text: Array[Byte], pat: Array[Byte],
+                         fold: Boolean): Int = {
       if (pat.length == 0 || pat.length > text.length) return 0
       var c = 0
       var i = 0
       val last = text.length - pat.length
       while (i <= last) {
         var j = 0
-        while (j < pat.length && text(i + j) == pat(j)) j += 1
+        if (fold) while (j < pat.length && AsciiLower(text(i + j)) == pat(j)) j += 1
+        else while (j < pat.length && text(i + j) == pat(j)) j += 1
         if (j == pat.length) c += 1
         i += 1
       }
       c
     }
 
+    /** Scores `lower(text)`. All-ASCII text is folded in the byte compare
+      * (`lower()` maps only `A`-`Z` there); other text is lowered the way
+      * `lower()` lowers it: ICU's full case mapping of the valid string
+      * (`CollationAwareUTF8String.toLowerCase`), or
+      * `UTF8String.toLowerCase` when ICU case mappings are off.
+      */
     def eval(text: UTF8String): InternalRow = {
-      val bytes = text.getBytes
+      val ascii = text.isFullAscii
+      val bytes =
+        if (ascii) text.getBytes
+        else if (icuCase)
+          UTF8String.fromString(UCharacter.toLowerCase(text.toValidString)).getBytes
+        else text.toLowerCase.getBytes
       var bestScore = 0.0
       var bestIdx = 0
       var l = 0
@@ -101,7 +137,7 @@ object TrigramLangScore {
         var s = 0.0
         var k = 0
         while (k < lp.length) {
-          s += countOcc(bytes, lp(k)).toDouble * lw(k)
+          s += countOcc(bytes, lp(k), ascii).toDouble * lw(k)
           k += 1
         }
         // greatest() over (score, lang) structs: strictly greater score

@@ -81,9 +81,9 @@ object TrainingDataPipeline {
     // three separate annotation frames and paid three shuffle joins to
     // reassemble them.
     //
-    // The annotation subtree feeds every later branch (filters, both
-    // dedup stages, the final decision join). Eagerly checkpoint it: a
-    // plain persist leaves the full logical plan under every downstream
+    // The annotation subtree feeds every later branch (the gate decisions
+    // and the dedup marks). Eagerly checkpoint it: a plain persist leaves
+    // the full logical plan under every downstream
     // action, and the iterative dedup stages then pay re-analysis +
     // partial-cache recompute per action (first measurement: 113-400 s
     // vs ~15 s at sf0.1). Lineage truncation is the fix, not caching.
@@ -92,11 +92,11 @@ object TrainingDataPipeline {
     // language ID + quality + token counts — the pipeline's heaviest
     // map stage) on 1-3 tasks (guide §2.5 input skew; measured 0.6 s ->
     // ~0.1 s at sf0.1). The checkpoint is then COALESCED back down
-    // (narrow — reads the cached blocks, no recompute): the pipeline's
-    // many tiny downstream jobs each pay per-task launch overhead on
-    // every checkpoint read, and full-width checkpoints measured +1.5 s
-    // across the 54-job pipeline. Both steps are no-ops for inputs big
-    // enough that the scanner already parallelizes (Parallelism scaladoc).
+    // (narrow — reads the cached blocks, no recompute): the downstream
+    // jobs each pay per-task launch overhead on every checkpoint read,
+    // and full-width checkpoints measured +1.5 s when the pipeline still
+    // ran 54 jobs. Both steps are no-ops for inputs big enough that the
+    // scanner already parallelizes (Parallelism scaladoc).
     val small = graft.ops.Parallelism.isSmall(docs)
     val spreadDocs = if (small) graft.ops.Parallelism.spread(docs, col(idCol))
                      else docs
@@ -113,46 +113,25 @@ object TrainingDataPipeline {
     val gated = if (small) gatedCk.coalesce(graft.ops.Parallelism.compactWidth(gatedCk))
                 else gatedCk
 
-    // dedup runs only over docs that survive the cheap filters
-    val candidates = gated
-      .filter(col("__lang_ok") && col("__quality_ok") && col("__len_ok") &&
-        col("__rep_ok"))
-      .select(col(idCol), col(textCol))
-      .localCheckpoint()
-
-    val exactDropped = Dedup.exactGroups(candidates, textCol, idCol)
-      .filter(col("n_copies") > 1)
-    val exactDropIds = candidates
-      .select(sha2(col(textCol), 256).as("content_hash"), col(idCol))
-      .join(exactDropped, "content_hash")
-      .filter(col(idCol) =!= col("keep_id"))
-      .select(col(idCol).as("__exact_dup"))
-      .localCheckpoint()
-
-    val afterExact = candidates.join(
-      exactDropIds, candidates(idCol) === col("__exact_dup"), "left_anti")
-
-    val nearPairs = Dedup.minHashCandidates(afterExact, textCol, idCol,
-      minJaccard = cfg.nearDupJaccard, maxBucketSize = cfg.maxBucketSize)
-    // no checkpoint here: connectedComponents' output is already
-    // lineage-truncated (checkpoint-backed loop labels, or a local
-    // relation from the bounded-graph solve), the trailing filter is
-    // trivial, and the frame has ONE consumer — a checkpoint would be
-    // a pure extra action
-    val nearDropIds = Dedup.connectedComponents(nearPairs.select("id_a", "id_b"))
-      .filter(col("id") =!= col("component"))
-      .select(col("id").as("__near_dup"))
-
-    gated
-      .join(exactDropIds, gated(idCol) === col("__exact_dup"), "left")
-      .join(nearDropIds, gated(idCol) === col("__near_dup"), "left")
-      .withColumn("drop_reason",
+    // dedup runs only over docs that survive the cheap filters; a doc
+    // whose gate is NULL (NULL text) is not a candidate and keeps no
+    // reason. The dedup marks cost a fixed handful of jobs
+    // (Dedup.markDuplicates), and the decision table is the union of the
+    // two sides, so no join reassembles it.
+    val candidate = coalesce(col("__lang_ok") && col("__quality_ok") &&
+      col("__len_ok") && col("__rep_ok"), lit(false))
+    val cols = Seq(idCol, "lang_pred", "quality_score", "n_ws_tokens")
+    val gateDecisions = gated.filter(!candidate)
+      .select(cols.map(col) :+
         when(!col("__lang_ok"), "language")
           .when(!col("__quality_ok"), "quality")
           .when(!col("__len_ok"), "length")
-          .when(!col("__rep_ok"), "repetition")
-          .when(col("__exact_dup").isNotNull, "exact_dup")
-          .when(col("__near_dup").isNotNull, "near_dup"))
+          .when(!col("__rep_ok"), "repetition").as("drop_reason"): _*)
+    val dedupDecisions = Dedup.markDuplicates(
+        gated.filter(candidate).select((cols :+ textCol).map(col): _*),
+        textCol, idCol, cfg.nearDupJaccard, cfg.maxBucketSize)
+      .withColumnRenamed("dup_reason", "drop_reason")
+    gateDecisions.unionByName(dedupDecisions)
       .withColumn("keep", col("drop_reason").isNull)
       .select(col(idCol), col("lang_pred"), col("quality_score"),
         col("n_ws_tokens"), col("keep"), col("drop_reason"))

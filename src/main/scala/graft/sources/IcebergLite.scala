@@ -2532,24 +2532,34 @@ object IcebergLite {
 
     // small files from the MANIFEST metadata (no file-system stats) +
     // the files an outstanding delete names (so the deletes go physical)
-    val small = mutable.LinkedHashSet.empty[String]
-    meta.manifests.filter(_.content == 0).foreach { m =>
+    val sizes = meta.manifests.filter(_.content == 0).flatMap { m =>
       readManifest(spark, new Path(m.path))._1
         .filter(_.get("status").asInstanceOf[Int] != 2)
         .map(_.get("data_file").asInstanceOf[GenericRecord])
-        .filter(_.get("file_size_in_bytes").asInstanceOf[Long] < smallerThanBytes)
-        .foreach(d => small += d.get("file_path").toString)
-    }
-    small ++= deleteNamedFiles(spark, meta, files)
+        .map(d => d.get("file_path").toString ->
+          d.get("file_size_in_bytes").asInstanceOf[Long])
+    }.toMap
+    val small = sizes.collect { case (p, n) if n < smallerThanBytes => p }
+      .toSet ++ deleteNamedFiles(spark, meta, files)
     if (small.isEmpty) return 0L
 
     // clustered by partition value, as appends are: one task (one file)
-    // per partition, the partitions spread over the tasks; an
-    // unpartitioned table is one partition value, so it packs into one
+    // per partition, the partitions spread over the tasks. An
+    // unpartitioned table is one partition value: its rows bin-pack into
+    // ceil(small bytes / smallerThanBytes) tasks, so each writes about one
+    // file of the size below which a file counts as small (the small
+    // files, each its own read split, group evenly by count)
     val rows = applyDeletes(spark, meta,
         readRaw(spark, meta, files.filter(e => small.contains(e._1))))
       .drop("__file", "__pos")
-    val packed = if (meta.partitionSpec.isEmpty) rows.coalesce(1) else rows
+    val packed =
+      if (meta.partitionSpec.nonEmpty) rows
+      else {
+        val bytes = small.iterator.map(sizes.getOrElse(_, 0L)).sum
+        val target = math.max(smallerThanBytes, 1L)
+        val bins = bytes / target + (if (bytes % target == 0) 0 else 1)
+        rows.coalesce(math.min(math.max(bins, 1L), small.size.toLong).toInt)
+      }
     commitRewrite(spark, root, meta, snapshotId,
       rewriteGroups(spark, root, meta, snapshotId, packed,
         p => !small.contains(p), distribute = true), operation = "replace")

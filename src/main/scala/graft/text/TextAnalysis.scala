@@ -80,35 +80,29 @@ object TextAnalysis {
     ("fr", "le ", 2.5), ("fr", " le", 2.0), ("fr", "es ", 1.5), ("fr", "ent", 2.0),
     ("fr", "eur", 1.5), ("fr", "ais", 1.5), ("fr", "une", 2.0))
 
-  /** N-gram language ID: score each document's character trigrams against
-    * per-language profile weights and keep the argmax.
+  /** (lang_pred, lang_score) column pair for a text column: each
+    * document's character trigrams scored against per-language profile
+    * weights, argmax kept (ties to the lexicographically largest
+    * language), 'unknown' for a document with no profile hit. Exposed so
+    * single-scan pipelines can inline it; [[langIdNgram]] is built from
+    * it.
     *
-    * The profile table is tiny by definition (it is broadcast-class
-    * metadata), so it folds into the scan as literal expressions: each
-    * language's score is a sum of overlap-counting `regexp_count` terms
-    * (`(?=...)` lookahead counts every trigram start position, matching
-    * the explode-all-positions semantics), and the argmax is a struct
-    * `greatest`. ZERO shuffles and no join — the first version exploded
-    * one row per character and paid an explode+join+two-aggregation
-    * shuffle chain that dominated the curation pipeline's cost.
-    * Docs with no profile hit are labeled 'unknown'.
-    */
-  /** (lang_pred, lang_score) column pair for a text column — the scoring
-    * expressions [[langIdNgram]] is built from, exposed so single-scan
-    * pipelines can inline them.
+    * One native byte-level pass for all profile counts and the argmax
+    * ([[graft.functions.TrigramLangScore]]), which scores the lowercased
+    * text and lowers it itself, so the raw column goes in. It computes
+    * the values of the earlier Column formulation over `lower(text)` —
+    * one lookahead `regexp_count` per profile entry, struct `greatest()`
+    * for the argmax, the same left-associated IEEE sum order — which paid
+    * 28 regex passes per document, and it never calls Spark's `lower()`,
+    * whose first use in a JVM pays a 1.5 s ICU table build (see
+    * TrigramLangScore). Zero shuffles and no join: the profile table is
+    * literal metadata.
     */
   def langIdNgramCols(
       textCol: Column,
       prof: Seq[(String, String, Double)] = defaultTrigramProfiles)
       : (Column, Column) = {
-    // One native byte-level pass for all profile counts + the argmax
-    // (graft.functions.TrigramLangScore). The earlier Column formulation
-    // — one lookahead regexp_count per profile entry, struct greatest()
-    // for the argmax — computed identical values (same overlap-count
-    // semantics, same left-assoc IEEE sum order; ties to the
-    // lexicographically largest language) but paid 28 regex passes per
-    // document and dominated the single-pass annotation scan.
-    val best = graft.functions.TrigramLangScore.col(lower(textCol), prof)
+    val best = graft.functions.TrigramLangScore.col(textCol, prof)
     (when(best.getField("score") > 0, best.getField("lang"))
        .otherwise(lit("unknown")),
      best.getField("score"))

@@ -84,6 +84,46 @@ class NexusPipelineSpec extends SparkSuite {
     assert(pc === 12.5)
   }
 
+  test("a landing run's maps hold only its own keys, with no Spark job") {
+    // two runs with disjoint keys: each frame has a column per key of the
+    // batch, NULL where the run lacks it
+    val two = Map(
+      "metadata" -> Seq(
+        ("REF_L", 1L, Option("h5-v2"), Option.empty[String], Option("fmt9")),
+        ("REF_L", 2L, Option.empty[String], Option("lab-7"), Option.empty[String]))
+        .toDF("instrument_id", "run_number", "file_attr_h5_version",
+          "file_attr_origin", "entry_attr_format"),
+      "sample" -> Seq(
+        ("REF_L", 1L, "water", Option("a1"), Option.empty[String]),
+        ("REF_L", 2L, "ice", Option.empty[String], Option("b2")))
+        .toDF("instrument_id", "run_number", "name", "only_run1", "only_run2"))
+    def frame(name: String) = two.getOrElse(name,
+      Seq(("REF_L", 1L)).toDF("instrument_id", "run_number").limit(0))
+    Thread.sleep(300) // drain earlier jobs off the listener bus
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    val b = try {
+      val b = ConvertCli.landingBundle(frame)
+      Thread.sleep(300) // drain the listener bus
+      b
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(jobs.get() === 0, s"landingBundle ran ${jobs.get()} jobs")
+    val meta = b.metadata.orderBy("run_number")
+      .select("file_attributes", "entry_attributes")
+      .as[(Map[String, String], Map[String, String])].collect().toSeq
+    assert(meta === Seq(
+      (Map("h5_version" -> "h5-v2"), Map("format" -> "fmt9")),
+      (Map("origin" -> "lab-7"), Map.empty[String, String])))
+    val extras = b.sample.orderBy("run_number").select("additional_fields")
+      .as[Map[String, String]].collect().toSeq
+    assert(extras === Seq(Map("only_run1" -> "a1"), Map("only_run2" -> "b2")))
+  }
+
   test("event_summary counts per bank") {
     val s = NexusPipeline.processRuns(spark, bundle)("event_summary")
       .select("bank", "total_counts", "events_extracted", "n_pulses")

@@ -251,33 +251,63 @@ class ExpressionPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("TrigramLangScore matches the per-profile overlapping-count argmax") {
-    // random profiles over a tiny alphabet so patterns actually occur
-    for (_ <- 1 to 200) {
-      val langs = Seq("aa", "bb", "cc", "dd").take(2 + rnd.nextInt(3))
-      val profiles = langs.flatMap { l =>
-        (0 until (1 + rnd.nextInt(4))).map { _ =>
-          val pat = (0 until (1 + rnd.nextInt(3)))
-            .map(_ => ('a' + rnd.nextInt(3)).toChar).mkString
-          (l, pat, rnd.nextDouble() * 2)
-        }
-      }
-      val text = (0 until rnd.nextInt(60)).map(_ => ('a' + rnd.nextInt(3)).toChar).mkString
-      val row = TrigramLangScore.Compiled(profiles).eval(UTF8String.fromString(text))
-      def countOverlap(t: String, p: String): Int =
-        if (p.isEmpty || p.length > t.length) 0
-        else (0 to t.length - p.length).count(i => t.regionMatches(i, p, 0, p.length))
-      // same grouping + left-assoc sum order as the Compiled path
-      val scored = profiles.map(_._1).distinct.sorted.map { l =>
+  test("TrigramLangScore(raw) scores lower(raw) under both case-mapping settings") {
+    // The kernel lowers its own input. Reference: Spark's `Lower` over the
+    // raw value, then the per-profile overlapping-count argmax over the
+    // lowered bytes — what the kernel computed when it was fed lower(raw).
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Lower}
+    import org.apache.spark.sql.internal.SQLConf
+    import org.apache.spark.sql.types.StringType
+    // mixed-case ASCII, characters that lowercase to ASCII (U+0130 I with
+    // dot above, U+212A Kelvin sign), final sigma, capital sharp s,
+    // dotless i, and the lowered forms profiles can match
+    val pieces = Seq("a", "b", "i", "k", "s", "A", "B", "I", "K", "S", " ",
+      "\u0130", "\u212A", "\u0131", "\u00DF", "\u1E9E", "\u039F\u0394\u039F\u03A3",
+      "\u03C3", "\u03C2", "\u00C9", "\u00E9", "\u0307")
+    val patterns = Seq("a", "ab", "i", "i\u0307", "k", "s ", " i", "ss",
+      "\u00DF", "\u03C2", "\u03BF\u03B4", "\u03BF\u03C2", "\u00E9", "\u0131")
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    def countOverlap(t: Array[Byte], p: Array[Byte]): Int =
+      if (p.length > t.length) 0
+      else (0 to t.length - p.length).count(i => p.indices.forall(j => t(i + j) == p(j)))
+    def reference(lowered: Array[Byte], profiles: Seq[(String, String, Double)]) =
+      profiles.map(_._1).distinct.sorted.map { l =>
         val s = profiles.filter(_._1 == l)
-          .map { case (_, p, w) => countOverlap(text, p) * w }
+          .map { case (_, p, w) => countOverlap(lowered, p.getBytes(utf8)) * w }
           .foldLeft(0.0)(_ + _)
         (s, l)
+      }.maxBy { case (s, l) => (s, l) } // ties: largest language
+    val texts: Seq[Array[Byte]] = Seq(null, Array.emptyByteArray) ++
+      (1 to 300).map { k =>
+        val t = (0 until rnd.nextInt(30)).map(_ => pieces(rnd.nextInt(pieces.length)))
+          .mkString.getBytes(utf8)
+        if (k % 5 != 0 || t.isEmpty) t
+        else t.patch(rnd.nextInt(t.length), // invalid UTF-8: lone bytes
+          Seq(Seq(0xFF), Seq(0x80), Seq(0xC3), Seq(0xE2, 0x82))(rnd.nextInt(4))
+            .map(_.toByte), 0)
       }
-      // ties break to the lexicographically LARGEST language
-      val (bestScore, bestLang) = scored.maxBy { case (s, l) => (s, l) }
-      assert(row.getDouble(0) === bestScore, s"text=$text profiles=$profiles")
-      assert(row.getUTF8String(1).toString === bestLang)
+    for (bytes <- texts; icu <- Seq(true, false)) {
+      val profiles = Seq("aa", "bb", "cc").flatMap { l =>
+        (0 until (1 + rnd.nextInt(4))).map(_ =>
+          (l, patterns(rnd.nextInt(patterns.length)), rnd.nextDouble() * 2))
+      }
+      val conf = new SQLConf
+      conf.setConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED, icu)
+      SQLConf.withExistingConf(conf) {
+        val raw = Literal.create(
+          if (bytes == null) null else UTF8String.fromBytes(bytes), StringType)
+        val row = TrigramLangScore(raw, profiles).eval(null)
+          .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+        val lowered = Lower(raw).eval(null).asInstanceOf[UTF8String]
+        val what = s"icu=$icu text=${Option(bytes).map(_.map(b => f"$b%02x").mkString(" "))}" +
+          s" profiles=$profiles"
+        if (bytes == null) assert(row == null && lowered == null, what)
+        else {
+          val (score, lang) = reference(lowered.getBytes, profiles)
+          assert(row.getDouble(0) === score, what)
+          assert(row.getUTF8String(1).toString === lang, what)
+        }
+      }
     }
   }
 

@@ -217,4 +217,69 @@ class TrainingDataPipelineSpec extends SparkSuite {
     assert(rep("near_dup") === 1L)
     assert(rep("kept") >= 2L)
   }
+
+  test("curate runs in a fixed dozen jobs, counts fat buckets in one band " +
+       "exchange, and keeps its decisions") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // exact dups, a cluster of one-word variants that fills band buckets
+    // past the cap of 3 (the fat-block valve engages), a near dup of
+    // another text, and gate drops
+    val words = goodText.split(" ")
+    def variant(k: Int) = words.updated(k * 7, s"zz$k").mkString(" ")
+    val other = ("completely different and quite long content about the " +
+      "engines of query processing and the many shuffles of the world today ") * 2
+    val docs = (Seq((1L, goodText), (2L, goodText), (9L, other.trim),
+        (10L, other.trim), (11L, other.trim.replace("engines", "motors")),
+        (12L, "x. y. z."), (13L, "short but fine words here")) ++
+      (0 until 6).map(k => (3L + k, variant(k)))).toDF("doc_id", "text")
+    val cfg = TrainingDataPipeline.Config(maxBucketSize = 3)
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val jl = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val bandExchanges = new java.util.concurrent.atomic.AtomicInteger()
+    val helper = new AdaptiveSparkPlanHelper {}
+    val ql = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        bandExchanges.addAndGet(helper.collect(qe.executedPlan) {
+          case e: ShuffleExchangeExec if (e.outputPartitioning match {
+              case h: HashPartitioning =>
+                h.expressions.exists(_.references.exists(_.name == "band_hash"))
+              case _ => false
+            }) => e
+        }.size)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    Thread.sleep(300) // drain earlier jobs off the listener bus
+    spark.sparkContext.addSparkListener(jl)
+    spark.listenerManager.register(ql)
+    val got = try {
+      val d = TrainingDataPipeline.curate(docs, "text", "doc_id", cfg)
+        .select("doc_id", "keep", "drop_reason").collect()
+      Thread.sleep(300) // drain the listener bus
+      d
+    } finally {
+      spark.sparkContext.removeSparkListener(jl)
+      spark.listenerManager.unregister(ql)
+    }
+    val decisions = got.map(r => r.getLong(0) ->
+      Option(r.getString(2)).getOrElse("keep")).toMap
+    assert(decisions === Map(1L -> "keep", 2L -> "exact_dup",
+      3L -> "near_dup", 4L -> "keep", 5L -> "keep", 6L -> "keep",
+      7L -> "keep", 8L -> "near_dup", 9L -> "keep", 10L -> "exact_dup",
+      11L -> "keep", 12L -> "quality", 13L -> "length"),
+      decisions.toSeq.sorted.mkString(", "))
+    assert(got.forall(r => r.getBoolean(1) == r.isNullAt(2)))
+    assert(jobs.get() <= 12, s"curate + collect ran ${jobs.get()} jobs")
+    // the valve's bucket count rides the self-join's band exchange: one
+    // shuffle by (band_id, band_hash), not one aggregate per join side
+    assert(bandExchanges.get() === 1, "band exchanges")
+  }
 }

@@ -360,6 +360,44 @@ class IcebergLiteSpec extends SparkSuite {
     assert(IcebergLite.readTable(spark, dir).count() == 502L)
   }
 
+  test("compactSmallFiles bin-packs an unpartitioned small tail over tasks") {
+    // twelve single-file appends; the target (the small-file threshold)
+    // holds about three of them, so the tail is four targets' worth
+    val dir = tmp()
+    val rnd = new scala.util.Random(11)
+    def batch(k: Int) = (0 until 20).map(i =>
+        (k * 20L + i, rnd.alphanumeric.take(500).mkString))
+      .toDF("id", "pad").coalesce(1)
+    IcebergLite.createTable(spark, batch(0), dir)
+    (1 until 12).foreach(k => IcebergLite.appendSnapshot(spark, batch(k), dir))
+    val sizes = new java.io.File(dir, "data").listFiles().flatMap(d =>
+      Option(d.listFiles()).getOrElse(Array(d)))
+      .filter(_.getName.endsWith(".parquet")).map(_.length)
+    assert(sizes.length === 12)
+    val target = 3 * sizes.max + 1
+    assert(sizes.sum > 2 * target)
+    val writers = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null &&
+            te.taskMetrics.outputMetrics.bytesWritten > 0)
+          writers.merge(te.stageId, 1, _ + _)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(IcebergLite.compactSmallFiles(spark, dir, target) === 12L)
+      Thread.sleep(300) // drain the listener bus
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(writers.size === 1, s"write stages: $writers")
+    assert(writers.values.iterator.next() > 1,
+      s"the rewrite wrote from one task: $writers")
+    val (_, after) = IcebergLite.scanFileCount(spark, dir, Nil)
+    assert(after > 1 && after < 12, s"$after files after compaction")
+    assert(IcebergLite.readTable(spark, dir).select("id").as[Long].collect()
+      .sorted.toSeq === (0L until 240L))
+  }
+
   test("removeOrphanFiles deletes only unreferenced files; reads intact") {
     val dir = tmp()
     IcebergLite.createTable(spark, batch1.toDF("id", "lang", "n"), dir)

@@ -14,7 +14,6 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterF
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
-import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, DateType, DoubleType, FloatType, IntegerType, LongType, StringType, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -78,28 +77,15 @@ class GraftRowLevelOperation(tableName: String, tableDir: String,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
-    new ScanBuilder
-        with org.apache.spark.sql.connector.read.SupportsPushDownFilters
-        with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
-      private var required: StructType =
-        IcebergLite.tableSchema(spark, tableDir)
-      private var pushed: Array[Filter] = Array.empty
-      override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-        pushed = filters
-        filters // group-pruning hints only; Spark keeps every row filter
-      }
-      override def pushedFilters(): Array[Filter] = Array.empty
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        required = requiredSchema
+    new GraftScanBuilder(IcebergLite.tableSchema(spark, tableDir)) {
       override def build(): org.apache.spark.sql.connector.read.Scan = {
         val preds = pushed.toSeq.flatMap(GraftTableCatalog.filterPreds)
         val info = IcebergLite.nativeScanInfo(spark, tableDir, preds)
           .getOrElse(throw new UnsupportedOperationException(
             s"$cmd on $tableName: the table carries merge-on-read " +
-              "deletes or multiple schema/spec generations, which the " +
-              "native row-level path cannot represent — run " +
-              "IcebergLite.compact(...) first, or install " +
-              "graft.GraftExtensions and use the SQL route"))
+              "deletes, which the native row-level path cannot " +
+              "represent — run IcebergLite.compact(...) first, or " +
+              "install graft.GraftExtensions and use the SQL route"))
         builtScan = new GraftNativeBatchScan(spark, tableName, info,
           required, pushed.toSeq)
         builtScan

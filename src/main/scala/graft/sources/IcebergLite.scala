@@ -7,7 +7,8 @@ import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileStream, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, GraftParquetShim, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftParquetShim, GraftPlanShim, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types._
 
 /** Iceberg TABLE-FORMAT read/write without the Iceberg runtime — the
@@ -1190,6 +1191,8 @@ object IcebergLite {
   }
 
   private case class TableMeta(
+      /** the table directory (names the table in plans and logs) */
+      dir: String,
       version: Int,
       schemaNode: com.fasterxml.jackson.databind.JsonNode,
       /** every partition spec the table has ever had, by spec id
@@ -1339,67 +1342,69 @@ object IcebergLite {
       Option(node.get("properties")).map { p =>
         p.fieldNames().asScala.map(n => n -> p.get(n).asText()).toMap
       }.getOrElse(Map.empty)
-    TableMeta(version, schemaNode, specs, defaultSpecId, wantId, snapshots,
-      manifests, lastColumnId, sortOrderCols, refs, props,
+    TableMeta(tableDir, version, schemaNode, specs, defaultSpecId, wantId,
+      snapshots, manifests, lastColumnId, sortOrderCols, refs, props,
       snapshotTs, snapshotLog)
   }
 
   /** Read the table at its current (or a given) snapshot. The data-file
-    * set comes from the manifests, never a directory listing; partition
-    * columns recover per snapshot-group via `basePath`. */
+    * set comes from the manifests, never a directory listing, and is read
+    * by the native scan ([[scanFrame]]). */
   def readTable(spark: SparkSession, tableDir: String,
                 snapshotId: Option[Long] = None): DataFrame = {
     val meta = readMeta(spark, tableDir, snapshotId)
-    val files = liveFileEntries(spark, meta)
-    // a snapshot with no live data files (fresh CREATE TABLE, a
-    // metadata-only truncate) reads as an EMPTY frame of the declared
-    // schema — refusing here would make every read-after-create and
-    // read-after-overwrite path special-case emptiness
-    if (files.isEmpty)
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        declaredSchema(meta))
-    else applyDeletes(spark, meta, readRaw(spark, meta, files))
+    readFiles(spark, meta, liveFileEntries(spark, meta))
       .drop("__file", "__pos")
   }
+
+  /** The one reader of table data files: `files` of `meta`'s snapshot as
+    * a DataFrame over the native scan ([[GraftNativeBatchScan]]), each
+    * file read through its own generation and projected to the current
+    * schema by field id, plus the provenance columns `__file` (the
+    * manifest's `file_path`, verbatim), `__pos` (the row's position in
+    * its file, the address a position delete names) and `__fsnap` (the
+    * file's entry snapshot). No delete is applied; columns the frame's
+    * consumers do not use prune away before the scan reads them. */
+  private def scanFrame(spark: SparkSession, meta: TableMeta,
+                        files: Seq[NativeFileInfo]): DataFrame =
+    GraftPlanShim.ofRows(spark, DataSourceV2Relation.create(
+      new GraftFileSetTable(meta.dir, scanInfo(meta, files, None)),
+      None, None))
+
+  /** [[scanFrame]] with the snapshot's merge-on-read deletes applied
+    * ([[applyDeletes]]); keeps `__file` and `__pos`. */
+  private def readFiles(spark: SparkSession, meta: TableMeta,
+                        files: Seq[NativeFileInfo]): DataFrame =
+    applyDeletes(spark, meta, scanFrame(spark, meta, files))
 
   /** Merge-on-read: anti-join the frame's (__file, __pos) provenance
     * against the live position-delete files, then apply EQUALITY
     * deletes with sequence semantics — an equality-delete file drops
-    * matching rows only from data files written BEFORE it (entry
-    * snapshot < delete snapshot), so a later re-append of the same key
-    * survives: the upsert contract. A no-op (no join in the plan at
-    * all) when the snapshot carries no deletes of either kind. */
+    * matching rows only from data files written BEFORE it (the row's
+    * `__fsnap` entry snapshot < delete snapshot), so a later re-append
+    * of the same key survives: the upsert contract. A no-op (no join in
+    * the plan at all) when the snapshot carries no deletes of either
+    * kind. Drops `__fsnap`. */
   private def applyDeletes(spark: SparkSession, meta: TableMeta,
                            df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
+    import org.apache.spark.sql.functions.{col, lit}
     val deletes = liveDeleteFiles(spark, meta)
     val pos =
       if (deletes.isEmpty) df
       else df.join(spark.read.parquet(deletes: _*),
         col("__file") === col("file_path") && col("__pos") === col("pos"),
         "left_anti")
-    val eqs = liveEqualityDeletes(spark, meta)
-    if (eqs.isEmpty) pos
-    else {
-      // per-row provenance: the snapshot that wrote the row's file —
-      // KB-scale manifest arithmetic, broadcast as a two-column dim
-      val snapDf = spark.createDataFrame(
-        dataFileSnapshots(spark, meta).toSeq).toDF("__fp", "__fsnap")
-      var out = pos.join(broadcast(snapDf),
-        col("__file") === col("__fp"), "left").drop("__fp")
-      eqs.sortBy(_._1).foreach { case (delSnap, keyCols, paths) =>
+    liveEqualityDeletes(spark, meta).sortBy(_._1).foldLeft(pos) {
+      case (out, (delSnap, keyCols, paths)) =>
         // plain (AQE-broadcastable) left join marks hits; the filter
         // keeps a hit only when its file predates the delete. NULL key
         // values never match (left-join null semantics) — documented.
         val keys = spark.read.parquet(paths: _*).distinct()
           .withColumn("__eqhit", lit(1))
-        out = out.join(keys, keyCols, "left")
+        out.join(keys, keyCols, "left")
           .filter(col("__eqhit").isNull || col("__fsnap") >= lit(delSnap))
           .drop("__eqhit")
-      }
-      out.drop("__fsnap")
-    }
+    }.drop("__fsnap")
   }
 
   /** Live EQUALITY-delete manifests: (delete snapshot, key columns,
@@ -1463,18 +1468,13 @@ object IcebergLite {
       StructField(f.get("name").asText(), sparkType(f.get("type")),
         !f.get("required").asBoolean())).toSeq)
 
-  /** Live (not-DELETED) data files of the current snapshot, each paired
-    * with the schema json its MANIFEST was written under — rewrites
-    * carry EXISTING entries into per-source-schema manifests, so the
-    * pairing survives deleteWhere/compact across evolutions. */
+  /** Live (not-DELETED) data files of the snapshot, each with the
+    * generation its MANIFEST was written under — rewrites carry
+    * EXISTING entries into per-source-schema manifests, so the pairing
+    * survives deleteWhere/compact across evolutions. */
   private def liveFileEntries(spark: SparkSession, meta: TableMeta)
-      : Seq[(String, String)] =
-    meta.manifests.filter(_.content == 0).flatMap { m =>
-      val (recs, schemaJs) = readManifest(spark, new Path(m.path))
-      recs.filter(_.get("status").asInstanceOf[Int] != 2)
-        .map(_.get("data_file").asInstanceOf[GenericRecord]
-          .get("file_path").toString -> schemaJs)
-    }
+      : Seq[NativeFileInfo] =
+    pruneFiles(spark, meta, Nil)._1
 
   /** Live POSITION-DELETE files (merge-on-read): parquet files of
     * (file_path, pos) rows committed through content=1 manifests. */
@@ -1493,93 +1493,6 @@ object IcebergLite {
     node.get("fields").elements().asScala.map(f =>
       (f.get("id").asInt(), f.get("name").asText(),
         sparkType(f.get("type")), f.get("required").asBoolean())).toSeq
-
-  /** `__file`: the manifest's own `file_path` string for the file a row
-    * was read from, so matches against manifest entries, position-delete
-    * rows and Bloom sidecars compare strings the table recorded, whatever
-    * rendering wrote them (`file:/…` from the data-file writer, `file:///…`
-    * from an `input_file_name()` read-back). `input_file_name()` is a URL
-    * (`%`-encoded), decoded to a `Path` to meet the manifest strings in
-    * [[GraftNativeReaderFactory.normPath]]. */
-  private def manifestPathOf(paths: Seq[String]): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.udf(new ManifestPath(paths.map(p =>
-      GraftNativeReaderFactory.normPath(p) -> p).toMap))
-      .apply(org.apache.spark.sql.functions.input_file_name())
-
-  /** URL → manifest string; rows arrive file by file, so the last answer
-    * is kept. */
-  private final class ManifestPath(byId: Map[String, String])
-      extends (String => String) with Serializable {
-    @transient @volatile private var last: (String, String) = _
-    def apply(url: String): String = {
-      val l = last
-      if (l != null && l._1 == url) return l._2
-      val p = byId.getOrElse(GraftNativeReaderFactory.normPath(
-        new Path(new java.net.URI(url)).toString),
-        sys.error(s"$url is not a file of the scanned manifests"))
-      last = (url, p)
-      p
-    }
-  }
-
-  /** Read a subset of the table's files with `__file`/`__pos`
-    * provenance columns (file path + within-file row position — the
-    * address a position delete names), projected to the CURRENT schema
-    * BY FIELD ID: files are grouped by the schema that wrote them,
-    * columns resolve through that schema's id→name mapping (renames),
-    * cast to the current type (widenings), and fields the file
-    * predates read as NULL (adds). */
-  private def readRaw(spark: SparkSession, meta: TableMeta,
-                      files: Seq[(String, String)]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val current = topFields(meta.schemaNode)
-    val filePath = manifestPathOf(files.map(_._1))
-    files.groupBy(_._2).map { case (schemaJs, group) =>
-      val fileFields = topFields(om.readTree(schemaJs))
-      val byId = fileFields.map(f2 => f2._1 -> f2).toMap
-      val paths = group.map(_._1)
-      // the write-time schema is the read schema: no footer read to
-      // infer it, and identity partition columns take their DECLARED
-      // types from the directory strings ("007" stays a string, never
-      // re-inferred as the int 7)
-      val reader = spark.read.schema(StructType(fileFields.map(f2 =>
-        StructField(f2._2, f2._3, nullable = true))))
-      // `_metadata` resolves only on the file-source relation — capture
-      // the provenance columns per branch, BEFORE any union
-      def withProv(df: DataFrame): DataFrame = df
-        .withColumn("__file", filePath)
-        .withColumn("__pos", col("_metadata.row_index"))
-      val raw =
-        if (meta.specs.forall(_._2.isEmpty))
-          withProv(reader.parquet(paths: _*))
-        else {
-          val bySnapDir = paths.groupBy(fp =>
-            fp.substring(0, fp.indexOf("/data/s") +
-              fp.substring(fp.indexOf("/data/s")).indexOf('/', 7)))
-          // allowMissingColumns: after SPEC evolution, snapshot groups
-          // carry different partition-dir columns (a derived bucket/day
-          // column exists only in its generation's directories); the
-          // projection below reads only schema columns, so a NULL-filled
-          // derived column is dropped, and identity partition columns
-          // exist in every group (dir or file)
-          bySnapDir.map { case (base, fs2) =>
-            withProv(reader.option("basePath", base).parquet(fs2: _*))
-          }.reduce(_.unionByName(_, allowMissingColumns = true))
-        }
-      raw.select(current.toIndexedSeq.map { case (id, name, dt, _) =>
-        byId.get(id) match {
-          case Some((_, fileName, _, _)) =>
-            // the file's write-time type; a column widened since
-            // (int → long, float → double) casts up to the current one
-            val c = col(fileName)
-            (if (raw.schema(fileName).dataType.catalogString == dt.catalogString) c
-             else c.cast(dt)).as(name)
-          case None => lit(null).cast(dt).as(name)
-        }
-      } :+ col("__file") :+ col("__pos"): _*)
-    }.reduce(_ unionByName _)
-  }
 
   /** Copy-on-write row deletion — the corpus REDACTION path (GDPR
     * erasure, eval-contamination removal): rows matching `predicate`
@@ -1680,8 +1593,8 @@ object IcebergLite {
     * file when nothing extracts. */
   private def candidateFiles(spark: SparkSession, meta: TableMeta,
                              predicate: org.apache.spark.sql.Column,
-                             files: Seq[(String, String)])
-      : Seq[(String, String)] = {
+                             files: Seq[NativeFileInfo])
+      : Seq[NativeFileInfo] = {
     // a Spark-4 Column wraps a ColumnNode tree, not catalyst — analysis
     // against an empty frame of the declared schema is the supported
     // way to a TYPED expression (it also folds literal casts onto the
@@ -1703,8 +1616,8 @@ object IcebergLite {
     if (groups.isEmpty) files
     else {
       val keep = groups.flatMap(g => pruneFiles(spark, meta, g)._1)
-        .map(_._1).toSet
-      files.filter(e => keep(e._1))
+        .map(_.path).toSet
+      files.filter(f => keep(f.path))
     }
   }
 
@@ -1759,8 +1672,7 @@ object IcebergLite {
     if (hits.isEmpty) return None
     // rewrite ONLY the hit files (projected to the current schema —
     // a rewrite is the one moment old-schema rows get rewritten new)
-    val survivors = applyDeletes(spark, meta,
-        readRaw(spark, meta, files.filter(e => hits(e._1))))
+    val survivors = readFiles(spark, meta, files.filter(f => hits(f.path)))
       .filter(not(coalesce(predicate, lit(false))))
       .drop("__file", "__pos")
     Some((rewriteGroups(spark, root, meta, snapshotId, survivors,
@@ -1775,14 +1687,14 @@ object IcebergLite {
     * read deletes applied first — a row already deleted cannot match
     * again); the files an outstanding delete still names rewrite too. */
   private def cowTargets(spark: SparkSession, meta: TableMeta,
-                         files: Seq[(String, String)],
+                         files: Seq[NativeFileInfo],
                          predicate: org.apache.spark.sql.Column)
       : (Long, Set[String]) = {
     import org.apache.spark.sql.functions.{coalesce, lit, sum}
     val cand = candidateFiles(spark, meta, predicate, files)
     val hitAgg =
       if (cand.isEmpty) Array.empty[org.apache.spark.sql.Row]
-      else applyDeletes(spark, meta, readRaw(spark, meta, cand))
+      else readFiles(spark, meta, cand)
         .filter(coalesce(predicate, lit(false)))
         .groupBy("__file").agg(sum(lit(1L)).as("__m"))
         .collect()
@@ -1796,13 +1708,13 @@ object IcebergLite {
     * goes physical), so these files must rewrite with the deletes
     * applied, or deleted rows would resurrect. */
   private def deleteNamedFiles(spark: SparkSession, meta: TableMeta,
-                               files: Seq[(String, String)]): Set[String] = {
+                               files: Seq[NativeFileInfo]): Set[String] = {
     val dels = liveDeleteFiles(spark, meta)
     val posRefs =
       if (dels.isEmpty) Set.empty[String]
       else spark.read.parquet(dels: _*).select("file_path").distinct()
         .collect().map(_.getString(0)).toSet
-    (posRefs ++ eqAffectedFiles(spark, meta)) & files.map(_._1).toSet
+    (posRefs ++ eqAffectedFiles(spark, meta)) & files.map(_.path).toSet
   }
 
   /** The manifest groups of a rewrite snapshot: `rows` written as new
@@ -1942,8 +1854,7 @@ object IcebergLite {
     // rewrite ONLY the hit files: matching rows take the assignments
     // (each expression reading the pre-update row), others pass through
     val matchedPred = coalesce(predicate, lit(false))
-    val rewritten = applyDeletes(spark, meta,
-        readRaw(spark, meta, files.filter(e => hits(e._1))))
+    val rewritten = readFiles(spark, meta, files.filter(f => hits(f.path)))
       .select(schema.fields.toIndexedSeq.map { f =>
         assignMap.get(f.name) match {
           case Some(e) =>
@@ -2003,14 +1914,14 @@ object IcebergLite {
   def deleteWhereMOR(spark: SparkSession,
                      tableDir: String,
                      predicate: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, input_file_name, lit}
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
     val meta = readMeta(spark, tableDir)
     val files = liveFileEntries(spark, meta)
     if (files.isEmpty) return 0L // empty table: nothing to delete
 
     val cand = candidateFiles(spark, meta, predicate, files)
     if (cand.isEmpty) return 0L
-    val matches = applyDeletes(spark, meta, readRaw(spark, meta, cand))
+    val matches = readFiles(spark, meta, cand)
       .filter(coalesce(predicate, lit(false)))
       .select(col("__file").as("file_path"), col("__pos").as("pos"))
       .localCheckpoint() // one scan serves the count and the write
@@ -2071,7 +1982,7 @@ object IcebergLite {
     val assignMap = validAssignments(schema, assignments)
     val cand = candidateFiles(spark, meta, predicate, files)
     if (cand.isEmpty) return 0L
-    val matches = applyDeletes(spark, meta, readRaw(spark, meta, cand))
+    val matches = readFiles(spark, meta, cand)
       .filter(coalesce(predicate, lit(false)))
       .localCheckpoint()
     if (matches.isEmpty) return 0L
@@ -2317,17 +2228,27 @@ object IcebergLite {
 
   // ---- native V2 scan/write planning (r18) --------------------------------
 
+  /** One generation of data files: the columns of the schema they were
+    * written under — (field id, write-time name, write-time type) — and
+    * the partition spec their manifest values follow, typed over those
+    * columns. The native scan reads each file through its generation
+    * and projects to the current schema by field id. */
+  case class NativeGeneration(columns: Seq[(Int, String, DataType)],
+                              specId: Int,
+                              spec: Seq[(IcebergTransforms.PartField, DataType)])
+
   /** Per-file planning info for the NATIVE V2 batch scan: absolute
-    * path, byte size, the manifest partition values as JVM values
-    * (Integer/Long/String/null) aligned to the spec field order, and
-    * the ENTRY snapshot id (what equality-delete sequence checks
-    * compare against — stable across rewrites that carry entries as
-    * EXISTING, same as [[dataFileSnapshots]]). */
+    * path (the manifest string), byte size, the manifest partition
+    * values as JVM values (Integer/Long/String/null) aligned to the
+    * file's OWN spec (`gen.spec`), the record count, the ENTRY snapshot
+    * id (what equality-delete sequence checks compare against — stable
+    * across rewrites that carry entries as EXISTING, same as
+    * [[dataFileSnapshots]]) and the file's generation. */
   case class NativeFileInfo(path: String, sizeBytes: Long,
                             partValues: Seq[Any], rowCount: Long,
-                            snapshotId: Long)
+                            snapshotId: Long, gen: NativeGeneration)
 
-  /** Outstanding merge-on-read deletes of the CURRENT snapshot, in
+  /** Outstanding merge-on-read deletes of the scanned snapshot, in
     * planning shape for the native scan (r19 verdict task 1): the scan
     * applies position deletes as a per-file row-index anti-filter and
     * equality deletes as driver-resolved key sets with entry-snapshot
@@ -2348,36 +2269,49 @@ object IcebergLite {
         * decision the wrong way). */
       coversWholeTable: Boolean = true)
 
-  /** The NATIVE V2 scan plan of a table: declared schema, the spec
-    * (items + value types), the persisted sort order, the
-    * bounds/partition/Bloom-pruned live file set, and any outstanding
-    * MOR deletes the scan must apply. */
-  case class NativeScanInfo(schema: StructType, specItems: Seq[String],
+  /** The NATIVE V2 scan plan of a table: the current schema and its
+    * field ids, the DEFAULT spec (items, value types, id), the persisted
+    * sort order, the bounds/partition/Bloom-pruned live file set of the
+    * scanned snapshot, and any outstanding MOR deletes the scan must
+    * apply. */
+  case class NativeScanInfo(schema: StructType, fieldIds: Map[String, Int],
+                            specItems: Seq[String],
                             spec: Seq[(IcebergTransforms.PartField, DataType)],
+                            specId: Int,
                             sortCols: Seq[String],
                             files: Seq[NativeFileInfo],
                             deletes: Option[NativeDeletes] = None)
 
-  /** Plan a NATIVE V2 batch scan of the CURRENT snapshot, or `None`
-    * when only the DataFrame route can represent the table state —
-    * multiple schema/spec generations (files need field-id remapping /
-    * per-generation partition shapes; [[compact]] collapses both), or
+  private def scanInfo(meta: TableMeta, files: Seq[NativeFileInfo],
+                       deletes: Option[NativeDeletes]): NativeScanInfo = {
+    val schema = declaredSchema(meta)
+    NativeScanInfo(schema, meta.fieldIds, meta.partitionSpec.map(renderSpec),
+      typedSpec(meta.partitionSpec, schema), meta.defaultSpecId,
+      meta.sortOrderCols, files, deletes)
+  }
+
+  /** Plan a NATIVE V2 batch scan of the current snapshot (or
+    * `snapshotId`), over files of every schema/spec generation, or
+    * `None` when only the V1 route can represent the delete state:
     * outstanding merge-on-read deletes unless the caller opts in with
     * `allowDeletes` (READ paths apply them inside the scan; the
     * row-level DML path keeps refusing, so group replacement semantics
-    * are unchanged). Delete states larger than
-    * `spark.graft.nativeScan.morDeletes.maxRows` (default 4M rows,
-    * manifest-accounted before any file is read) also fall back: the
+    * are unchanged), delete states larger than
+    * `spark.graft.nativeScan.morDeletes.maxRows` /
+    * `.maxEqRows` (manifest-accounted before any file is read: the
     * native scan resolves deletes into driver-held sets, and past that
-    * size the V1 route's distributed anti-join is the right tool. File
-    * skipping is the SAME [[pruneFiles]] pass the V1 route uses
-    * (manifest bounds, partition transforms, Bloom sidecars). */
-  def nativeScanInfo(spark: SparkSession, tableDir: String,
-                     preds: Seq[Pred] = Nil,
-                     allowDeletes: Boolean = false): Option[NativeScanInfo] = {
+    * size the V1 route's distributed anti-join is the right tool), and
+    * equality deletes keyed on a non-primitive column. File skipping is
+    * the SAME [[pruneFiles]] pass the DataFrame readers use (manifest
+    * bounds, partition transforms, Bloom sidecars). */
+  private[sources] def nativeScanInfo(spark: SparkSession, tableDir: String,
+                                      preds: Seq[Pred] = Nil,
+                                      allowDeletes: Boolean = false,
+                                      snapshotId: Option[Long] = None)
+      : Option[NativeScanInfo] = {
     val hint = new Path(tableDir, "metadata/version-hint.text")
     if (!fs(spark, hint).exists(hint)) return None
-    val meta = readMeta(spark, tableDir)
+    val meta = readMeta(spark, tableDir, snapshotId)
     val hasDeletes = meta.manifests.exists(_.content != 0)
     if (hasDeletes) {
       if (!allowDeletes) return None
@@ -2396,44 +2330,7 @@ object IcebergLite {
         .get("spark.graft.nativeScan.morDeletes.maxEqRows", "1000000").toLong
       if (posRows > posCap || eqRows > eqCap) return None
     }
-    val perManifest = meta.manifests.filter(_.content == 0).map { m =>
-      val (recs, schemaJs) = readManifest(spark, new Path(m.path))
-      (m, recs, schemaJs)
-    }
-    // schema-generation equality is STRUCTURAL (manifests written at
-    // create-time carry the generator's whitespace, later ones the
-    // Jackson-normalized form — same schema either way)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val currentSchema = om.readTree(meta.schemaJs)
-    if (perManifest.exists { case (m, _, js) =>
-      om.readTree(js) != currentSchema ||
-        m.specId != meta.defaultSpecId }) return None
-    val keep: Set[String] =
-      if (preds.isEmpty) null // no pruning requested: keep everything
-      else pruneFiles(spark, meta, preds)._1.map(_._1).toSet
     val schema = declaredSchema(meta)
-    val spec = typedSpec(meta.partitionSpec, schema)
-    val files = perManifest.flatMap { case (_, recs, _) =>
-      recs.filter(_.get("status").asInstanceOf[Int] != 2).flatMap { e =>
-        val d = e.get("data_file").asInstanceOf[GenericRecord]
-        val path = d.get("file_path").toString
-        if (keep != null && !keep.contains(path)) None
-        else {
-          val part = d.get("partition").asInstanceOf[GenericRecord]
-          val values = spec.map { case (pf, _) =>
-            part.get(pf.name) match {
-              case null => null
-              case u: org.apache.avro.util.Utf8 => u.toString
-              case other => other // Integer / Long / String
-            }
-          }
-          Some(NativeFileInfo(path,
-            d.get("file_size_in_bytes").asInstanceOf[Long], values,
-            d.get("record_count").asInstanceOf[Long],
-            e.get("snapshot_id").asInstanceOf[Long]))
-        }
-      }
-    }
     val deletes =
       if (!hasDeletes) None
       else {
@@ -2456,8 +2353,7 @@ object IcebergLite {
           meta.manifests.filter(_.content == 1).map(_.totalRows).sum,
           coversWholeTable = preds.isEmpty))
       }
-    Some(NativeScanInfo(schema, meta.partitionSpec.map(renderSpec), spec,
-      meta.sortOrderCols, files, deletes))
+    Some(scanInfo(meta, pruneFiles(spark, meta, preds)._1, deletes))
   }
 
   /** The snapshot id the NEXT commit will take — the native V2 write
@@ -2507,8 +2403,7 @@ object IcebergLite {
     val snapshotId = meta.nextSnapshotId
     // merge-on-read deletes apply HERE — compaction is the pass that
     // makes them physical (the new list carries no delete manifests)
-    val all = applyDeletes(spark, meta, readRaw(spark, meta, files))
-      .drop("__file", "__pos")
+    val all = readFiles(spark, meta, files).drop("__file", "__pos")
     commitRewrite(spark, root, meta, snapshotId,
       rewriteGroups(spark, root, meta, snapshotId, all, _ => false),
       operation = "replace")
@@ -2532,13 +2427,7 @@ object IcebergLite {
 
     // small files from the MANIFEST metadata (no file-system stats) +
     // the files an outstanding delete names (so the deletes go physical)
-    val sizes = meta.manifests.filter(_.content == 0).flatMap { m =>
-      readManifest(spark, new Path(m.path))._1
-        .filter(_.get("status").asInstanceOf[Int] != 2)
-        .map(_.get("data_file").asInstanceOf[GenericRecord])
-        .map(d => d.get("file_path").toString ->
-          d.get("file_size_in_bytes").asInstanceOf[Long])
-    }.toMap
+    val sizes = files.map(f => f.path -> f.sizeBytes).toMap
     val small = sizes.collect { case (p, n) if n < smallerThanBytes => p }
       .toSet ++ deleteNamedFiles(spark, meta, files)
     if (small.isEmpty) return 0L
@@ -2549,8 +2438,7 @@ object IcebergLite {
     // ceil(small bytes / smallerThanBytes) tasks, so each writes about one
     // file of the size below which a file counts as small (the small
     // files, each its own read split, group evenly by count)
-    val rows = applyDeletes(spark, meta,
-        readRaw(spark, meta, files.filter(e => small.contains(e._1))))
+    val rows = readFiles(spark, meta, files.filter(f => small.contains(f.path)))
       .drop("__file", "__pos")
     val packed =
       if (meta.partitionSpec.nonEmpty) rows
@@ -2898,10 +2786,11 @@ object IcebergLite {
       }.toMap
     }.getOrElse(Map.empty)
 
-  /** Live files surviving pruning, paired with their manifest schema,
-    * plus the total live-file count (for skip accounting). Two pruning
-    * legs, both conservative (a file is excluded only when PROVEN
-    * row-free; anything missing always scans):
+  /** Live files surviving pruning, each with its generation (the
+    * manifest's write-time schema and spec), plus the total live-file
+    * count (for skip accounting). Two pruning legs, both conservative
+    * (a file is excluded only when PROVEN row-free; anything missing
+    * always scans):
     *   - column BOUNDS (spec fields 125/128) against the predicate,
     *   - PARTITION values mapped through the spec's transforms: a
     *     predicate on a SOURCE column prunes by the file's partition
@@ -2912,7 +2801,7 @@ object IcebergLite {
     *     `day(ts)`-keyed layout answers with ~1/N of the files. */
   private def pruneFiles(spark: SparkSession, meta: TableMeta,
                          preds: Seq[Pred])
-      : (Seq[(String, String)], Int) = {
+      : (Seq[NativeFileInfo], Int) = {
     val byName = topFields(meta.schemaNode).map(f2 => f2._2 -> f2).toMap
     val resolved = preds.map { p =>
       val (id, _, dt, _) = byName.getOrElse(p.col,
@@ -2959,16 +2848,19 @@ object IcebergLite {
         .foldLeft(Map.empty[(String, Int),
           org.apache.spark.util.sketch.BloomFilter])(_ ++ _)
 
+    val generations = mutable.HashMap.empty[(String, Int), NativeGeneration]
     var total = 0
     val kept = meta.manifests.filter(_.content == 0).flatMap { m =>
       val partPreds = partPredsBySpec.getOrElse(m.specId, Nil)
       val blooms = manifestBlooms(m)
       val (recs, schemaJs) = readManifest(spark, new Path(m.path))
+      val gen = generations.getOrElseUpdate((schemaJs, m.specId),
+        generationOf(meta, schemaJs, m.specId))
       recs.filter(_.get("status").asInstanceOf[Int] != 2).flatMap { e =>
         total += 1
         val d = e.get("data_file").asInstanceOf[GenericRecord]
-        val lower = entryBounds(d, "lower_bounds")
-        val upper = entryBounds(d, "upper_bounds")
+        lazy val lower = entryBounds(d, "lower_bounds")
+        lazy val upper = entryBounds(d, "upper_bounds")
         def lo(id: Int, dt: DataType) =
           lower.get(id).flatMap(boundValue(dt, _))
         def hi(id: Int, dt: DataType) =
@@ -3013,10 +2905,29 @@ object IcebergLite {
               .exists(bf => vs.forall(v => !bloomMightContain(bf, v)))
         }
         if (excluded || excludedByPart || excludedByBloom) None
-        else Some(fp -> schemaJs)
+        else Some(NativeFileInfo(fp,
+          d.get("file_size_in_bytes").asInstanceOf[Long],
+          gen.spec.map { case (pf, _) => pv(pf.name).orNull },
+          d.get("record_count").asInstanceOf[Long],
+          e.get("snapshot_id").asInstanceOf[Long], gen))
       }
     }
     (kept, total)
+  }
+
+  /** The generation of a data manifest's files: the columns of its
+    * write-time schema, and its partition spec typed over them (a spec
+    * names its source columns by their CURRENT names, resolved through
+    * the field ids). */
+  private def generationOf(meta: TableMeta, schemaJs: String,
+                           specId: Int): NativeGeneration = {
+    val columns = topFields(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(schemaJs)).map(f2 => (f2._1, f2._2, f2._3))
+    val typeOf = columns.map(c => c._1 -> c._3).toMap
+    NativeGeneration(columns, specId, meta.specOf(specId).map { pf =>
+      pf -> IcebergTransforms.resultType(pf.transform,
+        typeOf(meta.fieldIds(pf.sourceCol)))
+    })
   }
 
   private def predValues(p: Pred): Seq[Any] = p match {
@@ -3032,16 +2943,12 @@ object IcebergLite {
     * 100 TB table read its slice instead of the table. The returned
     * frame still contains every row of the surviving files; apply the
     * real filter on top (pruning is a superset guarantee). An empty
-    * surviving set returns an empty frame of the declared schema. */
+    * surviving set reads as an empty frame of the declared schema. */
   def readTableWhere(spark: SparkSession, tableDir: String,
                      preds: Seq[Pred],
                      snapshotId: Option[Long] = None): DataFrame = {
     val meta = readMeta(spark, tableDir, snapshotId)
-    val (files, _) = pruneFiles(spark, meta, preds)
-    if (files.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        declaredSchema(meta))
-    else applyDeletes(spark, meta, readRaw(spark, meta, files))
+    readFiles(spark, meta, pruneFiles(spark, meta, preds)._1)
       .drop("__file", "__pos")
   }
 
@@ -3657,7 +3564,6 @@ object IcebergLite {
   def readIncremental(spark: SparkSession, tableDir: String,
                       fromSnapshotExclusive: Long,
                       toSnapshot: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
     val meta = readMeta(spark, tableDir, toSnapshot)
     val to = meta.currentSnapshotId
     require(fromSnapshotExclusive >= 0 && fromSnapshotExclusive <= to,
@@ -3674,30 +3580,12 @@ object IcebergLite {
         s"incremental read supports append-only ranges; snapshot $id " +
           s"is '$op' (read the table at a snapshot instead)")
     }
-    val declared = declaredSchema(meta)
-    val withProv = StructType(declared.fields :+
-      StructField("_added_snapshot_id", LongType, nullable = false))
-    if (inRange.isEmpty)
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), withProv)
-    val files = meta.manifests
-      .filter(m => m.content == 0 && m.addedBy > fromSnapshotExclusive)
-      .flatMap { m =>
-        val (recs, schemaJs) = readManifest(spark, new Path(m.path))
-        recs.filter(e => e.get("status").asInstanceOf[Int] == 1 &&
-            lineage.contains(e.get("snapshot_id").asInstanceOf[Long]))
-          .map(e => (e.get("data_file").asInstanceOf[GenericRecord]
-            .get("file_path").toString -> schemaJs,
-            e.get("snapshot_id").asInstanceOf[Long]))
-      }
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), withProv)
-    val snapDf = spark.createDataFrame(
-      files.map { case ((p, _), s2) => (p, s2) }).toDF("__fp", "__fsnap")
-    readRaw(spark, meta, files.map(_._1))
-      .join(broadcast(snapDf), col("__file") === col("__fp"))
-      .drop("__file", "__pos", "__fp")
+    // the files the range's appends added: entries of the manifests
+    // committed after `from` whose entry snapshot is a lineage one
+    val files = liveFileEntries(spark, meta.copy(manifests = meta.manifests
+        .filter(_.addedBy > fromSnapshotExclusive)))
+      .filter(f => lineage.contains(f.snapshotId))
+    scanFrame(spark, meta, files).drop("__file", "__pos")
       .withColumnRenamed("__fsnap", "_added_snapshot_id")
   }
 
@@ -3761,25 +3649,21 @@ object IcebergLite {
 
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val dataEntries = liveFileEntries(spark, metaTo)
-    val entrySnaps = dataFileSnapshots(spark, metaTo)
+    val eqDeletesTo = liveEqualityDeletes(spark, metaTo)
 
     val legs = inRange.map { case (sid, _, summary) =>
       val op = om.readTree(summary).get("operation").asText()
       val posManifests = metaTo.manifests
         .filter(m => m.content == 1 && m.addedBy == sid)
-      val eqManifests = metaTo.manifests
-        .filter(m => m.content == 2 && m.addedBy == sid)
+      val eqDeletes = eqDeletesTo.filter(_._1 == sid)
       op match {
         case "append" =>
-          val files = dataEntries.filter { case (p, _) =>
-            entrySnaps.get(p).contains(sid)
-          }
-          if (files.isEmpty) empty()
-          else readRaw(spark, metaTo, files).drop("__file", "__pos")
+          scanFrame(spark, metaTo, dataEntries.filter(_.snapshotId == sid))
+            .drop("__file", "__pos", "__fsnap")
             .withColumn("_change_type", lit("insert"))
             .withColumn("_commit_snapshot_id", lit(sid))
         case "delete" =>
-          require(posManifests.nonEmpty || eqManifests.nonEmpty,
+          require(posManifests.nonEmpty || eqDeletes.nonEmpty,
             s"changelog: snapshot $sid is a copy-on-write delete (no " +
               "delete manifests) — no row-level change answer; maintain " +
               "CDC tables with deleteWhereMOR/equalityDeleteMOR")
@@ -3793,46 +3677,26 @@ object IcebergLite {
             val dels = spark.read.parquet(delPaths: _*)
             val named = dels.select("file_path").distinct()
               .collect().map(_.getString(0)).toSet
-            val files = dataEntries.filter(f => named.contains(f._1))
-            if (files.isEmpty) None
-            else Some(readRaw(spark, metaTo, files)
+            Some(scanFrame(spark, metaTo,
+                dataEntries.filter(f => named.contains(f.path)))
               .join(dels, col("__file") === col("file_path") &&
                 col("__pos") === col("pos"))
-              .drop("__file", "__pos", "file_path", "pos"))
+              .drop("__file", "__pos", "__fsnap", "file_path", "pos"))
           }
-          val eqLeg: Option[DataFrame] = if (eqManifests.isEmpty) None else {
-            // pre-image: the table as of this snapshot's RECORDED
-            // parent (not numeric adjacency — a rollback or staging
-            // branch can own the adjacent id), with every earlier
-            // delete already applied
-            val parentId = parentOf.getOrElse(sid, 0L)
-            val metaPrevOpt =
-              if (parentId == 0L) None
-              else Some(readMeta(spark, tableDir, Some(parentId)))
-            val prevFiles = metaPrevOpt
-              .map(liveFileEntries(spark, _)).getOrElse(Nil)
-            if (prevFiles.isEmpty) None
-            else {
-              val metaPrev = metaPrevOpt.get
-              val pre = applyDeletes(spark, metaPrev,
-                readRaw(spark, metaPrev, prevFiles)).drop("__file", "__pos")
-              val hit = eqManifests.foldLeft(Option.empty[DataFrame]) {
-                (acc, m) =>
-                  val p = new Path(m.path)
-                  val keyCols = manifestMetaString(spark, p, "equality-cols")
-                    .getOrElse(sys.error(s"equality manifest ${m.path} " +
-                      "has no equality-cols metadata")).split(",").toSeq
-                  val keys = readManifest(spark, p)._1
-                    .filter(_.get("status").asInstanceOf[Int] != 2)
-                    .map(_.get("data_file").asInstanceOf[GenericRecord]
-                      .get("file_path").toString)
-                  val matched = pre.join(
-                    spark.read.parquet(keys: _*).distinct(), keyCols)
-                  Some(acc.map(_.unionByName(matched)).getOrElse(matched))
-              }
-              hit
+          // pre-image: the table as of this snapshot's RECORDED parent
+          // (not numeric adjacency — a rollback or staging branch can own
+          // the adjacent id), with every earlier delete already applied;
+          // a delete with no parent has nothing to hit
+          val eqLeg: Option[DataFrame] =
+            if (eqDeletes.isEmpty) None
+            else parentOf.get(sid).filter(_ != 0L).map { parentId =>
+              val metaPrev = readMeta(spark, tableDir, Some(parentId))
+              val pre = readFiles(spark, metaPrev,
+                liveFileEntries(spark, metaPrev)).drop("__file", "__pos")
+              eqDeletes.map { case (_, keyCols, keys) =>
+                pre.join(spark.read.parquet(keys: _*).distinct(), keyCols)
+              }.reduce(_.unionByName(_))
             }
-          }
           (posLeg.toSeq ++ eqLeg.toSeq) match {
             case Nil => empty()
             case dfs => dfs.reduce(_.unionByName(_))

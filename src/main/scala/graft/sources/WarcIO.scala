@@ -76,7 +76,7 @@ object WarcIO {
     parseRecords(spark.read
       .option("lineSep", RecordDelim)
       .text(path)
-      .select(col("value").as("rec"), input_file_name().as("source_file")))
+      .select(col("value").as("rec"), col("_metadata.file_path").as("source_file")))
 
   /** Conversion records only (the text documents), with a deterministic
     * `doc_id` = xxhash64(url, date) for downstream dedup/curation. */
@@ -92,7 +92,7 @@ object WarcIO {
     conversionDocs(parseRecords(spark.readStream
       .option("lineSep", RecordDelim)
       .text(path)
-      .select(col("value").as("rec"), input_file_name().as("source_file"))))
+      .select(col("value").as("rec"), col("_metadata.file_path").as("source_file"))))
 
   /** FULL-WARC capture parsing: `response` records carry an HTTP
     * message as their body (status line, headers, blank line, payload).

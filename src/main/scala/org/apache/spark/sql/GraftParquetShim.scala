@@ -96,6 +96,15 @@ object GraftParquetShim {
     PartitionedFile(partitionValues, SparkPath.fromPathString(path), 0L,
       length, Array.empty, 0L, length, Map.empty)
 
+  /** Name `file` as the running task's input file — what
+    * `input_file_name()` and its block siblings read — the way Spark's
+    * own file scans do while they read it. */
+  def setInputFile(file: PartitionedFile): Unit =
+    org.apache.spark.rdd.InputFileBlockHolder.set(file.urlEncodedPath,
+      file.start, file.length)
+  def unsetInputFile(): Unit =
+    org.apache.spark.rdd.InputFileBlockHolder.unset()
+
   /** The session-configured parquet `OutputWriterFactory` (codec,
     * schema metadata, committer conf) — serializable by contract (it is
     * what Spark ships to its own write tasks) — PLUS the job

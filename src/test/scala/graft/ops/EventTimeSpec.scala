@@ -68,6 +68,46 @@ class EventTimeSpec extends SparkSuite {
     assert(kept === Set("bank1_events", "bank2_events"))
   }
 
+  test("excludeErrorBanks keeps exactly the rows the lower().contains filter keeps") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // case variants, the non-ASCII code points with ASCII-letter
+    // lowercase (İ, Kelvin K) or near-misses (ı), fullwidth needles,
+    // bytes that are not UTF-8, and NULL
+    val frags: Seq[Array[Byte]] = Seq("error", "ERROR", "eRrOr", "unmapped",
+      "UNMAPPED", "UnMaPpEd", "err", "or", "unm", "apped", "bank", "_", "1",
+      "\u0130", "\u212A", "\u0131", "\uFF25\uFF32\uFF32\uFF2F\uFF32",
+      "\uFF55\uFF4E\uFF4D\uFF41\uFF50\uFF50\uFF45\uFF44", "\u00DF",
+      "\u00C9RROR").map(_.getBytes("UTF-8")) ++
+      Seq(Array(0xff), Array(0xc3), Array(0xe2, 0x82), Array(0x80))
+        .map(_.map(_.toByte))
+    val bank: Gen[Option[Array[Byte]]] = Gen.frequency(
+      1 -> Gen.const(None),
+      12 -> Gen.choose(0, 6).flatMap(n => Gen.listOfN(n, Gen.oneOf(frags)))
+        .map(ps => Some(ps.toArray.flatten)))
+    val rows = Gen.listOfN(3000, bank)
+      .apply(Gen.Parameters.default, Seed(9L)).get
+    val ev = rows.zipWithIndex.map { case (b, i) => (i.toLong, b.orNull) }
+      .toDF("id", "raw").selectExpr("id", "CAST(raw AS STRING) AS bank")
+    def old(df: org.apache.spark.sql.DataFrame) = df.filter(
+      !lower(col("bank")).contains("error") &&
+        !lower(col("bank")).contains("unmapped"))
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").as[Long].collect().toSet
+    val icu = "spark.sql.icu.caseMappings.enabled"
+    val saved = spark.conf.getOption(icu)
+    try Seq("true", "false").foreach { v =>
+      spark.conf.set(icu, v)
+      val want = ids(old(ev))
+      assert(ids(EventTime.excludeErrorBanks(ev, "bank")) === want, s"$icu=$v")
+      // the sample reaches both sides of the filter, NULL included
+      assert(want.nonEmpty && want.size < rows.size - rows.count(_.isEmpty))
+    } finally saved match {
+      case Some(v) => spark.conf.set(icu, v)
+      case None => spark.conf.unset(icu)
+    }
+  }
+
   test("withOffsetFromStart rebases to the global minimum") {
     val ev = Seq(100L, 105L, 150L).map(Tuple1(_)).toDF("t")
     val out = EventTime.withOffsetFromStart(ev, "t", "off")

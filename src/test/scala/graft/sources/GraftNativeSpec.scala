@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, GraftParquetShim}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 
 import graft.SparkSuite
 
@@ -20,9 +21,10 @@ class GraftNativeSpec extends SparkSuite {
     classOf[GraftTableCatalog].getName)
   spark.conf.set("spark.sql.catalog.ncat.warehouse", wh)
 
-  /** A catalog table read directly through IcebergLite (the engine the
-    * catalog's V1 fallback wraps): the reference a native-scan result
-    * must equal row for row. */
+  /** A catalog table read through the IcebergLite DataFrame reader: the
+    * same native file reader, with the merge-on-read deletes applied as
+    * joins (the rule the catalog's V1 fallback wraps) instead of inside
+    * the scan. */
   private def lite(table: String): DataFrame =
     IcebergLite.readTable(spark, s"$wh/$table")
 
@@ -48,7 +50,10 @@ class GraftNativeSpec extends SparkSuite {
     val native = readAll(spark.table("ncat.nat_docs"))
     assert(native === readAll(IcebergLite.readTableWhere(spark,
       s"$wh/nat_docs", Seq(IcebergLite.LtEq("id", 400L)))))
-    assert(native.nonEmpty)
+    // the written frames' rows, filtered in plain Scala
+    val written = (1 to 500).map(i => (i.toLong, s"w${i % 7}", i * 3L)) ++
+      (1 to 500).filter(_ % 5 == 0).map(i => (i.toLong, s"w${i % 7}", i * 3L + 1000L))
+    assert(native === written.filter(r => r._1 <= 400 && r._2 != "w3").sorted)
     // the native route actually engaged (plan shape, not just values)
     val plan = spark.table("ncat.nat_docs").queryExecution.executedPlan
     assert(plan.toString.contains("GraftNativeScan"),
@@ -528,6 +533,8 @@ class GraftNativeSpec extends SparkSuite {
         .toSeq.sorted
     assert(langOnly(spark.table("ncat.nat_morscan")) ===
       langOnly(lite("nat_morscan")))
+    assert(langOnly(spark.table("ncat.nat_morscan")) ===
+      (base ++ reup).map(r => s"${r._2}:${r._3}").sorted)
     // filters pushed onto a position-deleted file stay exact (the row
     // index is computed under row-group skipping, not row counting)
     def filtered(t: DataFrame): Seq[Long] =
@@ -536,6 +543,8 @@ class GraftNativeSpec extends SparkSuite {
     assert(filtered(spark.table("ncat.nat_morscan")) === filtered(
       IcebergLite.readTableWhere(spark, s"$wh/nat_morscan",
         Seq(IcebergLite.GtEq("id", 351L)))))
+    assert(filtered(spark.table("ncat.nat_morscan")) ===
+      base.map(_._1).filter(_ > 350).sorted)
   }
 
   test("MOR position deletes on a NESTED schema (parquet-mr row-index path) ≡ V1") {
@@ -555,7 +564,8 @@ class GraftNativeSpec extends SparkSuite {
         .toSeq.sorted
     val native = readAll(spark.table("ncat.nat_mor_nested"))
     assert(native === readAll(lite("nat_mor_nested")))
-    assert(native.size === 67)
+    assert(native === (1L to 100L).filter(_ % 3 != 0)
+      .map(i => (i, s"t${i % 5}", i * 7)))
     assert(spark.table("ncat.nat_mor_nested").queryExecution.executedPlan
       .toString.contains("GraftNativeScan"))
   }
@@ -743,5 +753,224 @@ class GraftNativeSpec extends SparkSuite {
       assert(bare.table("ncat.nat_esc").where(col("code") === c).count() ===
         expected.count(_._2 == c).toLong, c)
     }
+  }
+
+  /** The rows of `t` as (id, lang, n, text, extra) tuples, sorted. */
+  private def evoRows(t: DataFrame): Seq[(Long, String, Long, String, String)] =
+    t.select("id", "lang", "n", "text", "extra").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3),
+        r.getString(4))).toSeq.sorted
+
+  test("evolved and pinned tables read through the one native reader") {
+    // one table through ADD / RENAME / widen int→long / spec evolution,
+    // stock-session DML and both merge-on-read delete kinds, one
+    // snapshot per step; every snapshot must equal the plain-Scala
+    // model of the written rows on every read route
+    spark.sql("""CREATE TABLE ncat.evo (id BIGINT, lang STRING, n INT,
+                 body STRING) USING iceberg PARTITIONED BY (lang)""")
+    val dir = s"$wh/evo"
+    type R = (Long, String, Long, String, String)
+    var model = Map.empty[Long, R]
+    val states = scala.collection.mutable.ArrayBuffer.empty[(Long, Map[Long, R])]
+    val added = scala.collection.mutable.Map.empty[Long, Long] // id -> snapshot
+    def snap(): Long = {
+      val sid = IcebergLite.snapshotIds(spark, dir).last
+      states += (sid -> model)
+      sid
+    }
+    val sCreate = snap()
+    def langOf(i: Long) = Seq("a", "b", "c")((i % 3).toInt)
+    def append(ids: Seq[Long], extra: Boolean, textCol: String): Long = {
+      val rows = ids.map(i => (i, langOf(i), (i * 10).toInt, s"t$i",
+        if (extra) s"x$i" else null))
+      val df = rows.toDF("id", "lang", "n", textCol, "extra")
+      (if (extra) df else df.drop("extra")).writeTo("ncat.evo").append()
+      rows.foreach(r => model += r._1 -> (r._1, r._2, r._3.toLong, r._4, r._5))
+      val sid = snap()
+      ids.foreach(added(_) = sid)
+      sid
+    }
+    append(1L to 40L, extra = false, "body")
+    IcebergLite.addColumn(spark, dir, "extra", StringType)
+    append(41L to 60L, extra = true, "body")
+    IcebergLite.renameColumn(spark, dir, "body", "text")
+    append(61L to 80L, extra = true, "text")
+    IcebergLite.widenColumn(spark, dir, "n", LongType)
+    // a value past the int range: only the widened generation holds it
+    (81L to 100L).map(i => (i, langOf(i), i * 10L + (1L << 40), s"t$i", s"x$i"))
+      .toDF("id", "lang", "n", "text", "extra").writeTo("ncat.evo").append()
+    (81L to 100L).foreach(i =>
+      model += i -> (i, langOf(i), i * 10L + (1L << 40), s"t$i", s"x$i"))
+    val sWide = snap()
+    (81L to 100L).foreach(added(_) = sWide)
+    IcebergLite.evolveSpec(spark, dir, Seq("lang", "bucket[4]:id"))
+    val sSpec = append(101L to 130L, extra = true, "text")
+
+    // stock-session DML on the evolved table (no graft extensions: the
+    // V2 row-level path plans every generation natively)
+    val bare = GraftParquetShim.bareSession(spark)
+    bare.conf.set("spark.sql.catalog.ncat", classOf[GraftTableCatalog].getName)
+    bare.conf.set("spark.sql.catalog.ncat.warehouse", wh)
+    bare.sql("""DELETE FROM ncat.evo WHERE id IN
+                (SELECT id FROM ncat.evo WHERE id % 9 = 0)""")
+    model = model.filterNot(_._1 % 9 == 0)
+    snap()
+    bare.sql("UPDATE ncat.evo SET n = n + 1 WHERE id <= 30 OR id > 120")
+    model = model.map { case (i, r) =>
+      i -> (if (i <= 30 || i > 120) r.copy(_3 = r._3 + 1) else r) }
+    snap()
+    bare.createDataFrame((125L to 135L).map(i => (i, langOf(i), i, s"m$i", "mx")))
+      .toDF("id", "lang", "n", "text", "extra")
+      .createOrReplaceTempView("evo_src")
+    bare.sql("""MERGE INTO ncat.evo t USING evo_src s ON t.id = s.id
+                WHEN MATCHED THEN UPDATE SET text = s.text
+                WHEN NOT MATCHED THEN INSERT *""")
+    (125L to 135L).foreach { i =>
+      model += i -> model.get(i).map(_.copy(_4 = s"m$i"))
+        .getOrElse((i, langOf(i), i, s"m$i", "mx"))
+    }
+    val sMerge = snap()
+    // both merge-on-read delete kinds
+    IcebergLite.deleteWhereMOR(spark, dir, col("id") % 7 === 0)
+    val posHit = model.keySet.filter(_ % 7 == 0)
+    model = model -- posHit
+    val sPos = snap()
+    IcebergLite.equalityDeleteMOR(spark, dir, (1L to 10L).toDF("id"))
+    val eqHit = model.keySet.filter(_ <= 10L)
+    model = model -- eqHit
+    val sEq = snap()
+    assert(states.map(_._1).distinct.size === states.size)
+
+    graft.Catalog.registerIcebergTable(spark, "evo_reg", dir)
+    val cols = "id, lang, n, text, extra"
+    states.foreach { case (sid, m) =>
+      val want = m.values.toSeq.sorted
+      val wantA = want.filter(_._2 == "a")
+      val byCatalog = spark.sql(s"SELECT $cols FROM ncat.evo VERSION AS OF $sid")
+      val byName = spark.sql(s"SELECT $cols FROM evo_reg VERSION AS OF $sid")
+      assert(evoRows(byCatalog) === want, s"catalog name, snapshot $sid")
+      assert(evoRows(byName) === want, s"registered name, snapshot $sid")
+      assert(evoRows(IcebergLite.readTable(spark, dir, Some(sid))) === want,
+        s"readTable, snapshot $sid")
+      assert(evoRows(IcebergLite.readTableWhere(spark, dir,
+          Seq(IcebergLite.EqTo("lang", "a")), Some(sid))
+        .filter(col("lang") === "a")) === wantA, s"readTableWhere, snapshot $sid")
+      val filtered = spark.sql(
+        s"SELECT $cols FROM ncat.evo VERSION AS OF $sid WHERE lang = 'a'")
+      assert(evoRows(filtered) === wantA, s"filtered, snapshot $sid")
+      if (want.nonEmpty) {
+        // pinned and evolved reads plan the native scan, and the
+        // predicate prunes files across every spec generation
+        val total = graft.plans.IcebergSqlAudit.scannedFiles(byCatalog)
+        assert(total > 0, s"snapshot $sid did not plan natively")
+        assert(graft.plans.IcebergSqlAudit.scannedFiles(byName) === total)
+        assert(graft.plans.IcebergSqlAudit.scannedFiles(filtered) < total,
+          s"snapshot $sid: lang = 'a' pruned no file")
+      }
+    }
+    val current = model.values.toSeq.sorted
+    assert(evoRows(spark.table("ncat.evo")) === current)
+
+    // the ranges the incremental readers accept: appends only, then the
+    // two merge-on-read deletes
+    val inc = IcebergLite.readIncremental(spark, dir, sCreate, Some(sSpec))
+    val incWant = states.find(_._1 == sSpec).get._2.values.toSeq
+      .map(r => (r, added(r._1))).sortBy(_._1)
+    assert(inc.select(cols.split(", ").map(col) :+ col("_added_snapshot_id"): _*)
+      .collect().map(r => ((r.getLong(0), r.getString(1), r.getLong(2),
+        r.getString(3), r.getString(4)), r.getLong(5))).toSeq.sortBy(_._1) ===
+      incWant)
+    val appendLog = IcebergLite.readChangelog(spark, dir, sCreate, Some(sSpec))
+    assert(appendLog.filter(col("_change_type") =!= "insert").count() === 0L)
+    assert(evoRows(appendLog) === incWant.map(_._1))
+    val delLog = IcebergLite.readChangelog(spark, dir, sMerge, Some(sEq))
+      .select("id", "_change_type", "_commit_snapshot_id").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
+    assert(delLog === (posHit.toSeq.map(i => (i, "delete", sPos)) ++
+      eqHit.toSeq.map(i => (i, "delete", sEq))).sorted)
+
+    // compaction rewrites every generation into the current one
+    IcebergLite.compact(spark, dir)
+    assert(evoRows(IcebergLite.readTable(spark, dir)) === current)
+    assert(evoRows(spark.table("ncat.evo")) === current)
+    assert(evoRows(spark.sql(s"SELECT $cols FROM ncat.evo VERSION AS OF $sEq")) ===
+      current)
+  }
+
+  test("over-cap delete states fall back to the V1 route and read the same rows") {
+    // the fallback's reason to exist: delete states past the driver-held
+    // set caps. Each cap at 0 in turn sends every read below through it.
+    spark.sql("""CREATE TABLE ncat.nat_cap (id BIGINT, lang STRING,
+                 body STRING, n BIGINT) USING iceberg PARTITIONED BY (lang)""")
+    val dir = s"$wh/nat_cap"
+    docs(200).writeTo("ncat.nat_cap").append()
+    IcebergLite.deleteWhereMOR(spark, dir, col("id") % 7 === 0)
+    IcebergLite.equalityDeleteMOR(spark, dir, (1L to 50L).toDF("id"))
+    val sPinned = IcebergLite.snapshotIds(spark, dir).last
+    // upsert: re-appended keys postdate the equality delete and survive
+    docs(20).withColumn("n", col("n") + 5000L).writeTo("ncat.nat_cap").append()
+    val pinnedWant = (1 to 200).filter(i => i % 7 != 0 && i > 50)
+      .map(i => (i.toLong, s"w${i % 7}", i * 3L))
+    val currentWant = (pinnedWant ++
+      (1 to 20).map(i => (i.toLong, s"w${i % 7}", i * 3L + 5000L))).sorted
+
+    def rows(t: DataFrame): Seq[(Long, String, Long)] =
+      t.select("id", "lang", "n").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
+    val reads = Seq(
+      "current" -> (() => spark.table("ncat.nat_cap")),
+      "filtered" -> (() => spark.table("ncat.nat_cap").filter(col("id") > 30)),
+      "pinned" -> (() => spark.sql(
+        s"SELECT * FROM ncat.nat_cap VERSION AS OF $sPinned")))
+    val wants = Map("current" -> currentWant,
+      "filtered" -> currentWant.filter(_._1 > 30), "pinned" -> pinnedWant.sorted)
+    val uncapped = reads.map { case (k, q) =>
+      assert(q().queryExecution.executedPlan.toString.contains("GraftNativeScan"),
+        s"$k: uncapped read did not plan natively")
+      k -> rows(q())
+    }.toMap
+    Seq("spark.graft.nativeScan.morDeletes.maxRows",
+        "spark.graft.nativeScan.morDeletes.maxEqRows").foreach { cap =>
+      val saved = spark.conf.getOption(cap)
+      spark.conf.set(cap, "0")
+      try reads.foreach { case (k, q) =>
+        val plan = q().queryExecution.executedPlan.toString
+        assert(!plan.contains("GraftNativeScan"), s"$cap=0, $k:\n$plan")
+        val got = rows(q())
+        assert(got === uncapped(k), s"$cap=0, $k: differs from the native read")
+        assert(got === wants(k), s"$cap=0, $k")
+      } finally saved match {
+        case Some(v) => spark.conf.set(cap, v)
+        case None => spark.conf.unset(cap)
+      }
+    }
+  }
+
+  test("readTable over 40+ files submits only the scan's own jobs") {
+    // the manifests name every file: no directory listing job, however
+    // many files the snapshot holds
+    val dir = s"$wh/many_files"
+    IcebergLite.createTable(spark, spark.range(0, 450)
+      .selectExpr("id", "CAST(id % 45 AS INT) AS p"), dir, partitionBy = Seq("p"))
+    assert(IcebergLite.scanFileCount(spark, dir, Nil)._2 >= 40)
+    val jobs = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[String]())
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(e.stageInfos.map(_.name).mkString(";")))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      assert(IcebergLite.readTable(spark, dir).count() === 450L)
+      org.apache.spark.sql.GraftPlanShim.drainListeners(spark)
+    } finally spark.sparkContext.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    val seen = jobs.asScala.toSeq
+    assert(!seen.exists(_.contains("Listing leaf files")), seen.mkString("\n"))
+    // the count's scan stage and its final aggregate, nothing else
+    assert(seen.size <= 2, seen.mkString("\n"))
   }
 }

@@ -16,10 +16,9 @@ import graft.sources.{GraftIcebergTable, GraftNativeBatchScan, GraftTableCatalog
 object IcebergSqlAudit {
   /** Data files the frame's native Iceberg scans plan (sum over the
     * [[GraftNativeBatchScan]]s of its OPTIMIZED plan — optimization is
-    * where the V2 scan builder prunes the file set), at any snapshot and
-    * across schema/spec generations. The catalog's V1 fallback (delete
-    * states past the native scan's caps) plans its files only when it
-    * runs, and counts 0. */
+    * where the V2 scan builder prunes the file set), at any snapshot,
+    * across schema/spec generations and with or without merge-on-read
+    * deletes: every read of a table's data files is such a scan. */
   def scannedFiles(df: DataFrame): Int =
     GraftPlanShim.optimizedPlan(df).collect {
       case DataSourceV2ScanRelation(_, scan: GraftNativeBatchScan, _, _, _) =>

@@ -55,13 +55,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * manifest-bounds / partition-transform / Bloom FILE SKIPPING, and
   * the surviving files are read by the native V2 batch scan
   * ([[GraftNativeBatchScan]]: statistics, DPP, storage-partitioned
-  * joins, MOR deletes applied in the reader) at the current snapshot or
-  * a pinned one, across every schema/spec generation; Spark re-applies
-  * every filter exactly. Only the delete states the native scan refuses
-  * (over the `spark.graft.nativeScan.morDeletes.*` caps, equality
-  * deletes on non-primitive keys) fall back to a `V1Scan` over
-  * [[IcebergLite.readTableWhere]], which reads through the same native
-  * reader and applies the deletes as joins. Names registered
+  * joins, merge-on-read deletes applied by each file's read task) at
+  * the current snapshot or a pinned one, across every schema/spec
+  * generation; Spark re-applies every filter exactly. Names registered
   * through [[graft.Catalog.registerIcebergTable]] are V2 relations over
   * this same table. SQL DML splits by session, not by name kind: with
   * the graft extensions, INSERT / DELETE / UPDATE / MERGE / TRUNCATE
@@ -539,7 +535,6 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
        TableCapability.TRUNCATE)).asJava
 
   // ---- read: native V2 batch scan with pushdown-driven FILE SKIPPING ------
-  // (V1Scan fallback for the delete states the native scan refuses)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder = {
@@ -630,66 +625,30 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
           agg: org.apache.spark.sql.connector.expressions.aggregate
             .Aggregation): Boolean = answerAgg(agg)
 
-      override def build(): Scan = {
-        aggAnswer match {
-          case Some((aggSchema, values)) =>
-            // the pushed metadata-aggregate answer: ONE local row, zero
-            // file reads, zero tasks (LocalScan plans as LocalTableScan)
-            return new org.apache.spark.sql.connector.read.LocalScan {
-              override def readSchema(): StructType = aggSchema
-              override def rows(): Array[
-                  org.apache.spark.sql.catalyst.InternalRow] =
-                Array(org.apache.spark.sql.catalyst.InternalRow
-                  .fromSeq(values))
-            }
-          case None => ()
-        }
-        // nested-field filters (`s.x = 3` pushes as column "s.x") have no
-        // manifest bounds: keep only preds on top-level columns
-        val preds = pushed.toSeq.flatMap(GraftTableCatalog.filterPreds)
-          .filter(p => fullSchema.fieldNames.contains(p.col))
-        // the NATIVE V2 batch scan for any snapshot and every schema/
-        // spec generation, outstanding MOR deletes applied INSIDE the
-        // scan (r19 verdict task 1 — CDC/upsert tables keep statistics,
-        // DPP and the direct parquet read): it reports
-        // KeyGroupedPartitioning for storage-partitioned joins and reads
-        // through ParquetFileFormat directly. Only the delete states
-        // nativeScanInfo refuses fall back to the exact V1 route.
-        IcebergLite.nativeScanInfo(spark, tableDir, preds,
-            allowDeletes = true, snapshotId = snapshotId) match {
-          case Some(info) =>
-            return new GraftNativeBatchScan(spark, name(), info,
-              required, pushed.toSeq)
-          case None => ()
-        }
-        val preds0 = preds
-        val readSchema0 = required
-        // NOTE deliberately no SupportsReportStatistics here: Spark
-        // wraps V1 scans in V1ScanWrapper, which does NOT forward the
-        // interface — an override would be dead code whose (eager)
-        // metadata read could only ever cost. Join statistics live on
-        // the native BatchScan; this fallback serves only the delete
-        // states past the `spark.graft.nativeScan.morDeletes.*` caps and
-        // equality deletes on non-primitive keys, and reads through the
-        // same native reader with the deletes applied as joins.
-        new V1Scan {
-          override def readSchema(): StructType = readSchema0
-          override def toV1TableScan[T <: BaseRelation with TableScan](
-              context: SQLContext): T =
-            new BaseRelation with TableScan {
-              override def sqlContext: SQLContext = context
-              override def schema: StructType = readSchema0
-              override def needConversion: Boolean = true
-              override def buildScan(): RDD[Row] = {
-                val s = context.sparkSession
-                val df =
-                  if (preds0.nonEmpty)
-                    IcebergLite.readTableWhere(s, tableDir, preds0, snapshotId)
-                  else IcebergLite.readTable(s, tableDir, snapshotId)
-                df.select(readSchema0.fieldNames.toIndexedSeq.map(col): _*).rdd
-              }
-            }.asInstanceOf[T]
-        }
+      override def build(): Scan = aggAnswer match {
+        case Some((aggSchema, values)) =>
+          // the pushed metadata-aggregate answer: ONE local row, zero
+          // file reads, zero tasks (LocalScan plans as LocalTableScan)
+          new org.apache.spark.sql.connector.read.LocalScan {
+            override def readSchema(): StructType = aggSchema
+            override def rows(): Array[
+                org.apache.spark.sql.catalyst.InternalRow] =
+              Array(org.apache.spark.sql.catalyst.InternalRow
+                .fromSeq(values))
+          }
+        case None =>
+          // nested-field filters (`s.x = 3` pushes as column "s.x") have
+          // no manifest bounds: keep only preds on top-level columns
+          val preds = pushed.toSeq.flatMap(GraftTableCatalog.filterPreds)
+            .filter(p => fullSchema.fieldNames.contains(p.col))
+          // the NATIVE V2 batch scan for any snapshot and every schema/
+          // spec generation, merge-on-read deletes applied by each
+          // file's read task: it reports statistics, runtime filtering
+          // (DPP) and KeyGroupedPartitioning for storage-partitioned
+          // joins, and reads through ParquetFileFormat directly
+          new GraftNativeBatchScan(spark, name(),
+            IcebergLite.nativeScanInfo(spark, tableDir, preds, snapshotId),
+            required, pushed.toSeq)
       }
     }
   }

@@ -46,15 +46,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * Blooms) already happened in the planning pass
   * ([[IcebergLite.nativeScanInfo]] and the DataFrame readers).
   *
-  * Outstanding merge-on-read deletes are applied in the reader
-  * (position deletes by parquet row index, equality deletes by key set
-  * with the sequence check); such scans read rows, not ColumnarBatches,
-  * as do scans whose generations need casts or NULL columns.
-  *
-  * The catalog plans every snapshot and generation here; only the
-  * delete states [[IcebergLite.nativeScanInfo]] refuses (over the
-  * `spark.graft.nativeScan.morDeletes.*` caps, non-primitive equality
-  * keys) fall back to the V1 route.
+  * Merge-on-read deletes: planning attaches to each file the delete
+  * files that apply to it, and its read task reads just those and drops
+  * the rows they name ([[GraftDeleteReaders]]) — no delete row reaches
+  * the driver or the reader factory. A scan with any attached delete
+  * reads rows, not ColumnarBatches, as do scans whose generations need
+  * casts or NULL columns.
   */
 class GraftNativeBatchScan(spark: SparkSession, tableName: String,
                            info: IcebergLite.NativeScanInfo,
@@ -102,17 +99,23 @@ class GraftNativeBatchScan(spark: SparkSession, tableName: String,
   }
 
   private val declared = info.schema
+  private val nameOf: Map[Int, String] = info.fieldIds.map(_.swap)
+  private val posDeletes = info.files.flatMap(_.posDeletes).distinct
+  private val eqDeletes = info.files.flatMap(_.eqDeletes).distinct
+  /** The key column sets of the attached equality deletes, as their
+    * files store them: each is one key-set reader of the factory. */
+  private val eqKinds = eqDeletes.map(_.keys).distinct.toIndexedSeq
+  private val hasDeletes = posDeletes.nonEmpty || eqDeletes.nonEmpty
   // equality-delete KEY columns the reader must see to apply the
   // deletes, and the row index position deletes filter on, even when
   // the caller's projection pruned them: read as extra trailing columns
   // and projected away after the delete filters
-  private val eqExtraFields: Seq[StructField] = info.deletes.toSeq
-    .flatMap(_.eqDeletes.flatMap(_._2)).distinct
-    .filterNot(required.fieldNames.contains)
-    .map(declared(_))
+  private val eqExtraFields: Seq[StructField] =
+    eqKinds.flatten.map(k => nameOf(k._1)).distinct
+      .filterNot(required.fieldNames.contains)
+      .map(declared(_))
   private val posExtra: Seq[StructField] =
-    if (info.deletes.exists(_.posDeleteFiles.nonEmpty) &&
-        !required.fieldNames.contains(PosCol))
+    if (posDeletes.nonEmpty && !required.fieldNames.contains(PosCol))
       Seq(StructField(PosCol, LongType, nullable = false))
     else Nil
   /** What every generation's rows are projected to: the caller's
@@ -224,7 +227,16 @@ class GraftNativeBatchScan(spark: SparkSession, tableName: String,
   override def toBatch: Batch = this
   override def description(): String =
     s"GraftNativeScan $tableName (${info.files.size} files) " +
-      s"PushedFilters: ${pushed.mkString("[", ", ", "]")}"
+      s"PushedFilters: ${pushed.mkString("[", ", ", "]")}" +
+      (if (!hasDeletes) ""
+       else {
+         // the delete load the read tasks apply: manifest-accounted rows
+         // of the distinct delete files attached to the planned files
+         val eqFiles = eqDeletes.flatMap(_.files).distinct
+         s" MORDeletes: [${posDeletes.size} position-delete files, " +
+           s"${eqFiles.size} equality-delete files, " +
+           s"${(posDeletes ++ eqFiles).map(_.rowCount).sum} rows]"
+       })
 
   private def catalystValue(v: Any): Any = v match {
     case null => null
@@ -272,7 +284,10 @@ class GraftNativeBatchScan(spark: SparkSession, tableName: String,
     GraftScanPartition(
       new GenericInternalRow(f.partValues.map(catalystValue).toArray),
       new GenericInternalRow((identity ++ prov).toArray),
-      f.path, f.sizeBytes, f.snapshotId, genIndex(f.gen))
+      f.path, f.sizeBytes, genIndex(f.gen),
+      f.posDeletes.map(d => GraftDeleteFile(d.path, d.sizeBytes, -1)) ++
+        f.eqDeletes.flatMap(e => e.files.map(d =>
+          GraftDeleteFile(d.path, d.sizeBytes, eqKinds.indexOf(e.keys)))))
   }
 
   // recomputed per call: runtime group filtering may shrink the file
@@ -305,48 +320,31 @@ class GraftNativeBatchScan(spark: SparkSession, tableName: String,
         activeFiles.map(_.partValues).distinct.length)
     else new UnknownPartitioning(parts.length)
 
-  /** Driver-resolved MOR delete state (read once per scan, bounded by
-    * nativeScanInfo's manifest-accounted maxRows gate): position
-    * deletes grouped per data file as sorted row indexes, equality
-    * deletes as catalyst-valued key sets bound to their columns in the
-    * [[wide]] layout. Paths normalize through
-    * [[GraftNativeReaderFactory.normPath]] so manifest renderings and
-    * the paths recorded at delete time compare scheme-insensitively. */
-  private lazy val morState: Option[GraftMorState] =
-    info.deletes.map { d =>
-      import org.apache.spark.sql.catalyst.CatalystTypeConverters
-      val posByFile: Map[String, Array[Long]] =
-        if (d.posDeleteFiles.isEmpty) Map.empty
-        else {
-          val posSchema = StructType(Seq(
-            StructField("file_path", StringType, nullable = false),
-            StructField("pos", LongType, nullable = false)))
-          spark.read.schema(posSchema).parquet(d.posDeleteFiles: _*)
-            .collect()
-            .groupBy(r => GraftNativeReaderFactory.normPath(r.getString(0)))
-            .map { case (f, rs) =>
-              f -> rs.map(_.getLong(1)).distinct.sorted
-            }
+  /** The readers of the attached delete files: one for position
+    * deletes, one per equality key column set (cast from the types its
+    * files store to the current ones, bound in the [[wide]] layout). */
+  private def deleteReaders: Option[GraftDeleteReaders] =
+    if (!hasDeletes) None
+    else {
+      val empty = StructType(Nil)
+      val posSchema = StructType(Seq(
+        StructField("file_path", StringType, nullable = false),
+        StructField("pos", LongType, nullable = false)))
+      val eq = eqKinds.map { keys =>
+        val file = StructType(keys.map { case (_, n, dt) => StructField(n, dt) })
+        val project = keys.zipWithIndex.map { case ((id, _, dt), i) =>
+          val ref = BoundReference(i, dt, nullable = true)
+          val now = declared(nameOf(id)).dataType
+          if (dt == now) ref
+          else Cast(ref, now, Option(spark.conf.get("spark.sql.session.timeZone")))
         }
-      val eq = d.eqDeletes.filter(_._3.nonEmpty).map {
-        case (delSnap, cols, paths) =>
-          val keySchema = StructType(cols.map(declared(_)))
-          val convs = keySchema.fields.map(f =>
-            CatalystTypeConverters.createToCatalystConverter(f.dataType))
-          // rows with a NULL key component can never match (the V1
-          // route's left-join semantics) — drop them from the set
-          val keys: Set[Seq[Any]] =
-            spark.read.schema(keySchema).parquet(paths: _*)
-              .collect().iterator
-              .filter(r => cols.indices.forall(!r.isNullAt(_)))
-              .map(r => cols.indices.map(i =>
-                GraftNativeReaderFactory.normKey(convs(i)(r.get(i))))
-                : Seq[Any])
-              .toSet
-          (delSnap, cols.map(c => (wide.fieldIndex(c), declared(c).dataType)),
-            keys)
+        GraftEqReader(
+          GraftParquetShim.parquetReader(spark, file, empty, file, Nil),
+          project, keys.map(k => wide.fieldIndex(nameOf(k._1))))
       }
-      GraftMorState(wide.fieldNames.indexOf(PosCol), posByFile, eq)
+      Some(GraftDeleteReaders(wide.fieldNames.indexOf(PosCol),
+        GraftParquetShim.parquetReader(spark, posSchema, empty, posSchema, Nil),
+        eq))
     }
 
   /** How one generation's files read: the file columns the scan needs
@@ -426,11 +424,11 @@ class GraftNativeBatchScan(spark: SparkSession, tableName: String,
     val bound = reads.forall(_.project.forall(_.isInstanceOf[BoundReference]))
     val batchable = reads.forall(r => GraftParquetShim.supportsBatchRead(
       spark, StructType(r.read.fields ++ r.part.fields)))
-    val columnar = info.deletes.isEmpty && bound && batchable
+    val columnar = !hasDeletes && bound && batchable
     // never fall back to rows SILENTLY: supportBatch declines
     // nested/wide schemas without a trace, and a row-mode 100 TB scan
     // that should have been columnar is worth a log line
-    if (info.deletes.isEmpty && !columnar) logInfo(
+    if (!hasDeletes && !columnar) logInfo(
       s"native scan of $tableName reads ROWS, not ColumnarBatches: " +
         (if (!bound) s"files of ${gens.size} schema/spec generation(s) " +
           "need columns cast up or filled with NULL"
@@ -446,7 +444,7 @@ class GraftNativeBatchScan(spark: SparkSession, tableName: String,
       GraftGenReader(fn, r.project)
     }
     GraftNativeReaderFactory(readers, columnar, wide.map(_.dataType),
-      required.size, morState)
+      required.size, deleteReaders)
   }
 }
 
@@ -510,27 +508,82 @@ class GraftFileSetTable(tableName: String, info: IcebergLite.NativeScanInfo)
 /** One file's input partition: `key` spans the file's spec (the SPJ
   * identity); `partRow` holds the constant columns the parquet reader
   * appends (identity partition values, then any requested provenance);
-  * `snapshotId` is the file's entry snapshot (the equality-delete
-  * sequence anchor); `gen` indexes the reader factory's generations. */
+  * `gen` indexes the reader factory's generations; `deletes` are the
+  * delete files that apply to this file. */
 case class GraftScanPartition(key: InternalRow, partRow: InternalRow,
-                              path: String, size: Long, snapshotId: Long,
-                              gen: Int)
+                              path: String, size: Long, gen: Int,
+                              deletes: Seq[GraftDeleteFile] = Nil)
     extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow = key
   def file: PartitionedFile =
     GraftParquetShim.partitionedFile(partRow, path, size)
 }
 
-/** Driver-resolved MOR delete state shipped with the reader factory
-  * (KB-to-MB scale, gated by nativeScanInfo's manifest-accounted row
-  * cap): the row index's column in the wide layout, position deletes
-  * per normalized data-file path as sorted row indexes, equality
-  * deletes as (delete snapshot, key column bindings in the wide layout,
-  * catalyst-valued key set). */
-case class GraftMorState(
+/** A delete file a read task applies: `kind` -1 for position deletes,
+  * else the index of its equality key-set reader. */
+case class GraftDeleteFile(path: String, size: Long, kind: Int)
+
+/** The reader of an equality key column set: the delete file's
+  * parquet reader, the projection of its rows to current-typed key
+  * values, and those keys' columns in the wide layout. */
+case class GraftEqReader(readerFn: PartitionedFile => Iterator[InternalRow],
+                         project: Seq[Expression], keyIdx: Seq[Int]) {
+  def keyTypes: Seq[DataType] = project.map(_.dataType)
+}
+
+/** How a read task applies its file's deletes: the row index's column
+  * in the wide layout, the position-delete file reader, the equality
+  * key-set readers. */
+case class GraftDeleteReaders(
     posIdx: Int,
-    posByFile: Map[String, Array[Long]],
-    eq: Seq[(Long, Seq[(Int, DataType)], Set[Seq[Any]])])
+    posReader: PartitionedFile => Iterator[InternalRow],
+    eq: IndexedSeq[GraftEqReader]) {
+
+  private def rows(fn: PartitionedFile => Iterator[InternalRow],
+                   d: GraftDeleteFile): Iterator[InternalRow] =
+    GraftNativeReaderFactory.rowsOf(fn(
+      GraftParquetShim.partitionedFile(InternalRow.empty, d.path, d.size)))
+
+  /** `it` (the wide rows of the file at `path`) without the rows
+    * `deletes` name: position deletes whose `file_path` is this file in
+    * the one path identity ([[GraftNativeReaderFactory.normPath]]), and
+    * equality deletes by key — a NULL key part never matches. */
+  def filter(path: String, deletes: Seq[GraftDeleteFile],
+             it: Iterator[InternalRow]): Iterator[InternalRow] = {
+    var out = it
+    val (pos, eqs) = deletes.partition(_.kind < 0)
+    if (pos.nonEmpty) {
+      val own = GraftNativeReaderFactory.normPath(path)
+      val hits = Array.newBuilder[Long]
+      // delete files are sorted by file_path: one path check per run
+      var last: UTF8String = null
+      var hit = false
+      pos.foreach(d => rows(posReader, d).foreach { r =>
+        if (last == null || r.getUTF8String(0) != last) {
+          last = r.getUTF8String(0).copy()
+          hit = GraftNativeReaderFactory.normPath(last.toString) == own
+        }
+        if (hit) hits += r.getLong(1)
+      })
+      val d = hits.result().distinct.sorted
+      if (d.nonEmpty) out = out.filter(r =>
+        java.util.Arrays.binarySearch(d, r.getLong(posIdx)) < 0)
+    }
+    eqs.groupBy(_.kind).foreach { case (kind, files) =>
+      val e = eq(kind)
+      val proj = UnsafeProjection.create(e.project)
+      def key(r: InternalRow, at: Seq[Int]): Option[Seq[Any]] =
+        if (at.exists(r.isNullAt)) None
+        else Some(at.zip(e.keyTypes).map { case (i, dt) =>
+          GraftNativeReaderFactory.normKey(r.get(i, dt)) })
+      val keys = files.iterator.flatMap(rows(e.readerFn, _))
+        .flatMap(r => key(proj(r).copy(), e.keyTypes.indices)).toSet
+      if (keys.nonEmpty)
+        out = out.filter(r => key(r, e.keyIdx).forall(!keys.contains(_)))
+    }
+    out
+  }
+}
 
 /** One generation's serialized `ParquetFileFormat` reader and the
   * projection of its layout onto the scan's wide layout. */
@@ -550,8 +603,8 @@ case class GraftNativeReaderFactory(
     columnar: Boolean,
     wideTypes: Seq[DataType],
     width: Int,
-    /** outstanding MOR deletes the reader applies row-level. */
-    mor: Option[GraftMorState] = None)
+    /** the readers of the partitions' delete files, when any has one */
+    deletes: Option[GraftDeleteReaders] = None)
     extends PartitionReaderFactory {
 
   override def supportColumnarReads(p: InputPartition): Boolean = columnar
@@ -588,33 +641,9 @@ case class GraftNativeReaderFactory(
     new PartitionReader[InternalRow] {
       private val it: Iterator[InternalRow] = {
         val proj = UnsafeProjection.create(g.project)
-        var rows: Iterator[InternalRow] =
-          g.readerFn(gp.file).asInstanceOf[Iterator[Object]].flatMap {
-            case b: ColumnarBatch => b.rowIterator().asScala
-            case r: InternalRow => Iterator.single(r)
-          }.map(proj)
-        mor.foreach { m =>
-          m.posByFile.get(GraftNativeReaderFactory.normPath(gp.path))
-            .foreach { d =>
-              rows = rows.filter(r =>
-                java.util.Arrays.binarySearch(d, r.getLong(m.posIdx)) < 0)
-            }
-          // an equality delete drops matching rows only from files
-          // whose entry snapshot PREDATES it — a later re-append of the
-          // same key survives (the upsert contract, as on the V1 route)
-          val eqs = m.eq.filter(_._1 > gp.snapshotId)
-          if (eqs.nonEmpty) rows = rows.filter { r =>
-            eqs.forall { case (_, keyIdx, keys) =>
-              var hasNull = false
-              val key: Seq[Any] = keyIdx.map { case (i, dt) =>
-                if (r.isNullAt(i)) { hasNull = true; null }
-                else GraftNativeReaderFactory.normKey(r.get(i, dt))
-              }
-              // NULL key components never match (left-join semantics)
-              hasNull || !keys.contains(key)
-            }
-          }
-        }
+        var rows = GraftNativeReaderFactory.rowsOf(g.readerFn(gp.file)).map(proj)
+        if (gp.deletes.nonEmpty)
+          deletes.foreach(d => rows = d.filter(gp.path, gp.deletes, rows))
         if (wideTypes.size == width) rows
         else rows.map(UnsafeProjection.create(wideTypes.take(width)
           .zipWithIndex.map { case (t, i) =>
@@ -630,6 +659,14 @@ case class GraftNativeReaderFactory(
 }
 
 object GraftNativeReaderFactory {
+  /** A row-mode parquet reader's rows (the vectorized reader may still
+    * hand whole ColumnarBatches smuggled as rows). */
+  def rowsOf(it: Iterator[InternalRow]): Iterator[InternalRow] =
+    it.asInstanceOf[Iterator[Object]].flatMap {
+      case b: ColumnarBatch => b.rowIterator().asScala
+      case r: InternalRow => Iterator.single(r)
+    }
+
   /** Scheme-insensitive path identity, the one rule file matches use:
     * manifest `file_path` strings and the paths recorded inside
     * position-delete files can disagree on scheme/authority ("file:/x"
@@ -641,14 +678,16 @@ object GraftNativeReaderFactory {
     if (path == null || path.isEmpty) p else path
   }
 
-  /** Join-semantics float normalization (what the V1 route's real join
-    * gets from NormalizeFloatingNumbers): -0.0 keys as 0.0; boxed NaN
-    * already compares equal across bit patterns. */
+  /** Join-semantics key values (what a real join gets from
+    * NormalizeFloatingNumbers and binary comparison): -0.0 keys as 0.0
+    * (boxed NaN already compares equal across bit patterns), and binary
+    * keys wrapped to compare by content, not by array reference. */
   def normKey(v: Any): Any = v match {
     case d: java.lang.Double if d.doubleValue() == 0.0d =>
       java.lang.Double.valueOf(0.0d)
     case f: java.lang.Float if f.floatValue() == 0.0f =>
       java.lang.Float.valueOf(0.0f)
+    case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
     case other => other
   }
 }

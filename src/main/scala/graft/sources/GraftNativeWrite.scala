@@ -81,11 +81,14 @@ class GraftRowLevelOperation(tableName: String, tableDir: String,
       override def build(): org.apache.spark.sql.connector.read.Scan = {
         val preds = pushed.toSeq.flatMap(GraftTableCatalog.filterPreds)
         val info = IcebergLite.nativeScanInfo(spark, tableDir, preds)
-          .getOrElse(throw new UnsupportedOperationException(
-            s"$cmd on $tableName: the table carries merge-on-read " +
-              "deletes, which the native row-level path cannot " +
-              "represent — run IcebergLite.compact(...) first, or " +
-              "install graft.GraftExtensions and use the SQL route"))
+        // a group replacement commits a rewrite snapshot, which drops
+        // the delete manifests: deleted rows in files outside the
+        // replaced groups would come back
+        if (info.deletes.isDefined) throw new UnsupportedOperationException(
+          s"$cmd on $tableName: the table carries merge-on-read " +
+            "deletes, which the native row-level path cannot " +
+            "represent — run IcebergLite.compact(...) first, or " +
+            "install graft.GraftExtensions and use the SQL route")
         builtScan = new GraftNativeBatchScan(spark, tableName, info,
           required, pushed.toSeq)
         builtScan
@@ -96,8 +99,6 @@ class GraftRowLevelOperation(tableName: String, tableDir: String,
     new WriteBuilder {
       override def build(): Write = {
         val meta = IcebergLite.nativeScanInfo(spark, tableDir)
-          .getOrElse(throw new UnsupportedOperationException(
-            s"$cmd on $tableName: table state not native-writable"))
         new GraftReplaceGroupsWrite(spark, tableName, tableDir,
           info.schema(), meta,
           () => {
@@ -294,19 +295,23 @@ object GraftDataWriterFactory {
   * per Bloom column the filter of its values. Strings keep their
   * 17-code-point prefix: truncation is monotone in UTF-8 byte order, so
   * the prefixes of the extremes bound the column, and the 17th point
-  * tells the manifest whether the top value was truncated. */
+  * tells the manifest whether the top value was truncated. A
+  * position-delete file's `file_path` keeps whole values: readers
+  * attach the file to the data files its exact bounds cover. */
 private final class OpenDataFile(val writer: OutputWriter,
                                  val partition: Seq[Any],
                                  f: GraftDataWriterFactory) {
   private var rows = 0L
   private val orders = f.bounded.map(b => TypeUtils.getInterpretedOrdering(b._2))
+  private val exact = f.bounded.map(_._3 == IcebergLite.PosPathFieldId)
   private val lo, hi = new Array[Any](f.bounded.size)
   private val blooms = f.blooms.map(_ =>
     BloomFilter.create(GraftDataWriterFactory.BloomExpectedItems,
       GraftDataWriterFactory.BloomFpp))
 
-  private def prefix(v: Any): Any = v match {
-    case s: UTF8String => if (s.numChars() <= 17) s.copy() else s.substring(0, 17)
+  private def prefix(i: Int, v: Any): Any = v match {
+    case s: UTF8String =>
+      if (exact(i) || s.numChars() <= 17) s.copy() else s.substring(0, 17)
     case other => other
   }
 
@@ -319,14 +324,15 @@ private final class OpenDataFile(val writer: OutputWriter,
       if (v != null) {
         // a prefix is ≤ its value, so only v < lo can lower the min's
         // prefix; v > hi raises the max's unless it merely extends it
-        if (lo(i) == null) { lo(i) = prefix(v); hi(i) = lo(i) }
+        if (lo(i) == null) { lo(i) = prefix(i, v); hi(i) = lo(i) }
         else {
-          if (orders(i).lt(v, lo(i))) lo(i) = prefix(v)
+          if (orders(i).lt(v, lo(i))) lo(i) = prefix(i, v)
           if (orders(i).gt(v, hi(i)) && !(v match {
-              case s: UTF8String => s.startsWith(hi(i).asInstanceOf[UTF8String]) &&
+              case s: UTF8String => !exact(i) &&
+                s.startsWith(hi(i).asInstanceOf[UTF8String]) &&
                 hi(i).asInstanceOf[UTF8String].numChars() == 17
               case _ => false
-            })) hi(i) = prefix(v)
+            })) hi(i) = prefix(i, v)
         }
       }
       i += 1
@@ -349,7 +355,7 @@ private final class OpenDataFile(val writer: OutputWriter,
     val bounds = f.bounded.indices.filter(lo(_) != null).map { i =>
       val (_, dt, fid) = f.bounded(i)
       def ext(v: Any) = if (dt == StringType) v.toString else v
-      (fid, IcebergLite.boundPair(dt, ext(lo(i)), ext(hi(i))))
+      (fid, IcebergLite.boundPair(dt, ext(lo(i)), ext(hi(i)), exact(i)))
     }
     GraftDataFile(writer.path(), partition, rows, size,
       bounds.flatMap { case (fid, (l, _)) => l.map(fid -> _) },

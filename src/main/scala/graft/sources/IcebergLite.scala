@@ -10,6 +10,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, GraftParquetShim, GraftPlanShim, SparkSession}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Iceberg TABLE-FORMAT read/write without the Iceberg runtime — the
   * lakehouse leg the reference's `init_neutron_data.py` /
@@ -31,7 +32,8 @@ import org.apache.spark.sql.types._
   * evolution (add/rename/widen), manifest column bounds + file-skipping
   * reads, plus the v2 MERGE-ON-READ delete mechanisms — position
   * deletes (deleteWhereMOR: content=1 delete manifests over
-  * (file_path, pos) parquet; readers anti-join) and EQUALITY deletes
+  * (file_path, pos) parquet; each read task drops its file's named
+  * rows) and EQUALITY deletes
   * (equalityDeleteMOR: content=2 manifests whose key-row parquet drops
   * matches from files predating the delete — the CDC/upsert shape;
   * compact applies both physically) carried on the v1-lite metadata
@@ -215,6 +217,11 @@ object IcebergLite {
           ]}}
       ]}""")
 
+  /** The Iceberg-reserved field ids of a position-delete file's columns:
+    * the data file's path and the row's position in it. */
+  private[sources] val PosPathFieldId = 2147483546
+  private[sources] val PosFieldId = 2147483545
+
   /** First `n` CODE POINTS of `s` (never splits a surrogate pair —
     * splitting would corrupt the UTF-8 bound bytes). */
   private def cpTake(s: String, n: Int): String = {
@@ -282,10 +289,12 @@ object IcebergLite {
     * bound is the 16-point prefix (≤ every value); the upper is the
     * exact value when nothing was truncated, else the incremented
     * prefix (> every prefix-sharing value), and no upper bound at all
-    * when no code point can be incremented (conservative). */
-  private[sources] def boundPair(dt: DataType, lo: Any, hi: Any)
+    * when no code point can be incremented (conservative). `exact`
+    * bounds (a position-delete file's `file_path`) keep whole values. */
+  private[sources] def boundPair(dt: DataType, lo: Any, hi: Any,
+                                 exact: Boolean = false)
       : (Option[Array[Byte]], Option[Array[Byte]]) = dt match {
-    case StringType =>
+    case StringType if !exact =>
       val l = lo.toString
       val h = hi.toString
       (boundBytes(dt, cpTake(l, 16)),
@@ -1363,94 +1372,86 @@ object IcebergLite {
     * schema by field id, plus the provenance columns `__file` (the
     * manifest's `file_path`, verbatim), `__pos` (the row's position in
     * its file, the address a position delete names) and `__fsnap` (the
-    * file's entry snapshot). No delete is applied; columns the frame's
-    * consumers do not use prune away before the scan reads them. */
+    * file's entry snapshot). With `deletes` each file carries the
+    * merge-on-read deletes that apply to it ([[withDeletes]]), which
+    * its read task drops; columns the frame's consumers do not use
+    * prune away before the scan reads them. */
   private def scanFrame(spark: SparkSession, meta: TableMeta,
-                        files: Seq[NativeFileInfo]): DataFrame =
+                        files: Seq[NativeFileInfo],
+                        deletes: Boolean = false): DataFrame =
     GraftPlanShim.ofRows(spark, DataSourceV2Relation.create(
-      new GraftFileSetTable(meta.dir, scanInfo(meta, files, None)),
+      new GraftFileSetTable(meta.dir,
+        if (deletes) withDeletes(spark, meta, files, coversWholeTable = false)
+        else scanInfo(meta, files, None)),
       None, None))
 
-  /** [[scanFrame]] with the snapshot's merge-on-read deletes applied
-    * ([[applyDeletes]]); keeps `__file` and `__pos`. */
+  /** [[scanFrame]] with the snapshot's merge-on-read deletes applied;
+    * keeps `__file` and `__pos`. */
   private def readFiles(spark: SparkSession, meta: TableMeta,
                         files: Seq[NativeFileInfo]): DataFrame =
-    applyDeletes(spark, meta, scanFrame(spark, meta, files))
+    scanFrame(spark, meta, files, deletes = true).drop("__fsnap")
 
-  /** Merge-on-read: anti-join the frame's (__file, __pos) provenance
-    * against the live position-delete files, then apply EQUALITY
-    * deletes with sequence semantics — an equality-delete file drops
-    * matching rows only from data files written BEFORE it (the row's
-    * `__fsnap` entry snapshot < delete snapshot), so a later re-append
-    * of the same key survives: the upsert contract. A no-op (no join in
-    * the plan at all) when the snapshot carries no deletes of either
-    * kind. Drops `__fsnap`. */
-  private def applyDeletes(spark: SparkSession, meta: TableMeta,
-                           df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val deletes = liveDeleteFiles(spark, meta)
-    val pos =
-      if (deletes.isEmpty) df
-      else df.join(spark.read.parquet(deletes: _*),
-        col("__file") === col("file_path") && col("__pos") === col("pos"),
-        "left_anti")
-    liveEqualityDeletes(spark, meta).sortBy(_._1).foldLeft(pos) {
-      case (out, (delSnap, keyCols, paths)) =>
-        // plain (AQE-broadcastable) left join marks hits; the filter
-        // keeps a hit only when its file predates the delete. NULL key
-        // values never match (left-join null semantics) — documented.
-        val keys = spark.read.parquet(paths: _*).distinct()
-          .withColumn("__eqhit", lit(1))
-        out.join(keys, keyCols, "left")
-          .filter(col("__eqhit").isNull || col("__fsnap") >= lit(delSnap))
-          .drop("__eqhit")
-    }.drop("__fsnap")
+  /** The scan plan of `files` with the live delete files that apply to
+    * each attached, by the Iceberg scan-planning rule: an equality
+    * delete applies to the files its snapshot postdates (a later
+    * re-append of a deleted key survives — the upsert contract), a
+    * position delete to the files its `file_path` bounds cover
+    * ([[pathBounds]]). */
+  private def withDeletes(spark: SparkSession, meta: TableMeta,
+                          files: Seq[NativeFileInfo],
+                          coversWholeTable: Boolean): NativeScanInfo =
+    if (!meta.manifests.exists(_.content != 0)) scanInfo(meta, files, None)
+    else {
+      val pos = liveDeleteFiles(spark, meta).map { case (d, lo, hi) =>
+        (d, pathBounds(lo, hi))
+      }
+      val eqs = liveEqualityDeletes(spark, meta)
+      scanInfo(meta, files.map { f =>
+        val key = UTF8String.fromString(GraftNativeReaderFactory.normPath(f.path))
+        f.copy(posDeletes = pos.collect { case (d, covers) if covers(key) => d },
+          eqDeletes = eqs.filter(_.snapshotId > f.snapshotId))
+      }, Some(NativeDeletes(
+        meta.manifests.filter(_.content == 1).map(_.totalRows).sum,
+        coversWholeTable)))
+    }
+
+  /** Which normalized data-file paths ([[GraftNativeReaderFactory.normPath]],
+    * the one path identity) a position-delete file's `file_path` bounds
+    * cover, in UTF-8 byte order: all of them when a bound is missing or
+    * the two render their scheme and authority differently. When both
+    * share that prefix, so does every value between them, and the
+    * normalized values keep their order — truncated bounds included. */
+  private def pathBounds(lo: Option[String],
+                         hi: Option[String]): UTF8String => Boolean = {
+    def split(v: String) =
+      scala.util.Try(GraftNativeReaderFactory.normPath(v)).toOption
+        .filter(n => n.startsWith("/") && v.endsWith(n))
+        .map(n => (v.dropRight(n.length), UTF8String.fromString(n)))
+    (lo.flatMap(split), hi.flatMap(split)) match {
+      case (Some((lp, l)), Some((hp, h))) if lp == hp =>
+        k => l.compareTo(k) <= 0 && k.compareTo(h) <= 0
+      case _ => _ => true
+    }
   }
 
-  /** Live EQUALITY-delete manifests: (delete snapshot, key columns,
-    * delete-file paths), oldest first. */
+  /** Live EQUALITY deletes, oldest first: each manifest's snapshot, its
+    * key columns resolved by FIELD ID (`equality-ids`) in the schema the
+    * delete was written under — so a renamed key column still matches —
+    * and its delete files. */
   private def liveEqualityDeletes(spark: SparkSession, meta: TableMeta)
-      : Seq[(Long, Seq[String], Seq[String])] =
+      : Seq[NativeEqualityDelete] =
     meta.manifests.filter(_.content == 2).map { m =>
       val p = new Path(m.path)
-      val cols = manifestMetaString(spark, p, "equality-cols")
+      val ids = manifestMetaString(spark, p, "equality-ids")
         .getOrElse(sys.error(s"equality manifest ${m.path} has no " +
-          "equality-cols metadata")).split(",").toSeq
-      val paths = readManifest(spark, p)._1
-        .filter(_.get("status").asInstanceOf[Int] != 2)
-        .map(_.get("data_file").asInstanceOf[GenericRecord]
-          .get("file_path").toString)
-      (m.addedBy, cols, paths)
+          "equality-ids metadata")).split(",").map(_.toInt).toSeq
+      val (recs, schemaJs) = readManifest(spark, p)
+      val written = topFields(new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(schemaJs)).map(f2 => f2._1 -> (f2._2, f2._3)).toMap
+      NativeEqualityDelete(m.addedBy,
+        ids.map(id => (id, written(id)._1, written(id)._2)),
+        deleteEntries(recs).map(_._1))
     }
-
-  /** data-file path → the snapshot that ADDED it (entry snapshot_id —
-    * stable across rewrites that carry entries as EXISTING). */
-  private def dataFileSnapshots(spark: SparkSession, meta: TableMeta)
-      : Map[String, Long] =
-    meta.manifests.filter(_.content == 0).flatMap { m =>
-      readManifest(spark, new Path(m.path))._1
-        .filter(_.get("status").asInstanceOf[Int] != 2)
-        .map(e => e.get("data_file").asInstanceOf[GenericRecord]
-          .get("file_path").toString ->
-          e.get("snapshot_id").asInstanceOf[Long])
-    }.toMap
-
-  /** Data files an outstanding EQUALITY delete still applies to (entry
-    * snapshot predates a live equality-delete manifest). Any rewrite
-    * that drops delete manifests (deleteWhere, compactSmallFiles) must
-    * rewrite these with the deletes applied, or dropped rows would
-    * resurrect. */
-  private def eqAffectedFiles(spark: SparkSession,
-                              meta: TableMeta): Set[String] = {
-    val eqs = liveEqualityDeletes(spark, meta)
-    if (eqs.isEmpty) Set.empty
-    else {
-      val maxEq = eqs.map(_._1).max
-      dataFileSnapshots(spark, meta).collect {
-        case (p2, s2) if s2 < maxEq => p2
-      }.toSet
-    }
-  }
 
   private def manifestMetaString(spark: SparkSession, p: Path,
                                  key: String): Option[String] = {
@@ -1477,14 +1478,25 @@ object IcebergLite {
     pruneFiles(spark, meta, Nil)._1
 
   /** Live POSITION-DELETE files (merge-on-read): parquet files of
-    * (file_path, pos) rows committed through content=1 manifests. */
+    * (file_path, pos) rows committed through content=1 manifests, each
+    * with its recorded `file_path` (lower, upper) bounds. */
   private def liveDeleteFiles(spark: SparkSession, meta: TableMeta)
-      : Seq[String] =
-    meta.manifests.filter(_.content == 1).flatMap { m =>
-      readManifest(spark, new Path(m.path))._1
-        .filter(_.get("status").asInstanceOf[Int] != 2)
-        .map(_.get("data_file").asInstanceOf[GenericRecord]
-          .get("file_path").toString)
+      : Seq[(NativeDeleteFile, Option[String], Option[String])] =
+    meta.manifests.filter(_.content == 1).flatMap(m =>
+      deleteEntries(readManifest(spark, new Path(m.path))._1))
+
+  /** The live delete files of a delete manifest's entries, with their
+    * `file_path` bounds (position deletes record them). */
+  private def deleteEntries(recs: Seq[GenericRecord])
+      : Seq[(NativeDeleteFile, Option[String], Option[String])] =
+    recs.filter(_.get("status").asInstanceOf[Int] != 2).map { e =>
+      val d = e.get("data_file").asInstanceOf[GenericRecord]
+      def bound(key: String) = entryBounds(d, key).get(PosPathFieldId)
+        .map(new String(_, java.nio.charset.StandardCharsets.UTF_8))
+      (NativeDeleteFile(d.get("file_path").toString,
+        d.get("file_size_in_bytes").asInstanceOf[Long],
+        d.get("record_count").asInstanceOf[Long]),
+        bound("lower_bounds"), bound("upper_bounds"))
     }
 
   /** Top-level (field-id, name, type, required) of a schema json. */
@@ -1709,12 +1721,16 @@ object IcebergLite {
     * applied, or deleted rows would resurrect. */
   private def deleteNamedFiles(spark: SparkSession, meta: TableMeta,
                                files: Seq[NativeFileInfo]): Set[String] = {
-    val dels = liveDeleteFiles(spark, meta)
+    val dels = liveDeleteFiles(spark, meta).map(_._1.path)
     val posRefs =
       if (dels.isEmpty) Set.empty[String]
       else spark.read.parquet(dels: _*).select("file_path").distinct()
         .collect().map(_.getString(0)).toSet
-    (posRefs ++ eqAffectedFiles(spark, meta)) & files.map(_.path).toSet
+    // an equality delete applies to every file its snapshot postdates
+    val lastEq = liveEqualityDeletes(spark, meta).map(_.snapshotId)
+      .maxOption.getOrElse(Long.MinValue)
+    (posRefs ++ files.filter(_.snapshotId < lastEq).map(_.path)) &
+      files.map(_.path).toSet
   }
 
   /** The manifest groups of a rewrite snapshot: `rows` written as new
@@ -1908,9 +1924,10 @@ object IcebergLite {
     * (file_path, pos) in position-delete parquet files committed
     * through a content=1 manifest — write cost ∝ MATCHES, zero data
     * files rewritten (vs [[deleteWhere]]'s cost ∝ affected files).
-    * Readers anti-join the delete set; [[compact]] applies deletes
-    * physically and [[deleteWhere]] force-rewrites delete-referenced
-    * files, so the two deletion paths compose. Returns rows deleted. */
+    * Each read task drops the rows named for its file; [[compact]]
+    * applies deletes physically and [[deleteWhere]] force-rewrites
+    * delete-referenced files, so the two deletion paths compose.
+    * Returns rows deleted. */
   def deleteWhereMOR(spark: SparkSession,
                      tableDir: String,
                      predicate: org.apache.spark.sql.Column): Long = {
@@ -2008,10 +2025,11 @@ object IcebergLite {
                                   meta: TableMeta, snapshotId: Long,
                                   rows: DataFrame, dirName: String,
                                   content: Int,
-                                  extraMeta: Map[String, String])
+                                  extraMeta: Map[String, String],
+                                  boundIds: Map[String, Int] = Map.empty)
       : Option[(MRef, Long)] = {
     val files = writeFiles(spark, rows, new Path(root, s"data/$dirName"),
-      Nil, Map.empty, Nil)
+      Nil, boundIds, Nil)
     val n = files.map(_.rowCount).sum
     if (n == 0) return None
     val entrySchema = manifestEntrySchema(Nil)
@@ -2027,18 +2045,23 @@ object IcebergLite {
   }
 
   /** STAGE position deletes: `(file_path, pos)` rows, one content=1
-    * manifest. */
+    * manifest. Each file is sorted by (file_path, pos) and records its
+    * whole `file_path` bounds (the spec's position-delete layout), so a
+    * reader attaches it only to the data files it can name. */
   private def stagePositionDeletes(spark: SparkSession, root: Path,
                                    meta: TableMeta, snapshotId: Long,
                                    positions: DataFrame)
       : Option[(MRef, Long)] =
-    stageDeleteManifest(spark, root, meta, snapshotId, positions,
-      s"deletes-s$snapshotId", content = 1, Map.empty)
+    stageDeleteManifest(spark, root, meta, snapshotId,
+      positions.sortWithinPartitions("file_path", "pos"),
+      s"deletes-s$snapshotId", content = 1, Map.empty,
+      Map("file_path" -> PosPathFieldId, "pos" -> PosFieldId))
 
   /** STAGE an equality delete: the key frame's distinct rows, one
     * content=2 manifest carrying the key columns by name + field id. Key
-    * columns must exist in the table schema. Returns the manifest ref +
-    * distinct key count; `None` when the key frame is empty. */
+    * columns must exist in the table schema and be primitive (Iceberg
+    * equality fields are). Returns the manifest ref + distinct key
+    * count; `None` when the key frame is empty. */
   private def stageEqualityDelete(spark: SparkSession, root: Path,
                                   meta: TableMeta, snapshotId: Long,
                                   keys: DataFrame): Option[(MRef, Long)] = {
@@ -2046,14 +2069,20 @@ object IcebergLite {
     val declared = declaredSchema(meta)
     val keyCols = keys.schema.fieldNames.toSeq
     require(keyCols.nonEmpty, "equality delete needs at least one key column")
-    keyCols.foreach(c => require(declared.fieldNames.contains(c),
-      s"equality column $c not in the table schema"))
-    // cast to the DECLARED types so the MOR join is type-exact even if
+    keyCols.foreach { c =>
+      require(declared.fieldNames.contains(c),
+        s"equality column $c not in the table schema")
+      require(!declared(c).dataType.isInstanceOf[StructType] &&
+        !declared(c).dataType.isInstanceOf[ArrayType] &&
+        !declared(c).dataType.isInstanceOf[MapType], s"equality column $c " +
+        s"is ${declared(c).dataType.simpleString}: keys must be primitive")
+    }
+    // cast to the DECLARED types so key matching is type-exact even if
     // the caller hands narrower literals
     val casted = keys.select(keyCols.map(c =>
       col(c).cast(declared(c).dataType).as(c)): _*).distinct()
-    // key columns ride the manifest metadata by NAME + field id (ids are
-    // the evolution-stable identity; names are what the MOR join uses)
+    // key columns ride the manifest metadata by NAME + field id; readers
+    // resolve them by id (evolution-stable), the names are the files'
     stageDeleteManifest(spark, root, meta, snapshotId, casted,
       s"eqdel-s$snapshotId", content = 2,
       Map("equality-cols" -> keyCols.mkString(","),
@@ -2242,24 +2271,29 @@ object IcebergLite {
     * values as JVM values (Integer/Long/String/null) aligned to the
     * file's OWN spec (`gen.spec`), the record count, the ENTRY snapshot
     * id (what equality-delete sequence checks compare against — stable
-    * across rewrites that carry entries as EXISTING, same as
-    * [[dataFileSnapshots]]) and the file's generation. */
+    * across rewrites that carry entries as EXISTING), the file's
+    * generation, and the merge-on-read deletes that apply to it
+    * (attached by [[withDeletes]]; the read task applies exactly
+    * these). */
   case class NativeFileInfo(path: String, sizeBytes: Long,
                             partValues: Seq[Any], rowCount: Long,
-                            snapshotId: Long, gen: NativeGeneration)
+                            snapshotId: Long, gen: NativeGeneration,
+                            posDeletes: Seq[NativeDeleteFile] = Nil,
+                            eqDeletes: Seq[NativeEqualityDelete] = Nil)
 
-  /** Outstanding merge-on-read deletes of the scanned snapshot, in
-    * planning shape for the native scan (r19 verdict task 1): the scan
-    * applies position deletes as a per-file row-index anti-filter and
-    * equality deletes as driver-resolved key sets with entry-snapshot
-    * sequence checks — the exact [[applyDeletes]] semantics, so
-    * CDC/upsert tables keep statistics, DPP and the direct parquet
-    * read instead of dropping to the stat-less V1 fallback. */
+  /** A merge-on-read delete file as its manifest entry records it. */
+  case class NativeDeleteFile(path: String, sizeBytes: Long, rowCount: Long)
+
+  /** One equality delete: its snapshot, its key columns as the delete
+    * files store them — (field id, write-time name, write-time type) —
+    * and its files. */
+  case class NativeEqualityDelete(snapshotId: Long,
+                                  keys: Seq[(Int, String, DataType)],
+                                  files: Seq[NativeDeleteFile])
+
+  /** Present when the scanned snapshot carries merge-on-read deletes
+    * (each planned file carries its own, see [[NativeFileInfo]]). */
   case class NativeDeletes(
-      posDeleteFiles: Seq[String],
-      /** (delete snapshot, key column names, delete parquet paths),
-        * oldest first — [[liveEqualityDeletes]] order. */
-      eqDeletes: Seq[(Long, Seq[String], Seq[String])],
       /** manifest-accounted position-delete row total (statistics). */
       posDeleteRows: Long,
       /** true iff NO predicate pruning shaped the planned file set —
@@ -2272,8 +2306,8 @@ object IcebergLite {
   /** The NATIVE V2 scan plan of a table: the current schema and its
     * field ids, the DEFAULT spec (items, value types, id), the persisted
     * sort order, the bounds/partition/Bloom-pruned live file set of the
-    * scanned snapshot, and any outstanding MOR deletes the scan must
-    * apply. */
+    * scanned snapshot (each file with the deletes the scan applies to
+    * it), and whether the snapshot carries merge-on-read deletes. */
   case class NativeScanInfo(schema: StructType, fieldIds: Map[String, Int],
                             specItems: Seq[String],
                             spec: Seq[(IcebergTransforms.PartField, DataType)],
@@ -2291,69 +2325,18 @@ object IcebergLite {
   }
 
   /** Plan a NATIVE V2 batch scan of the current snapshot (or
-    * `snapshotId`), over files of every schema/spec generation, or
-    * `None` when only the V1 route can represent the delete state:
-    * outstanding merge-on-read deletes unless the caller opts in with
-    * `allowDeletes` (READ paths apply them inside the scan; the
-    * row-level DML path keeps refusing, so group replacement semantics
-    * are unchanged), delete states larger than
-    * `spark.graft.nativeScan.morDeletes.maxRows` /
-    * `.maxEqRows` (manifest-accounted before any file is read: the
-    * native scan resolves deletes into driver-held sets, and past that
-    * size the V1 route's distributed anti-join is the right tool), and
-    * equality deletes keyed on a non-primitive column. File skipping is
-    * the SAME [[pruneFiles]] pass the DataFrame readers use (manifest
-    * bounds, partition transforms, Bloom sidecars). */
+    * `snapshotId`), over files of every schema/spec generation, each
+    * with the merge-on-read deletes that apply to it ([[withDeletes]]).
+    * File skipping is the SAME [[pruneFiles]] pass the DataFrame
+    * readers use (manifest bounds, partition transforms, Bloom
+    * sidecars). */
   private[sources] def nativeScanInfo(spark: SparkSession, tableDir: String,
                                       preds: Seq[Pred] = Nil,
-                                      allowDeletes: Boolean = false,
                                       snapshotId: Option[Long] = None)
-      : Option[NativeScanInfo] = {
-    val hint = new Path(tableDir, "metadata/version-hint.text")
-    if (!fs(spark, hint).exists(hint)) return None
+      : NativeScanInfo = {
     val meta = readMeta(spark, tableDir, snapshotId)
-    val hasDeletes = meta.manifests.exists(_.content != 0)
-    if (hasDeletes) {
-      if (!allowDeletes) return None
-      // position deletes resolve to Array[Long] per file (~32 MB at the
-      // 4M default); equality deletes resolve to a Set of boxed key
-      // TUPLES — a far heavier shape (~100-250 B/row) — so they carry
-      // their own, much lower cap. Past either cap the V1 route's
-      // distributed anti-join is the right tool.
-      val posRows =
-        meta.manifests.filter(_.content == 1).map(_.totalRows).sum
-      val eqRows =
-        meta.manifests.filter(_.content == 2).map(_.totalRows).sum
-      val posCap = spark.conf
-        .get("spark.graft.nativeScan.morDeletes.maxRows", "4000000").toLong
-      val eqCap = spark.conf
-        .get("spark.graft.nativeScan.morDeletes.maxEqRows", "1000000").toLong
-      if (posRows > posCap || eqRows > eqCap) return None
-    }
-    val schema = declaredSchema(meta)
-    val deletes =
-      if (!hasDeletes) None
-      else {
-        val eqs = liveEqualityDeletes(spark, meta)
-        // the reader applies equality deletes by JVM value equality of
-        // boxed key tuples — exact for the primitive/string/temporal
-        // family, but Array[Byte] (binary) and nested values compare by
-        // REFERENCE, which would silently resurrect deleted rows. Gate
-        // on key types; anything outside the proven set keeps the V1
-        // route's real join.
-        val eqKeyTypesOk = eqs.flatMap(_._2).distinct.forall { c =>
-          schema.fields.find(_.name == c).map(_.dataType).exists {
-            case _: NumericType | StringType | BooleanType | DateType |
-                 TimestampType | TimestampNTZType => true
-            case _ => false
-          }
-        }
-        if (!eqKeyTypesOk) return None
-        Some(NativeDeletes(liveDeleteFiles(spark, meta), eqs,
-          meta.manifests.filter(_.content == 1).map(_.totalRows).sum,
-          coversWholeTable = preds.isEmpty))
-      }
-    Some(scanInfo(meta, pruneFiles(spark, meta, preds)._1, deletes))
+    withDeletes(spark, meta, pruneFiles(spark, meta, preds)._1,
+      coversWholeTable = preds.isEmpty)
   }
 
   /** The snapshot id the NEXT commit will take — the native V2 write
@@ -3655,7 +3638,7 @@ object IcebergLite {
       val op = om.readTree(summary).get("operation").asText()
       val posManifests = metaTo.manifests
         .filter(m => m.content == 1 && m.addedBy == sid)
-      val eqDeletes = eqDeletesTo.filter(_._1 == sid)
+      val eqDeletes = eqDeletesTo.filter(_.snapshotId == sid)
       op match {
         case "append" =>
           scanFrame(spark, metaTo, dataEntries.filter(_.snapshotId == sid))
@@ -3693,8 +3676,12 @@ object IcebergLite {
               val metaPrev = readMeta(spark, tableDir, Some(parentId))
               val pre = readFiles(spark, metaPrev,
                 liveFileEntries(spark, metaPrev)).drop("__file", "__pos")
-              eqDeletes.map { case (_, keyCols, keys) =>
-                pre.join(spark.read.parquet(keys: _*).distinct(), keyCols)
+              val nameOf = metaTo.fieldIds.map(_.swap)
+              eqDeletes.map { d =>
+                // the key files store write-time names: join by field id
+                pre.join(spark.read.parquet(d.files.map(_.path): _*)
+                  .select(d.keys.map(k => col(k._2).as(nameOf(k._1))): _*)
+                  .distinct(), d.keys.map(k => nameOf(k._1)))
               }.reduce(_.unionByName(_))
             }
           (posLeg.toSeq ++ eqLeg.toSeq) match {

@@ -22,9 +22,8 @@ class GraftNativeSpec extends SparkSuite {
   spark.conf.set("spark.sql.catalog.ncat.warehouse", wh)
 
   /** A catalog table read through the IcebergLite DataFrame reader: the
-    * same native file reader, with the merge-on-read deletes applied as
-    * joins (the rule the catalog's V1 fallback wraps) instead of inside
-    * the scan. */
+    * same native scan and delete rule, planned from the DataFrame API
+    * instead of the catalog. */
   private def lite(table: String): DataFrame =
     IcebergLite.readTable(spark, s"$wh/$table")
 
@@ -570,10 +569,10 @@ class GraftNativeSpec extends SparkSuite {
       .toString.contains("GraftNativeScan"))
   }
 
-  test("MOR equality deletes on a BINARY key refuse the native route (reference-equality hazard)") {
-    // the reader's key sets compare boxed values; Array[Byte] compares
-    // by REFERENCE, so a binary-keyed equality delete on the native
-    // route would silently resurrect rows — it must fall back to V1
+  test("MOR equality deletes on a BINARY key apply in the native scan") {
+    // the reader's key sets wrap binary keys so they compare by content
+    // (a bare Array[Byte] compares by reference and would silently
+    // resurrect every deleted row)
     spark.sql("""CREATE TABLE ncat.nat_mor_bin (k BINARY, n BIGINT)
                  USING iceberg""")
     spark.range(1, 21)
@@ -581,14 +580,69 @@ class GraftNativeSpec extends SparkSuite {
       .writeTo("ncat.nat_mor_bin").append()
     IcebergLite.equalityDeleteMOR(spark, s"$wh/nat_mor_bin",
       Seq("3", "7").toDF("k").selectExpr("CAST(k AS BINARY) AS k"))
+    val want = (1 to 20).map(_.toString).toSet -- Set("3", "7")
     val df = spark.table("ncat.nat_mor_bin")
-    assert(!df.queryExecution.executedPlan.toString
-      .contains("GraftNativeScan"),
-      "binary-keyed equality deletes must not take the native route")
+    assert(df.queryExecution.executedPlan.toString.contains("GraftNativeScan"),
+      "binary-keyed equality deletes must plan the native scan")
     assert(df.count() === 18L)
-    // and the deletes actually applied (V1 route correctness)
-    assert(df.selectExpr("CAST(k AS STRING) AS s").collect()
-      .map(_.getString(0)).toSet === (1 to 20).map(_.toString).toSet -- Set("3", "7"))
+    Seq(df, lite("nat_mor_bin")).foreach { t =>
+      assert(t.selectExpr("CAST(k AS STRING) AS s").collect()
+        .map(_.getString(0)).toSet === want)
+    }
+  }
+
+  test("equality deletes resolve their key columns by field id across a rename") {
+    // the delete files store the key under its write-time name; after
+    // the column is renamed, every read still matches the keys by field id
+    spark.sql("CREATE TABLE ncat.nat_mor_ren (id BIGINT, v STRING) USING iceberg")
+    val dir = s"$wh/nat_mor_ren"
+    spark.range(1, 11).selectExpr("id", "CAST(id AS STRING) AS v")
+      .writeTo("ncat.nat_mor_ren").append()
+    IcebergLite.equalityDeleteMOR(spark, dir, (1L to 3L).toDF("id"))
+    val sDel = IcebergLite.snapshotIds(spark, dir).last
+    def ids(t: DataFrame): Seq[Long] =
+      t.select(t.columns.head).collect().map(_.getLong(0)).toSeq.sorted
+    assert(ids(spark.table("ncat.nat_mor_ren")) === (4L to 10L))
+    assert(ids(IcebergLite.readTable(spark, dir)) === (4L to 10L))
+    IcebergLite.renameColumn(spark, dir, "id", "key")
+    val reads = Seq(
+      "catalog" -> spark.table("ncat.nat_mor_ren"),
+      "readTable" -> IcebergLite.readTable(spark, dir),
+      "readTableWhere" -> IcebergLite.readTableWhere(spark, dir,
+        Seq(IcebergLite.GtEq("key", 0L))),
+      "pinned" -> spark.sql(s"SELECT * FROM ncat.nat_mor_ren VERSION AS OF $sDel"))
+    reads.foreach { case (k, t) =>
+      assert(t.columns.head === "key", k)
+      assert(ids(t) === (4L to 10L), k)
+    }
+    // the changelog's pre-image join resolves the same way
+    assert(IcebergLite.readChangelog(spark, dir, sDel - 1, Some(sDel))
+      .select("key").as[Long].collect().sorted.toSeq === (1L to 3L))
+    IcebergLite.compact(spark, dir)
+    assert(ids(IcebergLite.readTable(spark, dir)) === (4L to 10L))
+    assert(ids(spark.table("ncat.nat_mor_ren")) === (4L to 10L))
+  }
+
+  test("equality deletes refuse nested key columns when written") {
+    // Iceberg equality fields are primitive: a struct, array or map key
+    // is refused by name before anything is staged
+    spark.sql("""CREATE TABLE ncat.nat_mor_nestkey (id BIGINT,
+                 s STRUCT<a: INT>, tags ARRAY<STRING>, m MAP<STRING, INT>)
+                 USING iceberg""")
+    val dir = s"$wh/nat_mor_nestkey"
+    spark.range(1, 4).selectExpr("id", "named_struct('a', CAST(id AS INT)) AS s",
+        "array('t') AS tags", "map('k', CAST(id AS INT)) AS m")
+      .writeTo("ncat.nat_mor_nestkey").append()
+    val before = IcebergLite.snapshotIds(spark, dir)
+    Seq("s", "tags", "m").foreach { c =>
+      val e = intercept[IllegalArgumentException](
+        IcebergLite.equalityDeleteMOR(spark, dir,
+          spark.table("ncat.nat_mor_nestkey").select(c)))
+      assert(e.getMessage.contains(s"equality column $c") &&
+        e.getMessage.contains("primitive"), e.getMessage)
+    }
+    assert(IcebergLite.snapshotIds(spark, dir) === before)
+    assert(spark.table("ncat.nat_mor_nestkey").count() === 3L)
   }
 
   test("MOR statistics do not under-estimate a pruned scan (global delete total)") {
@@ -897,9 +951,10 @@ class GraftNativeSpec extends SparkSuite {
       current)
   }
 
-  test("over-cap delete states fall back to the V1 route and read the same rows") {
-    // the fallback's reason to exist: delete states past the driver-held
-    // set caps. Each cap at 0 in turn sends every read below through it.
+  test("large delete states read the same rows through the native scan") {
+    // no cap and no fallback: the current, a filtered and a pinned read
+    // of a table with both delete kinds all plan GraftNativeScan, and
+    // each task applies its own file's deletes
     spark.sql("""CREATE TABLE ncat.nat_cap (id BIGINT, lang STRING,
                  body STRING, n BIGINT) USING iceberg PARTITIONED BY (lang)""")
     val dir = s"$wh/nat_cap"
@@ -924,26 +979,47 @@ class GraftNativeSpec extends SparkSuite {
         s"SELECT * FROM ncat.nat_cap VERSION AS OF $sPinned")))
     val wants = Map("current" -> currentWant,
       "filtered" -> currentWant.filter(_._1 > 30), "pinned" -> pinnedWant.sorted)
-    val uncapped = reads.map { case (k, q) =>
-      assert(q().queryExecution.executedPlan.toString.contains("GraftNativeScan"),
-        s"$k: uncapped read did not plan natively")
-      k -> rows(q())
-    }.toMap
-    Seq("spark.graft.nativeScan.morDeletes.maxRows",
-        "spark.graft.nativeScan.morDeletes.maxEqRows").foreach { cap =>
-      val saved = spark.conf.getOption(cap)
-      spark.conf.set(cap, "0")
-      try reads.foreach { case (k, q) =>
-        val plan = q().queryExecution.executedPlan.toString
-        assert(!plan.contains("GraftNativeScan"), s"$cap=0, $k:\n$plan")
-        val got = rows(q())
-        assert(got === uncapped(k), s"$cap=0, $k: differs from the native read")
-        assert(got === wants(k), s"$cap=0, $k")
-      } finally saved match {
-        case Some(v) => spark.conf.set(cap, v)
-        case None => spark.conf.unset(cap)
-      }
+    reads.foreach { case (k, q) =>
+      val plan = q().queryExecution.executedPlan.toString
+      assert(plan.contains("GraftNativeScan"), s"$k:\n$plan")
+      assert(rows(q()) === wants(k), k)
     }
+    // the scan names the delete load it applies; a delete-free scan's
+    // description is unchanged
+    val described = spark.table("ncat.nat_cap").queryExecution.executedPlan
+      .toString
+    assert("MORDeletes: \\[(\\d+) position-delete files, 1 equality-delete files, (\\d+) rows\\]"
+      .r.findFirstIn(described).nonEmpty, described)
+    spark.sql("CREATE TABLE ncat.nat_cap_clean (id BIGINT) USING iceberg")
+    spark.range(0, 10).writeTo("ncat.nat_cap_clean").append()
+    val clean = spark.table("ncat.nat_cap_clean").queryExecution.executedPlan
+      .toString
+    assert(clean.contains("GraftNativeScan") && !clean.contains("MORDeletes"),
+      clean)
+  }
+
+  test("the reader factory does not grow with the delete rows") {
+    // the deletes travel as file names in each file's input partition
+    // and are read by its task: nothing of their rows is in the factory
+    def factoryBytes(table: String, deleted: Long): Int = {
+      val dir = s"$wh/$table"
+      IcebergLite.createTable(spark, spark.range(0, 200000)
+        .selectExpr("id", "id % 3 AS v"), dir)
+      IcebergLite.deleteWhereMOR(spark, dir, col("id") < deleted)
+      assert(IcebergLite.readTable(spark, dir).count() === 200000L - deleted)
+      val scan = new GraftFileSetTable(table,
+          IcebergLite.nativeScanInfo(spark, dir))
+        .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+        .build().toBatch
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(scan.createReaderFactory())
+      out.close()
+      bytes.size()
+    }
+    val small = factoryBytes("fac_small", 10L)
+    val large = factoryBytes("fac_large", 100000L)
+    assert(math.abs(large - small) <= 1024, s"10 rows: $small B, 100000 rows: $large B")
   }
 
   test("readTable over 40+ files submits only the scan's own jobs") {

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.SparkSuite
 
@@ -1648,14 +1649,43 @@ class IcebergLiteSpec extends SparkSuite {
     assert(e.getMessage.contains("empty batch"))
   }
 
+  /** Rewrite every manifest of a table in place: `edit` sees each
+    * manifest's metadata and the `data_file` record of each entry. */
+  private def rewriteManifests(dir: String)(
+      edit: (Map[String, String], org.apache.avro.generic.GenericRecord) => Unit)
+      : Unit = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.avro.file.{DataFileReader, DataFileWriter}
+    import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter, GenericRecord}
+    new java.io.File(s"$dir/metadata").listFiles()
+      .filter(f => f.getName.startsWith("manifest-") && f.getName.endsWith(".avro"))
+      .foreach { mf =>
+        val r = new DataFileReader[GenericRecord](mf,
+          new GenericDatumReader[GenericRecord]())
+        val schema = r.getSchema
+        val meta = r.getMetaKeys.asScala.filterNot(_.startsWith("avro."))
+          .map(k => k -> r.getMetaString(k)).toMap
+        val recs = try r.iterator().asScala.toVector finally r.close()
+        recs.foreach(e => edit(meta, e.get("data_file").asInstanceOf[GenericRecord]))
+        val w = new DataFileWriter[GenericRecord](
+          new GenericDatumWriter[GenericRecord](schema))
+        meta.foreach { case (k, v) => w.setMeta(k, v) }
+        w.create(schema, mf)
+        recs.foreach(w.append)
+        w.close()
+        // the local file system's checksum of the old bytes
+        new java.io.File(mf.getParent, s".${mf.getName}.crc").delete()
+      }
+  }
+
+  private def isPositionDeletes(meta: Map[String, String]): Boolean =
+    meta.get("content").contains("deletes") && !meta.contains("equality-cols")
+
   /** Rewrite a table's manifests and position-delete files into the
     * path rendering of tables whose entries were read back through
     * `input_file_name()`: `file:///…` where the data-file writer
     * records `file:/…`. */
   private def toUrlRenderedPaths(dir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.avro.file.{DataFileReader, DataFileWriter}
-    import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter, GenericRecord}
     def url(p: String) = p.replaceFirst("^file:/(?!/)", "file:///")
     // a position-delete file's rows name data files: rewrite them into
     // a fresh single file and name that one
@@ -1668,31 +1698,74 @@ class IcebergLiteSpec extends SparkSuite {
       "file://" + out.listFiles().filter(_.getName.endsWith(".parquet"))
         .head.getAbsolutePath
     }
-    new java.io.File(s"$dir/metadata").listFiles()
-      .filter(f => f.getName.startsWith("manifest-") && f.getName.endsWith(".avro"))
-      .foreach { mf =>
-        val r = new DataFileReader[GenericRecord](mf,
-          new GenericDatumReader[GenericRecord]())
-        val schema = r.getSchema
-        val meta = r.getMetaKeys.asScala.filterNot(_.startsWith("avro."))
-          .map(k => k -> r.getMetaString(k)).toMap
-        val recs = try r.iterator().asScala.toVector finally r.close()
-        val positional = meta.get("content").contains("deletes") &&
-          !meta.contains("equality-cols")
-        recs.foreach { e =>
-          val d = e.get("data_file").asInstanceOf[GenericRecord]
-          val p = d.get("file_path").toString
-          d.put("file_path", if (positional) urlDeleteFile(p) else url(p))
-        }
-        val w = new DataFileWriter[GenericRecord](
-          new GenericDatumWriter[GenericRecord](schema))
-        meta.foreach { case (k, v) => w.setMeta(k, v) }
-        w.create(schema, mf)
-        recs.foreach(w.append)
-        w.close()
-        // the local file system's checksum of the old bytes
-        new java.io.File(mf.getParent, s".${mf.getName}.crc").delete()
+    rewriteManifests(dir) { (meta, d) =>
+      val p = d.get("file_path").toString
+      d.put("file_path", if (isPositionDeletes(meta)) urlDeleteFile(p) else url(p))
+    }
+  }
+
+  test("position deletes with truncated file_path bounds still apply") {
+    // delete entries carry their exact file_path bounds, which attach
+    // each delete file to the data files it names; truncated bounds
+    // (the 16-code-point data-column rule) still bound every path they
+    // were cut from, so the file attaches to more data files, never
+    // fewer, and the same rows drop
+    val dir = tmp()
+    val rows = (1L to 12L).map(i => (i, Seq("en", "de", "fr")((i % 3).toInt), i * 10))
+    IcebergLite.createTable(spark, rows.toDF("id", "lang", "n"), dir,
+      partitionBy = Seq("lang"))
+    // ids 3, 6, 9, 12 are all lang=en: one data file
+    assert(IcebergLite.deleteWhereMOR(spark, dir, col("id") % 3 === 0L) === 4L)
+    val want = rows.filterNot(_._1 % 3 == 0).toSet
+    graft.Catalog.registerIcebergTable(spark, "trunc_bounds", dir)
+    def check(frAttached: Boolean): Unit = {
+      assert(IcebergLite.readTable(spark, dir).as[(Long, String, Long)]
+        .collect().toSet === want)
+      assert(IcebergLite.readTableWhere(spark, dir,
+          Seq(IcebergLite.EqTo("lang", "en"))).as[(Long, String, Long)]
+        .collect().toSet === want.filter(_._2 == "en"))
+      assert(spark.table("trunc_bounds").as[(Long, String, Long)]
+        .collect().toSet === want)
+      val fr = spark.table("trunc_bounds").filter(col("lang") === "fr")
+      assert(fr.as[(Long, String, Long)].collect().toSet ===
+        want.filter(_._2 == "fr"))
+      val plan = fr.queryExecution.executedPlan.toString
+      assert(plan.contains("MORDeletes: [1 position-delete files") === frAttached,
+        plan)
+    }
+    // exact bounds: lower = upper = the one data file the deletes name,
+    // so the fr file carries no delete
+    var bounds = Seq.empty[String]
+    rewriteManifests(dir) { (meta, d) =>
+      if (isPositionDeletes(meta)) Seq("lower_bounds", "upper_bounds").foreach { k =>
+        d.get(k).asInstanceOf[java.util.List[org.apache.avro.generic.GenericRecord]]
+          .forEach { b =>
+            if (b.get("key") == IcebergLite.PosPathFieldId) {
+              val bb = b.get("value").asInstanceOf[java.nio.ByteBuffer].duplicate()
+              val bytes = new Array[Byte](bb.remaining())
+              bb.get(bytes)
+              bounds :+= new String(bytes, "UTF-8")
+            }
+          }
       }
+    }
+    assert(bounds.size === 2 && bounds.distinct.size === 1 &&
+      bounds.head.contains("lang=en/") && bounds.head.length > 17, bounds)
+    check(frAttached = false)
+    // truncate them as a data column's string bounds are
+    rewriteManifests(dir) { (meta, d) =>
+      if (isPositionDeletes(meta)) {
+        val (lo, hi) = IcebergLite.boundPair(StringType, bounds.head, bounds.head)
+        Seq("lower_bounds" -> lo, "upper_bounds" -> hi).foreach { case (k, v) =>
+          d.get(k).asInstanceOf[java.util.List[org.apache.avro.generic.GenericRecord]]
+            .forEach { b =>
+              if (b.get("key") == IcebergLite.PosPathFieldId)
+                b.put("value", java.nio.ByteBuffer.wrap(v.get))
+            }
+        }
+      }
+    }
+    check(frAttached = true)
   }
 
   test("manifests and position deletes naming files as file:///… still apply") {

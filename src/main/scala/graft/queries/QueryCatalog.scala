@@ -5628,8 +5628,9 @@ object QueryCatalog {
 
     // SQL WRITE route, MERGE (plans/IcebergWrite.scala r16): the upsert
     // shape (WHEN MATCHED UPDATE SET * / WHEN NOT MATCHED INSERT *)
-    // maps onto equalityDeleteMOR + append — sequence semantics make
-    // the re-appended rows survive the delete. Matched rows must carry
+    // runs as Spark's MERGE over the table's position-delta write —
+    // position deletes for the matched rows, their new versions and the
+    // inserts appended, in one snapshot. Matched rows must carry
     // the source's shifted n_chars, unmatched target rows the original,
     // and unmatched source rows insert; DuckDB rederives the merged
     // state from documents arithmetic. Data-derived at any scale.
@@ -6081,10 +6082,11 @@ object QueryCatalog {
     // subquery DELETE + MERGE resolve through the STOCK analyzer's
     // SupportsRowLevelOperations path — current-catalog single-part
     // names keep the graft parser rewrite out of the loop, so this is
-    // the route a third-party tool takes (group-based copy-on-write:
-    // the operation's scan plans candidate files, the write replaces
-    // exactly those groups in ONE snapshot via executor-side parquet
-    // DataWriters). The final state is DuckDB-rederived from documents
+    // the route a third-party tool takes (UPDATE and DELETE group-based
+    // copy-on-write: the operation's scan plans candidate files, the
+    // write replaces exactly those groups in ONE snapshot via
+    // executor-side parquet DataWriters; MERGE a position delta). The
+    // final state is DuckDB-rederived from documents
     // arithmetic. Data-derived at any scale.
     QueryDef("iceberg_native_dml", (s, d) => {
       val wh = java.nio.file.Paths.get(

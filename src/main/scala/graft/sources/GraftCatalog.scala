@@ -59,13 +59,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * the current snapshot or a pinned one, across every schema/spec
   * generation; Spark re-applies every filter exactly. Names registered
   * through [[graft.Catalog.registerIcebergTable]] are V2 relations over
-  * this same table. SQL DML splits by session, not by name kind: with
-  * the graft extensions, INSERT / DELETE / UPDATE / MERGE / TRUNCATE
-  * over either name route at parse time onto one set of commands
+  * this same table. SQL MERGE takes one route in every session and for
+  * both name kinds: Spark's own MERGE over this table's position-delta
+  * row-level operation ([[GraftDeltaOperation]]). INSERT / DELETE /
+  * UPDATE / TRUNCATE still split by session: with the graft extensions
+  * they route at parse time onto one set of commands
   * (plans/IcebergWrite.scala: row counts as results, the MOR
-  * delete/update modes); a session without them takes this table's V2
-  * row-level path (`SupportsRowLevelOperations`), the only route stock
-  * Spark has.
+  * delete/update modes); a session without them takes this table's
+  * group-based row-level path (`SupportsRowLevelOperations`).
   */
 class GraftTableCatalog extends TableCatalog with StagingTableCatalog
     with SupportsNamespaces
@@ -509,11 +510,23 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
     extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.TruncatableTable
-    with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
+    with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
+    with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
 
   private def spark = SparkSession.active
 
   override def name(): String = ident.toString
+  /** `__file` and `__pos`: each row's data file and position in it, the
+    * address a position delete names (the row id of a MERGE). */
+  override def metadataColumns()
+      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
+    GraftNativeBatchScan.provenance.take(2).map(f =>
+      new org.apache.spark.sql.connector.catalog.MetadataColumn {
+        override def name(): String = f.name
+        override def dataType(): org.apache.spark.sql.types.DataType =
+          f.dataType
+        override def isNullable: Boolean = false
+      }).toArray
   override def schema(): StructType =
     IcebergLite.tableSchema(spark, tableDir)
   override def partitioning(): Array[Transform] =
@@ -654,17 +667,22 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
   }
 
   // ---- row-level: native V2 DELETE / UPDATE / MERGE ------------------------
-  // The stock-analyzer route (no graft extensions in the session):
-  // group-based copy-on-write through GraftRowLevelOperation — the
-  // operation's scan plans the candidate groups, the write replaces
-  // exactly those in ONE snapshot.
+  // MERGE (every session): a position delta through GraftDeltaOperation.
+  // DELETE / UPDATE (sessions without the graft extensions): group-based
+  // copy-on-write through GraftRowLevelOperation — the operation's scan
+  // plans the candidate groups, the write replaces exactly those in ONE
+  // snapshot.
 
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
     require(snapshotId.isEmpty,
       s"${info.command()} on ${name()}: time-travel reads are immutable")
-    () => new GraftRowLevelOperation(name(), tableDir, info.command())
+    () => info.command() match {
+      case org.apache.spark.sql.connector.write.RowLevelOperation.Command.MERGE =>
+        new GraftDeltaOperation(name(), tableDir)
+      case cmd => new GraftRowLevelOperation(name(), tableDir, cmd)
+    }
   }
 
   // ---- write: V1Write onto the distributed appendSnapshot -----------------

@@ -28,9 +28,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *     storage-partitioned join, `spark.sql.sources.v2.bucketing
   *     .enabled`) — at 100 TB the difference between a co-located
   *     merge join and shuffling both tables;
-  *   - the row-level DML plans (ReplaceData) consume this scan for
-  *     group accounting: the files it plans are exactly the groups the
-  *     operation replaces.
+  *   - the row-level DML plans consume this scan: a group-based DELETE
+  *     or UPDATE (ReplaceData) replaces exactly the files it plans, and
+  *     a MERGE (WriteDelta) reads each row's `__file` / `__pos`, the
+  *     row id its position deletes name.
   *
   * Files are read by `ParquetFileFormat`'s own vectorized reader
   * (through [[org.apache.spark.sql.GraftParquetShim]]), each through
@@ -125,9 +126,10 @@ class GraftNativeBatchScan(spark: SparkSession, tableName: String,
   // RUNTIME GROUP FILTERING (SupportsRuntimeV2Filtering): Spark's
   // RowLevelOperationRuntimeGroupFiltering injects a dynamic IN-filter
   // on the partition SOURCE columns, built from the rows the command's
-  // condition actually matches — so a native MERGE (which has no
-  // static pushable filters) reads and REWRITES only the partitions
-  // containing matches, never the table. Runtime values map through
+  // condition actually matches — so a group-based DELETE or UPDATE
+  // whose condition has no static pushable filters (a subquery) reads
+  // and REWRITES only the partitions containing matches, never the
+  // table. Runtime values map through
   // the DEFAULT spec's transforms onto manifest partition values; a
   // file written under another spec, and anything unconvertible, prunes
   // nothing (superset guarantee, as everywhere).
@@ -196,7 +198,7 @@ class GraftNativeBatchScan(spark: SparkSession, tableName: String,
     // live in the null partition (every transform maps null -> null
     // partition value), and bucket/truncate applyValue would NPE on it —
     // while dropping null-partition files here would silently exclude
-    // exactly the rows a native DELETE/UPDATE/MERGE matched.
+    // exactly the rows a native DELETE/UPDATE matched.
     val allowedPart: Seq[Option[(Set[Any], Boolean)]] =
       info.spec.map { case (pf, _) =>
         byCol.get(pf.sourceCol).map { vs =>

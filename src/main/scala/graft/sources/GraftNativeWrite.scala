@@ -8,13 +8,13 @@ import org.apache.spark.sql.{GraftParquetShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
+import org.apache.spark.sql.connector.expressions.{Expression, Expressions, NamedReference, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, SupportsDelta, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
-import org.apache.spark.sql.types.{DataType, DateType, DoubleType, FloatType, IntegerType, LongType, StringType, StructType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DateType, DoubleType, FloatType, IntegerType, LongType, MapType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
@@ -35,21 +35,22 @@ class GraftHadoopConf(@transient var value: Configuration)
 }
 
 /** NATIVE V2 row-level DML over a graft catalog table — the
-  * `SupportsRowLevelOperations` implementation that lets the STOCK
-  * analyzer plan `DELETE` / `UPDATE` / `MERGE` with no graft session
-  * extensions installed (the route a third-party tool that builds its
-  * own plans takes; ingest tooling in the reference drives exactly this
-  * API surface through its catalogs).
+  * `SupportsRowLevelOperations` implementations through which Spark's
+  * own analyzer plans `DELETE` / `UPDATE` in a session without the
+  * graft extensions and `MERGE` in every session (the route a
+  * third-party tool that builds its own plans takes; ingest tooling in
+  * the reference drives exactly this API surface through its catalogs).
   *
-  * GROUP-BASED (copy-on-write): the operation's scan plans the
-  * candidate files — bounds/partition/Bloom-pruned by the pushed
-  * command condition, so a targeted DELETE reads its slice, never the
-  * table — and the write replaces exactly those groups with the
-  * transformed rows, committed as ONE snapshot
+  * DELETE and UPDATE are GROUP-BASED (copy-on-write, this class): the
+  * operation's scan plans the candidate files — bounds/partition/
+  * Bloom-pruned by the pushed command condition, so a targeted DELETE
+  * reads its slice, never the table — and the write replaces exactly
+  * those groups with the transformed rows, committed as ONE snapshot
   * ([[IcebergLite.commitReplaceGroups]]): no half-applied crash
   * window. Spark's own `OptimizeMetadataOnlyDeleteFromTable` still
   * short-circuits fully filter-expressible DELETEs onto the
   * metadata-only `SupportsDeleteV2` path before any of this runs.
+  * MERGE is a POSITION DELTA instead ([[GraftDeltaOperation]]).
   *
   * Executor `DataWriter`s are the ONE writer every IcebergLite write
   * uses ([[GraftDataWriterFactory]]): parquet through the
@@ -184,12 +185,213 @@ class GraftReplaceBatchWrite(spark: SparkSession, tableDir: String,
       staged)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val p = new Path(stagingDir)
-    val fs = p.getFileSystem(
-      GraftParquetShim.sessionHadoopConf(spark))
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftReplaceBatchWrite.dropStaged(spark, stagingDir)
+}
+
+object GraftReplaceBatchWrite {
+  /** Remove an aborted write's staging directories. */
+  def dropStaged(spark: SparkSession, dirs: String*): Unit = dirs.foreach { d =>
+    val p = new Path(d)
+    val fs = p.getFileSystem(GraftParquetShim.sessionHadoopConf(spark))
     if (fs.exists(p)) fs.delete(p, true)
   }
+}
+
+/** SQL MERGE over a graft catalog table as a POSITION DELTA
+  * (`SupportsDelta`, in every session): the operation's scan reads the
+  * table with its merge-on-read deletes applied and each row's id —
+  * (`__file`, `__pos`), the address a position delete names — and the
+  * write turns each removed or updated row into a position delete and
+  * each updated or inserted row into a new data row
+  * ([[GraftDeltaWriter]]), committed as ONE snapshot of a
+  * position-delete manifest and a data manifest
+  * ([[IcebergLite.commitDelta]]). No data file is rewritten, so the
+  * write costs ∝ the rows the statement changes, and tables that
+  * already carry merge-on-read deletes take it as they are. */
+class GraftDeltaOperation(tableName: String, tableDir: String)
+    extends SupportsDelta {
+
+  private def spark = SparkSession.active
+
+  override def command(): Command = Command.MERGE
+  override def description(): String = s"GraftDelta MERGE $tableName"
+  override def rowId(): Array[NamedReference] =
+    Array(GraftNativeBatchScan.FileCol, GraftNativeBatchScan.PosCol)
+      .map(Expressions.column)
+
+  override def newScanBuilder(options: CaseInsensitiveStringMap)
+      : ScanBuilder =
+    new GraftScanBuilder(IcebergLite.tableSchema(spark, tableDir)) {
+      override def build(): org.apache.spark.sql.connector.read.Scan =
+        new GraftNativeBatchScan(spark, tableName,
+          IcebergLite.nativeScanInfo(spark, tableDir,
+            pushed.toSeq.flatMap(GraftTableCatalog.filterPreds)),
+          required, pushed.toSeq)
+    }
+
+  override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
+    new DeltaWriteBuilder {
+      override def build(): DeltaWrite = new GraftDeltaWrite(spark, tableName,
+        tableDir, info.schema(), IcebergLite.nativeScanInfo(spark, tableDir))
+    }
+}
+
+/** The position-delta `Write` of a MERGE. Rows cluster on their row id
+  * first, so every delete of one row lands in one task (Spark skips its
+  * cardinality check for an unconditional matched DELETE, and a target
+  * row two source rows match arrives twice), then on the partition
+  * transforms — or, for an unpartitioned table, the row's own atomic
+  * values — so inserted rows spread. Each task is ordered by row id,
+  * which sorts its position deletes by (file_path, pos) and puts the
+  * repeat of a delete next to it, then by the partition transforms and
+  * the persisted sort order, which clusters its inserted rows. */
+class GraftDeltaWrite(spark: SparkSession, tableName: String,
+                      tableDir: String, rowSchema: StructType,
+                      info: IcebergLite.NativeScanInfo)
+    extends DeltaWrite with RequiresDistributionAndOrdering {
+
+  override def description(): String = s"GraftDelta $tableName"
+
+  private val rowIdCols: Seq[Expression] =
+    Seq(GraftNativeBatchScan.FileCol, GraftNativeBatchScan.PosCol)
+      .map(Expressions.column)
+  private val transforms: Seq[Expression] =
+    info.specItems.map(GraftTableCatalog.toTransform)
+
+  override def requiredDistribution(): Distribution =
+    Distributions.clustered((rowIdCols ++ (
+      if (transforms.nonEmpty) transforms
+      else rowSchema.fields.toSeq.collect {
+        case f if !f.dataType.isInstanceOf[ArrayType] &&
+            !f.dataType.isInstanceOf[MapType] &&
+            !f.dataType.isInstanceOf[StructType] =>
+          Expressions.column(s"`${f.name.replace("`", "``")}`")
+      })).toArray)
+
+  override def requiredOrdering(): Array[SortOrder] =
+    (rowIdCols ++ transforms ++ info.sortCols.map(Expressions.column))
+      .map(e => Expressions.sort(e, SortDirection.ASCENDING)).toArray
+
+  override def toBatch(): DeltaBatchWrite = {
+    // staging dirs keyed to the snapshot this statement will commit, as
+    // the group write's are
+    val snapshotId = IcebergLite.nextSnapshotIdOf(spark, tableDir)
+    new GraftDeltaBatchWrite(spark, tableDir,
+      s"$tableDir/data/s$snapshotId-w", s"$tableDir/data/deletes-s$snapshotId-w",
+      rowSchema)
+  }
+}
+
+class GraftDeltaBatchWrite(spark: SparkSession, tableDir: String,
+                           dataDir: String, deleteDir: String,
+                           rowSchema: StructType)
+    extends DeltaBatchWrite {
+
+  override def createBatchWriterFactory(phys: PhysicalWriteInfo)
+      : DeltaWriterFactory =
+    GraftDeltaWriterFactory(
+      IcebergLite.dataWriterFactory(spark, tableDir, dataDir, rowSchema),
+      GraftDataWriterFactory.forTable(spark, new Path(deleteDir),
+        GraftDeltaWriter.PositionSchema, Nil,
+        Map("file_path" -> IcebergLite.PosPathFieldId,
+          "pos" -> IcebergLite.PosFieldId), Nil))
+
+  // ONE snapshot from the COMMITTED task messages only: a retried or
+  // speculative attempt's files and counts never enter it
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val done = messages.toSeq.collect { case m: GraftDeltaCommit => m }
+    IcebergLite.commitDelta(spark, tableDir, done.flatMap(_.data),
+      done.flatMap(_.deletes), done.map(_.updated).sum,
+      done.map(_.deleted).sum, done.map(_.inserted).sum)
+  }
+
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftReplaceBatchWrite.dropStaged(spark, dataDir, deleteDir)
+}
+
+/** Commit message of one delta write task: the data and
+  * position-delete files it wrote, and the target rows it updated,
+  * deleted and inserted. */
+case class GraftDeltaCommit(data: Seq[GraftDataFile],
+                            deletes: Seq[GraftDataFile],
+                            updated: Long, deleted: Long, inserted: Long)
+    extends WriterCommitMessage
+
+case class GraftDeltaWriterFactory(data: GraftDataWriterFactory,
+                                   deletes: GraftDataWriterFactory)
+    extends DeltaWriterFactory {
+  override def createWriter(partitionId: Int,
+                            taskId: Long): DeltaWriter[InternalRow] =
+    new GraftDeltaWriter(data, deletes, partitionId, taskId)
+}
+
+/** One task of a MERGE's position delta: removed and updated row ids go
+  * to the task's position-delete file, updated and inserted rows to its
+  * data files — both through the one data-file writer — and the task
+  * counts what it did. Row ids arrive sorted, so a delete repeated for
+  * a row matched twice is the previous id: it is written and counted
+  * once. */
+class GraftDeltaWriter(data: GraftDataWriterFactory,
+                       deletes: GraftDataWriterFactory,
+                       partitionId: Int, taskId: Long)
+    extends DeltaWriter[InternalRow] {
+
+  private val rows =
+    new GraftClusteredDataWriter(data, data.conf.value, partitionId, taskId)
+  private val positions = new GraftClusteredDataWriter(deletes,
+    deletes.conf.value, partitionId, taskId)
+  private var updated, deleted, inserted = 0L
+  private var lastFile: UTF8String = _
+  private var lastPos = -1L
+
+  /** Write `id` as a position delete unless it repeats the last one. */
+  private def remove(id: InternalRow): Boolean = {
+    val (file, pos) = (id.getUTF8String(0), id.getLong(1))
+    if (pos == lastPos && file == lastFile) false
+    else {
+      lastFile = file.copy()
+      lastPos = pos
+      positions.write(id)
+      true
+    }
+  }
+
+  override def delete(metadata: InternalRow, id: InternalRow): Unit =
+    if (remove(id)) deleted += 1
+
+  override def update(metadata: InternalRow, id: InternalRow,
+                      row: InternalRow): Unit = {
+    remove(id)
+    rows.write(row)
+    updated += 1
+  }
+
+  override def insert(row: InternalRow): Unit = {
+    rows.write(row)
+    inserted += 1
+  }
+
+  override def commit(): GraftDeltaCommit =
+    GraftDeltaCommit(rows.commit().files, positions.commit().files,
+      updated, deleted, inserted)
+
+  override def abort(): Unit = {
+    rows.abort()
+    positions.abort()
+  }
+
+  override def close(): Unit = {
+    rows.close()
+    positions.close()
+  }
+}
+
+object GraftDeltaWriter {
+  /** The position-delete file layout (the Iceberg spec's). */
+  val PositionSchema: StructType = StructType(Seq(
+    StructField("file_path", StringType, nullable = false),
+    StructField("pos", LongType, nullable = false)))
 }
 
 /** The one data-file writer of every IcebergLite write (the DataFrame

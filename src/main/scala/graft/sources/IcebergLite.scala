@@ -908,13 +908,14 @@ object IcebergLite {
                      commitKey: Option[String] = None,
                      sortCols: Seq[String] = Nil,
                      toBranch: String = "main",
-                     props: Map[String, String] = Map.empty): Unit = {
+                     props: Map[String, String] = Map.empty,
+                     counts: Seq[(String, Long)] = Nil): Unit = {
     val metaDir = new Path(root, "metadata")
     val listPath = new Path(metaDir, f"snap-$snapshotId%05d.avro")
     writeManifestList(spark, listPath, manifests)
     val parent = prior.map(_.currentSnapshotId).getOrElse(0L)
     val newSummary =
-      summaryJson(operation, commitKey, parent, manifests, snapshotId)
+      summaryJson(operation, commitKey, parent, manifests, snapshotId, counts)
     // the written branch advances to the new snapshot; main's head is
     // the current pointer (unchanged by a staging-branch commit)
     val priorRefs = prior.map(_.refs).getOrElse(Map.empty)
@@ -961,10 +962,12 @@ object IcebergLite {
   /** One snapshot's summary JSON — operational metrics (the fields
     * every engine's UI reads): added-* from THIS snapshot's manifests,
     * total-* over the live set; `graft-parent` carries ancestry for
-    * fastForward, `graft-commit-key` the exactly-once replay key. */
+    * fastForward, `graft-commit-key` the exactly-once replay key, and
+    * `counts` the statement's own row counts ([[commitDelta]]). */
   private def summaryJson(operation: String, commitKey: Option[String],
                           parent: Long, manifests: Seq[MRef],
-                          snapshotId: Long): String = {
+                          snapshotId: Long,
+                          counts: Seq[(String, Long)] = Nil): String = {
     val newData = manifests.filter(m => m.content == 0 &&
       m.addedBy == snapshotId)
     val liveData = manifests.filter(_.content == 0)
@@ -977,6 +980,7 @@ object IcebergLite {
       s", \"total-records\": ${q(liveData.map(_.totalRows).sum.toString)}" +
       s", \"total-delete-files\": ${q(manifests.filter(_.content != 0)
         .map(_.totalFiles).sum.toString)}" +
+      counts.map { case (k, n) => s", ${q(k)}: ${q(n.toString)}" }.mkString +
       "}"
   }
 
@@ -1718,19 +1722,25 @@ object IcebergLite {
     * referenced by a position delete, or predating a live equality
     * delete. A rewrite snapshot drops the delete manifests (every delete
     * goes physical), so these files must rewrite with the deletes
-    * applied, or deleted rows would resurrect. */
+    * applied, or deleted rows would resurrect. A position-delete file
+    * whose exact `file_path` bounds are equal names that one file, read
+    * from the manifest; only files with differing or missing bounds
+    * have their `file_path` column read. Paths match in the one path
+    * identity ([[GraftNativeReaderFactory.normPath]]). */
   private def deleteNamedFiles(spark: SparkSession, meta: TableMeta,
                                files: Seq[NativeFileInfo]): Set[String] = {
-    val dels = liveDeleteFiles(spark, meta).map(_._1.path)
-    val posRefs =
-      if (dels.isEmpty) Set.empty[String]
-      else spark.read.parquet(dels: _*).select("file_path").distinct()
-        .collect().map(_.getString(0)).toSet
+    val (single, spread) = liveDeleteFiles(spark, meta)
+      .partition { case (_, lo, hi) => lo.isDefined && lo == hi }
+    val posRefs = single.flatMap(_._2) ++
+      (if (spread.isEmpty) Nil
+       else spark.read.parquet(spread.map(_._1.path): _*)
+         .select("file_path").distinct().collect().map(_.getString(0)).toSeq)
+    val named = posRefs.map(GraftNativeReaderFactory.normPath).toSet
     // an equality delete applies to every file its snapshot postdates
     val lastEq = liveEqualityDeletes(spark, meta).map(_.snapshotId)
       .maxOption.getOrElse(Long.MinValue)
-    (posRefs ++ files.filter(_.snapshotId < lastEq).map(_.path)) &
-      files.map(_.path).toSet
+    files.filter(f => f.snapshotId < lastEq ||
+      named(GraftNativeReaderFactory.normPath(f.path))).map(_.path).toSet
   }
 
   /** The manifest groups of a rewrite snapshot: `rows` written as new
@@ -2027,9 +2037,20 @@ object IcebergLite {
                                   content: Int,
                                   extraMeta: Map[String, String],
                                   boundIds: Map[String, Int] = Map.empty)
+      : Option[(MRef, Long)] =
+    deleteManifest(spark, root, meta, snapshotId,
+      writeFiles(spark, rows, new Path(root, s"data/$dirName"), Nil,
+        boundIds, Nil), content, extraMeta)
+
+  /** The manifest half of [[stageDeleteManifest]]: ONE content=`content`
+    * manifest over delete `files` already written, their entries built
+    * from the statistics the writer collected. `None` when the files
+    * hold no row. */
+  private def deleteManifest(spark: SparkSession, root: Path,
+                             meta: TableMeta, snapshotId: Long,
+                             files: Seq[GraftDataFile], content: Int,
+                             extraMeta: Map[String, String])
       : Option[(MRef, Long)] = {
-    val files = writeFiles(spark, rows, new Path(root, s"data/$dirName"),
-      Nil, boundIds, Nil)
     val n = files.map(_.rowCount).sum
     if (n == 0) return None
     val entrySchema = manifestEntrySchema(Nil)
@@ -2126,6 +2147,19 @@ object IcebergLite {
       spec, entrySchema, meta.fieldIds, distribute = effectiveSort.isEmpty,
       bloomCols = meta.bloomCols, dirSuffix = s"-a$attempt",
       sortCols = effectiveSort)
+    dataManifest(spark, root, meta, snapshotId, entrySchema, entries,
+      bloomPath, attempt)
+  }
+
+  /** The manifest half of [[stageDataManifest]]: ONE content=0 manifest
+    * over written data-file `entries` (with their Bloom sidecar, if
+    * any). Returns the manifest ref + row count; `None` when there is
+    * no entry. */
+  private def dataManifest(spark: SparkSession, root: Path, meta: TableMeta,
+                           snapshotId: Long, entrySchema: Schema,
+                           entries: Seq[GenericRecord],
+                           bloomPath: Option[String],
+                           attempt: String = ""): Option[(MRef, Long)] = {
     if (entries.isEmpty) return None
     val manifestPath = new Path(new Path(root, "metadata"),
       f"manifest-$snapshotId%05d$attempt.avro")
@@ -2140,60 +2174,90 @@ object IcebergLite {
       newRows, content = 0, specId = meta.defaultSpecId), newRows))
   }
 
-  /** ONE-snapshot row-level delta commit — the ATOMIC DML shape: any
-    * combination of an equality-delete key frame, a position-delete
-    * frame, and an appended data frame lands under a SINGLE manifest
-    * list / metadata version. A crash before the final metadata write
-    * leaves the table at its prior version with every staged file
-    * unreferenced ([[removeOrphanFiles]] reclaims them) — the
-    * half-applied statement window of delete-snapshot + append-snapshot
-    * sequences is unrepresentable.
-    *
-    * Sequencing: manifest entries carry the snapshot that added them,
-    * and the MOR reader applies an equality delete only to data files
-    * from STRICTLY OLDER snapshots — so rows appended by this same
-    * commit survive its own delete (the Iceberg same-sequence-number
-    * rule), which is exactly what MERGE/UPDATE re-appends need.
-    * Position deletes name pre-existing (file, pos) addresses and
-    * cannot touch the new files by construction.
+  /** ONE-snapshot row-level delta commit — the ATOMIC DML shape: a
+    * position-delete frame and an appended data frame land under a
+    * SINGLE manifest list / metadata version. A crash before the final
+    * metadata write leaves the table at its prior version with every
+    * staged file unreferenced ([[removeOrphanFiles]] reclaims them) —
+    * the half-applied statement window of delete-snapshot +
+    * append-snapshot sequences is unrepresentable. Position deletes
+    * name pre-existing (file, pos) addresses and cannot touch the new
+    * files by construction.
     *
     * `replaceAll` drops every prior manifest (the INSERT OVERWRITE /
     * truncate-and-load shape — full history still time-travels) and is
-    * mutually exclusive with the delete frames. Returns
-    * (deleted keys/rows, appended rows). No-op (no new snapshot) when
-    * nothing stages and `replaceAll` is false. */
+    * mutually exclusive with the position frame. Returns (deleted
+    * rows, appended rows). No-op (no new snapshot) when nothing stages
+    * and `replaceAll` is false. */
   def commitRowDelta(spark: SparkSession, tableDir: String,
-                     equalityKeys: Option[DataFrame] = None,
                      positions: Option[DataFrame] = None,
                      appendDf: Option[DataFrame] = None,
                      replaceAll: Boolean = false,
                      operation: String = "overwrite",
                      commitKey: Option[String] = None): (Long, Long) = {
-    require(!(replaceAll && (equalityKeys.nonEmpty || positions.nonEmpty)),
-      "replaceAll drops every prior file — combining it with delete " +
-        "frames is contradictory")
+    require(!(replaceAll && positions.nonEmpty),
+      "replaceAll drops every prior file — combining it with position " +
+        "deletes is contradictory")
     val root = new Path(tableDir)
     val meta = readMeta(spark, tableDir)
     // exactly-once: a commit key already in the snapshot log means this
     // statement landed before a checkpoint replay — no-op
     if (commitKey.exists(k => hasCommitKey(meta, k))) return (0L, 0L)
     val snapshotId = meta.nextSnapshotId
-    val hasLive = meta.manifests.exists(_.content == 0)
     // deletes against an empty table stage nothing (nothing to delete)
-    val eq = equalityKeys.filter(_ => hasLive)
-      .flatMap(k => stageEqualityDelete(spark, root, meta, snapshotId, k))
-    val pos = positions.filter(_ => hasLive)
+    val pos = positions.filter(_ => meta.manifests.exists(_.content == 0))
       .flatMap(p => stagePositionDeletes(spark, root, meta, snapshotId, p))
     val app = appendDf
       .flatMap(df => stageDataManifest(spark, root, meta, snapshotId, df))
-    val staged = (eq.toSeq ++ pos.toSeq ++ app.toSeq).map(_._1)
+    val staged = (pos.toSeq ++ app.toSeq).map(_._1)
     if (staged.isEmpty && !replaceAll && commitKey.isEmpty) return (0L, 0L)
     val base = if (replaceAll) Seq.empty else meta.manifests
     commit(spark, root, Some(meta), snapshotId, meta.version + 1,
       base ++ staged, meta.schemaJs, meta.lastColumnId, meta.specs,
       meta.defaultSpecId, operation, commitKey = commitKey,
       sortCols = meta.sortOrderCols, props = meta.props)
-    ((eq.toSeq ++ pos.toSeq).map(_._2).sum, app.map(_._2).getOrElse(0L))
+    (pos.map(_._2).getOrElse(0L), app.map(_._2).getOrElse(0L))
+  }
+
+  /** The snapshot-summary keys under which a SQL MERGE records the
+    * target rows it updated, deleted and inserted ([[commitDelta]]);
+    * the `snapshots` metadata table shows them as `updated_rows`,
+    * `deleted_rows` and `inserted_rows`, in any session. */
+  val UpdatedRowsKey = "graft-updated-rows"
+  val DeletedRowsKey = "graft-deleted-rows"
+  val InsertedRowsKey = "graft-inserted-rows"
+
+  /** ONE-snapshot commit of a native position-delta write (SQL MERGE,
+    * [[GraftDeltaOperation]]): the position-delete files and data files
+    * its committed write tasks staged, each manifest entry built from
+    * the statistics the task collected (nothing is read back), and the
+    * statement's row counts in the snapshot summary under
+    * [[UpdatedRowsKey]] / [[DeletedRowsKey]] / [[InsertedRowsKey]].
+    * Commits nothing when no task wrote a row. */
+  def commitDelta(spark: SparkSession, tableDir: String,
+                  dataFiles: Seq[GraftDataFile],
+                  deleteFiles: Seq[GraftDataFile],
+                  updated: Long, deleted: Long, inserted: Long): Unit = {
+    if (dataFiles.isEmpty && deleteFiles.isEmpty) return
+    val root = new Path(tableDir)
+    val meta = readMeta(spark, tableDir)
+    val snapshotId = meta.nextSnapshotId
+    val spec = typedSpec(meta.partitionSpec, declaredSchema(meta))
+    val entrySchema = manifestEntrySchema(spec)
+    val (entries, bloomPath) = dataEntries(spark, root, dataFiles,
+      snapshotId, spec, entrySchema, meta.bloomCols, bloomSuffix = "-w")
+    val staged =
+      deleteManifest(spark, root, meta, snapshotId, deleteFiles, 1,
+        Map.empty).toSeq ++
+        dataManifest(spark, root, meta, snapshotId, entrySchema, entries,
+          bloomPath)
+    commit(spark, root, Some(meta), snapshotId, meta.version + 1,
+      meta.manifests ++ staged.map(_._1), meta.schemaJs, meta.lastColumnId,
+      meta.specs, meta.defaultSpecId,
+      operation = if (deleteFiles.isEmpty) "append" else "overwrite",
+      sortCols = meta.sortOrderCols, props = meta.props,
+      counts = Seq(UpdatedRowsKey -> updated, DeletedRowsKey -> deleted,
+        InsertedRowsKey -> inserted))
   }
 
   /** v2 merge-on-read EQUALITY delete — the CDC/streaming-upsert
@@ -3433,7 +3497,10 @@ object IcebergLite {
           StructField("committed_at", LongType, nullable = true),
           StructField("added_data_files", LongType, nullable = true),
           StructField("added_records", LongType, nullable = true),
-          StructField("total_records", LongType, nullable = true))),
+          StructField("total_records", LongType, nullable = true),
+          StructField("updated_rows", LongType, nullable = true),
+          StructField("deleted_rows", LongType, nullable = true),
+          StructField("inserted_rows", LongType, nullable = true))),
           meta.snapshots.map { case (id, listPath, summary) =>
             val node = om.readTree(summary)
             def metric(k: String): Any =
@@ -3443,7 +3510,8 @@ object IcebergLite {
               listPath,
               meta.snapshotTs.get(id).map(Long.box).orNull,
               metric("added-data-files"), metric("added-records"),
-              metric("total-records"))
+              metric("total-records"), metric(UpdatedRowsKey),
+              metric(DeletedRowsKey), metric(InsertedRowsKey))
           })
       case "manifests" =>
         frame(StructType(Seq(
@@ -3592,6 +3660,9 @@ object IcebergLite {
     *    leg reads the pre-image's candidate files, the one changelog
     *    cost that is not ∝ the change — exactly the cost a real engine
     *    pays to resolve equality deletes to rows;
+    *  - a ROW DELTA (`overwrite` committed on top of its parent's
+    *    manifests: a SQL MERGE, [[updateWhereMOR]]) emits both — the
+    *    rows its position deletes name, then its new rows;
     *  - copy-on-write rewrites (`deleteWhere`, `compact`,
     *    `compactSmallFiles`) REFUSE BY NAME: after a rewrite the
     *    manifest level has no row-identity answer (an upsert written
@@ -3599,9 +3670,10 @@ object IcebergLite {
     *    should maintain with MOR deletes and compact between
     *    changelog consumptions.
     *
-    * An upsert batch (equality-delete + append at consecutive
-    * snapshots) therefore reads back as delete-rows-then-insert-rows —
-    * apply in `_commit_snapshot_id` order and the mirror converges.
+    * An upsert (a MERGE's row delta, or an equality-delete + append
+    * at consecutive snapshots) therefore reads back as
+    * delete-rows-then-insert-rows — apply deletes before inserts, in
+    * `_commit_snapshot_id` order, and the mirror converges.
     * Expired history refuses (the per-snapshot manifest lists are
     * gone). Empty ranges return an empty frame of the declared shape.
     */
@@ -3634,22 +3706,31 @@ object IcebergLite {
     val dataEntries = liveFileEntries(spark, metaTo)
     val eqDeletesTo = liveEqualityDeletes(spark, metaTo)
 
+    // a row-level change commits its manifests ON TOP of its parent's
+    // list (appends, merge-on-read deletes, the MERGE delta); a rewrite
+    // replaces the list, and has no row-identity answer
+    def additive(sid: Long): Boolean =
+      parentOf.get(sid).filter(_ != 0L).forall { parentId =>
+        readMeta(spark, tableDir, Some(parentId)).manifests.map(_.path).toSet
+          .subsetOf(readMeta(spark, tableDir, Some(sid)).manifests
+            .map(_.path).toSet)
+      }
     val legs = inRange.map { case (sid, _, summary) =>
       val op = om.readTree(summary).get("operation").asText()
       val posManifests = metaTo.manifests
         .filter(m => m.content == 1 && m.addedBy == sid)
       val eqDeletes = eqDeletesTo.filter(_.snapshotId == sid)
       op match {
-        case "append" =>
-          scanFrame(spark, metaTo, dataEntries.filter(_.snapshotId == sid))
-            .drop("__file", "__pos", "__fsnap")
-            .withColumn("_change_type", lit("insert"))
-            .withColumn("_commit_snapshot_id", lit(sid))
-        case "delete" =>
-          require(posManifests.nonEmpty || eqDeletes.nonEmpty,
+        case "append" | "delete" | "overwrite" =>
+          require(op != "delete" || posManifests.nonEmpty ||
+              eqDeletes.nonEmpty,
             s"changelog: snapshot $sid is a copy-on-write delete (no " +
               "delete manifests) — no row-level change answer; maintain " +
               "CDC tables with deleteWhereMOR/equalityDeleteMOR")
+          require(op != "overwrite" || additive(sid),
+            s"changelog: snapshot $sid is a copy-on-write rewrite — no " +
+              "row-level change answer; maintain CDC tables with MOR " +
+              "deletes and compact between consumptions")
           val posLeg: Option[DataFrame] = if (posManifests.isEmpty) None else {
             val delPaths = posManifests.flatMap { m =>
               readManifest(spark, new Path(m.path))._1
@@ -3684,18 +3765,24 @@ object IcebergLite {
                   .distinct(), d.keys.map(k => nameOf(k._1)))
               }.reduce(_.unionByName(_))
             }
-          (posLeg.toSeq ++ eqLeg.toSeq) match {
-            case Nil => empty()
-            case dfs => dfs.reduce(_.unionByName(_))
-              .withColumn("_change_type", lit("delete"))
-              .withColumn("_commit_snapshot_id", lit(sid))
-          }
+          val added = dataEntries.filter(_.snapshotId == sid)
+          val insLeg: Option[DataFrame] =
+            if (added.isEmpty) None
+            else Some(scanFrame(spark, metaTo, added)
+              .drop("__file", "__pos", "__fsnap")
+              .withColumn("_change_type", lit("insert")))
+          val delLeg = (posLeg.toSeq ++ eqLeg.toSeq).reduceOption(_.unionByName(_))
+            .map(_.withColumn("_change_type", lit("delete")))
+          (delLeg.toSeq ++ insLeg.toSeq).reduceOption(_.unionByName(_))
+            .map(_.withColumn("_commit_snapshot_id", lit(sid)))
+            .getOrElse(empty())
         case other =>
           throw new IllegalArgumentException(
-            s"changelog supports append and merge-on-read delete " +
-              s"snapshots; snapshot $sid is '$other' (a copy-on-write " +
-              "rewrite has no row-level change answer — maintain CDC " +
-              "tables with MOR deletes and compact between consumptions)")
+            s"changelog supports append, merge-on-read delete and " +
+              s"row-delta snapshots; snapshot $sid is '$other' (a " +
+              "copy-on-write rewrite has no row-level change answer — " +
+              "maintain CDC tables with MOR deletes and compact between " +
+              "consumptions)")
       }
     }
     legs.map(_.select(outSchema.fieldNames.map(col).toSeq: _*))

@@ -269,13 +269,11 @@ class GraftNativeSpec extends SparkSuite {
     assert(snaps.length === 5, snaps.mkString(", "))
   }
 
-  test("native MERGE replaces only the groups its runtime filter matches") {
-    // MERGE has no static pushable filters — without runtime group
-    // filtering the group-based plan would read and REWRITE the whole
-    // table. SupportsRuntimeV2Filtering gets the matched rows' partition
-    // source values as a dynamic IN-filter, so only the touched
-    // partition's files are replaced; every other partition's files
-    // must survive BY PATH (carried as EXISTING entries)
+  test("native MERGE writes a position delta: every data file stays, one delete manifest lands") {
+    // a MERGE rewrites no data file: the matched rows' positions go to
+    // a position-delete file and their new versions to a new data file,
+    // in ONE snapshot — every prior data file of every partition must
+    // survive BY PATH
     val bare = GraftParquetShim.bareSession(spark)
     bare.conf.set("spark.sql.catalog.ncat",
       classOf[GraftTableCatalog].getName)
@@ -300,13 +298,19 @@ class GraftNativeSpec extends SparkSuite {
                 ON t.id = s.id
                 WHEN MATCHED THEN UPDATE SET n = s.m""")
     val after = liveFiles
-    val untouched = before.filter(p =>
-      p.contains("lang=b") || p.contains("lang=c"))
-    assert(untouched.subsetOf(after),
-      "files of unmatched partitions were rewritten — runtime group " +
-        "filtering did not engage")
-    assert(!before.filter(_.contains("lang=a")).subsetOf(after),
-      "the matched partition's files were not replaced")
+    assert(before.subsetOf(after), "a data file was rewritten")
+    assert((after -- before).forall(_.contains("lang=a")),
+      "the updated rows landed outside their partition")
+    val head = IcebergLite.snapshotIds(spark, dir).last
+    assert(IcebergLite.metaTable(spark, dir, "manifests")
+      .filter(col("added_snapshot_id") === head).select("content")
+      .collect().map(_.getInt(0)).toSet === Set(0, 1))
+    // the statement's counts ride the snapshot summary, readable here too
+    val summary = bare.table("ncat.nat_rgf__snapshots")
+      .filter(col("snapshot_id") === head)
+      .select("updated_rows", "deleted_rows", "inserted_rows").head()
+    assert((summary.getLong(0), summary.getLong(1), summary.getLong(2)) ===
+      ((100L, 0L, 0L)))
     val got = bare.sql(
       "SELECT sum(n) AS s FROM ncat.nat_rgf WHERE lang = 'a'")
       .head().getLong(0)

@@ -1704,6 +1704,51 @@ class IcebergLiteSpec extends SparkSuite {
     }
   }
 
+  test("a copy-on-write delete after a MOR delete names its files from the manifest, with no job") {
+    // two twin tables, one with an outstanding position delete: the
+    // deleteWhere that rewrites them must submit the same jobs, i.e.
+    // none over the delete file — its exact, equal file_path bounds
+    // name the one data file it applies to
+    def twin(mor: Boolean): String = {
+      val dir = tmp()
+      IcebergLite.createTable(spark,
+        (1L to 12L).map(i => (i, Seq("en", "de", "fr")((i % 3).toInt), i * 10))
+          .toDF("id", "lang", "n"), dir, partitionBy = Seq("lang"))
+      if (mor) IcebergLite.deleteWhereMOR(spark, dir, col("id") === 3L)
+      dir
+    }
+    def jobsOf(dir: String): (Int, Long) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (e.properties != null && "cow-after-mor" ==
+              e.properties.getProperty("spark.jobGroup.id"))
+            jobs.incrementAndGet()
+      }
+      val sc = spark.sparkContext
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      sc.addSparkListener(l)
+      try {
+        sc.setJobGroup("cow-after-mor", "cow after mor")
+        val n = try IcebergLite.deleteWhere(spark, dir, col("id") === 6L)
+          finally sc.clearJobGroup()
+        Thread.sleep(500)
+        (jobs.get(), n)
+      } finally {
+        sc.removeSparkListener(l)
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+      }
+    }
+    val (mor, plain) = (twin(mor = true), twin(mor = false))
+    assert(jobsOf(mor) === jobsOf(plain))
+    // the delete went physical: id 3 stays gone, id 6 is gone too
+    assert(IcebergLite.readTable(spark, mor).select("id").as[Long].collect()
+      .sorted.toSeq === (1L to 12L).filterNot(Set(3L, 6L)))
+    assert(IcebergLite.metaTable(spark, mor, "manifests")
+      .filter(col("content") =!= 0).count() === 0L)
+  }
+
   test("position deletes with truncated file_path bounds still apply") {
     // delete entries carry their exact file_path bounds, which attach
     // each delete file to the data files it names; truncated bounds

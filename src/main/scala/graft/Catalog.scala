@@ -39,8 +39,9 @@ object Catalog {
     * `spark.sql.extensions=graft.GraftExtensions` the name also takes
     * `FOR VERSION AS OF` / `FOR TIMESTAMP AS OF` and SQL DML (both
     * rewritten at parse time, see plans/IcebergScan.scala and
-    * plans/IcebergWrite.scala; a MERGE binds its target to this view's
-    * table and runs as Spark's own MERGE), resolved from this view: once
+    * plans/IcebergWrite.scala; a DELETE, UPDATE or MERGE binds its
+    * target to this view's table and runs as Spark's own statement),
+    * resolved from this view: once
     * the name is rebound or dropped, neither reaches the table. The operational
     * metadata tables ride along as `<name>__<kind>` views (temp-view
     * names can't carry Iceberg's `$`), current per query like the data

@@ -1,13 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.{GraftColumnShim, GraftPlanShim, Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation, UnresolvedTable}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Cast, Expression}
+import org.apache.spark.sql.{GraftPlanShim, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedRelation, UnresolvedTable}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Cast}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.sources.{GraftIcebergTable, IcebergLite}
@@ -42,33 +42,25 @@ import graft.sources.{GraftIcebergTable, IcebergLite}
   *   - `TRUNCATE TABLE <name>` → [[IcebergLite.truncateTable]] — the
   *     metadata-only empty-manifest-list snapshot (zero data IO),
   *     returning the dropped-row count.
-  *   - `DELETE FROM <name> WHERE <cond>` → [[IcebergLite.deleteWhere]]
-  *     (copy-on-write, default) or [[IcebergLite.deleteWhereMOR]]
-  *     (position deletes) under `spark.graft.iceberg.deleteMode=mor`.
-  *     Returns the deleted-row count as the command result.
-  *   - `UPDATE <name> SET c = expr, ... [WHERE p]` →
-  *     [[IcebergLite.updateWhere]]: copy-on-write — ONLY the files
-  *     containing matching rows rewrite (untouched files carry by
-  *     reference), assignment expressions read the PRE-update row
-  *     (simultaneous assignment), and partition/sort-column updates
-  *     re-cluster the rewritten rows under the table contract. Under
-  *     `spark.graft.iceberg.updateMode=mor` →
-  *     [[IcebergLite.updateWhereMOR]]: position deletes name the
-  *     matched rows (cost ∝ matches, zero files rewritten) and the
-  *     updated versions append behind them. Returns the updated-row
-  *     count either way.
-  *   - `MERGE INTO <name> ...` in any form Spark's MERGE takes (any ON
-  *     condition, every WHEN clause kind, first firing clause wins) →
-  *     Spark's own MERGE over the table's position-delta row-level
-  *     operation ([[graft.sources.GraftDeltaOperation]]), the route a
-  *     session without the extensions takes too: a registered name's
-  *     target binds to its table's V2 relation (the analyzer refuses to
-  *     write to a temp view), a catalog name passes through, and
-  *     [[IcebergMergeCommand]] returns the `merged_keys` count.
+  *   - `DELETE FROM <name> [WHERE p]`, `UPDATE <name> SET c = expr,
+  *     ... [WHERE p]` and `MERGE INTO <name> ...` (any ON condition,
+  *     every WHEN clause kind, first firing clause wins) → Spark's own
+  *     statement over the table's position-delta row-level operation
+  *     ([[graft.sources.GraftDeltaOperation]]), the route a session
+  *     without the extensions takes too: position deletes for the
+  *     removed and updated rows and new rows for the updated and
+  *     inserted ones, in ONE snapshot, no data file rewritten; a DELETE
+  *     with no WHERE is the metadata-only truncate. The rewrite only
+  *     binds a registered name's target to its table's V2 relation (the
+  *     analyzer refuses to write to a temp view; Spark's qualifier rules
+  *     then apply, so an alias hides the name), lets a catalog name
+  *     pass through, and wraps the statement in
+  *     [[IcebergRowLevelCommand]], which returns `deleted_rows`,
+  *     `updated_rows` or `merged_keys` from the snapshot summary.
   *
   * 100 TB shape: nothing here adds a driver-side pass — the writes ARE
-  * the existing distributed appendSnapshot/delete machinery; the
-  * rewrite only routes the statement. Unregistered names fall through
+  * the existing distributed appendSnapshot machinery and Spark's own
+  * row-level write; the rewrite only routes the statement. Unregistered names fall through
   * to Spark's own resolution untouched.
   */
 object IcebergWriteRewrite {
@@ -86,58 +78,41 @@ object IcebergWriteRewrite {
           IcebergInsertCommand(name, dir, query, userCols, overwrite, byName)
         case None => plan
       }
-    case DeleteFromTable(rel, condition) =>
-      registered(spark, rel) match {
-        case Some((name, dir)) =>
-          IcebergDeleteCommand(name, dir,
-            ExprBox(stripQualifier(condition, aliasesOf(rel, name))))
-        case None => plan
-      }
-    case UpdateTable(rel, assignments, condition) =>
-      registered(spark, rel) match {
-        case Some((name, dir)) =>
-          val quals = aliasesOf(rel, name)
-          val assigns = assignments.map { a =>
-            val key = a.key match {
-              case ua: UnresolvedAttribute if ua.nameParts.size == 1 =>
-                ua.nameParts.head
-              case ua: UnresolvedAttribute
-                  if ua.nameParts.size == 2 &&
-                    quals.contains(ua.nameParts.head) =>
-                ua.nameParts.last
-              case other => throw new IllegalArgumentException(
-                s"UPDATE $name: SET target ${other.sql} is not a column " +
-                  "of the table")
-            }
-            key -> ExprBox(stripQualifier(a.value, quals))
-          }
-          IcebergUpdateCommand(name, dir, assigns,
-            condition.map(c => ExprBox(stripQualifier(c, quals))))
-        case None => plan
-      }
     case TruncateTable(u: UnresolvedTable) =>
       registered(spark, u) match {
         case Some((name, dir)) => IcebergTruncateCommand(name, dir)
         case None => plan
       }
+    case d: DeleteFromTable =>
+      rowLevel(spark, d.table, "deleted_rows")(t => d.copy(table = t))
+        .getOrElse(plan)
+    case u: UpdateTable =>
+      rowLevel(spark, u.table, "updated_rows")(t => u.copy(table = t))
+        .getOrElse(plan)
     case m: MergeIntoTable =>
-      registered(spark, m.targetTable) match {
-        case Some((_, dir)) =>
-          IcebergMergeCommand(dir,
-            m.copy(targetTable = bindTarget(m.targetTable, dir)))
-        case None => plan
-      }
+      rowLevel(spark, m.targetTable, "merged_keys")(t =>
+        m.copy(targetTable = t)).getOrElse(plan)
     case _ => plan
   }
+
+  /** A DELETE, UPDATE or MERGE on a name this rewrite owns: Spark's own
+    * statement with its target bound, wrapped in the command that
+    * returns its `result` count. */
+  private def rowLevel(spark: SparkSession, target: LogicalPlan,
+                       result: String)(
+      retarget: LogicalPlan => LogicalPlan): Option[LogicalPlan] =
+    registered(spark, target).map { case (_, dir) =>
+      IcebergRowLevelCommand(dir, retarget(bindTarget(target, dir)), result)
+    }
 
   /** The (name, table-dir) of a relation this rewrite owns, seen
     * through any alias: a name [[IcebergSqlNames.tableDir]] resolves —
     * a temp view registered via [[graft.Catalog.registerIcebergTable]],
     * or a table loaded through a catalog (`<cat>.<ns...>.<table>`).
     * With the graft extensions both name kinds route through these
-    * commands (row counts as results, the MOR delete/update modes);
-    * a session without them takes the table's V2 row-level path
-    * (SupportsRowLevelOperations), which every MERGE takes. */
+    * commands, which return row counts; a session without them plans
+    * INSERT / TRUNCATE through the table's V2 write path. DELETE,
+    * UPDATE and MERGE take the table's row-level path in every session. */
   private def registered(spark: SparkSession,
                          plan: LogicalPlan): Option[(String, String)] = {
     def byName(parts: Seq[String]) =
@@ -150,30 +125,10 @@ object IcebergWriteRewrite {
     }
   }
 
-  /** Table name + any alias wrapped around the relation — the
-    * qualifiers a WHERE may legally carry. For catalog-qualified names
-    * both the full dotted name and the bare table name qualify. */
-  private def aliasesOf(rel: LogicalPlan, name: String): Set[String] =
-    rel match {
-      case SubqueryAlias(id, _) => Set(name, name.split('.').last, id.name)
-      case _ => Set(name, name.split('.').last)
-    }
-
-  /** `t.x` → `x` for qualifiers naming the target table (the pruned
-    * read the predicate later resolves against carries no alias);
-    * multi-part qualifiers (`cat.tbl.x`, `cat.ns.tbl.x`) strip when
-    * their dotted prefix names the table. */
-  private def stripQualifier(e: Expression, quals: Set[String]): Expression =
-    e.transformUp {
-      case ua: UnresolvedAttribute
-          if ua.nameParts.size >= 2 &&
-            quals.contains(ua.nameParts.init.mkString(".")) =>
-        UnresolvedAttribute(Seq(ua.nameParts.last))
-    }
-
-  /** A registered name's MERGE target bound to its table's V2 relation,
+  /** A registered name's DML target bound to its table's V2 relation,
     * under the name or its alias (as the time-travel rewrite binds
-    * reads); a catalog name passes through for Spark to resolve. */
+    * reads), so Spark's qualifier rules apply: an alias hides the name.
+    * A catalog name passes through for Spark to resolve. */
   private def bindTarget(plan: LogicalPlan, dir: String): LogicalPlan =
     plan match {
       case SubqueryAlias(id, child) =>
@@ -291,12 +246,6 @@ class IcebergDynamicOverwriteRule(spark: SparkSession)
   }
 }
 
-/** An opaque holder keeping a (deliberately unresolved) predicate out
-  * of the command node's `expressions` — CheckAnalysis would otherwise
-  * refuse the command before run() ever resolves the predicate against
-  * the table's own scan. */
-final case class ExprBox(e: Expression)
-
 /** `TRUNCATE TABLE <name>` — the metadata-only empty-manifest-list
   * snapshot ([[IcebergLite.truncateTable]]): every live file drops in
   * one KB-scale metadata write, zero data files read; history still
@@ -309,70 +258,35 @@ case class IcebergTruncateCommand(name: String, tableDir: String)
     Seq(Row(IcebergLite.truncateTable(session, tableDir)))
 }
 
-/** `DELETE FROM <name> WHERE <cond>` — copy-on-write by default,
-  * merge-on-read under `spark.graft.iceberg.deleteMode=mor`. The
-  * command's result set is the deleted-row count. */
-case class IcebergDeleteCommand(name: String, tableDir: String,
-                                condition: ExprBox)
+/** A DELETE, UPDATE or MERGE over a graft Iceberg table — see
+  * [[IcebergWriteRewrite]]: runs Spark's own `statement` and returns
+  * one count, read from the summary of the snapshot it committed (0
+  * when nothing committed): `deleted_rows` for a DELETE (one with no
+  * WHERE is the truncate, which records its count too), `updated_rows`
+  * for an UPDATE, and for a MERGE `merged_keys`, the target rows it
+  * updated, deleted and inserted. An insert-only MERGE plans as
+  * Spark's plain append, whose added rows are all inserts. */
+case class IcebergRowLevelCommand(tableDir: String, statement: LogicalPlan,
+                                  result: String)
     extends LeafRunnableCommand {
+  override def innerChildren: Seq[LogicalPlan] = Seq(statement)
   override val output: Seq[Attribute] =
-    Seq(AttributeReference("deleted_rows", LongType, nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] = {
-    val pred = GraftColumnShim.column(condition.e)
-    if (graft.sources.IcebergLite.tableRowCount(session, tableDir) == 0)
-      return Seq(Row(0L))
-    val n =
-      if (session.conf.get("spark.graft.iceberg.deleteMode", "cow") == "mor")
-        IcebergLite.deleteWhereMOR(session, tableDir, pred)
-      else IcebergLite.deleteWhere(session, tableDir, pred)
-    Seq(Row(n))
-  }
-}
-
-/** `UPDATE <name> SET ... [WHERE p]` — copy-on-write through
-  * [[IcebergLite.updateWhere]]; result is the updated-row count. */
-case class IcebergUpdateCommand(name: String, tableDir: String,
-                                assigns: Seq[(String, ExprBox)],
-                                condition: Option[ExprBox])
-    extends LeafRunnableCommand {
-  override val output: Seq[Attribute] =
-    Seq(AttributeReference("updated_rows", LongType, nullable = false)())
-
-  override def run(session: SparkSession): Seq[Row] = {
-    val pred = condition.map(b => GraftColumnShim.column(b.e))
-      .getOrElse(lit(true))
-    val cols = assigns.map { case (k, b) => k -> GraftColumnShim.column(b.e) }
-    val n =
-      if (session.conf.get("spark.graft.iceberg.updateMode", "cow") == "mor")
-        IcebergLite.updateWhereMOR(session, tableDir, pred, cols)
-      else IcebergLite.updateWhere(session, tableDir, pred, cols)
-    Seq(Row(n))
-  }
-}
-
-/** `MERGE INTO` over a graft Iceberg table — see
-  * [[IcebergWriteRewrite]]: runs Spark's MERGE and returns
-  * `merged_keys`, the target rows it updated, deleted and inserted, read
-  * from the snapshot summary it committed (0 when nothing fired). An
-  * insert-only MERGE plans as Spark's plain append, whose added rows
-  * are all inserts. */
-case class IcebergMergeCommand(tableDir: String, merge: LogicalPlan)
-    extends LeafRunnableCommand {
-  override def innerChildren: Seq[LogicalPlan] = Seq(merge)
-  override val output: Seq[Attribute] =
-    Seq(AttributeReference("merged_keys", LongType, nullable = false)())
+    Seq(AttributeReference(result, LongType, nullable = false)())
 
   override def run(session: SparkSession): Seq[Row] = {
     def snapshots = IcebergLite.metaTable(session, tableDir, "snapshots")
     val before = snapshots.collect().map(_.getLong(0)).toSet
-    GraftPlanShim.ofRows(session, merge)
+    GraftPlanShim.ofRows(session, statement)
     val effect = snapshots.collect().filterNot(r => before(r.getLong(0)))
       .map { r =>
-        val counts = Seq("updated_rows", "deleted_rows", "inserted_rows")
-          .map(c => Option(r.getAs[java.lang.Long](c)))
-        if (counts.forall(_.isDefined)) counts.flatten.map(_.longValue).sum
-        else r.getAs[Long]("added_records")
+        def count(c: String) =
+          Option(r.getAs[java.lang.Long](c)).map(_.longValue)
+        if (result != "merged_keys") count(result).getOrElse(0L)
+        else Seq("updated_rows", "deleted_rows", "inserted_rows")
+          .flatMap(count) match {
+            case Nil => r.getAs[Long]("added_records")
+            case counts => counts.sum
+          }
       }.sum
     Seq(Row(effect))
   }

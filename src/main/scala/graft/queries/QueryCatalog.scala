@@ -5594,11 +5594,13 @@ object QueryCatalog {
       FROM documents GROUP BY lang ORDER BY lang""")),
 
     // SQL WRITE route, DELETE (plans/IcebergWrite.scala r16): DELETE
-    // FROM the registered name maps onto the copy-on-write deleteWhere
-    // machinery; the command's returned count AND the surviving
-    // aggregate are both rederived by DuckDB from documents arithmetic
-    // — an over- or under-reaching delete set breaks either. The read
-    // back rides the registered scan route. Data-derived at any scale.
+    // FROM the registered name runs as Spark's own DELETE over the
+    // table's position-delta write (position deletes for the matched
+    // rows, no data file rewritten); the returned count (read from the
+    // snapshot summary) AND the surviving aggregate are both rederived
+    // by DuckDB from documents arithmetic — an over- or under-reaching
+    // delete set breaks either. The read back rides the registered scan
+    // route and merges the deletes. Data-derived at any scale.
     QueryDef("iceberg_sql_delete", (s, d) => {
       import graft.sources.IcebergLite
       val dir = java.nio.file.Paths.get(
@@ -5671,13 +5673,13 @@ object QueryCatalog {
       FROM merged GROUP BY lang ORDER BY lang""")),
 
     // SQL WRITE route, UPDATE (plans/IcebergWrite.scala r17): UPDATE
-    // SET maps onto the copy-on-write updateWhere machinery — only the
-    // files containing matches rewrite, every assignment reads the
+    // SET runs as Spark's own UPDATE over the table's position-delta
+    // write — the matched rows' positions become position deletes and
+    // their updated versions new rows, every assignment reads the
     // PRE-update row (simultaneous assignment), and updating the
-    // PARTITION column moves rows across partitions under the table
-    // contract. The returned count and the post-update state are both
-    // DuckDB-rederived from documents arithmetic. Data-derived at any
-    // scale.
+    // PARTITION column lands the new rows in their new partition. The
+    // returned count and the post-update state are both DuckDB-rederived
+    // from documents arithmetic. Data-derived at any scale.
     QueryDef("iceberg_sql_update", (s, d) => {
       import graft.sources.IcebergLite
       val dir = java.nio.file.Paths.get(
@@ -5863,14 +5865,16 @@ object QueryCatalog {
         CAST(sum(n_chars) AS BIGINT) AS sum_chars
       FROM merged GROUP BY lang ORDER BY lang""")),
 
-    // MERGE-ON-READ UPDATE (sources/IcebergLite.updateWhereMOR r17 —
-    // the position-delete composition of UPDATE): matched rows are
-    // dropped by (file_path, pos) delete files and their updated
-    // versions append behind them — cost proportional to MATCHES, zero
-    // data files rewritten; the read merges delete set + append. The
-    // returned count and the merged state are DuckDB-rederived, and
-    // no_rewrite pins the mechanism (original file count unchanged,
-    // a content=1 delete manifest present). Data-derived at any scale.
+    // MERGE-ON-READ UPDATE (r17; every SQL UPDATE since the one
+    // DELETE/UPDATE route): matched rows are dropped by (file_path, pos)
+    // delete files and their updated versions append behind them —
+    // cost proportional to MATCHES, zero data files rewritten; the read
+    // merges delete set + append. The returned count and the merged
+    // state are DuckDB-rederived, and no_rewrite pins the mechanism
+    // (original file count unchanged, a content=1 delete manifest
+    // present). The `spark.graft.iceberg.updateMode` key the body sets
+    // no longer exists: setting it is a no-op, kept so the query stays
+    // as the oracle pinned it. Data-derived at any scale.
     QueryDef("iceberg_mor_update", (s, d) => {
       import graft.sources.IcebergLite
       val dir = java.nio.file.Paths.get(
@@ -6082,12 +6086,13 @@ object QueryCatalog {
     // subquery DELETE + MERGE resolve through the STOCK analyzer's
     // SupportsRowLevelOperations path — current-catalog single-part
     // names keep the graft parser rewrite out of the loop, so this is
-    // the route a third-party tool takes (UPDATE and DELETE group-based
-    // copy-on-write: the operation's scan plans candidate files, the
-    // write replaces exactly those groups in ONE snapshot via
-    // executor-side parquet DataWriters; MERGE a position delta). The
-    // final state is DuckDB-rederived from documents
-    // arithmetic. Data-derived at any scale.
+    // the route a third-party tool takes: each statement a position
+    // delta (position deletes + new rows in ONE snapshot via
+    // executor-side parquet DataWriters). The comments inside the body
+    // still name the group-based route UPDATE and DELETE took before;
+    // the body stays as the oracle pinned it. The final state is
+    // DuckDB-rederived from documents arithmetic. Data-derived at any
+    // scale.
     QueryDef("iceberg_native_dml", (s, d) => {
       val wh = java.nio.file.Paths.get(
         System.getProperty("java.io.tmpdir"), "graft_ndml_oracle").toString

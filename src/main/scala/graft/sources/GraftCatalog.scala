@@ -59,14 +59,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * the current snapshot or a pinned one, across every schema/spec
   * generation; Spark re-applies every filter exactly. Names registered
   * through [[graft.Catalog.registerIcebergTable]] are V2 relations over
-  * this same table. SQL MERGE takes one route in every session and for
-  * both name kinds: Spark's own MERGE over this table's position-delta
-  * row-level operation ([[GraftDeltaOperation]]). INSERT / DELETE /
-  * UPDATE / TRUNCATE still split by session: with the graft extensions
-  * they route at parse time onto one set of commands
-  * (plans/IcebergWrite.scala: row counts as results, the MOR
-  * delete/update modes); a session without them takes this table's
-  * group-based row-level path (`SupportsRowLevelOperations`).
+  * this same table. SQL DELETE, UPDATE and MERGE take one route in
+  * every session and for both name kinds: Spark's own row-level command
+  * over this table's position-delta operation
+  * ([[GraftDeltaOperation]]); a DELETE with no WHERE is the
+  * metadata-only truncate. INSERT / OVERWRITE / TRUNCATE TABLE still
+  * split by session: with the graft extensions they route at parse time
+  * onto the commands of plans/IcebergWrite.scala, which also return the
+  * row counts of every SQL write.
   */
 class GraftTableCatalog extends TableCatalog with StagingTableCatalog
     with SupportsNamespaces
@@ -508,7 +508,6 @@ object GraftTableCatalog {
 class GraftIcebergTable(ident: Identifier, val tableDir: String,
                         val snapshotId: Option[Long])
     extends Table with SupportsRead with SupportsWrite
-    with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.TruncatableTable
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
@@ -667,22 +666,18 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
   }
 
   // ---- row-level: native V2 DELETE / UPDATE / MERGE ------------------------
-  // MERGE (every session): a position delta through GraftDeltaOperation.
-  // DELETE / UPDATE (sessions without the graft extensions): group-based
-  // copy-on-write through GraftRowLevelOperation — the operation's scan
-  // plans the candidate groups, the write replaces exactly those in ONE
-  // snapshot.
+  // every session, every command: a position delta through
+  // GraftDeltaOperation — position deletes for the removed and updated
+  // rows, new rows for the updated and inserted ones, ONE snapshot. A
+  // DELETE with no WHERE never gets here: Spark truncates a
+  // TruncatableTable instead.
 
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
     require(snapshotId.isEmpty,
       s"${info.command()} on ${name()}: time-travel reads are immutable")
-    () => info.command() match {
-      case org.apache.spark.sql.connector.write.RowLevelOperation.Command.MERGE =>
-        new GraftDeltaOperation(name(), tableDir)
-      case cmd => new GraftRowLevelOperation(name(), tableDir, cmd)
-    }
+    () => new GraftDeltaOperation(name(), tableDir, info.command())
   }
 
   // ---- write: V1Write onto the distributed appendSnapshot -----------------
@@ -733,17 +728,8 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
       }
     }
 
-  // ---- row-level: native DELETE / TRUNCATE facades -------------------------
+  // ---- TRUNCATE TABLE and a DELETE with no WHERE ---------------------------
 
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    filters.forall(f => GraftTableCatalog.filterColumn(f).isDefined)
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    val cond = filters.toSeq.map(f =>
-      GraftTableCatalog.filterColumn(f).getOrElse(
-        throw new UnsupportedOperationException(s"DELETE filter $f")))
-      .reduceOption(_ && _).getOrElse(lit(true))
-    IcebergLite.deleteWhere(spark, tableDir, cond)
-  }
   override def truncateTable(): Boolean = {
     IcebergLite.truncateTable(spark, tableDir)
     true

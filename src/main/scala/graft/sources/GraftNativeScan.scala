@@ -28,10 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *     storage-partitioned join, `spark.sql.sources.v2.bucketing
   *     .enabled`) — at 100 TB the difference between a co-located
   *     merge join and shuffling both tables;
-  *   - the row-level DML plans consume this scan: a group-based DELETE
-  *     or UPDATE (ReplaceData) replaces exactly the files it plans, and
-  *     a MERGE (WriteDelta) reads each row's `__file` / `__pos`, the
-  *     row id its position deletes name.
+  *   - the row-level DML plans consume this scan: a DELETE, UPDATE or
+  *     MERGE (WriteDelta) reads each row's `__file` / `__pos`, the row
+  *     id its position deletes name.
   *
   * Files are read by `ParquetFileFormat`'s own vectorized reader
   * (through [[org.apache.spark.sql.GraftParquetShim]]), each through
@@ -123,13 +122,10 @@ class GraftNativeBatchScan(spark: SparkSession, tableName: String,
     * columns, then the delete keys and row index it pruned. */
   private val wide = StructType(required ++ eqExtraFields ++ posExtra)
 
-  // RUNTIME GROUP FILTERING (SupportsRuntimeV2Filtering): Spark's
-  // RowLevelOperationRuntimeGroupFiltering injects a dynamic IN-filter
-  // on the partition SOURCE columns, built from the rows the command's
-  // condition actually matches — so a group-based DELETE or UPDATE
-  // whose condition has no static pushable filters (a subquery) reads
-  // and REWRITES only the partitions containing matches, never the
-  // table. Runtime values map through
+  // RUNTIME FILTERING (SupportsRuntimeV2Filtering): dynamic partition
+  // pruning injects an IN-filter on the partition SOURCE columns, built
+  // from the other side of a join — so a fact⋈dim join reads only the
+  // partitions the dimension rows can match. Runtime values map through
   // the DEFAULT spec's transforms onto manifest partition values; a
   // file written under another spec, and anything unconvertible, prunes
   // nothing (superset guarantee, as everywhere).
@@ -194,11 +190,10 @@ class GraftNativeBatchScan(spark: SparkSession, tableName: String,
     if (byCol.isEmpty) return
     // allowed source values -> allowed partition values per spec field.
     // NULL source values are tracked as a flag, NOT pushed through
-    // applyValue: Spark's runtime IN-list carries null when matched rows
-    // live in the null partition (every transform maps null -> null
-    // partition value), and bucket/truncate applyValue would NPE on it —
-    // while dropping null-partition files here would silently exclude
-    // exactly the rows a native DELETE/UPDATE matched.
+    // applyValue: a runtime IN-list carries null when the filtering
+    // side holds null (every transform maps null -> null partition
+    // value), and bucket/truncate applyValue would NPE on it — while
+    // dropping null-partition files here would silently exclude rows.
     val allowedPart: Seq[Option[(Set[Any], Boolean)]] =
       info.spec.map { case (pf, _) =>
         byCol.get(pf.sourceCol).map { vs =>
@@ -221,8 +216,7 @@ class GraftNativeBatchScan(spark: SparkSession, tableName: String,
     })
   }
 
-  /** The files this scan plans — the GROUP set a row-level operation
-    * replaces (runtime group filtering applied). */
+  /** The files this scan plans (runtime filtering applied). */
   def plannedFiles: Seq[String] = activeFiles.map(_.path)
 
   override def readSchema(): StructType = required

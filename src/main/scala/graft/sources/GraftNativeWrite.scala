@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjecti
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expression, Expressions, NamedReference, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, SupportsDelta, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, SupportsDelta, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
@@ -34,116 +34,115 @@ class GraftHadoopConf(@transient var value: Configuration)
   }
 }
 
-/** NATIVE V2 row-level DML over a graft catalog table — the
-  * `SupportsRowLevelOperations` implementations through which Spark's
-  * own analyzer plans `DELETE` / `UPDATE` in a session without the
-  * graft extensions and `MERGE` in every session (the route a
-  * third-party tool that builds its own plans takes; ingest tooling in
-  * the reference drives exactly this API surface through its catalogs).
+/** NATIVE V2 row-level DML over a graft catalog table: SQL DELETE,
+  * UPDATE and MERGE, in every session and for every name kind, as a
+  * POSITION DELTA (`SupportsDelta`) — the route Spark's own analyzer
+  * plans, and the one a third-party tool that builds its own plans takes
+  * (ingest tooling in the reference drives exactly this API surface
+  * through its catalogs). The operation's scan reads the table with its
+  * merge-on-read deletes applied and each row's id — (`__file`,
+  * `__pos`), the address a position delete names — pruned by the
+  * statement's pushed filters; the write turns each removed or updated
+  * row into a position delete and each updated or inserted row into a
+  * new data row ([[GraftDeltaWriter]]), committed as ONE snapshot of a
+  * position-delete manifest and a data manifest
+  * ([[IcebergLite.commitDelta]]) that records the statement's counts. No
+  * data file is rewritten, so the write costs ∝ the rows the statement
+  * changes, tables that already carry merge-on-read deletes take it as
+  * they are, and [[IcebergLite.compact]] later makes the deletes
+  * physical.
   *
-  * DELETE and UPDATE are GROUP-BASED (copy-on-write, this class): the
-  * operation's scan plans the candidate files — bounds/partition/
-  * Bloom-pruned by the pushed command condition, so a targeted DELETE
-  * reads its slice, never the table — and the write replaces exactly
-  * those groups with the transformed rows, committed as ONE snapshot
-  * ([[IcebergLite.commitReplaceGroups]]): no half-applied crash
-  * window. Spark's own `OptimizeMetadataOnlyDeleteFromTable` still
-  * short-circuits fully filter-expressible DELETEs onto the
-  * metadata-only `SupportsDeleteV2` path before any of this runs.
-  * MERGE is a POSITION DELTA instead ([[GraftDeltaOperation]]).
-  *
-  * Executor `DataWriter`s are the ONE writer every IcebergLite write
-  * uses ([[GraftDataWriterFactory]]): parquet through the
+  * Executor writers are the ONE data-file writer every IcebergLite
+  * write uses ([[GraftDataWriterFactory]]): parquet through the
   * session-configured `ParquetFileFormat` factory in the partitionBy
   * directory layout, each file collecting its manifest statistics
   * (rows, size, bounds, Bloom bits) in the task, so the commit builds
-  * its entries from the task messages and reads nothing back. The
-  * write requires a distribution CLUSTERED on the partition transforms
-  * (resolved through [[GraftFunctions]]) to keep the file count
-  * bounded at fleet scale, and each task ordered by the partition
-  * transforms and then the table's persisted sort order, so a task
-  * keeps one file open at a time. */
-class GraftRowLevelOperation(tableName: String, tableDir: String,
-                             cmd: Command)
-    extends RowLevelOperation {
+  * its entries from the task messages and reads nothing back. */
+class GraftDeltaOperation(tableName: String, tableDir: String, cmd: Command)
+    extends SupportsDelta {
 
   private def spark = SparkSession.active
 
-  // the scan Spark plans for this operation — its file set IS the
-  // group set the write replaces (captured at build, read at commit)
-  @volatile private var builtScan: GraftNativeBatchScan = _
-
   override def command(): Command = cmd
-  override def description(): String = s"GraftRowLevel $cmd $tableName"
+  override def description(): String = s"GraftDelta $cmd $tableName"
+  override def rowId(): Array[NamedReference] =
+    Array(GraftNativeBatchScan.FileCol, GraftNativeBatchScan.PosCol)
+      .map(Expressions.column)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
     new GraftScanBuilder(IcebergLite.tableSchema(spark, tableDir)) {
-      override def build(): org.apache.spark.sql.connector.read.Scan = {
-        val preds = pushed.toSeq.flatMap(GraftTableCatalog.filterPreds)
-        val info = IcebergLite.nativeScanInfo(spark, tableDir, preds)
-        // a group replacement commits a rewrite snapshot, which drops
-        // the delete manifests: deleted rows in files outside the
-        // replaced groups would come back
-        if (info.deletes.isDefined) throw new UnsupportedOperationException(
-          s"$cmd on $tableName: the table carries merge-on-read " +
-            "deletes, which the native row-level path cannot " +
-            "represent — run IcebergLite.compact(...) first, or " +
-            "install graft.GraftExtensions and use the SQL route")
-        builtScan = new GraftNativeBatchScan(spark, tableName, info,
+      override def build(): org.apache.spark.sql.connector.read.Scan =
+        new GraftNativeBatchScan(spark, tableName,
+          IcebergLite.nativeScanInfo(spark, tableDir,
+            pushed.toSeq.flatMap(GraftTableCatalog.filterPreds)),
           required, pushed.toSeq)
-        builtScan
-      }
     }
 
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder {
-      override def build(): Write = {
-        val meta = IcebergLite.nativeScanInfo(spark, tableDir)
-        new GraftReplaceGroupsWrite(spark, tableName, tableDir,
-          info.schema(), meta,
-          () => {
-            require(builtScan != null,
-              s"$cmd on $tableName: the operation's scan was never built")
-            builtScan.plannedFiles.toSet
-          })
+  override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
+    new DeltaWriteBuilder {
+      override def build(): DeltaWrite = {
+        // a DELETE's delta carries row ids only: no row to cluster,
+        // order or write
+        val (specItems, sortCols) =
+          if (info.schema().isEmpty) (Nil, Nil)
+          else IcebergLite.writeLayout(spark, tableDir)
+        new GraftDeltaWrite(spark, tableName, tableDir, info.schema(),
+          specItems, sortCols)
       }
     }
 }
 
-/** The group-replacement `Write`: clustered on the partition
-  * transforms, ordered by them and then the persisted sort columns,
-  * committed as ONE snapshot that drops the scanned groups and adopts
-  * the staged files. */
-class GraftReplaceGroupsWrite(spark: SparkSession, tableName: String,
-                              tableDir: String, writeSchema: StructType,
-                              info: IcebergLite.NativeScanInfo,
-                              replacedFiles: () => Set[String])
-    extends Write with RequiresDistributionAndOrdering {
+/** The position-delta `Write`. Rows cluster on their row id's data
+  * file first, so every delete of one row lands in one task (Spark
+  * skips its cardinality check for an unconditional matched DELETE, and
+  * a target row two source rows match arrives twice) and the deletes of
+  * one file share as few tasks as possible (each task writes one delete
+  * file per data file, as Iceberg's position-delta writers cluster by
+  * file); then on the partition transforms — or, for an unpartitioned
+  * table, the row's own atomic values — so inserted rows spread. Each
+  * task is ordered by row id, which sorts its position deletes by
+  * (file_path, pos) and puts the repeat of a delete next to it, then by
+  * the partition transforms and the persisted sort order, which
+  * clusters its inserted rows. A DELETE's rows are row ids alone (an
+  * empty `rowSchema`, no spec or sort columns): each data file's
+  * deletes land in one task, ordered by row id. */
+class GraftDeltaWrite(spark: SparkSession, tableName: String,
+                      tableDir: String, rowSchema: StructType,
+                      specItems: Seq[String], sortCols: Seq[String])
+    extends DeltaWrite with RequiresDistributionAndOrdering {
 
-  override def description(): String = s"GraftReplaceGroups $tableName"
+  override def description(): String = s"GraftDelta $tableName"
+
+  private val fileCol: Expression =
+    Expressions.column(GraftNativeBatchScan.FileCol)
+  private val rowIdCols: Seq[Expression] =
+    Seq(fileCol, Expressions.column(GraftNativeBatchScan.PosCol))
+  private val transforms: Seq[Expression] =
+    specItems.map(GraftTableCatalog.toTransform)
 
   override def requiredDistribution(): Distribution =
-    if (info.specItems.isEmpty) Distributions.unspecified()
-    else Distributions.clustered(
-      info.specItems.map(GraftTableCatalog.toTransform)
-        .toArray[org.apache.spark.sql.connector.expressions.Expression])
+    Distributions.clustered((fileCol +: (
+      if (transforms.nonEmpty) transforms
+      else rowSchema.fields.toSeq.collect {
+        case f if !f.dataType.isInstanceOf[ArrayType] &&
+            !f.dataType.isInstanceOf[MapType] &&
+            !f.dataType.isInstanceOf[StructType] =>
+          Expressions.column(s"`${f.name.replace("`", "``")}`")
+      })).toArray)
 
-  // partition transforms first: each task's rows arrive clustered by
-  // partition, so the writer keeps one file open
   override def requiredOrdering(): Array[SortOrder] =
-    (info.specItems.map(GraftTableCatalog.toTransform) ++
-      info.sortCols.map(Expressions.column))
+    (rowIdCols ++ transforms ++ sortCols.map(Expressions.column))
       .map(e => Expressions.sort(e, SortDirection.ASCENDING)).toArray
 
-  override def toBatch: BatchWrite = {
-    // the staging dir is keyed to the snapshot this statement will
-    // commit (single-writer discipline, as everywhere in IcebergLite);
-    // "-w" keeps it clear of same-snapshot API writes
+  override def toBatch(): DeltaBatchWrite = {
+    // staging dirs keyed to the snapshot this statement will commit
+    // (single-writer discipline, as everywhere in IcebergLite); "-w"
+    // keeps them clear of same-snapshot API writes
     val snapshotId = IcebergLite.nextSnapshotIdOf(spark, tableDir)
-    val stagingDir = s"$tableDir/data/s$snapshotId-w"
-    new GraftReplaceBatchWrite(spark, tableDir, stagingDir, writeSchema,
-      replacedFiles)
+    new GraftDeltaBatchWrite(spark, tableDir,
+      s"$tableDir/data/s$snapshotId-w", s"$tableDir/data/deletes-s$snapshotId-w",
+      rowSchema)
   }
 }
 
@@ -162,127 +161,6 @@ case class GraftDataFile(path: String, partition: Seq[Any], rowCount: Long,
 /** Commit message: the data files one task wrote. */
 case class GraftWriteCommit(files: Seq[GraftDataFile]) extends WriterCommitMessage
 
-class GraftReplaceBatchWrite(spark: SparkSession, tableDir: String,
-                             stagingDir: String, writeSchema: StructType,
-                             replacedFiles: () => Set[String])
-    extends BatchWrite {
-
-  override def createBatchWriterFactory(phys: PhysicalWriteInfo)
-      : DataWriterFactory =
-    IcebergLite.dataWriterFactory(spark, tableDir, stagingDir, writeSchema)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    // ONE snapshot: carried untouched files + the staged replacement
-    // files, whose entries are the statistics the write tasks collected
-    // (the same writer the DataFrame route uses). Only files named by
-    // COMMITTED task messages adopt — a crashed speculative attempt's
-    // strays stay orphans.
-    val staged = messages.toSeq.flatMap {
-      case GraftWriteCommit(files) => files
-      case _ => Nil
-    }
-    IcebergLite.commitReplaceGroups(spark, tableDir, replacedFiles(),
-      staged)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftReplaceBatchWrite.dropStaged(spark, stagingDir)
-}
-
-object GraftReplaceBatchWrite {
-  /** Remove an aborted write's staging directories. */
-  def dropStaged(spark: SparkSession, dirs: String*): Unit = dirs.foreach { d =>
-    val p = new Path(d)
-    val fs = p.getFileSystem(GraftParquetShim.sessionHadoopConf(spark))
-    if (fs.exists(p)) fs.delete(p, true)
-  }
-}
-
-/** SQL MERGE over a graft catalog table as a POSITION DELTA
-  * (`SupportsDelta`, in every session): the operation's scan reads the
-  * table with its merge-on-read deletes applied and each row's id —
-  * (`__file`, `__pos`), the address a position delete names — and the
-  * write turns each removed or updated row into a position delete and
-  * each updated or inserted row into a new data row
-  * ([[GraftDeltaWriter]]), committed as ONE snapshot of a
-  * position-delete manifest and a data manifest
-  * ([[IcebergLite.commitDelta]]). No data file is rewritten, so the
-  * write costs ∝ the rows the statement changes, and tables that
-  * already carry merge-on-read deletes take it as they are. */
-class GraftDeltaOperation(tableName: String, tableDir: String)
-    extends SupportsDelta {
-
-  private def spark = SparkSession.active
-
-  override def command(): Command = Command.MERGE
-  override def description(): String = s"GraftDelta MERGE $tableName"
-  override def rowId(): Array[NamedReference] =
-    Array(GraftNativeBatchScan.FileCol, GraftNativeBatchScan.PosCol)
-      .map(Expressions.column)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder =
-    new GraftScanBuilder(IcebergLite.tableSchema(spark, tableDir)) {
-      override def build(): org.apache.spark.sql.connector.read.Scan =
-        new GraftNativeBatchScan(spark, tableName,
-          IcebergLite.nativeScanInfo(spark, tableDir,
-            pushed.toSeq.flatMap(GraftTableCatalog.filterPreds)),
-          required, pushed.toSeq)
-    }
-
-  override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
-    new DeltaWriteBuilder {
-      override def build(): DeltaWrite = new GraftDeltaWrite(spark, tableName,
-        tableDir, info.schema(), IcebergLite.nativeScanInfo(spark, tableDir))
-    }
-}
-
-/** The position-delta `Write` of a MERGE. Rows cluster on their row id
-  * first, so every delete of one row lands in one task (Spark skips its
-  * cardinality check for an unconditional matched DELETE, and a target
-  * row two source rows match arrives twice), then on the partition
-  * transforms — or, for an unpartitioned table, the row's own atomic
-  * values — so inserted rows spread. Each task is ordered by row id,
-  * which sorts its position deletes by (file_path, pos) and puts the
-  * repeat of a delete next to it, then by the partition transforms and
-  * the persisted sort order, which clusters its inserted rows. */
-class GraftDeltaWrite(spark: SparkSession, tableName: String,
-                      tableDir: String, rowSchema: StructType,
-                      info: IcebergLite.NativeScanInfo)
-    extends DeltaWrite with RequiresDistributionAndOrdering {
-
-  override def description(): String = s"GraftDelta $tableName"
-
-  private val rowIdCols: Seq[Expression] =
-    Seq(GraftNativeBatchScan.FileCol, GraftNativeBatchScan.PosCol)
-      .map(Expressions.column)
-  private val transforms: Seq[Expression] =
-    info.specItems.map(GraftTableCatalog.toTransform)
-
-  override def requiredDistribution(): Distribution =
-    Distributions.clustered((rowIdCols ++ (
-      if (transforms.nonEmpty) transforms
-      else rowSchema.fields.toSeq.collect {
-        case f if !f.dataType.isInstanceOf[ArrayType] &&
-            !f.dataType.isInstanceOf[MapType] &&
-            !f.dataType.isInstanceOf[StructType] =>
-          Expressions.column(s"`${f.name.replace("`", "``")}`")
-      })).toArray)
-
-  override def requiredOrdering(): Array[SortOrder] =
-    (rowIdCols ++ transforms ++ info.sortCols.map(Expressions.column))
-      .map(e => Expressions.sort(e, SortDirection.ASCENDING)).toArray
-
-  override def toBatch(): DeltaBatchWrite = {
-    // staging dirs keyed to the snapshot this statement will commit, as
-    // the group write's are
-    val snapshotId = IcebergLite.nextSnapshotIdOf(spark, tableDir)
-    new GraftDeltaBatchWrite(spark, tableDir,
-      s"$tableDir/data/s$snapshotId-w", s"$tableDir/data/deletes-s$snapshotId-w",
-      rowSchema)
-  }
-}
-
 class GraftDeltaBatchWrite(spark: SparkSession, tableDir: String,
                            dataDir: String, deleteDir: String,
                            rowSchema: StructType)
@@ -291,7 +169,9 @@ class GraftDeltaBatchWrite(spark: SparkSession, tableDir: String,
   override def createBatchWriterFactory(phys: PhysicalWriteInfo)
       : DeltaWriterFactory =
     GraftDeltaWriterFactory(
-      IcebergLite.dataWriterFactory(spark, tableDir, dataDir, rowSchema),
+      if (rowSchema.isEmpty) None
+      else Some(IcebergLite.dataWriterFactory(spark, tableDir, dataDir,
+        rowSchema)),
       GraftDataWriterFactory.forTable(spark, new Path(deleteDir),
         GraftDeltaWriter.PositionSchema, Nil,
         Map("file_path" -> IcebergLite.PosPathFieldId,
@@ -306,8 +186,13 @@ class GraftDeltaBatchWrite(spark: SparkSession, tableDir: String,
       done.map(_.deleted).sum, done.map(_.inserted).sum)
   }
 
+  // an aborted write's staging directories go
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftReplaceBatchWrite.dropStaged(spark, dataDir, deleteDir)
+    Seq(dataDir, deleteDir).foreach { d =>
+      val p = new Path(d)
+      val fs = p.getFileSystem(GraftParquetShim.sessionHadoopConf(spark))
+      if (fs.exists(p)) fs.delete(p, true)
+    }
 }
 
 /** Commit message of one delta write task: the data and
@@ -318,7 +203,10 @@ case class GraftDeltaCommit(data: Seq[GraftDataFile],
                             updated: Long, deleted: Long, inserted: Long)
     extends WriterCommitMessage
 
-case class GraftDeltaWriterFactory(data: GraftDataWriterFactory,
+/** The writers of a position delta: `data` writes updated and inserted
+  * rows (none for a DELETE, whose delta carries no row), `deletes` the
+  * position deletes. */
+case class GraftDeltaWriterFactory(data: Option[GraftDataWriterFactory],
                                    deletes: GraftDataWriterFactory)
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int,
@@ -326,19 +214,22 @@ case class GraftDeltaWriterFactory(data: GraftDataWriterFactory,
     new GraftDeltaWriter(data, deletes, partitionId, taskId)
 }
 
-/** One task of a MERGE's position delta: removed and updated row ids go
-  * to the task's position-delete file, updated and inserted rows to its
-  * data files — both through the one data-file writer — and the task
-  * counts what it did. Row ids arrive sorted, so a delete repeated for
-  * a row matched twice is the previous id: it is written and counted
-  * once. */
-class GraftDeltaWriter(data: GraftDataWriterFactory,
+/** One task of a DELETE's, UPDATE's or MERGE's position delta: removed
+  * and updated row ids go to the task's position-delete files, updated
+  * and inserted rows to its data files — both through the one data-file
+  * writer — and the task counts what it did. Row ids arrive sorted, so
+  * a delete repeated for a row matched twice is the previous id: it is
+  * written and counted once. Each position-delete file names ONE data
+  * file (the Iceberg writers' file-scoped deletes): its exact
+  * `file_path` bounds are equal, so readers and [[IcebergLite]] name
+  * the file a delete hits from the manifest alone. */
+class GraftDeltaWriter(data: Option[GraftDataWriterFactory],
                        deletes: GraftDataWriterFactory,
                        partitionId: Int, taskId: Long)
     extends DeltaWriter[InternalRow] {
 
-  private val rows =
-    new GraftClusteredDataWriter(data, data.conf.value, partitionId, taskId)
+  private val rows = data.map(d =>
+    new GraftClusteredDataWriter(d, d.conf.value, partitionId, taskId))
   private val positions = new GraftClusteredDataWriter(deletes,
     deletes.conf.value, partitionId, taskId)
   private var updated, deleted, inserted = 0L
@@ -350,7 +241,10 @@ class GraftDeltaWriter(data: GraftDataWriterFactory,
     val (file, pos) = (id.getUTF8String(0), id.getLong(1))
     if (pos == lastPos && file == lastFile) false
     else {
-      lastFile = file.copy()
+      if (file != lastFile) {
+        positions.roll()
+        lastFile = file.copy()
+      }
       lastPos = pos
       positions.write(id)
       true
@@ -363,26 +257,26 @@ class GraftDeltaWriter(data: GraftDataWriterFactory,
   override def update(metadata: InternalRow, id: InternalRow,
                       row: InternalRow): Unit = {
     remove(id)
-    rows.write(row)
+    rows.get.write(row)
     updated += 1
   }
 
   override def insert(row: InternalRow): Unit = {
-    rows.write(row)
+    rows.get.write(row)
     inserted += 1
   }
 
   override def commit(): GraftDeltaCommit =
-    GraftDeltaCommit(rows.commit().files, positions.commit().files,
-      updated, deleted, inserted)
+    GraftDeltaCommit(rows.toSeq.flatMap(_.commit().files),
+      positions.commit().files, updated, deleted, inserted)
 
   override def abort(): Unit = {
-    rows.abort()
+    rows.foreach(_.abort())
     positions.abort()
   }
 
   override def close(): Unit = {
-    rows.close()
+    rows.foreach(_.close())
     positions.close()
   }
 }
@@ -517,12 +411,12 @@ private final class OpenDataFile(val writer: OutputWriter,
     case other => other
   }
 
-  def add(row: InternalRow, off: Int): Unit = {
+  def add(row: InternalRow): Unit = {
     rows += 1
     var i = 0
     while (i < orders.length) {
       val (src, dt, _) = f.bounded(i)
-      val v = row.get(src + off, dt)
+      val v = row.get(src, dt)
       if (v != null) {
         // a prefix is ≤ its value, so only v < lo can lower the min's
         // prefix; v > hi raises the max's unless it merely extends it
@@ -540,10 +434,10 @@ private final class OpenDataFile(val writer: OutputWriter,
       i += 1
     }
     f.blooms.zip(blooms).foreach { case ((src, dt, _), bf) =>
-      if (!row.isNullAt(src + off)) dt match {
-        case StringType => bf.putBinary(row.getUTF8String(src + off).getBytes)
-        case LongType => bf.putLong(row.getLong(src + off))
-        case _ => bf.putLong(row.getInt(src + off).toLong)
+      if (!row.isNullAt(src)) dt match {
+        case StringType => bf.putBinary(row.getUTF8String(src).getBytes)
+        case LongType => bf.putLong(row.getLong(src))
+        case _ => bf.putLong(row.getInt(src).toLong)
       }
     }
   }
@@ -580,26 +474,12 @@ class GraftClusteredDataWriter(f: GraftDataWriterFactory, conf: Configuration,
                                partitionId: Int, taskId: Long)
     extends DataWriter[InternalRow] {
 
-  // Spark's plain writing task hands the ReplaceData query output RAW,
-  // which carries a leading `__row_operation` int column when the
-  // rewrite produced one (it only gets projected away on the
-  // metadata-attribute path) — detect the offset from the first row and
-  // shift every field index by it. Group-based replaces only emit
-  // write-operation rows, so the op code never drops a row here; the
-  // guard refuses anything unexpected rather than mis-writing.
-  private var off = -1
-  private var proj: InternalRow => InternalRow = _
-  private def bind(row: InternalRow): Unit = {
-    off = row.numFields - f.writeSchema.size
-    require(off == 0 || off == 1,
-      s"row layout ${row.numFields} fields vs write schema " +
-        s"${f.writeSchema.size} — unsupported shape")
-    proj =
-      if (off == 0 && f.fileIdx == f.writeSchema.indices) identity
-      else UnsafeProjection.create(f.fileIdx.map(i =>
-        BoundReference(i + off, f.writeSchema.fields(i).dataType,
-          f.writeSchema.fields(i).nullable)).toIndexedSeq)
-  }
+  // identity partition columns live in the directory key, not the file
+  private val proj: InternalRow => InternalRow =
+    if (f.fileIdx == f.writeSchema.indices) identity
+    else UnsafeProjection.create(f.fileIdx.map(i =>
+      BoundReference(i, f.writeSchema.fields(i).dataType,
+        f.writeSchema.fields(i).nullable)).toIndexedSeq)
   private val done = mutable.ArrayBuffer.empty[GraftDataFile]
   // the open file and the partition SOURCE values of the last row: a
   // row with the same values skips the transforms
@@ -607,7 +487,7 @@ class GraftClusteredDataWriter(f: GraftDataWriterFactory, conf: Configuration,
   private var curSrc: Seq[Any] = Nil
 
   private def sources(row: InternalRow): Seq[Any] =
-    f.partitions.map { case (_, _, dt, src) => row.get(src + off, dt) }
+    f.partitions.map { case (_, _, dt, src) => row.get(src, dt) }
 
   /** The partition values of source values `src`, through the
     * transforms. An empty string lands in the default partition and
@@ -639,7 +519,6 @@ class GraftClusteredDataWriter(f: GraftDataWriterFactory, conf: Configuration,
   }
 
   override def write(row: InternalRow): Unit = {
-    if (off < 0) bind(row)
     val src = sources(row)
     if (cur == null || src != curSrc) {
       // UTF8Strings may point into the reused row buffer: keep copies
@@ -653,13 +532,18 @@ class GraftClusteredDataWriter(f: GraftDataWriterFactory, conf: Configuration,
         cur = open(values)
       }
     }
-    cur.add(row, off)
+    cur.add(row)
     cur.writer.write(proj(row))
   }
 
-  override def commit(): GraftWriteCommit = {
+  /** Close the open file: the next row starts a new one. */
+  def roll(): Unit = {
     if (cur != null) done += cur.finish(conf)
     cur = null
+  }
+
+  override def commit(): GraftWriteCommit = {
+    roll()
     GraftWriteCommit(done.toSeq)
   }
 

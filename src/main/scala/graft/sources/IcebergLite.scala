@@ -1638,22 +1638,33 @@ object IcebergLite {
   }
 
   /** Metadata-only TRUNCATE: commit a snapshot whose manifest list is
-    * empty — every live file drops in one KB-scale metadata write, ZERO
-    * data files are read or written (vs routing `DELETE WHERE true`
-    * through [[deleteWhere]], which scans the full table twice to
-    * produce nothing). History intact: prior snapshots still
-    * time-travel to the full data. Returns the manifest-accounted live
-    * row count that was dropped. */
+    * empty — every live file drops in one KB-scale metadata write, no
+    * data file is written, and none is read unless an equality delete
+    * hides the live row count ([[liveRowCount]]). History intact: prior
+    * snapshots still time-travel to the full data. Returns the live row
+    * count that was dropped, which the snapshot summary records under
+    * [[DeletedRowsKey]]. */
   def truncateTable(spark: SparkSession, tableDir: String): Long = {
     val meta = readMeta(spark, tableDir)
-    val n = meta.manifests.filter(_.content == 0).map(_.totalRows).sum
+    val n = liveRowCount(spark, meta)
     commit(spark, new Path(tableDir), Some(meta), meta.nextSnapshotId,
       meta.version + 1, manifests = Seq.empty, meta.schemaJs,
       meta.lastColumnId, meta.specs, meta.defaultSpecId,
       operation = "delete", sortCols = meta.sortOrderCols,
-      props = meta.props)
+      props = meta.props, counts = Seq(DeletedRowsKey -> n))
     n
   }
+
+  /** The live rows of `meta`'s snapshot: the data manifests' rows minus
+    * the position deletes' (each names one live row — every writer of
+    * one reads with the deletes already applied). An equality delete's
+    * matched-row count is not derivable from metadata (a key kills 0..n
+    * rows), so a snapshot carrying one pays one read. */
+  private def liveRowCount(spark: SparkSession, meta: TableMeta): Long =
+    if (meta.manifests.exists(_.content == 2))
+      readFiles(spark, meta, liveFileEntries(spark, meta)).count()
+    else meta.manifests.filter(_.content == 0).map(_.totalRows).sum -
+      meta.manifests.filter(_.content == 1).map(_.totalRows).sum
 
   def deleteWhere(spark: SparkSession,
                   tableDir: String,
@@ -1719,28 +1730,37 @@ object IcebergLite {
   }
 
   /** Live data files an outstanding merge-on-read delete still names:
-    * referenced by a position delete, or predating a live equality
-    * delete. A rewrite snapshot drops the delete manifests (every delete
-    * goes physical), so these files must rewrite with the deletes
-    * applied, or deleted rows would resurrect. A position-delete file
-    * whose exact `file_path` bounds are equal names that one file, read
-    * from the manifest; only files with differing or missing bounds
-    * have their `file_path` column read. Paths match in the one path
-    * identity ([[GraftNativeReaderFactory.normPath]]). */
+    * referenced by a position delete ([[posDeleteTargets]]), or
+    * predating a live equality delete. A rewrite snapshot drops the
+    * delete manifests (every delete goes physical), so these files must
+    * rewrite with the deletes applied, or deleted rows would resurrect. */
   private def deleteNamedFiles(spark: SparkSession, meta: TableMeta,
                                files: Seq[NativeFileInfo]): Set[String] = {
-    val (single, spread) = liveDeleteFiles(spark, meta)
-      .partition { case (_, lo, hi) => lo.isDefined && lo == hi }
-    val posRefs = single.flatMap(_._2) ++
-      (if (spread.isEmpty) Nil
-       else spark.read.parquet(spread.map(_._1.path): _*)
-         .select("file_path").distinct().collect().map(_.getString(0)).toSeq)
-    val named = posRefs.map(GraftNativeReaderFactory.normPath).toSet
+    val named = posDeleteTargets(spark, liveDeleteFiles(spark, meta))
     // an equality delete applies to every file its snapshot postdates
     val lastEq = liveEqualityDeletes(spark, meta).map(_.snapshotId)
       .maxOption.getOrElse(Long.MinValue)
     files.filter(f => f.snapshotId < lastEq ||
       named(GraftNativeReaderFactory.normPath(f.path))).map(_.path).toSet
+  }
+
+  /** The data files position-delete files name, in the one path
+    * identity ([[GraftNativeReaderFactory.normPath]]): a delete file
+    * whose exact `file_path` bounds are equal names that one file, read
+    * from its manifest entry (every delete file the position-delta write
+    * produces); only files with differing or missing bounds have their
+    * `file_path` column read. */
+  private def posDeleteTargets(spark: SparkSession,
+      deletes: Seq[(NativeDeleteFile, Option[String], Option[String])])
+      : Set[String] = {
+    val (single, spread) = deletes
+      .partition { case (_, lo, hi) => lo.isDefined && lo == hi }
+    (single.flatMap(_._2) ++
+      (if (spread.isEmpty) Nil
+       else spark.read.schema(GraftDeltaWriter.PositionSchema)
+         .parquet(spread.map(_._1.path): _*)
+         .select("file_path").distinct().collect().map(_.getString(0)).toSeq))
+      .map(GraftNativeReaderFactory.normPath).toSet
   }
 
   /** The manifest groups of a rewrite snapshot: `rows` written as new
@@ -1814,18 +1834,8 @@ object IcebergLite {
     if (spec.isEmpty) {
       // unpartitioned: degrade to a full replace — ONE snapshot whose
       // manifest list carries only the new batch (the Iceberg rule),
-      // with the dropped-row count from the prior live manifests.
-      // Outstanding merge-on-read deletes (content 1/2) mean the data
-      // manifests' totalRows OVERCOUNTS the live rows; position-delete
-      // counts subtract exactly, but an equality delete's matched-row
-      // count is not derivable from metadata (a key kills 0..n rows),
-      // so that case pays one read of the (about-to-be-replaced) table.
-      val dataRows = meta.manifests.filter(_.content == 0).map(_.totalRows).sum
-      val n =
-        if (meta.manifests.exists(_.content == 2))
-          readTable(spark, tableDir).count()
-        else dataRows -
-          meta.manifests.filter(_.content == 1).map(_.totalRows).sum
+      // dropping the prior live rows
+      val n = liveRowCount(spark, meta)
       commitRowDelta(spark, tableDir, appendDf = Some(df),
         replaceAll = true, operation = "overwrite")
       return n
@@ -1984,47 +1994,6 @@ object IcebergLite {
     assignments.toMap
   }
 
-  /** MERGE-ON-READ row UPDATE — the v2 position-delete composition of
-    * [[updateWhere]]: matching rows are dropped by (file_path, pos)
-    * delete files (write cost ∝ MATCHES, zero data files rewritten)
-    * and their updated versions append IN THE SAME SNAPSHOT — position
-    * deletes name pre-existing (file, pos) addresses, so the new files
-    * are untouchable by construction, and the single
-    * [[commitRowDelta]] commit makes the statement atomic (no
-    * rows-deleted-but-updates-never-landed crash window). ONE scan
-    * serves the delete positions and the updated rows (the matched
-    * frame is checkpointed before the write); [[compact]] later makes
-    * the deletes physical. Same assignment semantics as
-    * [[updateWhere]] (pre-update row, ANSI cast, partition
-    * re-clustering). Returns the number of rows updated. */
-  def updateWhereMOR(spark: SparkSession, tableDir: String,
-                     predicate: org.apache.spark.sql.Column,
-                     assignments: Seq[(String, org.apache.spark.sql.Column)])
-      : Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val meta = readMeta(spark, tableDir)
-    val files = liveFileEntries(spark, meta)
-    if (files.isEmpty) return 0L // empty table: nothing to update
-    val schema = declaredSchema(meta)
-    val assignMap = validAssignments(schema, assignments)
-    val cand = candidateFiles(spark, meta, predicate, files)
-    if (cand.isEmpty) return 0L
-    val matches = readFiles(spark, meta, cand)
-      .filter(coalesce(predicate, lit(false)))
-      .localCheckpoint()
-    if (matches.isEmpty) return 0L
-    val updated = matches.select(schema.fields.toIndexedSeq.map { f =>
-      assignMap.get(f.name) match {
-        case Some(e) => e.cast(f.dataType).as(f.name)
-        case None => col(f.name)
-      }
-    }: _*)
-    commitRowDelta(spark, tableDir,
-      positions = Some(matches.select(col("__file").as("file_path"),
-        col("__pos").as("pos"))),
-      appendDf = Some(updated), operation = "overwrite")._1
-  }
-
   /** STAGE one merge-on-read delete manifest for `snapshotId`: the
     * frame's rows as delete parquet under `data/<dirName>` (through the
     * one data-file writer, unpartitioned — a delete file belongs to no
@@ -2174,66 +2143,56 @@ object IcebergLite {
       newRows, content = 0, specId = meta.defaultSpecId), newRows))
   }
 
-  /** ONE-snapshot row-level delta commit — the ATOMIC DML shape: a
-    * position-delete frame and an appended data frame land under a
-    * SINGLE manifest list / metadata version. A crash before the final
-    * metadata write leaves the table at its prior version with every
-    * staged file unreferenced ([[removeOrphanFiles]] reclaims them) —
-    * the half-applied statement window of delete-snapshot +
-    * append-snapshot sequences is unrepresentable. Position deletes
-    * name pre-existing (file, pos) addresses and cannot touch the new
-    * files by construction.
+  /** ONE-snapshot commit of an appended data frame — the ATOMIC write
+    * shape: a crash before the final metadata write leaves the table at
+    * its prior version with every staged file unreferenced
+    * ([[removeOrphanFiles]] reclaims them).
     *
     * `replaceAll` drops every prior manifest (the INSERT OVERWRITE /
-    * truncate-and-load shape — full history still time-travels) and is
-    * mutually exclusive with the position frame. Returns (deleted
-    * rows, appended rows). No-op (no new snapshot) when nothing stages
-    * and `replaceAll` is false. */
+    * truncate-and-load shape — full history still time-travels).
+    * Returns the appended rows. No-op (no new snapshot) when nothing
+    * stages and `replaceAll` is false. */
   def commitRowDelta(spark: SparkSession, tableDir: String,
-                     positions: Option[DataFrame] = None,
                      appendDf: Option[DataFrame] = None,
                      replaceAll: Boolean = false,
                      operation: String = "overwrite",
-                     commitKey: Option[String] = None): (Long, Long) = {
-    require(!(replaceAll && positions.nonEmpty),
-      "replaceAll drops every prior file — combining it with position " +
-        "deletes is contradictory")
+                     commitKey: Option[String] = None): Long = {
     val root = new Path(tableDir)
     val meta = readMeta(spark, tableDir)
     // exactly-once: a commit key already in the snapshot log means this
     // statement landed before a checkpoint replay — no-op
-    if (commitKey.exists(k => hasCommitKey(meta, k))) return (0L, 0L)
+    if (commitKey.exists(k => hasCommitKey(meta, k))) return 0L
     val snapshotId = meta.nextSnapshotId
-    // deletes against an empty table stage nothing (nothing to delete)
-    val pos = positions.filter(_ => meta.manifests.exists(_.content == 0))
-      .flatMap(p => stagePositionDeletes(spark, root, meta, snapshotId, p))
     val app = appendDf
       .flatMap(df => stageDataManifest(spark, root, meta, snapshotId, df))
-    val staged = (pos.toSeq ++ app.toSeq).map(_._1)
-    if (staged.isEmpty && !replaceAll && commitKey.isEmpty) return (0L, 0L)
+    val staged = app.toSeq.map(_._1)
+    if (staged.isEmpty && !replaceAll && commitKey.isEmpty) return 0L
     val base = if (replaceAll) Seq.empty else meta.manifests
     commit(spark, root, Some(meta), snapshotId, meta.version + 1,
       base ++ staged, meta.schemaJs, meta.lastColumnId, meta.specs,
       meta.defaultSpecId, operation, commitKey = commitKey,
       sortCols = meta.sortOrderCols, props = meta.props)
-    (pos.map(_._2).getOrElse(0L), app.map(_._2).getOrElse(0L))
+    app.map(_._2).getOrElse(0L)
   }
 
-  /** The snapshot-summary keys under which a SQL MERGE records the
-    * target rows it updated, deleted and inserted ([[commitDelta]]);
+  /** The snapshot-summary keys under which a SQL DELETE, UPDATE or
+    * MERGE records the target rows it updated, deleted and inserted
+    * ([[commitDelta]]; a truncate records its deleted rows);
     * the `snapshots` metadata table shows them as `updated_rows`,
     * `deleted_rows` and `inserted_rows`, in any session. */
   val UpdatedRowsKey = "graft-updated-rows"
   val DeletedRowsKey = "graft-deleted-rows"
   val InsertedRowsKey = "graft-inserted-rows"
 
-  /** ONE-snapshot commit of a native position-delta write (SQL MERGE,
-    * [[GraftDeltaOperation]]): the position-delete files and data files
-    * its committed write tasks staged, each manifest entry built from
-    * the statistics the task collected (nothing is read back), and the
-    * statement's row counts in the snapshot summary under
-    * [[UpdatedRowsKey]] / [[DeletedRowsKey]] / [[InsertedRowsKey]].
-    * Commits nothing when no task wrote a row. */
+  /** ONE-snapshot commit of a native position-delta write (SQL
+    * DELETE, UPDATE or MERGE, [[GraftDeltaOperation]]): the
+    * position-delete files and data files its committed write tasks
+    * staged, each manifest entry built from the statistics the task
+    * collected (nothing is read back), and the statement's row counts
+    * in the snapshot summary under [[UpdatedRowsKey]] /
+    * [[DeletedRowsKey]] / [[InsertedRowsKey]]. The operation is the
+    * Iceberg one: `append` (rows only), `delete` (deletes only) or
+    * `overwrite`. Commits nothing when no task wrote a row. */
   def commitDelta(spark: SparkSession, tableDir: String,
                   dataFiles: Seq[GraftDataFile],
                   deleteFiles: Seq[GraftDataFile],
@@ -2254,7 +2213,10 @@ object IcebergLite {
     commit(spark, root, Some(meta), snapshotId, meta.version + 1,
       meta.manifests ++ staged.map(_._1), meta.schemaJs, meta.lastColumnId,
       meta.specs, meta.defaultSpecId,
-      operation = if (deleteFiles.isEmpty) "append" else "overwrite",
+      operation =
+        if (deleteFiles.isEmpty) "append"
+        else if (dataFiles.isEmpty) "delete"
+        else "overwrite",
       sortCols = meta.sortOrderCols, props = meta.props,
       counts = Seq(UpdatedRowsKey -> updated, DeletedRowsKey -> deleted,
         InsertedRowsKey -> inserted))
@@ -2403,41 +2365,20 @@ object IcebergLite {
       coversWholeTable = preds.isEmpty)
   }
 
+  /** The current partition spec (rendered as [[tablePartitionSpec]]
+    * renders it) and sort order, from ONE metadata read: what the
+    * native V2 row-level write clusters and orders its rows by. */
+  private[sources] def writeLayout(spark: SparkSession, tableDir: String)
+      : (Seq[String], Seq[String]) = {
+    val meta = readMeta(spark, tableDir)
+    (meta.partitionSpec.map(renderSpec), meta.sortOrderCols)
+  }
+
   /** The snapshot id the NEXT commit will take — the native V2 write
     * keys its staging directory to it (single-writer discipline, as
     * everywhere on this metadata chain). */
   def nextSnapshotIdOf(spark: SparkSession, tableDir: String): Long =
     readMeta(spark, tableDir).nextSnapshotId
-
-  /** ATOMIC group replacement — the commit half of the NATIVE V2
-    * row-level write (ReplaceData): drop `replacedFiles` (the files the
-    * operation's scan planned), adopt `stagedFiles` (written by the
-    * executor DataWriters, with the statistics they collected), and
-    * commit ONE snapshot. The staged files' entries come from the same
-    * writer statistics the DataFrame route's entries do, so a
-    * native-written file is indistinguishable from an API-written one.
-    * Returns the appended row count. */
-  def commitReplaceGroups(spark: SparkSession, tableDir: String,
-                          replacedFiles: Set[String],
-                          stagedFiles: Seq[GraftDataFile]): Long = {
-    val root = new Path(tableDir)
-    val meta = readMeta(spark, tableDir)
-    val schema = declaredSchema(meta)
-    val spec = typedSpec(meta.partitionSpec, schema)
-    val entrySchema = manifestEntrySchema(spec)
-    val snapshotId = meta.nextSnapshotId
-    if (replacedFiles.isEmpty && stagedFiles.isEmpty) return 0L
-    val (entries, bloomPath) = dataEntries(spark, root, stagedFiles,
-      snapshotId, spec, entrySchema, meta.bloomCols, bloomSuffix = "-w")
-    val groups = carryExisting(spark, meta, p => !replacedFiles.contains(p)) ++
-      (if (entries.nonEmpty)
-        Seq(RewriteGroup(meta.schemaJs, meta.defaultSpecId, entrySchema,
-          entries, bloomPath.toSeq))
-      else Nil)
-    commitRewrite(spark, root, meta, snapshotId, groups,
-      operation = "overwrite")
-    stagedFiles.map(_.rowCount).sum
-  }
 
   /** Rewrite every live file into one fresh snapshot — the small-file
     * compaction pass after many incremental appends. Content-preserving
@@ -3661,7 +3602,7 @@ object IcebergLite {
     *    cost that is not ∝ the change — exactly the cost a real engine
     *    pays to resolve equality deletes to rows;
     *  - a ROW DELTA (`overwrite` committed on top of its parent's
-    *    manifests: a SQL MERGE, [[updateWhereMOR]]) emits both — the
+    *    manifests: a SQL DELETE, UPDATE or MERGE) emits both — the
     *    rows its position deletes name, then its new rows;
     *  - copy-on-write rewrites (`deleteWhere`, `compact`,
     *    `compactSmallFiles`) REFUSE BY NAME: after a rewrite the
@@ -3732,17 +3673,13 @@ object IcebergLite {
               "row-level change answer; maintain CDC tables with MOR " +
               "deletes and compact between consumptions")
           val posLeg: Option[DataFrame] = if (posManifests.isEmpty) None else {
-            val delPaths = posManifests.flatMap { m =>
-              readManifest(spark, new Path(m.path))._1
-                .filter(_.get("status").asInstanceOf[Int] != 2)
-                .map(_.get("data_file").asInstanceOf[GenericRecord]
-                  .get("file_path").toString)
-            }
-            val dels = spark.read.parquet(delPaths: _*)
-            val named = dels.select("file_path").distinct()
-              .collect().map(_.getString(0)).toSet
-            Some(scanFrame(spark, metaTo,
-                dataEntries.filter(f => named.contains(f.path)))
+            val delFiles = posManifests.flatMap(m =>
+              deleteEntries(readManifest(spark, new Path(m.path))._1))
+            val named = posDeleteTargets(spark, delFiles)
+            val dels = spark.read.schema(GraftDeltaWriter.PositionSchema)
+              .parquet(delFiles.map(_._1.path): _*)
+            Some(scanFrame(spark, metaTo, dataEntries.filter(f =>
+                named(GraftNativeReaderFactory.normPath(f.path))))
               .join(dels, col("__file") === col("file_path") &&
                 col("__pos") === col("pos"))
               .drop("__file", "__pos", "__fsnap", "file_path", "pos"))

@@ -8,11 +8,11 @@ import graft.sources.IcebergLite
 /** SQL WRITE path over registered IcebergLite names
   * (plans/IcebergWrite.scala): INSERT INTO appends through
   * appendSnapshot inheriting the persisted spec/sort/bloom contract,
-  * INSERT OVERWRITE replaces without losing history, DELETE FROM maps
-  * onto deleteWhere/deleteWhereMOR, MERGE INTO onto Spark's MERGE over
-  * the table's position-delta write (position deletes + new rows in
-  * one snapshot) — and every schema-contract violation refuses with the
-  * column named. */
+  * INSERT OVERWRITE replaces without losing history, DELETE, UPDATE and
+  * MERGE INTO run as Spark's own statements over the table's
+  * position-delta write (position deletes + new rows in one snapshot,
+  * the count read back from its summary) — and every schema-contract
+  * violation refuses with the column named. */
 class IcebergSqlWriteSpec extends SparkSuite {
   import spark.implicits._
 
@@ -172,16 +172,13 @@ class IcebergSqlWriteSpec extends SparkSuite {
       .head().getLong(0) === 1000L)
   }
 
-  test("UPDATE under updateMode=mor: position deletes, no data rewrite") {
+  test("UPDATE writes position deletes and new rows, no data rewrite") {
     val (name, dir) = freshTable()
     val dataFilesBefore = IcebergLite.metaTable(spark, dir, "files")
       .filter(col("content") === 0).count()
-    spark.conf.set("spark.graft.iceberg.updateMode", "mor")
-    try {
-      val n = spark.sql(s"UPDATE $name SET n = n + 1 WHERE id <= 4")
-        .head().getLong(0)
-      assert(n === 4L)
-    } finally spark.conf.set("spark.graft.iceberg.updateMode", "cow")
+    val n = spark.sql(s"UPDATE $name SET n = n + 1 WHERE id <= 4")
+      .head().getLong(0)
+    assert(n === 4L)
     // values: updated rows visible through the MOR read
     val got = spark.sql(s"SELECT id, n FROM $name WHERE id <= 4")
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
@@ -197,7 +194,7 @@ class IcebergSqlWriteSpec extends SparkSuite {
     assert(origStill > dataFilesBefore) // originals + appended, no drop
   }
 
-  test("DELETE FROM: copy-on-write default, qualified WHERE, count returned") {
+  test("DELETE FROM: position deletes, qualified WHERE, count returned") {
     val (name, _) = freshTable()
     val deleted = spark
       .sql(s"DELETE FROM $name WHERE $name.id % 2 = 0 AND $name.n > 20")
@@ -208,20 +205,36 @@ class IcebergSqlWriteSpec extends SparkSuite {
       === 6L)
   }
 
-  test("DELETE FROM under deleteMode=mor writes position deletes") {
+  test("DELETE FROM writes a position-delete manifest, no data rewrite") {
     val (name, dir) = freshTable()
-    spark.conf.set("spark.graft.iceberg.deleteMode", "mor")
-    try {
-      val deleted = spark.sql(s"DELETE FROM $name WHERE id <= 3")
-        .head().getLong(0)
-      assert(deleted === 3L)
-      // the registered route merges the position deletes on read
-      assert(spark.sql(s"SELECT min(id) AS m FROM $name").head().getLong(0)
-        === 4L)
-      // MOR: a content=1 delete manifest exists (no data rewrite)
-      assert(IcebergLite.metaTable(spark, dir, "manifests")
-        .filter(col("content") === 1).count() >= 1)
-    } finally spark.conf.set("spark.graft.iceberg.deleteMode", "cow")
+    val deleted = spark.sql(s"DELETE FROM $name WHERE id <= 3")
+      .head().getLong(0)
+    assert(deleted === 3L)
+    // the registered route merges the position deletes on read
+    assert(spark.sql(s"SELECT min(id) AS m FROM $name").head().getLong(0)
+      === 4L)
+    // MOR: a content=1 delete manifest exists (no data rewrite)
+    assert(IcebergLite.metaTable(spark, dir, "manifests")
+      .filter(col("content") === 1).count() >= 1)
+  }
+
+  test("TRUNCATE and a WHERE-less DELETE count live rows on a MOR table") {
+    def morTable(): (String, String) = {
+      val (name, dir) = freshTable()
+      assert(IcebergLite.deleteWhereMOR(spark, dir, col("id") <= 3L) === 3L)
+      (name, dir)
+    }
+    val (tName, tDir) = morTable()
+    assert(spark.sql(s"TRUNCATE TABLE $tName").head().getLong(0) === 7L)
+    val (dName, dDir) = morTable()
+    assert(spark.sql(s"DELETE FROM $dName").head().getLong(0) === 7L)
+    for (dir <- Seq(tDir, dDir)) {
+      assert(IcebergLite.readTable(spark, dir).count() === 0L)
+      // the truncate snapshot records its count
+      val head = IcebergLite.metaTable(spark, dir, "snapshots")
+        .orderBy(col("snapshot_id").desc).head()
+      assert(head.getAs[Long]("deleted_rows") === 7L)
+    }
   }
 
   test("MERGE INTO upsert: matched rows update, unmatched insert") {
@@ -324,7 +337,49 @@ class IcebergSqlWriteSpec extends SparkSuite {
     assert(rows(mirror) === rows(dir))
   }
 
-  test("UPDATE SET rewrites matching rows copy-on-write") {
+  test("CDC across a SQL DELETE and UPDATE: the exact changelog, built with no Spark job") {
+    val (name, dir) = freshTable() // ids 1..10, n = id*10, lang a (even) / b
+    val mirror = tmp()
+    IcebergLite.syncViaChangelog(spark, dir, mirror, Seq("id"))
+    val before = IcebergLite.snapshotIds(spark, dir).last
+    assert(spark.sql(s"DELETE FROM $name WHERE id IN (2, 5)").head().getLong(0)
+      === 2L)
+    val del = IcebergLite.snapshotIds(spark, dir).last
+    assert(spark.sql(s"UPDATE $name SET n = n + 1 WHERE id >= 9")
+      .head().getLong(0) === 2L)
+    val upd = IcebergLite.snapshotIds(spark, dir).last
+    // each delete file names one data file by its exact bounds, so
+    // naming the files the deletes hit reads no delete file
+    var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs += 1
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val frame =
+      try {
+        val f = IcebergLite.readChangelog(spark, dir, before)
+        var spins = 0
+        while (jobs == 0 && spins < 10) { spins += 1; Thread.sleep(50) }
+        f
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs === 0)
+    val log = frame
+      .select("id", "lang", "n", "_change_type", "_commit_snapshot_id")
+      .as[(Long, String, Long, String, Long)].collect().toSeq.sorted
+    assert(log === Seq(
+      (2L, "a", 20L, "delete", del), (5L, "b", 50L, "delete", del),
+      (9L, "b", 90L, "delete", upd), (9L, "b", 91L, "insert", upd),
+      (10L, "a", 100L, "delete", upd), (10L, "a", 101L, "insert", upd)))
+    assert(IcebergLite.syncViaChangelog(spark, dir, mirror, Seq("id")) ===
+      ((4L, 2L)))
+    def rows(d: String) = IcebergLite.readTable(spark, d)
+      .as[(Long, String, Long)].collect().toSeq.sorted
+    assert(rows(mirror) === rows(dir))
+  }
+
+  test("UPDATE SET: simultaneous assignment, partition move") {
     val (name, dir) = freshTable()
     val n = spark.sql(
       s"UPDATE $name SET n = n + id, lang = 'u' WHERE id <= 3")
@@ -348,7 +403,7 @@ class IcebergSqlWriteSpec extends SparkSuite {
 
   test("UPDATE refusals: unknown column; zero-match update commits nothing") {
     val (name, dir) = freshTable()
-    val e = intercept[IllegalArgumentException] {
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql(s"UPDATE $name SET nope = 1 WHERE id = 1")
     }
     assert(e.getMessage.contains("nope"))
@@ -533,9 +588,7 @@ class IcebergSqlWriteSpec extends SparkSuite {
     assert(got.toSeq === expect)
     // MOR UPDATE: position-delete manifest + updated-row data manifest
     // in the SAME snapshot
-    spark.conf.set("spark.graft.iceberg.updateMode", "mor")
-    try spark.sql(s"UPDATE $name SET n = n + 100 WHERE id = 7")
-    finally spark.conf.set("spark.graft.iceberg.updateMode", "cow")
+    spark.sql(s"UPDATE $name SET n = n + 100 WHERE id = 7")
     val afterUpd = snaps
     assert(afterUpd.length === before + 2)
     val updContents = IcebergLite.metaTable(spark, dir, "manifests")

@@ -10,8 +10,8 @@ import graft.SparkSuite
 /** The NATIVE V2 read/write path (GraftNativeScan / GraftNativeWrite /
   * SupportsRowLevelOperations): value-equality with a direct
   * IcebergLite read, storage-partitioned joins with ZERO Exchange, and
-  * stock-analyzer row-level DML with NO graft session extensions
-  * installed. */
+  * stock-analyzer row-level DML (position deltas) with NO graft session
+  * extensions installed. */
 class GraftNativeSpec extends SparkSuite {
   import spark.implicits._
 
@@ -233,11 +233,8 @@ class GraftNativeSpec extends SparkSuite {
         "id * 10 AS n")
       .writeTo("ncat.nat_dml").append()
 
-    // UPDATE: group-based copy-on-write through ReplaceData
+    // UPDATE and a subquery DELETE: position deltas through WriteDelta
     bare.sql("UPDATE ncat.nat_dml SET n = n + 1 WHERE id <= 10")
-    // DELETE with a subquery condition (not filter-convertible, so the
-    // metadata-delete short-circuit cannot take it — the group-based
-    // plan must)
     bare.sql("""DELETE FROM ncat.nat_dml WHERE id IN
                 (SELECT id * 2 FROM ncat.nat_dml WHERE id <= 5)""")
     // MERGE: the full upsert through the stock analyzer
@@ -262,7 +259,7 @@ class GraftNativeSpec extends SparkSuite {
     } ++ (101L to 105L).map(i => (i, "c", i * 100))
     assert(got.toSeq === merged.sortBy(_._1))
 
-    // the MERGE committed as ONE snapshot (group replace is atomic)
+    // each statement committed as ONE snapshot
     val snaps = bare.table("ncat.nat_dml__snapshots")
       .select("operation").collect().map(_.getString(0))
     // create-empty + append + update + delete + merge = 5 commits
@@ -763,29 +760,38 @@ class GraftNativeSpec extends SparkSuite {
     assert(native === 5L)
   }
 
-  test("native DML on a MOR-deleted table refuses with a real message") {
+  test("native DML on a MOR-deleted table keeps its deletes") {
     spark.sql("""CREATE TABLE ncat.nat_mor (id BIGINT, n BIGINT)
                  USING iceberg""")
     spark.range(1, 11).selectExpr("id", "id AS n")
       .writeTo("ncat.nat_mor").append()
-    IcebergLite.deleteWhereMOR(spark, s"$wh/nat_mor", col("id") === 3L)
+    val dir = s"$wh/nat_mor"
+    IcebergLite.deleteWhereMOR(spark, dir, col("id") === 3L)
     val bare = GraftParquetShim.bareSession(spark)
     bare.conf.set("spark.sql.catalog.ncat",
       classOf[GraftTableCatalog].getName)
     bare.conf.set("spark.sql.catalog.ncat.warehouse", wh)
-    val e = intercept[Exception] {
-      bare.sql("UPDATE ncat.nat_mor SET n = 0 WHERE id > 100")
-    }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++
-        messages(t.getCause)
-    assert(messages(e).exists(_.contains("merge-on-read")),
-      messages(e).mkString(" | "))
+    val snaps = IcebergLite.snapshotIds(spark, dir).size
+    bare.sql("UPDATE ncat.nat_mor SET n = 0 WHERE id > 100")
+    assert(IcebergLite.snapshotIds(spark, dir).size === snaps)
+    bare.sql("UPDATE ncat.nat_mor SET n = -n WHERE id <= 4")
+    bare.sql("""DELETE FROM ncat.nat_mor WHERE id IN
+                (SELECT id FROM ncat.nat_mor WHERE id % 5 = 0)""")
+    assert(IcebergLite.snapshotIds(spark, dir).size === snaps + 2)
+    // id 3 stays deleted; each statement added a position-delete manifest
+    val expected = (1L to 10L).filterNot(Set(3L, 5L, 10L))
+      .map(i => (i, if (i <= 4) -i else i))
+    def read(df: DataFrame) = df.select("id", "n").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    assert(read(bare.table("ncat.nat_mor")) === expected)
+    assert(read(lite("nat_mor")) === expected)
+    assert(IcebergLite.metaTable(spark, dir, "manifests")
+      .filter(col("content") === 1).count() === 3L)
   }
 
   test("native DELETE / UPDATE over partition values Spark escapes in directory names") {
-    // the staged replacement files land in escaped directories; the
-    // commit must record them as written so the table stays readable
+    // the UPDATE's new files land in escaped directories; the commit
+    // must record them as written so the table stays readable
     val bare = GraftParquetShim.bareSession(spark)
     bare.conf.set("spark.sql.catalog.ncat",
       classOf[GraftTableCatalog].getName)
@@ -795,8 +801,6 @@ class GraftNativeSpec extends SparkSuite {
     val codes = Seq("2024-01-01 00:00:00", "a b", "x/y", "k=v", "50%")
     val rows = (0 until 20).map(i => (i.toLong, codes(i % codes.size), i * 10L))
     rows.toDF("id", "code", "n").writeTo("ncat.nat_esc").append()
-    // subquery conditions: not filter-convertible, so both statements
-    // take the group-based ReplaceData route (commitReplaceGroups)
     bare.sql("""DELETE FROM ncat.nat_esc WHERE id IN
                 (SELECT id FROM ncat.nat_esc WHERE id % 4 = 0)""")
     bare.sql("""UPDATE ncat.nat_esc SET n = -n WHERE id IN

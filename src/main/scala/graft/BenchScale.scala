@@ -891,7 +891,7 @@ object BenchScale {
         // the GENERAL conditional MERGE at corpus scale (r18): a small
         // source + a conditional NOT-MATCHED-BY-SOURCE clause against
         // the 500k-row table must (a) commit as ONE snapshot (the
-        // atomic commitRowDelta discipline — no delete-then-append
+        // atomic single-commit discipline — no delete-then-append
         // crash window) and (b) materialize ∝ AFFECTED KEYS, never the
         // table: the BY-SOURCE anti-frame is aggregated to affected
         // keys before anything checkpoints, so the statement's cache

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{GraftPlanShim, SparkSession}
-import org.apache.spark.sql.connector.catalog.{Identifier, Table}
+import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 import graft.sources.{GraftIcebergTable, GraftMetaTable}
@@ -35,28 +35,30 @@ object Catalog {
     * `graft.<ns>.<table>` catalog name resolves to, so both names plan
     * through one scan builder — a `WHERE` file-skips through manifest
     * bounds / partition transforms / Bloom sidecars, and every query
-    * reads the table's CURRENT snapshot. With
+    * reads the table's CURRENT snapshot. INSERT, INSERT OVERWRITE and
+    * `writeTo` on the name are Spark's own V2 writes through the view's
+    * relation, whose catalog resolves the table's partition transforms
+    * ([[graft.sources.GraftIcebergTable.relation]]); after a schema change
+    * they refuse until the name is registered again. With
     * `spark.sql.extensions=graft.GraftExtensions` the name also takes
-    * `FOR VERSION AS OF` / `FOR TIMESTAMP AS OF` and SQL DML (both
-    * rewritten at parse time, see plans/IcebergScan.scala and
-    * plans/IcebergWrite.scala; a DELETE, UPDATE or MERGE binds its
-    * target to this view's table and runs as Spark's own statement),
-    * resolved from this view: once
-    * the name is rebound or dropped, neither reaches the table. The operational
+    * `FOR VERSION AS OF` / `FOR TIMESTAMP AS OF`, TRUNCATE, DELETE,
+    * UPDATE and MERGE (see plans/IcebergScan.scala and
+    * plans/IcebergWrite.scala: the statement's target binds to this
+    * view's table and runs as Spark's own statement), resolved from this
+    * view: once the name is rebound or dropped, none reaches the table.
+    * The operational
     * metadata tables ride along as `<name>__<kind>` views (temp-view
     * names can't carry Iceberg's `$`), current per query like the data
     * view. */
   def registerIcebergTable(spark: SparkSession, name: String,
                            tableDir: String): Unit = {
-    def view(n: String, table: Table): Unit =
-      GraftPlanShim.ofRows(spark,
-        DataSourceV2Relation.create(table, None, None))
-        .createOrReplaceTempView(n)
-    def ident(n: String) = Identifier.of(Array.empty[String], n)
-    view(name, new GraftIcebergTable(ident(name), tableDir, None))
+    def view(n: String, relation: DataSourceV2Relation): Unit =
+      GraftPlanShim.ofRows(spark, relation).createOrReplaceTempView(n)
+    view(name, GraftIcebergTable.relation(name, tableDir))
     GraftMetaTable.Kinds.foreach { kind =>
       val n = s"${name}__$kind"
-      view(n, new GraftMetaTable(ident(n), tableDir, kind))
+      view(n, DataSourceV2Relation.create(new GraftMetaTable(
+        Identifier.of(Array.empty[String], n), tableDir, kind), None, None))
     }
   }
 }

@@ -9,8 +9,10 @@ import graft.functions.{MinHashSig, RollingFingerprint, SimHashSig}
 /** Session extensions registering graft's native expressions so they are
   * callable from SQL / `expr(...)` in any session configured with
   * `spark.sql.extensions=graft.GraftExtensions`, plus the ASOF JOIN SQL
-  * syntax and the parse-time time-travel / DML rewrites over registered
-  * Iceberg names (parser extension, see [[graft.sql.GraftSqlParser]]).
+  * syntax and the parse-time time-travel rewrite and write-target binding
+  * of registered Iceberg names (parser extension, see
+  * [[graft.sql.GraftSqlParser]]). Every SQL write to a graft Iceberg
+  * table is Spark's own V2 statement; none needs an analyzer rule.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -18,11 +20,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new graft.sql.GraftSqlParser(session, delegate))
     // whole-operator as-of join (logical node -> sort-merge SparkPlan)
     ext.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
-    // writeTo(...).overwritePartitions() on graft catalog tables: no V1
-    // dynamic-overwrite writer exists in Spark, so the resolved plan
-    // rewrites to the IcebergLite partition-replace command
-    ext.injectResolutionRule(session =>
-      new graft.plans.IcebergDynamicOverwriteRule(session))
     ext.injectFunction((
       new FunctionIdentifier("graft_rolling_fingerprint"),
       new ExpressionInfo(classOf[RollingFingerprint].getName, "graft_rolling_fingerprint"),

@@ -5557,7 +5557,8 @@ object QueryCatalog {
     // SQL WRITE route, INSERT (plans/IcebergWrite.scala r16 — the
     // reference's users INGEST through their catalog:
     // ingest_neutron_data.py:209-211 writeTo().append()): INSERT INTO a
-    // REGISTERED name must land through appendSnapshot INHERITING the
+    // REGISTERED name — Spark's own AppendData over the native write
+    // since the one SQL write route — must land INHERITING the
     // table's persisted partition spec and sort order — contract_kept
     // pins both straight from the table metadata AFTER the SQL write,
     // and the aggregate reads the combined table back through the
@@ -5815,13 +5816,14 @@ object QueryCatalog {
         TRUE AS contract_kept
       FROM documents GROUP BY lang ORDER BY lang""")),
 
-    // DYNAMIC PARTITION OVERWRITE (sources/IcebergLite
-    // .overwritePartitions r17): INSERT OVERWRITE under
+    // DYNAMIC PARTITION OVERWRITE (r17; Spark's own
+    // OverwritePartitionsDynamic over the native write since the one
+    // SQL write route): INSERT OVERWRITE under
     // partitionOverwriteMode=dynamic replaces exactly the partitions
     // the query touches — rows land for a subset of langs, every other
     // partition survives intact; the transform-aware delete predicate
-    // derives from the batch itself (hidden partitioning — the writer
-    // never names partitions). DuckDB rederives the merged state from
+    // derives from the partitions of the written files (hidden
+    // partitioning — the writer never names partitions). DuckDB rederives the merged state from
     // documents arithmetic. Data-derived at any scale.
     QueryDef("iceberg_dynamic_overwrite", (s, d) => {
       import graft.sources.IcebergLite

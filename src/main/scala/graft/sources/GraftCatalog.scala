@@ -37,9 +37,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `df.writeTo(...).append()`, `.overwrite(cond)` (metadata-only
   * truncate for literal-true, exact-predicate delete otherwise), and
   * `.overwritePartitions()` (DYNAMIC overwrite — replace exactly the
-  * partitions the batch touches via [[IcebergLite.overwritePartitions]];
-  * Spark has no V1 writer for it, so it needs the graft extensions'
-  * `IcebergDynamicOverwriteRule`), `spark.table`, `SELECT ... FOR
+  * partitions the batch touches), `spark.table`, `SELECT ... FOR
   * VERSION AS OF` (snapshot id or named ref) / `FOR TIMESTAMP AS OF`,
   * `ALTER TABLE ADD/RENAME COLUMN` and type widening, SHOW TABLES /
   * DROP TABLE. Table properties `sort-order` and `bloom-columns`
@@ -47,10 +45,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * later writer inherits — the same contract SQL INSERT and the
   * API writers honor.
   *
-  * Write path: `V1Write` → [[IcebergLite.appendSnapshot]] — the same
-  * distributed write the API route uses (file clustering from the
-  * persisted sort order, per-file bounds + bloom sidecars collected by
-  * the write tasks); nothing is buffered on the driver. Read path: the
+  * Write path: the native V2 batch write ([[GraftWriteBuilder]]) —
+  * INSERT, INSERT OVERWRITE (static and dynamic) and every `writeTo`
+  * plan as Spark's own AppendData, OverwriteByExpression and
+  * OverwritePartitionsDynamic, in every session: the rows take the
+  * layout [[IcebergLite.appendSnapshot]] gives a batch, the one data-file
+  * writer collects each file's bounds and Bloom bits in its task, and
+  * [[IcebergLite.commitWrite]] lands ONE snapshot; nothing is buffered
+  * on the driver. Read path: the
   * pushed filters map ([[GraftTableCatalog.filterPreds]]) onto
   * manifest-bounds / partition-transform / Bloom FILE SKIPPING, and
   * the surviving files are read by the native V2 batch scan
@@ -62,11 +64,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * this same table. SQL DELETE, UPDATE and MERGE take one route in
   * every session and for both name kinds: Spark's own row-level command
   * over this table's position-delta operation
-  * ([[GraftDeltaOperation]]); a DELETE with no WHERE is the
-  * metadata-only truncate. INSERT / OVERWRITE / TRUNCATE TABLE still
-  * split by session: with the graft extensions they route at parse time
-  * onto the commands of plans/IcebergWrite.scala, which also return the
-  * row counts of every SQL write.
+  * ([[GraftDeltaOperation]]); a DELETE with no WHERE, like TRUNCATE
+  * TABLE, is the metadata-only truncate. With the graft extensions, a
+  * TRUNCATE, DELETE, UPDATE or MERGE also returns its row count (see
+  * plans/IcebergWrite.scala).
   */
 class GraftTableCatalog extends TableCatalog with StagingTableCatalog
     with SupportsNamespaces
@@ -542,7 +543,7 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
   }
   override def capabilities(): util.Set[TableCapability] =
     (if (snapshotId.isDefined) Set(TableCapability.BATCH_READ)
-     else Set(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
+     else Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
        TableCapability.OVERWRITE_BY_FILTER, TableCapability.OVERWRITE_DYNAMIC,
        TableCapability.TRUNCATE)).asJava
 
@@ -680,53 +681,10 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
     () => new GraftDeltaOperation(name(), tableDir, info.command())
   }
 
-  // ---- write: V1Write onto the distributed appendSnapshot -----------------
+  // ---- write: INSERT, INSERT OVERWRITE and writeTo, natively ------------
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder with SupportsOverwrite {
-      private var overwriteBy: Option[Array[Filter]] = None
-
-      override def overwrite(filters: Array[Filter]): WriteBuilder = {
-        overwriteBy = Some(filters); this
-      }
-
-      override def build(): Write = new V1Write {
-        override def toInsertableRelation: InsertableRelation =
-          new InsertableRelation {
-            override def insert(data: DataFrame, overwrite: Boolean): Unit = {
-              val s = data.sparkSession
-              val target = IcebergLite.tableSchema(s, tableDir)
-              val aligned = graft.plans.IcebergWriteAlign.byName(
-                s"write to ${name()}", data, target)
-              // every overwrite shape commits as ONE snapshot (no
-              // delete-landed-but-batch-never-did crash window, no
-              // eager source materialization): full replace for
-              // literal-true filters, atomic delete+append otherwise
-              overwriteBy match {
-                case None if overwrite =>
-                  IcebergLite.commitRowDelta(s, tableDir,
-                    appendDf = Some(aligned), replaceAll = true,
-                    operation = "overwrite")
-                case Some(fs0)
-                    if fs0.forall(_.isInstanceOf[sources.AlwaysTrue]) =>
-                  IcebergLite.commitRowDelta(s, tableDir,
-                    appendDf = Some(aligned), replaceAll = true,
-                    operation = "overwrite")
-                case Some(fs0) =>
-                  val cond = fs0.toSeq.map { f0 =>
-                    GraftTableCatalog.filterColumn(f0).getOrElse(
-                      throw new UnsupportedOperationException(
-                        s"overwrite filter $f0 has no exact predicate"))
-                  }.reduceOption(_ && _).getOrElse(lit(true))
-                  IcebergLite.overwriteWhere(s, tableDir, cond, aligned)
-                case None =>
-                  IcebergLite.appendSnapshot(s, aligned, tableDir,
-                    partitionBy = IcebergLite.tablePartitionSpec(s, tableDir))
-              }
-            }
-          }
-      }
-    }
+    new GraftWriteBuilder(spark, name(), tableDir, info)
 
   // ---- TRUNCATE TABLE and a DELETE with no WHERE ---------------------------
 
@@ -734,6 +692,20 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
     IcebergLite.truncateTable(spark, tableDir)
     true
   }
+}
+
+object GraftIcebergTable {
+  /** The V2 relation a registered name resolves to: the table at
+    * `tableDir` under the single-part `name`, with
+    * [[GraftFunctionCatalog]] as its catalog, so Spark resolves the
+    * bucket/day/... transforms of a write's distribution, a row-level
+    * operation's or a scan's partitioning as it does for a catalog
+    * name. */
+  def relation(name: String, tableDir: String)
+      : org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =
+    org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+      new GraftIcebergTable(Identifier.of(Array.empty[String], name),
+        tableDir, None), Some(GraftFunctionCatalog), None)
 }
 
 /** A read-only V2 facade over ONE [[IcebergLite.metaTable]] kind —

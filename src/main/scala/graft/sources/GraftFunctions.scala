@@ -131,3 +131,18 @@ object GraftFunctions {
       }
     }
 }
+
+/** [[GraftFunctions]] as a catalog holding no table: the catalog of a
+  * registered name's relation ([[GraftIcebergTable.relation]]). */
+object GraftFunctionCatalog
+    extends org.apache.spark.sql.connector.catalog.FunctionCatalog {
+  import org.apache.spark.sql.connector.catalog.Identifier
+  override def initialize(name: String,
+      options: org.apache.spark.sql.util.CaseInsensitiveStringMap): Unit = ()
+  override def name(): String = "graft_functions"
+  override def listFunctions(namespace: Array[String]): Array[Identifier] =
+    GraftFunctions.names.map(n => Identifier.of(namespace, n)).toArray
+  override def loadFunction(ident: Identifier): UnboundFunction =
+    GraftFunctions.load(ident.name()).getOrElse(throw new org.apache.spark
+      .sql.catalyst.analysis.NoSuchFunctionException(ident))
+}

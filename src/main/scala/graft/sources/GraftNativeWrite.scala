@@ -10,10 +10,11 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjecti
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expression, Expressions, NamedReference, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, SupportsDelta, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, SupportsDelta, SupportsDynamicOverwrite, SupportsOverwrite, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.sources.{AlwaysTrue, Filter}
 import org.apache.spark.sql.types.{ArrayType, DataType, DateType, DoubleType, FloatType, IntegerType, LongType, MapType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -46,7 +47,7 @@ class GraftHadoopConf(@transient var value: Configuration)
   * row into a position delete and each updated or inserted row into a
   * new data row ([[GraftDeltaWriter]]), committed as ONE snapshot of a
   * position-delete manifest and a data manifest
-  * ([[IcebergLite.commitDelta]]) that records the statement's counts. No
+  * ([[IcebergLite.commitWrite]]) that records the statement's counts. No
   * data file is rewritten, so the write costs ∝ the rows the statement
   * changes, tables that already carry merge-on-read deletes take it as
   * they are, and [[IcebergLite.compact]] later makes the deletes
@@ -146,6 +147,122 @@ class GraftDeltaWrite(spark: SparkSession, tableName: String,
   }
 }
 
+/** NATIVE V2 batch write of a graft catalog table: INSERT INTO, INSERT
+  * OVERWRITE (static and dynamic) and `df.writeTo(t).append()`,
+  * `.overwrite(cond)` and `.overwritePartitions()` as Spark's own
+  * AppendData, OverwriteByExpression and OverwritePartitionsDynamic, in
+  * every session and for both name kinds (Iceberg's Spark writes take
+  * the same route). Spark's analyzer has aligned the rows to the table
+  * under its store-assignment rule. The builder records what the write
+  * replaces; [[IcebergLite.commitWrite]] applies it. */
+class GraftWriteBuilder(spark: SparkSession, tableName: String,
+                        tableDir: String, info: LogicalWriteInfo)
+    extends WriteBuilder with SupportsOverwrite with SupportsTruncate
+    with SupportsDynamicOverwrite {
+
+  private var mode: IcebergLite.WriteMode = IcebergLite.Append
+
+  override def truncate(): WriteBuilder = {
+    mode = IcebergLite.ReplaceAll; this
+  }
+
+  override def overwrite(filters: Array[Filter]): WriteBuilder = {
+    mode =
+      if (filters.forall(_.isInstanceOf[AlwaysTrue])) IcebergLite.ReplaceAll
+      else IcebergLite.ReplaceWhere(filters.toSeq.map { f =>
+        GraftTableCatalog.filterColumn(f).getOrElse(
+          throw new UnsupportedOperationException(
+            s"overwrite of $tableName: filter $f has no exact predicate"))
+      }.reduce(_ && _))
+    this
+  }
+
+  override def overwriteDynamicPartitions(): WriteBuilder = {
+    mode = IcebergLite.ReplacePartitions; this
+  }
+
+  // a relation resolved before the schema evolved (a registered name's
+  // view) would write the old columns
+  override def build(): Write = {
+    val current = IcebergLite.tableSchema(spark, tableDir).fieldNames.toSeq
+    require(info.schema().fieldNames.toSeq == current,
+      s"write to $tableName: the rows have columns " +
+        s"${info.schema().fieldNames.mkString(", ")} but the table now has " +
+        s"${current.mkString(", ")}; register the name again")
+    val (specItems, sortCols) = IcebergLite.writeLayout(spark, tableDir)
+    new GraftWrite(spark, tableName, tableDir, info.schema(), specItems,
+      sortCols, mode)
+  }
+}
+
+/** The batch `Write`, in the layout [[IcebergLite.appendSnapshot]] gives
+  * a batch: range-distributed on the sort order of a sorted table,
+  * clustered on the transforms of a partitioned one, each task ordered
+  * by the transforms, then the sort order, so the one writer keeps one
+  * file open at a time. Strictly required, the distribution is the
+  * DataFrame route's repartition, which AQE coalesces but never splits,
+  * so both routes write the same files (a rebalance would split large
+  * partitions). */
+class GraftWrite(spark: SparkSession, tableName: String, tableDir: String,
+                 rowSchema: StructType, specItems: Seq[String],
+                 sortCols: Seq[String], mode: IcebergLite.WriteMode)
+    extends Write with RequiresDistributionAndOrdering {
+
+  override def description(): String = s"GraftWrite $tableName"
+  override def toString: String = description()
+
+  private def asc(e: Expression): SortOrder =
+    Expressions.sort(e, SortDirection.ASCENDING)
+  private val transforms: Seq[Expression] =
+    specItems.map(GraftTableCatalog.toTransform)
+  private val sortOrder: Seq[SortOrder] =
+    sortCols.map(c => asc(Expressions.column(c)))
+
+  override def requiredDistribution(): Distribution =
+    if (sortOrder.nonEmpty) Distributions.ordered(sortOrder.toArray)
+    else if (transforms.nonEmpty) Distributions.clustered(transforms.toArray)
+    else Distributions.unspecified()
+
+  override def distributionStrictlyRequired(): Boolean = true
+
+  override def requiredOrdering(): Array[SortOrder] =
+    (transforms.map(asc) ++ sortOrder).toArray
+
+  // staged under the snapshot this statement will commit, where the
+  // position-delta write stages its rows
+  override def toBatch(): BatchWrite = new GraftBatchWrite(spark, tableDir,
+    s"$tableDir/data/s${IcebergLite.nextSnapshotIdOf(spark, tableDir)}-w",
+    rowSchema, mode)
+}
+
+class GraftBatchWrite(spark: SparkSession, tableDir: String, dataDir: String,
+                      rowSchema: StructType, mode: IcebergLite.WriteMode)
+    extends BatchWrite {
+
+  override def createBatchWriterFactory(info: PhysicalWriteInfo)
+      : DataWriterFactory =
+    IcebergLite.dataWriterFactory(spark, tableDir, dataDir, rowSchema)
+
+  // ONE snapshot from the committed task messages only
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    IcebergLite.commitWrite(spark, tableDir,
+      messages.toSeq.collect { case m: GraftWriteCommit => m.files }.flatten,
+      mode = mode)
+
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftBatchWrite.dropStaging(spark, dataDir)
+}
+
+object GraftBatchWrite {
+  /** An aborted write's staging directories go. */
+  def dropStaging(spark: SparkSession, dirs: String*): Unit =
+    dirs.foreach { d =>
+      val p = new Path(d)
+      val fs = p.getFileSystem(GraftParquetShim.sessionHadoopConf(spark))
+      if (fs.exists(p)) fs.delete(p, true)
+    }
+}
+
 /** One data file a write task produced, with what its manifest entry
   * records — all computed in the task while the rows were written:
   * the partition values (typed, as the transforms computed them), the
@@ -181,18 +298,15 @@ class GraftDeltaBatchWrite(spark: SparkSession, tableDir: String,
   // speculative attempt's files and counts never enter it
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val done = messages.toSeq.collect { case m: GraftDeltaCommit => m }
-    IcebergLite.commitDelta(spark, tableDir, done.flatMap(_.data),
-      done.flatMap(_.deletes), done.map(_.updated).sum,
-      done.map(_.deleted).sum, done.map(_.inserted).sum)
+    IcebergLite.commitWrite(spark, tableDir, done.flatMap(_.data),
+      done.flatMap(_.deletes), counts = Seq(
+        IcebergLite.UpdatedRowsKey -> done.map(_.updated).sum,
+        IcebergLite.DeletedRowsKey -> done.map(_.deleted).sum,
+        IcebergLite.InsertedRowsKey -> done.map(_.inserted).sum))
   }
 
-  // an aborted write's staging directories go
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    Seq(dataDir, deleteDir).foreach { d =>
-      val p = new Path(d)
-      val fs = p.getFileSystem(GraftParquetShim.sessionHadoopConf(spark))
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    GraftBatchWrite.dropStaging(spark, dataDir, deleteDir)
 }
 
 /** Commit message of one delta write task: the data and
@@ -290,8 +404,9 @@ object GraftDeltaWriter {
 
 /** The one data-file writer of every IcebergLite write (the DataFrame
   * API's appends and rewrites, the merge-on-read delete files and the
-  * native V2 row-level write): one parquet file per partition tuple per
-  * task ([[GraftClusteredDataWriter]]), written through the session's
+  * native V2 batch and row-level writes): one parquet file per
+  * partition tuple per task ([[GraftClusteredDataWriter]]), written
+  * through the session's
   * parquet `OutputWriterFactory` in the partitionBy directory layout
   * (identity partition columns move into the directory key and out of
   * the files; derived transform values exist only as directory keys),

@@ -7,7 +7,7 @@ import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileStream, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, GraftParquetShim, GraftPlanShim, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnShim, GraftParquetShim, GraftPlanShim, SparkSession}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -963,7 +963,7 @@ object IcebergLite {
     * every engine's UI reads): added-* from THIS snapshot's manifests,
     * total-* over the live set; `graft-parent` carries ancestry for
     * fastForward, `graft-commit-key` the exactly-once replay key, and
-    * `counts` the statement's own row counts ([[commitDelta]]). */
+    * `counts` the statement's own row counts ([[commitWrite]]). */
   private def summaryJson(operation: String, commitKey: Option[String],
                           parent: Long, manifests: Seq[MRef],
                           snapshotId: Long,
@@ -1645,13 +1645,9 @@ object IcebergLite {
     * count that was dropped, which the snapshot summary records under
     * [[DeletedRowsKey]]. */
   def truncateTable(spark: SparkSession, tableDir: String): Long = {
-    val meta = readMeta(spark, tableDir)
-    val n = liveRowCount(spark, meta)
-    commit(spark, new Path(tableDir), Some(meta), meta.nextSnapshotId,
-      meta.version + 1, manifests = Seq.empty, meta.schemaJs,
-      meta.lastColumnId, meta.specs, meta.defaultSpecId,
-      operation = "delete", sortCols = meta.sortOrderCols,
-      props = meta.props, counts = Seq(DeletedRowsKey -> n))
+    val n = liveRowCount(spark, readMeta(spark, tableDir))
+    commitWrite(spark, tableDir, Nil, mode = ReplaceAll,
+      counts = Seq(DeletedRowsKey -> n))
     n
   }
 
@@ -1685,9 +1681,10 @@ object IcebergLite {
   /** STAGE a copy-on-write delete for `snapshotId`: the rewrite groups
     * (survivor rewrites + carried EXISTING entries) that physically
     * apply `predicate` — data files written, NO commit. `None` when no
-    * live row matches (and no outstanding MOR delete forces a rewrite)
-    * — the caller commits nothing. The shared head of [[deleteWhere]]
-    * and the atomic [[overwriteWhere]]. */
+    * live row matches: nothing rewrites, and the caller keeps every
+    * manifest, delete manifests included. The shared head of
+    * [[deleteWhere]] and a write's overwrite by filter or by partition
+    * ([[commitWrite]]). */
   private def stageDeleteWhere(spark: SparkSession, root: Path,
                                meta: TableMeta, snapshotId: Long,
                                predicate: org.apache.spark.sql.Column)
@@ -1712,7 +1709,8 @@ object IcebergLite {
     * skipping — a partition-targeted statement scans its partition,
     * never the table) finds the files holding LIVE matches (merge-on-
     * read deletes applied first — a row already deleted cannot match
-    * again); the files an outstanding delete still names rewrite too. */
+    * again); when any row matches, the files an outstanding delete still
+    * names rewrite too. No match: no file. */
   private def cowTargets(spark: SparkSession, meta: TableMeta,
                          files: Seq[NativeFileInfo],
                          predicate: org.apache.spark.sql.Column)
@@ -1725,7 +1723,9 @@ object IcebergLite {
         .filter(coalesce(predicate, lit(false)))
         .groupBy("__file").agg(sum(lit(1L)).as("__m"))
         .collect()
-    (hitAgg.map(_.getLong(1)).sum,
+    // no live match: nothing rewrites, and the outstanding deletes stay
+    if (hitAgg.isEmpty) (0L, Set.empty)
+    else (hitAgg.map(_.getLong(1)).sum,
       hitAgg.map(_.getString(0)).toSet ++ deleteNamedFiles(spark, meta, files))
   }
 
@@ -1782,82 +1782,6 @@ object IcebergLite {
       (if (entries.isEmpty) Nil
       else Seq(RewriteGroup(meta.schemaJs, meta.defaultSpecId, entrySchema,
         entries, bloomPath.toSeq)))
-  }
-
-  /** ATOMIC overwrite-by-predicate: copy-on-write delete of the rows
-    * matching `predicate` AND append of `df`, committed as ONE
-    * snapshot — the `.overwrite(cond)` / dynamic-partition-overwrite
-    * shape without the delete-landed-but-batch-never-did crash window
-    * (a failure anywhere before the final metadata write leaves the
-    * table at its prior version; staged files are orphans).
-    * Returns the rows dropped. */
-  def overwriteWhere(spark: SparkSession, tableDir: String,
-                     predicate: org.apache.spark.sql.Column,
-                     df: DataFrame): Long = {
-    val root = new Path(tableDir)
-    val meta = readMeta(spark, tableDir)
-    val snapshotId = meta.nextSnapshotId
-    val staged = stageDeleteWhere(spark, root, meta, snapshotId, predicate)
-    val base = staged match {
-      case Some((groups, _)) =>
-        stageRewriteManifests(spark, root, meta, snapshotId, groups)
-      case None => meta.manifests
-    }
-    val app = stageDataManifest(spark, root, meta, snapshotId, df)
-    if (staged.isEmpty && app.isEmpty) return 0L
-    commit(spark, root, Some(meta), snapshotId, meta.version + 1,
-      base ++ app.map(_._1).toSeq, meta.schemaJs, meta.lastColumnId,
-      meta.specs, meta.defaultSpecId, operation = "overwrite",
-      sortCols = meta.sortOrderCols, props = meta.props)
-    staged.map(_._2).getOrElse(0L)
-  }
-
-  /** DYNAMIC partition overwrite — replace exactly the partitions the
-    * batch touches, leave every other partition untouched (the
-    * `INSERT OVERWRITE ... partitionOverwriteMode=dynamic` /
-    * `writeTo.overwritePartitions()` contract): the batch materializes
-    * once (self-reference / mid-scan-failure pinning), its DISTINCT
-    * partition tuples collect (bounded by the partitions touched —
-    * refused above 1000, where a driver-side predicate stops being the
-    * right tool), the matching rows copy-on-write delete through the
-    * SAME transform expressions the writer partitions by (hidden
-    * partitioning: the predicate is on derived values, day/bucket/...,
-    * never writer-addressed columns), and the batch appends. An
-    * UNPARTITIONED table degrades to the full metadata-only truncate +
-    * append (the Iceberg rule). Returns the rows dropped. */
-  def overwritePartitions(spark: SparkSession, tableDir: String,
-                          df0: DataFrame): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val meta = readMeta(spark, tableDir)
-    val spec = meta.partitionSpec
-    val df = df0.localCheckpoint(eager = true)
-    if (spec.isEmpty) {
-      // unpartitioned: degrade to a full replace — ONE snapshot whose
-      // manifest list carries only the new batch (the Iceberg rule),
-      // dropping the prior live rows
-      val n = liveRowCount(spark, meta)
-      commitRowDelta(spark, tableDir, appendDf = Some(df),
-        replaceAll = true, operation = "overwrite")
-      return n
-    }
-    val schema = declaredSchema(meta)
-    def derived(pf: IcebergTransforms.PartField) =
-      IcebergTransforms.column(spark, pf.transform, col(pf.sourceCol),
-        schema(pf.sourceCol).dataType)
-    val touched = df.select(spec.map(pf =>
-      derived(pf).as(pf.name)): _*).distinct().collect()
-    require(touched.length <= 1000,
-      s"dynamic overwrite touches ${touched.length} partitions (> 1000) " +
-        "— use a full INSERT OVERWRITE or split the write")
-    // delete-the-touched-partitions + append-the-batch commit as ONE
-    // snapshot (overwriteWhere) — no half-applied crash window
-    val pred = touched.toSeq.map { row =>
-      spec.zipWithIndex.map { case (pf, i) =>
-        if (row.isNullAt(i)) derived(pf).isNull
-        else derived(pf) === lit(row.get(i))
-      }.reduce(_ && _)
-    }.reduceOption(_ || _).getOrElse(lit(false))
-    overwriteWhere(spark, tableDir, pred, df)
   }
 
   /** Copy-on-write row UPDATE — `SET col = expr` applied to rows
@@ -1998,7 +1922,7 @@ object IcebergLite {
     * frame's rows as delete parquet under `data/<dirName>` (through the
     * one data-file writer, unpartitioned — a delete file belongs to no
     * partition) and ONE content=`content` manifest over them — NO commit
-    * (the [[commitRowDelta]] single-snapshot discipline). Returns the
+    * (the single-snapshot discipline of every commit). Returns the
     * manifest ref + delete-row count; `None` when the frame is empty. */
   private def stageDeleteManifest(spark: SparkSession, root: Path,
                                   meta: TableMeta, snapshotId: Long,
@@ -2090,13 +2014,9 @@ object IcebergLite {
   private def stageDataManifest(spark: SparkSession, root: Path,
                                 meta: TableMeta, snapshotId: Long,
                                 df0: DataFrame,
-                                /** extra per-ATTEMPT token for paths —
-                                  * REST clients stage before the catalog
-                                  * arbitrates, so two concurrent stagers
-                                  * computing the same next snapshot id
-                                  * must never collide on storage (the
-                                  * direct single-writer chain passes ""). */
-                                attempt: String = ""): Option[(MRef, Long)] = {
+                                /** per-ATTEMPT path token: REST clients
+                                  * stage before the catalog arbitrates */
+                                attempt: String): Option[(MRef, Long)] = {
     import org.apache.spark.sql.functions.{col => c0}
     val effectiveSort = meta.sortOrderCols
     val df =
@@ -2143,64 +2063,56 @@ object IcebergLite {
       newRows, content = 0, specId = meta.defaultSpecId), newRows))
   }
 
-  /** ONE-snapshot commit of an appended data frame — the ATOMIC write
-    * shape: a crash before the final metadata write leaves the table at
-    * its prior version with every staged file unreferenced
-    * ([[removeOrphanFiles]] reclaims them).
-    *
-    * `replaceAll` drops every prior manifest (the INSERT OVERWRITE /
-    * truncate-and-load shape — full history still time-travels).
-    * Returns the appended rows. No-op (no new snapshot) when nothing
-    * stages and `replaceAll` is false. */
-  def commitRowDelta(spark: SparkSession, tableDir: String,
-                     appendDf: Option[DataFrame] = None,
-                     replaceAll: Boolean = false,
-                     operation: String = "overwrite",
-                     commitKey: Option[String] = None): Long = {
-    val root = new Path(tableDir)
-    val meta = readMeta(spark, tableDir)
-    // exactly-once: a commit key already in the snapshot log means this
-    // statement landed before a checkpoint replay — no-op
-    if (commitKey.exists(k => hasCommitKey(meta, k))) return 0L
-    val snapshotId = meta.nextSnapshotId
-    val app = appendDf
-      .flatMap(df => stageDataManifest(spark, root, meta, snapshotId, df))
-    val staged = app.toSeq.map(_._1)
-    if (staged.isEmpty && !replaceAll && commitKey.isEmpty) return 0L
-    val base = if (replaceAll) Seq.empty else meta.manifests
-    commit(spark, root, Some(meta), snapshotId, meta.version + 1,
-      base ++ staged, meta.schemaJs, meta.lastColumnId, meta.specs,
-      meta.defaultSpecId, operation, commitKey = commitKey,
-      sortCols = meta.sortOrderCols, props = meta.props)
-    app.map(_._2).getOrElse(0L)
-  }
-
   /** The snapshot-summary keys under which a SQL DELETE, UPDATE or
     * MERGE records the target rows it updated, deleted and inserted
-    * ([[commitDelta]]; a truncate records its deleted rows);
+    * ([[commitWrite]]; a truncate records its deleted rows);
     * the `snapshots` metadata table shows them as `updated_rows`,
     * `deleted_rows` and `inserted_rows`, in any session. */
   val UpdatedRowsKey = "graft-updated-rows"
   val DeletedRowsKey = "graft-deleted-rows"
   val InsertedRowsKey = "graft-inserted-rows"
 
-  /** ONE-snapshot commit of a native position-delta write (SQL
-    * DELETE, UPDATE or MERGE, [[GraftDeltaOperation]]): the
-    * position-delete files and data files its committed write tasks
-    * staged, each manifest entry built from the statistics the task
-    * collected (nothing is read back), and the statement's row counts
-    * in the snapshot summary under [[UpdatedRowsKey]] /
-    * [[DeletedRowsKey]] / [[InsertedRowsKey]]. The operation is the
-    * Iceberg one: `append` (rows only), `delete` (deletes only) or
-    * `overwrite`. Commits nothing when no task wrote a row. */
-  def commitDelta(spark: SparkSession, tableDir: String,
+  /** What a write replaces as its files land ([[commitWrite]]). */
+  sealed trait WriteMode
+  case object Append extends WriteMode
+  case object ReplaceAll extends WriteMode
+  case class ReplaceWhere(predicate: org.apache.spark.sql.Column)
+    extends WriteMode
+  case object ReplacePartitions extends WriteMode
+
+  /** The ONE file-based commit: the files a native V2 write's committed
+    * tasks wrote ([[GraftBatchWrite]], or a position delta,
+    * [[GraftDeltaOperation]]) as ONE snapshot, each manifest entry built
+    * from the task's statistics. `mode` says what goes first: every
+    * live row; the rows a predicate matches, or those of the partitions
+    * the new files touch, through [[stageDeleteWhere]] (no match: a
+    * plain append that keeps the delete manifests); a dynamic overwrite
+    * of an unpartitioned table replaces everything (the Iceberg rule).
+    * `counts` land in the summary. The operation is Iceberg's:
+    * `append` (nothing removed), `delete` (nothing added) or
+    * `overwrite`. Commits nothing when nothing is added or removed. */
+  def commitWrite(spark: SparkSession, tableDir: String,
                   dataFiles: Seq[GraftDataFile],
-                  deleteFiles: Seq[GraftDataFile],
-                  updated: Long, deleted: Long, inserted: Long): Unit = {
-    if (dataFiles.isEmpty && deleteFiles.isEmpty) return
+                  deleteFiles: Seq[GraftDataFile] = Nil,
+                  mode: WriteMode = Append,
+                  counts: Seq[(String, Long)] = Nil): Unit = {
     val root = new Path(tableDir)
     val meta = readMeta(spark, tableDir)
     val snapshotId = meta.nextSnapshotId
+    val replaceAll = mode == ReplaceAll ||
+      (mode == ReplacePartitions && meta.partitionSpec.isEmpty)
+    val rewrite = (mode match {
+      case ReplaceWhere(p) => Some(p)
+      case ReplacePartitions if !replaceAll && dataFiles.nonEmpty =>
+        Some(touchedPartitions(spark, meta, dataFiles))
+      case _ => None
+    }).flatMap(stageDeleteWhere(spark, root, meta, snapshotId, _))
+    val removes = replaceAll || rewrite.isDefined || deleteFiles.nonEmpty
+    if (dataFiles.isEmpty && !removes) return
+    val base =
+      if (replaceAll) Nil
+      else rewrite.fold(meta.manifests)(r =>
+        stageRewriteManifests(spark, root, meta, snapshotId, r._1))
     val spec = typedSpec(meta.partitionSpec, declaredSchema(meta))
     val entrySchema = manifestEntrySchema(spec)
     val (entries, bloomPath) = dataEntries(spark, root, dataFiles,
@@ -2211,15 +2123,41 @@ object IcebergLite {
         dataManifest(spark, root, meta, snapshotId, entrySchema, entries,
           bloomPath)
     commit(spark, root, Some(meta), snapshotId, meta.version + 1,
-      meta.manifests ++ staged.map(_._1), meta.schemaJs, meta.lastColumnId,
+      base ++ staged.map(_._1), meta.schemaJs, meta.lastColumnId,
       meta.specs, meta.defaultSpecId,
       operation =
-        if (deleteFiles.isEmpty) "append"
+        if (!removes) "append"
         else if (dataFiles.isEmpty) "delete"
         else "overwrite",
-      sortCols = meta.sortOrderCols, props = meta.props,
-      counts = Seq(UpdatedRowsKey -> updated, DeletedRowsKey -> deleted,
-        InsertedRowsKey -> inserted))
+      sortCols = meta.sortOrderCols, props = meta.props, counts = counts)
+  }
+
+  /** The rows of the partitions `files` landed in: one conjunction per
+    * distinct partition tuple, on the transforms the writer partitions
+    * by, so files of an older spec match row by row. Refused above 1000
+    * tuples, where a driver-side predicate stops being the right tool. */
+  private def touchedPartitions(spark: SparkSession, meta: TableMeta,
+                                files: Seq[GraftDataFile])
+      : org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val touched = files.map(_.partition).distinct
+    require(touched.size <= 1000,
+      s"dynamic overwrite touches ${touched.size} partitions (> 1000) " +
+        "— use a full INSERT OVERWRITE or split the write")
+    val schema = declaredSchema(meta)
+    touched.map(_.zip(meta.partitionSpec).map { case (v, pf) =>
+      val dt = schema(pf.sourceCol).dataType
+      val derived = IcebergTransforms.column(spark, pf.transform,
+        col(pf.sourceCol), dt)
+      if (v == null) derived.isNull
+      // an identity value is the column's catalyst value (days, micros)
+      else if (pf.transform == "identity") derived === GraftColumnShim.column(
+        org.apache.spark.sql.catalyst.expressions.Literal(v match {
+          case s: String => UTF8String.fromString(s)
+          case other => other
+        }, dt))
+      else derived === lit(v)
+    }.reduce(_ && _)).reduce(_ || _)
   }
 
   /** v2 merge-on-read EQUALITY delete — the CDC/streaming-upsert
@@ -2367,7 +2305,7 @@ object IcebergLite {
 
   /** The current partition spec (rendered as [[tablePartitionSpec]]
     * renders it) and sort order, from ONE metadata read: what the
-    * native V2 row-level write clusters and orders its rows by. */
+    * native V2 writes cluster and order their rows by. */
   private[sources] def writeLayout(spark: SparkSession, tableDir: String)
       : (Seq[String], Seq[String]) = {
     val meta = readMeta(spark, tableDir)

@@ -464,11 +464,9 @@ class GraftRestTable(catalog: GraftRestCatalog, ident: Identifier,
               require(!overwrite,
                 s"overwrite through the REST catalog is not supported — " +
                   "append, or use a direct GraftTableCatalog")
-              val aligned = graft.plans.IcebergWriteAlign.byName(
-                s"write to ${name()}", data,
-                IcebergLite.tableSchema(data.sparkSession, tableDir))
+              // Spark's analyzer has aligned the rows to the table
               IcebergLite.stageRestAppend(data.sparkSession, tableDir,
-                aligned).foreach { case (snapshotId, listPath, summary) =>
+                data).foreach { case (snapshotId, listPath, summary) =>
                 catalog.commitSnapshot(ident, snapshotId, listPath, summary)
               }
             }

@@ -47,10 +47,10 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
   private def rewrite(sqlText: String): String =
     AsofSqlRewrite(session, sqlText)
 
-  // time travel AND write statements (INSERT/TRUNCATE) over registered
-  // IcebergLite names resolve at parse time (Spark's analyzer refuses
-  // both on temp views), and a DELETE's, UPDATE's or MERGE's target
-  // binds to the name's table so Spark's own statement plans it; see
+  // time travel over registered IcebergLite names resolves at parse
+  // time (Spark's analyzer refuses it on temp views), and the target of
+  // an INSERT, TRUNCATE, DELETE, UPDATE or MERGE binds to the name's
+  // table so Spark's own statement plans it; see
   // graft.plans.IcebergTimeTravelRewrite / IcebergWriteRewrite
   override def parsePlan(sqlText: String): LogicalPlan =
     graft.plans.IcebergWriteRewrite(session,

@@ -131,6 +131,24 @@ class IcebergLiteSpec extends SparkSuite {
     assert(IcebergLite.snapshotIds(spark, dir) == Seq(1L, 2L, 3L))
   }
 
+  test("a zero-match deleteWhere after a SQL DELETE commits nothing") {
+    val dir = tmp()
+    IcebergLite.createTable(spark, (batch1 ++ batch2).toDF("id", "lang", "n"),
+      dir, partitionBy = Seq("lang"))
+    graft.Catalog.registerIcebergTable(spark, "ils_zero_match", dir)
+    // the SQL DELETE leaves a position delete naming a live file
+    assert(spark.sql("DELETE FROM ils_zero_match WHERE id = 3")
+      .head().getLong(0) == 1L)
+    val snaps = IcebergLite.snapshotIds(spark, dir)
+    def rows() = IcebergLite.readTable(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    val before = rows()
+    assert(IcebergLite.deleteWhere(spark, dir, col("n") < 0L) == 0L)
+    // no rewrite of the file the delete names: no snapshot at all
+    assert(IcebergLite.snapshotIds(spark, dir) == snaps)
+    assert(rows() == before && before.size == 4)
+  }
+
   test("compact folds accumulated snapshots into one, content-preserving") {
     val dir = tmp()
     IcebergLite.createTable(spark, batch1.toDF("id", "lang", "n"), dir)

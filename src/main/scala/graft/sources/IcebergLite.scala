@@ -482,13 +482,9 @@ object IcebergLite {
       require(schema.fieldNames.contains(c),
         s"column $c (partition/sort/bloom contract) not in the schema " +
           s"(${schema.fieldNames.mkString(", ")})"))
-    val (schemaJs, lastColumnId) = schemaJson(schema)
-    commit(spark, root, None, snapshotId = 1L, version = 1,
-      manifests = Seq.empty, schemaJs, lastColumnId,
-      specs = Seq(0 -> reqSpec), defaultSpecId = 0,
-      operation = "append", sortCols = sortBy,
-      props = if (bloomFor.nonEmpty)
-        Map(BloomColsProp -> bloomFor.mkString(",")) else Map.empty)
+    commit(spark, newTable(tableDir, schema, reqSpec)
+      .copy(sortOrderCols = sortBy, props = bloomProps(bloomFor)),
+      manifests = Nil, operation = "append")
   }
 
   /** REPLACE the table's contents and contract WITHOUT losing history —
@@ -549,11 +545,12 @@ object IcebergLite {
           val nid = meta.specs.map(_._1).max + 1
           (retained :+ (nid -> reqSpec), nid)
       }
-      commit(spark, root, Some(meta), meta.nextSnapshotId, meta.version + 1,
-        manifests = Seq.empty, schemaJs, id, specs, defaultSpecId,
-        operation = "replace", sortCols = sortBy,
-        props = if (bloomFor.nonEmpty)
-          Map(BloomColsProp -> bloomFor.mkString(",")) else Map.empty)
+      commit(spark, meta.copy(
+          schemaNode = new com.fasterxml.jackson.databind.ObjectMapper()
+            .readTree(schemaJs),
+          lastColumnId = id, specs = specs, defaultSpecId = defaultSpecId,
+          sortOrderCols = sortBy, props = bloomProps(bloomFor)),
+        manifests = Nil, operation = "replace")
     }
     df.foreach { d =>
       appendSnapshot(spark, d, tableDir, partitionBy, sortBy = sortBy,
@@ -561,9 +558,27 @@ object IcebergLite {
     }
   }
 
-  /** Append one snapshot: write the batch's data files, a manifest over
-    * them, a manifest list covering ALL live manifests, and the next
-    * metadata version. First call on an empty dir creates the table.
+  /** The metadata of a table before its first commit at `tableDir`:
+    * `schema` with fresh field ids, `spec` as spec 0, no snapshot — the
+    * base the first commit stacks on. */
+  private def newTable(tableDir: String, schema: StructType,
+                       spec: Seq[IcebergTransforms.PartField]): TableMeta = {
+    val (schemaJs, lastColumnId) = schemaJson(schema)
+    TableMeta(tableDir, version = 0,
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(schemaJs),
+      Seq(0 -> spec), defaultSpecId = 0, currentSnapshotId = 0L,
+      snapshots = Nil, manifests = Nil, lastColumnId, sortOrderCols = Nil,
+      refs = Map.empty)
+  }
+
+  private def bloomProps(bloomFor: Seq[String]): Map[String, String] =
+    if (bloomFor.isEmpty) Map.empty
+    else Map(BloomColsProp -> bloomFor.mkString(","))
+
+  /** Append one snapshot: write the batch's data files and publish them
+    * ([[commitWrite]]) — a manifest over them, a manifest list covering
+    * ALL live manifests, and the next metadata version. First call on
+    * an empty dir creates the table.
     *
     * `sortBy` range-clusters the batch before writing
     * (`repartitionByRange` + `sortWithinPartitions`): data files get
@@ -578,17 +593,12 @@ object IcebergLite {
                      sortFiles: Int = 0,
                      toBranch: String = "main",
                      bloomFor: Seq[String] = Nil): Unit = {
-    import org.apache.spark.sql.functions.{col => c0}
     val root = new Path(tableDir)
-    val metaDir = new Path(root, "metadata")
-    val hintPath = new Path(metaDir, "version-hint.text")
-    val f = fs(spark, root)
-
     // a branch append stacks on the BRANCH HEAD's manifest list, not
     // main's (the write-audit-publish staging shape); tags are
     // immutable and refuse writes
     val prior: Option[TableMeta] =
-      if (!f.exists(hintPath)) {
+      if (!fs(spark, root).exists(new Path(root, "metadata/version-hint.text"))) {
         require(toBranch == "main",
           s"cannot create a table on branch $toBranch")
         None
@@ -604,100 +614,60 @@ object IcebergLite {
           else readMeta(spark, tableDir, Some(head)))
         }
       }
-    // the table's persisted sort order is the default: a caller that
-    // names no sortBy still clusters the way the table contract says
-    // (a second writer inherits the discipline); an explicit sortBy
-    // becomes the NEW persisted order
-    val effectiveSort =
-      if (sortBy.nonEmpty) sortBy
-      else prior.map(_.sortOrderCols).getOrElse(Nil)
-    // sortFiles > 0 pins the range-partition count (a user-specified
-    // repartition is exempt from AQE coalescing — without it, a small
-    // batch collapses to one file and the disjoint-bounds property
-    // this clustering exists for never materializes)
-    val df =
-      if (effectiveSort.isEmpty) df0
-      else {
-        val ranged =
-          if (sortFiles > 0)
-            df0.repartitionByRange(sortFiles, effectiveSort.map(c0): _*)
-          else df0.repartitionByRange(effectiveSort.map(c0): _*)
-        ranged.sortWithinPartitions(effectiveSort.map(c0): _*)
-      }
     // exactly-once: a commit key already in the snapshot log means this
     // batch landed before a checkpoint replay — the fold is a no-op
     if (commitKey.exists(k => prior.exists(hasCommitKey(_, k)))) return
-    // Against a live table the batch must match the DECLARED schema
-    // (names + types in order) and the commit re-uses the table's
-    // schema json VERBATIM — evolved field ids are never re-derived
-    // from the Spark schema, which would renumber them.
-    def canon(dt: DataType): String = canonType(dt)
     val reqSpec = partitionBy.map(IcebergTransforms.parse)
-    val (schemaJs, lastColumnId) = prior match {
-      case Some(m) =>
-        require(m.partitionSpec == reqSpec,
-          s"table is partitioned by ${m.partitionSpec.map(renderSpec)}, " +
-            s"got ${reqSpec.map(renderSpec)}")
-        val declared = declaredSchema(m)
-        val got = df.schema
-        require(declared.fields.map(f2 => (f2.name, canon(f2.dataType)))
-            .sameElements(got.fields.map(f2 => (f2.name, canon(f2.dataType)))),
-          s"appended schema ${got.simpleString} differs from the table " +
-            s"schema ${declared.simpleString}")
-        (m.schemaJs, m.lastColumnId)
-      case None => schemaJson(df.schema)
-    }
-
-    val snapshotId = prior.map(_.nextSnapshotId).getOrElse(1L)
-    val version = prior.map(_.version).getOrElse(0) + 1
-    val specs = prior.map(_.specs).getOrElse(Seq(0 -> reqSpec))
-    val defaultSpecId = prior.map(_.defaultSpecId).getOrElse(0)
-
-    val spec = typedSpec(reqSpec, df.schema)
-    val entrySchema = manifestEntrySchema(spec)
-
-    // 1. data files + their manifest entries
-    val fieldIds = topFields(new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(schemaJs)).map(f2 => f2._2 -> f2._1).toMap
-    // bloom filters: an explicit bloomFor becomes the NEW persisted
-    // contract; callers that name none inherit the table property
-    // (the sortBy discipline). The write tasks build them with the
-    // bounds.
-    val effectiveBloom =
-      if (bloomFor.nonEmpty) bloomFor
-      else prior.map(_.bloomCols).getOrElse(Nil)
-    val (entries, bloomPath) = writeDataFiles(spark, df, root, snapshotId,
-      spec, entrySchema, fieldIds, distribute = effectiveSort.isEmpty,
-      bloomCols = effectiveBloom, sortCols = effectiveSort)
+    prior.foreach(m => require(m.partitionSpec == reqSpec,
+      s"table is partitioned by ${m.partitionSpec.map(renderSpec)}, " +
+        s"got ${reqSpec.map(renderSpec)}"))
+    // the table's persisted sort order and Bloom columns are the
+    // defaults: a caller that names none writes the way the table
+    // contract says (a second writer inherits the discipline); an
+    // explicit sortBy or bloomFor becomes the NEW persisted contract
+    val table = prior.getOrElse(newTable(tableDir, df0.schema, reqSpec))
+    val base = table.copy(
+      sortOrderCols = if (sortBy.nonEmpty) sortBy else table.sortOrderCols,
+      props = table.props ++ bloomProps(bloomFor))
+    val files = writeAppend(spark, base, df0, sortFiles)
     // an empty batch (idle micro-batch, delta filter matching nothing)
     // wrote no file and appends nothing
-    if (entries.isEmpty) {
+    if (files.isEmpty) {
       require(prior.isDefined, "cannot create a table from an empty batch")
       return
     }
+    commitWrite(spark, base,
+      Change(data = files, commitKey = commitKey, branch = toBranch))
+  }
 
-    // 2. manifest for this snapshot's files
-    val manifestPath = new Path(metaDir, f"manifest-$snapshotId%05d.avro")
-    val manifestLen = writeAvro(spark, manifestPath, entrySchema, entries,
-      Map("schema" -> schemaJs, "format-version" -> "1",
-        "content" -> "data",
-        "partition-spec-id" -> defaultSpecId.toString) ++
-        bloomPath.map("bloom-paths" -> _))
-
-    // 3. manifest list = prior live manifests + this one;
-    //    4. next metadata version + hint
-    val newRows = entries.map(_.get("data_file").asInstanceOf[GenericRecord]
-      .get("record_count").asInstanceOf[Long]).sum
-    commit(spark, root, prior, snapshotId, version,
-      prior.toSeq.flatMap(_.manifests) :+
-        MRef(manifestPath.toString, manifestLen, entries.size, snapshotId,
-          newRows, content = 0, specId = defaultSpecId),
-      schemaJs, lastColumnId, specs, defaultSpecId, operation = "append",
-      commitKey = commitKey, sortCols = effectiveSort, toBranch = toBranch,
-      props = prior.map(_.props).getOrElse(Map.empty) ++
-        (if (effectiveBloom.nonEmpty)
-          Map(BloomColsProp -> effectiveBloom.mkString(","))
-        else Map.empty))
+  /** Write an append's rows as data files of the snapshot after `base`,
+    * under its contract, into `data/s<id><dirSuffix>` ([[writeData]]).
+    * The rows must match the declared schema (names and canonical
+    * types, in order): the commit re-uses the table's schema json
+    * VERBATIM, so evolved field ids are never re-derived from the Spark
+    * schema, which would renumber them. A sorted table's rows are
+    * range-clustered on its sort order — `sortFiles` > 0 pins the range
+    * count (a user-specified repartition is exempt from AQE coalescing:
+    * without it a small batch collapses to one file and the
+    * disjoint-bounds property this clustering exists for never
+    * materializes); an unsorted partitioned table's rows are
+    * hash-clustered on their partition values. */
+  private def writeAppend(spark: SparkSession, base: TableMeta,
+                          df0: DataFrame, sortFiles: Int = 0,
+                          dirSuffix: String = ""): Seq[GraftDataFile] = {
+    import org.apache.spark.sql.functions.col
+    val declared = declaredSchema(base)
+    require(declared.fields.map(f2 => (f2.name, canonType(f2.dataType)))
+        .sameElements(df0.schema.fields.map(f2 =>
+          (f2.name, canonType(f2.dataType)))),
+      s"appended schema ${df0.schema.simpleString} differs from the table " +
+        s"schema ${declared.simpleString}")
+    val sort = base.sortOrderCols.map(col)
+    val df =
+      if (sort.isEmpty) df0
+      else (if (sortFiles > 0) df0.repartitionByRange(sortFiles, sort: _*)
+        else df0.repartitionByRange(sort: _*)).sortWithinPartitions(sort: _*)
+    writeData(spark, base, df, dirSuffix, distribute = sort.isEmpty)
   }
 
   /** Canonical type rendering for append-time schema checks: narrow
@@ -768,48 +738,33 @@ object IcebergLite {
       } finally df.unpersist()
     }
 
-  /** Write the batch's parquet files for one snapshot through the one
-    * data-file writer ([[GraftDataWriterFactory]]) as ONE job, and
-    * build their manifest entries (status ADDED) from the statistics
-    * the write tasks collected — row counts, sizes, partition values,
-    * column bounds (spec fields 125/128) and, when `bloomCols` is
-    * nonempty, the Bloom sidecar avro written here. Nothing is read
-    * back. `fieldIds` maps column name → field id in the TABLE schema
-    * (evolution-stable). An empty batch writes no file and returns no
-    * entry. Returns (manifest entries, bloom sidecar path if one was
-    * written). */
-  private def writeDataFiles(spark: SparkSession, df: DataFrame, root: Path,
-                             snapshotId: Long,
-                             spec: TypedSpec,
-                             entrySchema: Schema,
-                             fieldIds: Map[String, Int],
-                             distribute: Boolean = false,
-                             bloomCols: Seq[String] = Nil,
-                             dirSuffix: String = "",
-                             sortCols: Seq[String] = Nil)
-      : (Seq[GenericRecord], Option[String]) = {
+  /** Write `df` as data files of the snapshot after `base`, under its
+    * contract (partition spec, sort order, field ids — evolution-stable
+    * — and Bloom columns), into `data/s<id><dirSuffix>` through the one
+    * data-file writer as ONE job ([[writeFiles]]). HASH distribution
+    * mode (the Iceberg default for partitioned writes): `distribute`
+    * clusters the rows by their partition values so each partition is
+    * written by ONE task — without it every task writes a file into
+    * every partition dir and a 1000-executor append explodes into
+    * files × executors small files. Each task is then sorted by its
+    * partition values (the table's sort order after them), so the
+    * writer keeps one file open at a time. An empty frame writes no
+    * file. */
+  private def writeData(spark: SparkSession, base: TableMeta, df: DataFrame,
+                        dirSuffix: String = "",
+                        distribute: Boolean = false): Seq[GraftDataFile] = {
     import org.apache.spark.sql.functions.col
-    val partCols = spec.map { case (pf, _) =>
-      IcebergTransforms.column(spark, pf.transform, col(pf.sourceCol),
-        df.schema(pf.sourceCol).dataType)
-    }
-    // HASH distribution mode (the Iceberg default for partitioned
-    // writes): cluster the batch by its partition values so each
-    // partition is written by ONE task — without it every task writes
-    // a file into every partition dir and a 1000-executor append
-    // explodes into files × executors small files. Range-clustered
-    // (sorted) appends skip it: they are already distributed. Each
-    // task is then sorted by its partition values (the table's sort
-    // order after them), so the writer keeps one file open at a time.
+    // the transform/source-type gate, before any file lands
+    val spec = typedSpec(base.partitionSpec, df.schema).map(_._1)
+    val partCols = spec.map(pf => IcebergTransforms.column(spark,
+      pf.transform, col(pf.sourceCol), df.schema(pf.sourceCol).dataType))
     val clustered =
       if (spec.isEmpty) df
       else (if (distribute) df.repartition(partCols: _*) else df)
-        .sortWithinPartitions(partCols ++ sortCols.map(col): _*)
-    val files = writeFiles(spark, clustered,
-      new Path(root, s"data/s$snapshotId$dirSuffix"), spec.map(_._1),
-      fieldIds, bloomCols)
-    dataEntries(spark, root, files, snapshotId, spec, entrySchema,
-      bloomCols, dirSuffix)
+        .sortWithinPartitions(partCols ++ base.sortOrderCols.map(col): _*)
+    writeFiles(spark, clustered,
+      new Path(base.dir, s"data/s${base.nextSnapshotId}$dirSuffix"), spec,
+      base.fieldIds, base.bloomCols)
   }
 
   /** Run the one data-file writer over `df` as ONE job: the files the
@@ -897,45 +852,39 @@ object IcebergLite {
     (entries, bloomPath)
   }
 
-  /** Write the manifest list + next metadata version + version hint. */
-  private def commit(spark: SparkSession, root: Path, prior: Option[TableMeta],
-                     snapshotId: Long, version: Int,
+  /** Write the manifest list + next metadata version + version hint of
+    * the snapshot after `base`, on `toBranch`. The table contract —
+    * schema json verbatim, specs, sort order, properties — is `base`'s. */
+  private def commit(spark: SparkSession, base: TableMeta,
                      manifests: Seq[MRef],
-                     schemaJs: String, lastColumnId: Int,
-                     specs: Seq[(Int, Seq[IcebergTransforms.PartField])],
-                     defaultSpecId: Int,
                      operation: String,
                      commitKey: Option[String] = None,
-                     sortCols: Seq[String] = Nil,
                      toBranch: String = "main",
-                     props: Map[String, String] = Map.empty,
                      counts: Seq[(String, Long)] = Nil): Unit = {
-    val metaDir = new Path(root, "metadata")
-    val listPath = new Path(metaDir, f"snap-$snapshotId%05d.avro")
+    val root = new Path(base.dir)
+    val snapshotId = base.nextSnapshotId
+    val listPath = new Path(new Path(root, "metadata"),
+      f"snap-$snapshotId%05d.avro")
     writeManifestList(spark, listPath, manifests)
-    val parent = prior.map(_.currentSnapshotId).getOrElse(0L)
-    val newSummary =
-      summaryJson(operation, commitKey, parent, manifests, snapshotId, counts)
+    val newSummary = summaryJson(operation, commitKey,
+      base.currentSnapshotId, manifests, snapshotId, counts)
     // the written branch advances to the new snapshot; main's head is
     // the current pointer (unchanged by a staging-branch commit)
-    val priorRefs = prior.map(_.refs).getOrElse(Map.empty)
-    val newRefs = priorRefs + (toBranch -> (snapshotId, "branch"))
+    val newRefs = base.refs + (toBranch -> (snapshotId, "branch"))
     val mainHead =
       if (toBranch == "main") snapshotId
-      else priorRefs.get("main").map(_._1)
+      else base.refs.get("main").map(_._1)
         .getOrElse(sys.error("branch commit on a table with no main head"))
     val nowMs = System.currentTimeMillis()
     // main-head changes enter the snapshot-log (branch commits leave
     // main's pointer alone, so they don't — the Iceberg history rule)
-    val newLog = prior.toSeq.flatMap(_.snapshotLog) ++
+    val newLog = base.snapshotLog ++
       (if (toBranch == "main") Seq((nowMs, snapshotId)) else Nil)
-    writeMetadata(spark, root, version, schemaJs, lastColumnId,
-      specs, defaultSpecId, mainHead,
-      prior.toSeq.flatMap(_.snapshots) :+
-        ((snapshotId, listPath.toString, newSummary)), sortCols,
-      newRefs, props,
-      prior.map(_.snapshotTs).getOrElse(Map.empty) + (snapshotId -> nowMs),
-      newLog)
+    writeMetadata(spark, root, base.version + 1, base.schemaJs,
+      base.lastColumnId, base.specs, base.defaultSpecId, mainHead,
+      base.snapshots :+ ((snapshotId, listPath.toString, newSummary)),
+      base.sortOrderCols, newRefs, base.props,
+      base.snapshotTs + (snapshotId -> nowMs), newLog)
   }
 
   /** Write one MANIFEST LIST (snap-N.avro) over the given manifests —
@@ -1008,7 +957,6 @@ object IcebergLite {
     * empty batch. */
   def stageRestAppend(spark: SparkSession, tableDir: String,
                       df: DataFrame): Option[(Long, String, String)] = {
-    val root = new Path(tableDir)
     val meta = readMeta(spark, tableDir)
     val snapshotId = meta.nextSnapshotId
     // Attempt-unique staging paths (Iceberg's snap-<id>-<attempt>-<uuid>
@@ -1019,15 +967,16 @@ object IcebergLite {
     // orphaned files are reclaimed by removeOrphanFiles, as with any
     // uncommitted staging.
     val attempt = "-" + java.util.UUID.randomUUID.toString.take(8)
-    stageDataManifest(spark, root, meta, snapshotId, df, attempt).map {
-      case (mref, _) =>
-        val manifests = meta.manifests :+ mref
-        val listPath = new Path(new Path(root, "metadata"),
-          f"snap-$snapshotId%05d$attempt.avro")
-        writeManifestList(spark, listPath, manifests)
-        (snapshotId, listPath.toString,
-          summaryJson("append", None, meta.currentSnapshotId, manifests,
-            snapshotId))
+    val change = Change(data =
+      writeAppend(spark, meta, df, dirSuffix = s"-a$attempt"))
+    if (change.isEmpty) None
+    else {
+      val manifests = stageManifests(spark, meta, change, attempt)
+      val listPath = new Path(new Path(tableDir, "metadata"),
+        f"snap-$snapshotId%05d$attempt.avro")
+      writeManifestList(spark, listPath, manifests)
+      Some((snapshotId, listPath.toString, summaryJson(change.operation,
+        None, meta.currentSnapshotId, manifests, snapshotId)))
     }
   }
 
@@ -1247,7 +1196,7 @@ object IcebergLite {
           s"(have ${specs.map(_._1).mkString(", ")})"))
     /** Next snapshot id — GLOBAL across branches (ids stay unique and
       * monotone even when branch heads run ahead of main). */
-    def nextSnapshotId: Long = snapshots.map(_._1).max + 1
+    def nextSnapshotId: Long = snapshots.map(_._1).maxOption.getOrElse(0L) + 1
     /** The table schema json verbatim — committed unchanged by appends
       * and rewrites so evolved field ids are never re-derived. */
     def schemaJs: String = schemaNode.toString
@@ -1510,17 +1459,6 @@ object IcebergLite {
       (f.get("id").asInt(), f.get("name").asText(),
         sparkType(f.get("type")), f.get("required").asBoolean())).toSeq
 
-  /** Copy-on-write row deletion — the corpus REDACTION path (GDPR
-    * erasure, eval-contamination removal): rows matching `predicate`
-    * disappear from the new current snapshot, and the rewrite cost is
-    * proportional to the AFFECTED FILES, never the table — untouched
-    * files carry into the new manifest as EXISTING entries by
-    * reference. Rows where the predicate is NULL are kept (not
-    * matched). Prior snapshots still time-travel to the full data
-    * (physical purge of unreferenced files would be an expireSnapshots
-    * maintenance pass, out of scope). Returns the number of rows
-    * deleted.
-    */
   /** FILE-SKIPPING extraction for the DML paths: the row predicate a
     * DELETE/UPDATE evaluates exactly is ALSO mined, conservatively,
     * for [[Pred]]s so the match-finding scan visits only CANDIDATE
@@ -1645,9 +1583,10 @@ object IcebergLite {
     * count that was dropped, which the snapshot summary records under
     * [[DeletedRowsKey]]. */
   def truncateTable(spark: SparkSession, tableDir: String): Long = {
-    val n = liveRowCount(spark, readMeta(spark, tableDir))
-    commitWrite(spark, tableDir, Nil, mode = ReplaceAll,
-      counts = Seq(DeletedRowsKey -> n))
+    val meta = readMeta(spark, tableDir)
+    val n = liveRowCount(spark, meta)
+    commitWrite(spark, meta, replacedBy(spark, meta, ReplaceAll, Nil)._1
+      .copy(counts = Seq(DeletedRowsKey -> n)))
     n
   }
 
@@ -1662,55 +1601,33 @@ object IcebergLite {
     else meta.manifests.filter(_.content == 0).map(_.totalRows).sum -
       meta.manifests.filter(_.content == 1).map(_.totalRows).sum
 
+  /** Copy-on-write row deletion — the corpus REDACTION path (GDPR
+    * erasure, eval-contamination removal): rows matching `predicate`
+    * disappear from the new current snapshot, and the rewrite cost is
+    * proportional to the AFFECTED FILES, never the table — untouched
+    * files carry into the new manifest as EXISTING entries by
+    * reference. Rows where the predicate is NULL are kept (not
+    * matched). Prior snapshots still time-travel to the full data
+    * (physical purge of unreferenced files is [[expireSnapshots]]).
+    * It is a write's overwrite by filter ([[replacedBy]]) that adds no
+    * rows of its own. Returns the number of rows deleted. */
   def deleteWhere(spark: SparkSession,
                   tableDir: String,
                   predicate: org.apache.spark.sql.Column): Long = {
-    val root = new Path(tableDir)
     val meta = readMeta(spark, tableDir)
-    if (liveFileEntries(spark, meta).isEmpty) return 0L
-    val snapshotId = meta.nextSnapshotId
-    stageDeleteWhere(spark, root, meta, snapshotId, predicate) match {
-      case None => 0L
-      case Some((groups, nDeleted)) =>
-        commitRewrite(spark, root, meta, snapshotId, groups,
-          operation = "overwrite")
-        nDeleted
-    }
-  }
-
-  /** STAGE a copy-on-write delete for `snapshotId`: the rewrite groups
-    * (survivor rewrites + carried EXISTING entries) that physically
-    * apply `predicate` — data files written, NO commit. `None` when no
-    * live row matches: nothing rewrites, and the caller keeps every
-    * manifest, delete manifests included. The shared head of
-    * [[deleteWhere]] and a write's overwrite by filter or by partition
-    * ([[commitWrite]]). */
-  private def stageDeleteWhere(spark: SparkSession, root: Path,
-                               meta: TableMeta, snapshotId: Long,
-                               predicate: org.apache.spark.sql.Column)
-      : Option[(Seq[RewriteGroup], Long)] = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val files = liveFileEntries(spark, meta)
-    if (files.isEmpty) return None
-    val (nDeleted, hits) = cowTargets(spark, meta, files, predicate)
-    if (hits.isEmpty) return None
-    // rewrite ONLY the hit files (projected to the current schema —
-    // a rewrite is the one moment old-schema rows get rewritten new)
-    val survivors = readFiles(spark, meta, files.filter(f => hits(f.path)))
-      .filter(not(coalesce(predicate, lit(false))))
-      .drop("__file", "__pos")
-    Some((rewriteGroups(spark, root, meta, snapshotId, survivors,
-      p => !hits.contains(p)), nDeleted))
+    val (change, nDeleted) =
+      replacedBy(spark, meta, ReplaceWhere(predicate), Nil)
+    commitWrite(spark, meta, change)
+    nDeleted
   }
 
   /** What a copy-on-write DML statement rewrites: (live rows matching
-    * `predicate`, files to rewrite). One column-pruned scan over the
-    * CANDIDATE files (the predicate mined for bounds/partition/Bloom
+    * `predicate`, the files holding them). One column-pruned scan over
+    * the CANDIDATE files (the predicate mined for bounds/partition/Bloom
     * skipping — a partition-targeted statement scans its partition,
     * never the table) finds the files holding LIVE matches (merge-on-
     * read deletes applied first — a row already deleted cannot match
-    * again); when any row matches, the files an outstanding delete still
-    * names rewrite too. No match: no file. */
+    * again). */
   private def cowTargets(spark: SparkSession, meta: TableMeta,
                          files: Seq[NativeFileInfo],
                          predicate: org.apache.spark.sql.Column)
@@ -1723,16 +1640,13 @@ object IcebergLite {
         .filter(coalesce(predicate, lit(false)))
         .groupBy("__file").agg(sum(lit(1L)).as("__m"))
         .collect()
-    // no live match: nothing rewrites, and the outstanding deletes stay
-    if (hitAgg.isEmpty) (0L, Set.empty)
-    else (hitAgg.map(_.getLong(1)).sum,
-      hitAgg.map(_.getString(0)).toSet ++ deleteNamedFiles(spark, meta, files))
+    (hitAgg.map(_.getLong(1)).sum, hitAgg.map(_.getString(0)).toSet)
   }
 
   /** Live data files an outstanding merge-on-read delete still names:
     * referenced by a position delete ([[posDeleteTargets]]), or
-    * predating a live equality delete. A rewrite snapshot drops the
-    * delete manifests (every delete goes physical), so these files must
+    * predating a live equality delete. A removal drops the delete
+    * manifests (every delete goes physical), so these files must
     * rewrite with the deletes applied, or deleted rows would resurrect. */
   private def deleteNamedFiles(spark: SparkSession, meta: TableMeta,
                                files: Seq[NativeFileInfo]): Set[String] = {
@@ -1763,26 +1677,34 @@ object IcebergLite {
       .map(GraftNativeReaderFactory.normPath).toSet
   }
 
-  /** The manifest groups of a rewrite snapshot: `rows` written as new
-    * files under the table's current contract, plus every live file
-    * `keep` accepts carried by reference as EXISTING entries (grouped by
-    * their SOURCE manifest's schema AND spec, so an old-generation file
-    * stays readable through its own id→name mapping and prunable
-    * through its own partition shape). */
-  private def rewriteGroups(spark: SparkSession, root: Path, meta: TableMeta,
-                            snapshotId: Long, rows: DataFrame,
-                            keep: String => Boolean,
-                            distribute: Boolean = false): Seq[RewriteGroup] = {
-    val spec = typedSpec(meta.partitionSpec, declaredSchema(meta))
-    val entrySchema = manifestEntrySchema(spec)
-    val (entries, bloomPath) = writeDataFiles(spark, rows, root, snapshotId,
-      spec, entrySchema, meta.fieldIds, distribute = distribute,
-      bloomCols = meta.bloomCols, sortCols = meta.sortOrderCols)
-    carryExisting(spark, meta, keep) ++
-      (if (entries.isEmpty) Nil
-      else Seq(RewriteGroup(meta.schemaJs, meta.defaultSpecId, entrySchema,
-        entries, bloomPath.toSeq)))
-  }
+  /** A removal from `base`'s `live` files: the `dropped` files go by
+    * path, the `hits` rewrite their rows through `rows` — and, when
+    * anything goes, so do the files an outstanding delete names
+    * ([[deleteNamedFiles]]), since a removal drops the delete
+    * manifests. Nothing goes: no change. */
+  private def removal(spark: SparkSession, base: TableMeta,
+                      live: Seq[NativeFileInfo], dropped: Set[String],
+                      hits: Set[String])(rows: DataFrame => DataFrame): Change =
+    if (dropped.isEmpty && hits.isEmpty) Change()
+    else {
+      val rewrite = (hits ++ deleteNamedFiles(spark, base, live)) -- dropped
+      Change(data = rewriteFiles(spark, base,
+        live.filter(f => rewrite(f.path)))(rows),
+        removed = dropped ++ rewrite)
+    }
+
+  /** The live rows of `files` (merge-on-read deletes applied; projected
+    * to the current schema — a rewrite is the one moment old-schema rows
+    * get rewritten new) through `rows`, written as data files of the
+    * snapshot after `base` ([[writeData]]). */
+  private def rewriteFiles(spark: SparkSession, base: TableMeta,
+                           files: Seq[NativeFileInfo],
+                           distribute: Boolean = false)
+                          (rows: DataFrame => DataFrame): Seq[GraftDataFile] =
+    if (files.isEmpty) Nil
+    else writeData(spark, base,
+      rows(readFiles(spark, base, files)).drop("__file", "__pos"),
+      distribute = distribute)
 
   /** Copy-on-write row UPDATE — `SET col = expr` applied to rows
     * matching `predicate`, with the [[deleteWhere]] cost shape: ONLY
@@ -1791,9 +1713,9 @@ object IcebergLite {
     * physically); untouched files carry into the new manifest as
     * EXISTING entries by reference. Assignment expressions read the
     * PRE-update row (simultaneous assignment, the SQL UPDATE rule) and
-    * cast to the column\u0027s declared type under ANSI semantics; updating
+    * cast to the column's declared type under ANSI semantics; updating
     * a partition or sort column re-clusters the rewritten rows under
-    * the table contract (writeDataFiles partitions by the spec on the
+    * the table contract (the writer partitions by the spec on the
     * NEW values). Rows where the predicate is NULL keep their values.
     * Returns the number of rows updated. */
   def updateWhere(spark: SparkSession, tableDir: String,
@@ -1801,65 +1723,77 @@ object IcebergLite {
                   assignments: Seq[(String, org.apache.spark.sql.Column)])
       : Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when => when0}
-    val root = new Path(tableDir)
     val meta = readMeta(spark, tableDir)
     val files = liveFileEntries(spark, meta)
     if (files.isEmpty) return 0L // empty table: nothing to update
     val schema = declaredSchema(meta)
     val assignMap = validAssignments(schema, assignments)
     val (nUpdated, hits) = cowTargets(spark, meta, files, predicate)
-    if (nUpdated == 0) return 0L
-    val snapshotId = meta.nextSnapshotId
-
     // rewrite ONLY the hit files: matching rows take the assignments
     // (each expression reading the pre-update row), others pass through
     val matchedPred = coalesce(predicate, lit(false))
-    val rewritten = readFiles(spark, meta, files.filter(f => hits(f.path)))
-      .select(schema.fields.toIndexedSeq.map { f =>
+    commitWrite(spark, meta, removal(spark, meta, files, Set.empty, hits)(
+      _.select(schema.fields.toIndexedSeq.map { f =>
         assignMap.get(f.name) match {
           case Some(e) =>
             when0(matchedPred, e.cast(f.dataType))
               .otherwise(col(f.name)).as(f.name)
           case None => col(f.name)
         }
-      }: _*)
-    commitRewrite(spark, root, meta, snapshotId,
-      rewriteGroups(spark, root, meta, snapshotId, rewritten,
-        p => !hits.contains(p)), operation = "overwrite")
+      }: _*)))
     nUpdated
   }
 
-  /** EXISTING-entry carry groups for a rewrite: every live data-file
-    * entry whose path passes `keep`, deep-copied under its OWN entry
-    * schema, grouped by (write-time schema, partition-spec id). */
-  private def carryExisting(spark: SparkSession, meta: TableMeta,
-                            keep: String => Boolean): Seq[RewriteGroup] = {
-    val carried = mutable.LinkedHashMap
-      .empty[(String, Int), (Schema, mutable.ArrayBuffer[GenericRecord])]
-    val bloomsByGroup = mutable.LinkedHashMap
-      .empty[(String, Int), mutable.LinkedHashSet[String]]
-    meta.manifests.filter(_.content == 0).foreach { m =>
+  /** The data manifests of a removal from `base`: every live data-file
+    * entry not in `removed`, carried by reference as an EXISTING entry
+    * into one manifest per (write-time schema, partition spec) — so an
+    * old-generation file stays readable through its own id→name
+    * mapping and prunable through its own partition shape (its avro
+    * entry schema rides along, so old-spec records never deep-copy
+    * into a mismatched shape) — with its source manifests' Bloom
+    * sidecars (keyed by file path, so entries of removed files are
+    * simply never consulted). */
+  private def carryExisting(spark: SparkSession, base: TableMeta,
+                            removed: Set[String]): Seq[MRef] = {
+    val carried = mutable.LinkedHashMap.empty[(String, Int),
+      (Schema, mutable.ArrayBuffer[GenericRecord], mutable.LinkedHashSet[String])]
+    base.manifests.filter(_.content == 0).foreach { m =>
       val (recs, manifestSchemaJs) = readManifest(spark, new Path(m.path))
-      // bloom sidecars ride along BY REFERENCE (keyed by file path, so
-      // entries for rewritten-away files are simply never consulted)
       val srcBlooms = manifestMetaString(spark, new Path(m.path),
         "bloom-paths").toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
       recs.filter(_.get("status").asInstanceOf[Int] != 2).foreach { e =>
         val d = e.get("data_file").asInstanceOf[GenericRecord]
-        if (keep(d.get("file_path").toString)) {
+        if (!removed(d.get("file_path").toString)) {
           val c = GenericData.get()
             .deepCopy(e.getSchema, e).asInstanceOf[GenericRecord]
           c.put("status", 0) // EXISTING
-          carried.getOrElseUpdate((manifestSchemaJs, m.specId),
-            (e.getSchema, mutable.ArrayBuffer.empty))._2 += c
-          bloomsByGroup.getOrElseUpdate((manifestSchemaJs, m.specId),
-            mutable.LinkedHashSet.empty) ++= srcBlooms
+          val (_, entries, blooms) = carried.getOrElseUpdate(
+            (manifestSchemaJs, m.specId), (e.getSchema,
+              mutable.ArrayBuffer.empty, mutable.LinkedHashSet.empty))
+          entries += c
+          blooms ++= srcBlooms
         }
       }
     }
-    carried.toSeq.map { case ((js, specId), (es, recs)) =>
-      RewriteGroup(js, specId, es, recs.toSeq,
-        bloomsByGroup.get((js, specId)).map(_.toSeq).getOrElse(Nil))
+    val snapshotId = base.nextSnapshotId
+    carried.toSeq.zipWithIndex.map {
+      case (((schemaJs, specId), (entrySchema, entries, blooms)), k) =>
+        val manifestPath = new Path(new Path(base.dir, "metadata"),
+          f"manifest-$snapshotId%05d-$k.avro")
+        val manifestLen = writeAvro(spark, manifestPath, entrySchema,
+          entries.toSeq,
+          Map("schema" -> schemaJs, "format-version" -> "1",
+            "content" -> "data", "partition-spec-id" -> specId.toString) ++
+            (if (blooms.nonEmpty) Map("bloom-paths" -> blooms.mkString(","))
+            else Map.empty))
+        // the spec's added_* fields count ADDED entries; carried EXISTING
+        // entries ride the existing_* fields — so the summary metrics
+        // stay honest for rewrite snapshots
+        MRef(manifestPath.toString, manifestLen, 0, snapshotId, 0L,
+          content = 0, specId = specId, existingFiles = entries.size,
+          existingRows = entries.map(_.get("data_file")
+            .asInstanceOf[GenericRecord].get("record_count")
+            .asInstanceOf[Long]).sum)
     }
   }
 
@@ -1868,7 +1802,10 @@ object IcebergLite {
     * (file_path, pos) in position-delete parquet files committed
     * through a content=1 manifest — write cost ∝ MATCHES, zero data
     * files rewritten (vs [[deleteWhere]]'s cost ∝ affected files).
-    * Each read task drops the rows named for its file; [[compact]]
+    * Each file is sorted by (file_path, pos) and records its whole
+    * `file_path` bounds (the spec's position-delete layout), so a
+    * reader attaches it only to the data files it can name; each read
+    * task drops the rows named for its file. [[compact]]
     * applies deletes physically and [[deleteWhere]] force-rewrites
     * delete-referenced files, so the two deletion paths compose.
     * Returns rows deleted. */
@@ -1879,28 +1816,18 @@ object IcebergLite {
     val meta = readMeta(spark, tableDir)
     val files = liveFileEntries(spark, meta)
     if (files.isEmpty) return 0L // empty table: nothing to delete
-
     val cand = candidateFiles(spark, meta, predicate, files)
     if (cand.isEmpty) return 0L
     val matches = readFiles(spark, meta, cand)
       .filter(coalesce(predicate, lit(false)))
       .select(col("__file").as("file_path"), col("__pos").as("pos"))
-      .localCheckpoint() // one scan serves the count and the write
-    if (matches.isEmpty) return 0L
-    // stage + commit against the ALREADY-READ metadata (readMeta is
-    // O(snapshots) of avro IO — a streaming caller pays it once per
-    // batch, not twice)
-    val root = new Path(tableDir)
-    val snapshotId = meta.nextSnapshotId
-    stagePositionDeletes(spark, root, meta, snapshotId, matches) match {
-      case None => 0L
-      case Some((mref, nDeleted)) =>
-        commit(spark, root, Some(meta), snapshotId, meta.version + 1,
-          meta.manifests :+ mref, meta.schemaJs, meta.lastColumnId,
-          meta.specs, meta.defaultSpecId, operation = "delete",
-          sortCols = meta.sortOrderCols, props = meta.props)
-        nDeleted
-    }
+      .sortWithinPartitions("file_path", "pos")
+    // no match: no delete file, and no commit
+    val deletes = writeFiles(spark, matches,
+      new Path(tableDir, s"data/deletes-s${meta.nextSnapshotId}"), Nil,
+      Map("file_path" -> PosPathFieldId, "pos" -> PosFieldId), Nil)
+    commitWrite(spark, meta, Change(posDeletes = deletes))
+    deletes.map(_.rowCount).sum
   }
 
   private def validAssignments(schema: StructType,
@@ -1916,151 +1843,6 @@ object IcebergLite {
           s"(${schema.fieldNames.mkString(", ")})")
     }
     assignments.toMap
-  }
-
-  /** STAGE one merge-on-read delete manifest for `snapshotId`: the
-    * frame's rows as delete parquet under `data/<dirName>` (through the
-    * one data-file writer, unpartitioned — a delete file belongs to no
-    * partition) and ONE content=`content` manifest over them — NO commit
-    * (the single-snapshot discipline of every commit). Returns the
-    * manifest ref + delete-row count; `None` when the frame is empty. */
-  private def stageDeleteManifest(spark: SparkSession, root: Path,
-                                  meta: TableMeta, snapshotId: Long,
-                                  rows: DataFrame, dirName: String,
-                                  content: Int,
-                                  extraMeta: Map[String, String],
-                                  boundIds: Map[String, Int] = Map.empty)
-      : Option[(MRef, Long)] =
-    deleteManifest(spark, root, meta, snapshotId,
-      writeFiles(spark, rows, new Path(root, s"data/$dirName"), Nil,
-        boundIds, Nil), content, extraMeta)
-
-  /** The manifest half of [[stageDeleteManifest]]: ONE content=`content`
-    * manifest over delete `files` already written, their entries built
-    * from the statistics the writer collected. `None` when the files
-    * hold no row. */
-  private def deleteManifest(spark: SparkSession, root: Path,
-                             meta: TableMeta, snapshotId: Long,
-                             files: Seq[GraftDataFile], content: Int,
-                             extraMeta: Map[String, String])
-      : Option[(MRef, Long)] = {
-    val n = files.map(_.rowCount).sum
-    if (n == 0) return None
-    val entrySchema = manifestEntrySchema(Nil)
-    val (entries, _) = dataEntries(spark, root, files, snapshotId, Nil,
-      entrySchema, Nil, "")
-    val manifestPath = new Path(new Path(root, "metadata"),
-      f"manifest-$snapshotId%05d-${if (content == 1) "del" else "eqdel"}.avro")
-    val manifestLen = writeAvro(spark, manifestPath, entrySchema, entries,
-      Map("schema" -> meta.schemaJs, "format-version" -> "1",
-        "content" -> "deletes") ++ extraMeta)
-    Some((MRef(manifestPath.toString, manifestLen, entries.size, snapshotId,
-      n, content = content, specId = meta.defaultSpecId), n))
-  }
-
-  /** STAGE position deletes: `(file_path, pos)` rows, one content=1
-    * manifest. Each file is sorted by (file_path, pos) and records its
-    * whole `file_path` bounds (the spec's position-delete layout), so a
-    * reader attaches it only to the data files it can name. */
-  private def stagePositionDeletes(spark: SparkSession, root: Path,
-                                   meta: TableMeta, snapshotId: Long,
-                                   positions: DataFrame)
-      : Option[(MRef, Long)] =
-    stageDeleteManifest(spark, root, meta, snapshotId,
-      positions.sortWithinPartitions("file_path", "pos"),
-      s"deletes-s$snapshotId", content = 1, Map.empty,
-      Map("file_path" -> PosPathFieldId, "pos" -> PosFieldId))
-
-  /** STAGE an equality delete: the key frame's distinct rows, one
-    * content=2 manifest carrying the key columns by name + field id. Key
-    * columns must exist in the table schema and be primitive (Iceberg
-    * equality fields are). Returns the manifest ref + distinct key
-    * count; `None` when the key frame is empty. */
-  private def stageEqualityDelete(spark: SparkSession, root: Path,
-                                  meta: TableMeta, snapshotId: Long,
-                                  keys: DataFrame): Option[(MRef, Long)] = {
-    import org.apache.spark.sql.functions.col
-    val declared = declaredSchema(meta)
-    val keyCols = keys.schema.fieldNames.toSeq
-    require(keyCols.nonEmpty, "equality delete needs at least one key column")
-    keyCols.foreach { c =>
-      require(declared.fieldNames.contains(c),
-        s"equality column $c not in the table schema")
-      require(!declared(c).dataType.isInstanceOf[StructType] &&
-        !declared(c).dataType.isInstanceOf[ArrayType] &&
-        !declared(c).dataType.isInstanceOf[MapType], s"equality column $c " +
-        s"is ${declared(c).dataType.simpleString}: keys must be primitive")
-    }
-    // cast to the DECLARED types so key matching is type-exact even if
-    // the caller hands narrower literals
-    val casted = keys.select(keyCols.map(c =>
-      col(c).cast(declared(c).dataType).as(c)): _*).distinct()
-    // key columns ride the manifest metadata by NAME + field id; readers
-    // resolve them by id (evolution-stable), the names are the files'
-    stageDeleteManifest(spark, root, meta, snapshotId, casted,
-      s"eqdel-s$snapshotId", content = 2,
-      Map("equality-cols" -> keyCols.mkString(","),
-        "equality-ids" -> keyCols.map(meta.fieldIds).mkString(",")))
-  }
-
-  /** STAGE a data append for an EXISTING table under the table's own
-    * persisted contract (partition spec, sort order, bloom columns —
-    * exactly what [[appendSnapshot]] applies when the caller names
-    * nothing): cluster + write the data files and ONE content=0
-    * manifest for `snapshotId` — NO commit. The frame must match the
-    * declared schema under the same canonical-type rule as
-    * [[appendSnapshot]]. Returns the manifest ref + row count; `None`
-    * when the frame is empty. */
-  private def stageDataManifest(spark: SparkSession, root: Path,
-                                meta: TableMeta, snapshotId: Long,
-                                df0: DataFrame,
-                                /** per-ATTEMPT path token: REST clients
-                                  * stage before the catalog arbitrates */
-                                attempt: String): Option[(MRef, Long)] = {
-    import org.apache.spark.sql.functions.{col => c0}
-    val effectiveSort = meta.sortOrderCols
-    val df =
-      if (effectiveSort.isEmpty) df0
-      else df0.repartitionByRange(effectiveSort.map(c0): _*)
-        .sortWithinPartitions(effectiveSort.map(c0): _*)
-    val declared = declaredSchema(meta)
-    require(declared.fields.map(f2 => (f2.name, canonType(f2.dataType)))
-        .sameElements(df.schema.fields.map(f2 =>
-          (f2.name, canonType(f2.dataType)))),
-      s"appended schema ${df.schema.simpleString} differs from the table " +
-        s"schema ${declared.simpleString}")
-    val spec = typedSpec(meta.partitionSpec, df.schema)
-    val entrySchema = manifestEntrySchema(spec)
-    // "-a" keeps this dir clear of a same-snapshot COW rewrite's s<id>
-    val (entries, bloomPath) = writeDataFiles(spark, df, root, snapshotId,
-      spec, entrySchema, meta.fieldIds, distribute = effectiveSort.isEmpty,
-      bloomCols = meta.bloomCols, dirSuffix = s"-a$attempt",
-      sortCols = effectiveSort)
-    dataManifest(spark, root, meta, snapshotId, entrySchema, entries,
-      bloomPath, attempt)
-  }
-
-  /** The manifest half of [[stageDataManifest]]: ONE content=0 manifest
-    * over written data-file `entries` (with their Bloom sidecar, if
-    * any). Returns the manifest ref + row count; `None` when there is
-    * no entry. */
-  private def dataManifest(spark: SparkSession, root: Path, meta: TableMeta,
-                           snapshotId: Long, entrySchema: Schema,
-                           entries: Seq[GenericRecord],
-                           bloomPath: Option[String],
-                           attempt: String = ""): Option[(MRef, Long)] = {
-    if (entries.isEmpty) return None
-    val manifestPath = new Path(new Path(root, "metadata"),
-      f"manifest-$snapshotId%05d$attempt.avro")
-    val manifestLen = writeAvro(spark, manifestPath, entrySchema, entries,
-      Map("schema" -> meta.schemaJs, "format-version" -> "1",
-        "content" -> "data",
-        "partition-spec-id" -> meta.defaultSpecId.toString) ++
-        bloomPath.map("bloom-paths" -> _))
-    val newRows = entries.map(_.get("data_file").asInstanceOf[GenericRecord]
-      .get("record_count").asInstanceOf[Long]).sum
-    Some((MRef(manifestPath.toString, manifestLen, entries.size, snapshotId,
-      newRows, content = 0, specId = meta.defaultSpecId), newRows))
   }
 
   /** The snapshot-summary keys under which a SQL DELETE, UPDATE or
@@ -2080,56 +1862,169 @@ object IcebergLite {
     extends WriteMode
   case object ReplacePartitions extends WriteMode
 
-  /** The ONE file-based commit: the files a native V2 write's committed
-    * tasks wrote ([[GraftBatchWrite]], or a position delta,
-    * [[GraftDeltaOperation]]) as ONE snapshot, each manifest entry built
-    * from the task's statistics. `mode` says what goes first: every
-    * live row; the rows a predicate matches, or those of the partitions
-    * the new files touch, through [[stageDeleteWhere]] (no match: a
-    * plain append that keeps the delete manifests); a dynamic overwrite
-    * of an unpartitioned table replaces everything (the Iceberg rule).
-    * `counts` land in the summary. The operation is Iceberg's:
-    * `append` (nothing removed), `delete` (nothing added) or
-    * `overwrite`. Commits nothing when nothing is added or removed. */
+  /** A native V2 write's commit: the files its committed tasks wrote
+    * ([[GraftBatchWrite]], or a position delta, [[GraftDeltaOperation]]),
+    * with what `mode` replaces ([[replacedBy]]), published as ONE
+    * snapshot. `counts` land in the summary. */
   def commitWrite(spark: SparkSession, tableDir: String,
                   dataFiles: Seq[GraftDataFile],
                   deleteFiles: Seq[GraftDataFile] = Nil,
                   mode: WriteMode = Append,
                   counts: Seq[(String, Long)] = Nil): Unit = {
-    val root = new Path(tableDir)
     val meta = readMeta(spark, tableDir)
-    val snapshotId = meta.nextSnapshotId
-    val replaceAll = mode == ReplaceAll ||
-      (mode == ReplacePartitions && meta.partitionSpec.isEmpty)
-    val rewrite = (mode match {
-      case ReplaceWhere(p) => Some(p)
-      case ReplacePartitions if !replaceAll && dataFiles.nonEmpty =>
-        Some(touchedPartitions(spark, meta, dataFiles))
-      case _ => None
-    }).flatMap(stageDeleteWhere(spark, root, meta, snapshotId, _))
-    val removes = replaceAll || rewrite.isDefined || deleteFiles.nonEmpty
-    if (dataFiles.isEmpty && !removes) return
-    val base =
-      if (replaceAll) Nil
-      else rewrite.fold(meta.manifests)(r =>
-        stageRewriteManifests(spark, root, meta, snapshotId, r._1))
-    val spec = typedSpec(meta.partitionSpec, declaredSchema(meta))
-    val entrySchema = manifestEntrySchema(spec)
-    val (entries, bloomPath) = dataEntries(spark, root, dataFiles,
-      snapshotId, spec, entrySchema, meta.bloomCols, bloomSuffix = "-w")
-    val staged =
-      deleteManifest(spark, root, meta, snapshotId, deleteFiles, 1,
-        Map.empty).toSeq ++
-        dataManifest(spark, root, meta, snapshotId, entrySchema, entries,
-          bloomPath)
-    commit(spark, root, Some(meta), snapshotId, meta.version + 1,
-      base ++ staged.map(_._1), meta.schemaJs, meta.lastColumnId,
-      meta.specs, meta.defaultSpecId,
-      operation =
-        if (!removes) "append"
-        else if (dataFiles.isEmpty) "delete"
-        else "overwrite",
-      sortCols = meta.sortOrderCols, props = meta.props, counts = counts)
+    val (replaced, _) = replacedBy(spark, meta, mode, dataFiles)
+    commitWrite(spark, meta, replaced.copy(data = dataFiles ++ replaced.data,
+      posDeletes = deleteFiles, counts = counts))
+  }
+
+  /** One snapshot's change, as a writer hands it to the publisher
+    * ([[commitWrite]]): the data files it wrote, its position- and
+    * equality-delete files (the latter keyed on `eqCols`), the live
+    * data files it removes, by manifest path, and what its summary
+    * records — row counts, the exactly-once commit key — plus the branch
+    * it lands on and whether it is a compaction. */
+  private case class Change(data: Seq[GraftDataFile] = Nil,
+                            posDeletes: Seq[GraftDataFile] = Nil,
+                            eqDeletes: Seq[GraftDataFile] = Nil,
+                            eqCols: Seq[String] = Nil,
+                            removed: Set[String] = Set.empty,
+                            counts: Seq[(String, Long)] = Nil,
+                            commitKey: Option[String] = None,
+                            branch: String = "main",
+                            compaction: Boolean = false) {
+    def isEmpty: Boolean = data.isEmpty && posDeletes.isEmpty &&
+      eqDeletes.isEmpty && removed.isEmpty
+    /** Iceberg's DataOperations: `replace` for a compaction, `append`
+      * when the change only adds data files, `delete` when it adds no
+      * data file (rewritten survivors count as added), `overwrite`
+      * otherwise. */
+    def operation: String =
+      if (compaction) "replace"
+      else if (data.isEmpty) "delete"
+      else if (removed.isEmpty && posDeletes.isEmpty && eqDeletes.isEmpty)
+        "append"
+      else "overwrite"
+  }
+
+  /** The ONE publisher of a data snapshot: `change` stacked on `base`,
+    * the metadata its caller already read — the manifests
+    * ([[stageManifests]]), the manifest list and the next metadata
+    * version, with no further metadata read and no Spark job. Commits
+    * nothing when nothing changes, unless a commit key must be
+    * recorded. */
+  private def commitWrite(spark: SparkSession, base: TableMeta,
+                          change: Change): Unit =
+    if (!change.isEmpty || change.commitKey.isDefined)
+      commit(spark, base, stageManifests(spark, base, change),
+        change.operation, change.commitKey, change.branch, change.counts)
+
+  /** The manifests of `change` stacked on `base` — the staging half of
+    * the publisher, which the REST client's staged append shares (its
+    * `attempt` token names the data manifest and its Bloom sidecar). An
+    * append carries `base`'s manifests by reference; a removal rewrites
+    * the data manifests with the files it keeps as EXISTING entries
+    * ([[carryExisting]]) and drops the delete manifests (each removal
+    * rewrote the files they name, [[removal]]). Then one manifest per
+    * kind of new file: position deletes, equality deletes, data. */
+  private def stageManifests(spark: SparkSession, base: TableMeta,
+                             change: Change,
+                             attempt: String = ""): Seq[MRef] =
+    (if (change.removed.isEmpty) base.manifests
+     else carryExisting(spark, base, change.removed)) ++
+      newManifest(spark, base, change.posDeletes, 1, "-del", Map.empty) ++
+      newManifest(spark, base, change.eqDeletes, 2, "-eqdel",
+        // key columns ride the manifest metadata by NAME + field id;
+        // readers resolve them by id (evolution-stable), the names are
+        // the files'
+        Map("equality-cols" -> change.eqCols.mkString(","),
+          "equality-ids" -> change.eqCols.map(base.fieldIds).mkString(","))) ++
+      newManifest(spark, base, change.data, 0, attempt, Map.empty)
+
+  /** ONE manifest `manifest-<id><suffix>.avro` over the new `files` of
+    * the snapshot after `base`, of kind `content` (0 data, 1 position
+    * deletes, 2 equality deletes), its entries (status ADDED) built
+    * from the statistics the write tasks collected; a data manifest
+    * carries its files' Bloom sidecar. `None` when there is no file. */
+  private def newManifest(spark: SparkSession, base: TableMeta,
+                          files: Seq[GraftDataFile], content: Int,
+                          suffix: String,
+                          extraMeta: => Map[String, String]): Option[MRef] =
+    if (files.isEmpty) None
+    else {
+      val snapshotId = base.nextSnapshotId
+      val isData = content == 0
+      val spec =
+        if (isData) typedSpec(base.partitionSpec, declaredSchema(base))
+        else Nil
+      val entrySchema = manifestEntrySchema(spec)
+      val (entries, bloomPath) = dataEntries(spark, new Path(base.dir),
+        files, snapshotId, spec, entrySchema,
+        if (isData) base.bloomCols else Nil, suffix)
+      val manifestPath = new Path(new Path(base.dir, "metadata"),
+        f"manifest-$snapshotId%05d$suffix.avro")
+      val manifestLen = writeAvro(spark, manifestPath, entrySchema, entries,
+        Map("schema" -> base.schemaJs, "format-version" -> "1",
+          "content" -> (if (isData) "data" else "deletes")) ++
+          (if (isData)
+            Map("partition-spec-id" -> base.defaultSpecId.toString)
+          else Map.empty) ++
+          bloomPath.map("bloom-paths" -> _) ++ extraMeta)
+      Some(MRef(manifestPath.toString, manifestLen, entries.size,
+        snapshotId, files.map(_.rowCount).sum, content = content,
+        specId = base.defaultSpecId))
+    }
+
+  /** What `mode` removes from `base` as a write's `written` files land,
+    * with the survivor files it rewrites, and the live rows a
+    * predicate matched: every live file; the rows a predicate matches
+    * — the files holding a live match rewrite without them
+    * ([[cowTargets]]; no match: nothing goes, and the delete manifests
+    * stay); or the partitions the new files touch — a live file of the
+    * current spec whose partition tuple is touched drops by path, with
+    * no read, and only files of older specs are filtered row by row. A
+    * dynamic overwrite of an unpartitioned table replaces everything
+    * (the Iceberg rule). */
+  private def replacedBy(spark: SparkSession, base: TableMeta,
+                         mode: WriteMode, written: Seq[GraftDataFile])
+      : (Change, Long) = {
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
+    lazy val live = liveFileEntries(spark, base)
+    def without(p: => org.apache.spark.sql.Column): DataFrame => DataFrame =
+      _.filter(not(coalesce(p, lit(false))))
+    mode match {
+      case Append => (Change(), 0L)
+      case ReplaceAll => (Change(removed = live.map(_.path).toSet), 0L)
+      case ReplacePartitions if base.partitionSpec.isEmpty =>
+        replacedBy(spark, base, ReplaceAll, written)
+      case ReplacePartitions if written.isEmpty => (Change(), 0L)
+      case ReplacePartitions =>
+        val touched = written.map(f => partitionKey(f.partition)).toSet
+        val (current, older) =
+          live.partition(_.gen.specId == base.defaultSpecId)
+        val dropped = current.filter(f => touched(partitionKey(f.partValues)))
+          .map(_.path).toSet
+        // the predicate (and its tuple cap) only serves files read row
+        // by row: older-spec files and those an outstanding delete names
+        lazy val p = touchedPartitions(spark, base, written)
+        val hits =
+          if (older.isEmpty) Set.empty[String]
+          else cowTargets(spark, base, older, p)._2
+        (removal(spark, base, live, dropped, hits)(without(p)), 0L)
+      case ReplaceWhere(p) =>
+        val (n, hits) =
+          if (live.isEmpty) (0L, Set.empty[String])
+          else cowTargets(spark, base, live, p)
+        (removal(spark, base, live, Set.empty, hits)(without(p)), n)
+    }
+  }
+
+  /** A partition tuple in one comparable form: the writer's values and
+    * a manifest's agree on strings and NULLs, and integral values
+    * compare as longs (a widened identity source writes longs where its
+    * older files recorded ints). */
+  private def partitionKey(values: Seq[Any]): Seq[Any] = values.map {
+    case n: java.lang.Integer => n.longValue()
+    case other => other
   }
 
   /** The rows of the partitions `files` landed in: one conjunction per
@@ -2167,56 +2062,51 @@ object IcebergLite {
     * `append → equalityDeleteMOR(keys) → append(new versions)` an
     * UPSERT: the re-appended rows postdate the delete and survive.
     * Write cost ∝ |keys| — no file/position naming, no data scan, no
-    * rewrite; readers merge on read, [[compact]]/[[compactSmallFiles]]
-    * make it physical. Key columns must exist in the table schema; NULL
-    * key values never match. Returns the distinct key count. */
+    * rewrite: the distinct keys, cast to the declared types, land in
+    * ONE delete file (every read task of an older data file opens each
+    * one); readers merge on read, [[compact]]/[[compactSmallFiles]]
+    * make it physical. Key columns must exist in the table schema and
+    * be primitive (Iceberg equality fields are); NULL key values never
+    * match. Returns the distinct key count. */
   def equalityDeleteMOR(spark: SparkSession, tableDir: String,
                         keys: DataFrame,
                         commitKey: Option[String] = None): Long = {
-    val root = new Path(tableDir)
+    import org.apache.spark.sql.functions.col
     val meta = readMeta(spark, tableDir)
     // exactly-once: a commit key already in the snapshot log means this
     // delete landed before a checkpoint replay — no-op (the upsertSink
     // contract)
     if (commitKey.exists(k => hasCommitKey(meta, k))) return 0L
-    if (liveFileEntries(spark, meta).isEmpty) {
-      // empty table: nothing to delete — but a keyed call (upsertSink's
-      // batch replay protection) must still RECORD its key, else a
-      // replayed batch would re-run this delete against the rows its
-      // own append landed and silently lose them
-      commitKey.foreach { _ =>
-        commit(spark, root, Some(meta), meta.nextSnapshotId,
-          meta.version + 1, meta.manifests, meta.schemaJs,
-          meta.lastColumnId, meta.specs, meta.defaultSpecId,
-          operation = "delete", commitKey = commitKey,
-          sortCols = meta.sortOrderCols, props = meta.props)
-      }
-      return 0L
-    }
-    // stage + commit against the ALREADY-READ metadata (readMeta is
-    // O(snapshots) of avro IO — the streaming upsert path pays it once
-    // per batch, not twice)
-    val snapshotId = meta.nextSnapshotId
-    stageEqualityDelete(spark, root, meta, snapshotId, keys) match {
-      case None =>
-        // empty key frame on a live table: a keyed call still RECORDS
-        // its commit key (replay protection, as on the empty table)
-        commitKey.foreach { _ =>
-          commit(spark, root, Some(meta), snapshotId, meta.version + 1,
-            meta.manifests, meta.schemaJs, meta.lastColumnId, meta.specs,
-            meta.defaultSpecId, operation = "delete",
-            commitKey = commitKey, sortCols = meta.sortOrderCols,
-            props = meta.props)
+    val keyCols = keys.schema.fieldNames.toSeq
+    // an empty table has nothing to delete — but a keyed call
+    // (upsertSink's batch replay protection) still RECORDS its key, as
+    // one with an empty key frame does, else a replayed batch would
+    // re-run this delete against the rows its own append landed and
+    // silently lose them
+    val deletes =
+      if (liveFileEntries(spark, meta).isEmpty) Nil
+      else {
+        val declared = declaredSchema(meta)
+        require(keyCols.nonEmpty,
+          "equality delete needs at least one key column")
+        keyCols.foreach { c =>
+          require(declared.fieldNames.contains(c),
+            s"equality column $c not in the table schema")
+          require(!declared(c).dataType.isInstanceOf[StructType] &&
+            !declared(c).dataType.isInstanceOf[ArrayType] &&
+            !declared(c).dataType.isInstanceOf[MapType], s"equality column " +
+            s"$c is ${declared(c).dataType.simpleString}: keys must be primitive")
         }
-        0L
-      case Some((mref, nKeys)) =>
-        commit(spark, root, Some(meta), snapshotId, meta.version + 1,
-          meta.manifests :+ mref, meta.schemaJs, meta.lastColumnId,
-          meta.specs, meta.defaultSpecId, operation = "delete",
-          commitKey = commitKey, sortCols = meta.sortOrderCols,
-          props = meta.props)
-        nKeys
-    }
+        // cast to the DECLARED types so key matching is type-exact even
+        // if the caller hands narrower literals
+        writeFiles(spark, keys.select(keyCols.map(c =>
+            col(c).cast(declared(c).dataType).as(c)): _*).distinct().coalesce(1),
+          new Path(tableDir, s"data/eqdel-s${meta.nextSnapshotId}"), Nil,
+          Map.empty, Nil)
+      }
+    commitWrite(spark, meta,
+      Change(eqDeletes = deletes, eqCols = keyCols, commitKey = commitKey))
+    deletes.map(_.rowCount).sum
   }
 
   // ---- native V2 scan/write planning (r18) --------------------------------
@@ -2322,17 +2212,14 @@ object IcebergLite {
     * compaction pass after many incremental appends. Content-preserving
     * (pinned by test); prior snapshots still time-travel. */
   def compact(spark: SparkSession, tableDir: String): Unit = {
-    val root = new Path(tableDir)
     val meta = readMeta(spark, tableDir)
     val files = liveFileEntries(spark, meta)
     require(files.nonEmpty, "table has no data files")
-    val snapshotId = meta.nextSnapshotId
     // merge-on-read deletes apply HERE — compaction is the pass that
     // makes them physical (the new list carries no delete manifests)
-    val all = readFiles(spark, meta, files).drop("__file", "__pos")
-    commitRewrite(spark, root, meta, snapshotId,
-      rewriteGroups(spark, root, meta, snapshotId, all, _ => false),
-      operation = "replace")
+    commitWrite(spark, meta, Change(
+      data = rewriteFiles(spark, meta, files)(identity),
+      removed = files.map(_.path).toSet, compaction = true))
   }
 
   /** Size-TARGETED compaction — the production bin-pack shape: only
@@ -2345,11 +2232,9 @@ object IcebergLite {
     * files rewritten. */
   def compactSmallFiles(spark: SparkSession, tableDir: String,
                         smallerThanBytes: Long): Long = {
-    val root = new Path(tableDir)
     val meta = readMeta(spark, tableDir)
     val files = liveFileEntries(spark, meta)
     require(files.nonEmpty, "table has no data files")
-    val snapshotId = meta.nextSnapshotId
 
     // small files from the MANIFEST metadata (no file-system stats) +
     // the files an outstanding delete names (so the deletes go physical)
@@ -2364,19 +2249,18 @@ object IcebergLite {
     // ceil(small bytes / smallerThanBytes) tasks, so each writes about one
     // file of the size below which a file counts as small (the small
     // files, each its own read split, group evenly by count)
-    val rows = readFiles(spark, meta, files.filter(f => small.contains(f.path)))
-      .drop("__file", "__pos")
-    val packed =
-      if (meta.partitionSpec.nonEmpty) rows
+    val packed: DataFrame => DataFrame =
+      if (meta.partitionSpec.nonEmpty) identity
       else {
         val bytes = small.iterator.map(sizes.getOrElse(_, 0L)).sum
         val target = math.max(smallerThanBytes, 1L)
         val bins = bytes / target + (if (bytes % target == 0) 0 else 1)
-        rows.coalesce(math.min(math.max(bins, 1L), small.size.toLong).toInt)
+        _.coalesce(math.min(math.max(bins, 1L), small.size.toLong).toInt)
       }
-    commitRewrite(spark, root, meta, snapshotId,
-      rewriteGroups(spark, root, meta, snapshotId, packed,
-        p => !small.contains(p), distribute = true), operation = "replace")
+    commitWrite(spark, meta, Change(
+      data = rewriteFiles(spark, meta, files.filter(f => small(f.path)),
+        distribute = true)(packed),
+      removed = small, compaction = true))
     small.size.toLong
   }
 
@@ -2468,64 +2352,6 @@ object IcebergLite {
     }
     orphans.foreach(o => f.delete(new Path(o), false))
     orphans.toSeq
-  }
-
-  /** One manifest-to-be of a rewrite snapshot: entries sharing a
-    * write-time schema AND partition spec (after spec evolution, carried
-    * entries keep their generation's partition record shape — its avro
-    * entry schema rides along so old-spec records never deep-copy into
-    * a mismatched shape). */
-  private case class RewriteGroup(schemaJs: String, specId: Int,
-                                  entrySchema: Schema,
-                                  entries: Seq[GenericRecord],
-                                  bloomPaths: Seq[String] = Nil)
-
-  /** Commit a rewrite snapshot: one manifest PER (SOURCE SCHEMA, SPEC)
-    * holding its entries (existing + added), a manifest list referencing
-    * them, and the next metadata version. The table's schema json and
-    * last-column-id carry over VERBATIM — a rewrite never renumbers
-    * evolved field ids. */
-  private def commitRewrite(spark: SparkSession, root: Path, meta: TableMeta,
-                            snapshotId: Long,
-                            groups: Seq[RewriteGroup],
-                            operation: String): Unit =
-    commit(spark, root, Some(meta), snapshotId, meta.version + 1,
-      stageRewriteManifests(spark, root, meta, snapshotId, groups),
-      meta.schemaJs, meta.lastColumnId,
-      meta.specs, meta.defaultSpecId, operation,
-      sortCols = meta.sortOrderCols, props = meta.props)
-
-  /** Write one manifest PER rewrite group (existing + added entries)
-    * for `snapshotId` and return the refs — NO commit (the staging
-    * half of [[commitRewrite]], reused by atomic delete+append
-    * commits). */
-  private def stageRewriteManifests(spark: SparkSession, root: Path,
-                                    meta: TableMeta, snapshotId: Long,
-                                    groups: Seq[RewriteGroup]): Seq[MRef] = {
-    val metaDir = new Path(root, "metadata")
-    groups.zipWithIndex.map { case (g, k) =>
-        val manifestPath =
-          new Path(metaDir, f"manifest-$snapshotId%05d-$k.avro")
-        val manifestLen = writeAvro(spark, manifestPath, g.entrySchema,
-          g.entries,
-          Map("schema" -> g.schemaJs, "format-version" -> "1",
-            "content" -> "data",
-            "partition-spec-id" -> g.specId.toString) ++
-            (if (g.bloomPaths.nonEmpty)
-              Map("bloom-paths" -> g.bloomPaths.mkString(","))
-            else Map.empty))
-        // the spec's added_* fields count ADDED entries; carried
-        // EXISTING entries ride the existing_* fields — so the summary
-        // metrics stay honest for rewrite snapshots
-        def rows(es: Seq[GenericRecord]): Long =
-          es.map(_.get("data_file").asInstanceOf[GenericRecord]
-            .get("record_count").asInstanceOf[Long]).sum
-        val (added, existing) = g.entries.partition(
-          _.get("status").asInstanceOf[Int] == 1)
-        MRef(manifestPath.toString, manifestLen, added.size, snapshotId,
-          rows(added), content = 0, specId = g.specId,
-          existingFiles = existing.size, existingRows = rows(existing))
-    }
   }
 
   /** Physically purge history: keep the `keepLast` most recent
@@ -2887,12 +2713,12 @@ object IcebergLite {
     (files.size, total)
   }
 
-  /** Live row count of the current snapshot from manifest-list
-    * accounting alone (no data read) — the stats hint the SQL scan
-    * node reports to the optimizer. */
+  /** Live row count of the current snapshot ([[liveRowCount]]): the
+    * data rows minus the position-deleted rows, from manifest-list
+    * accounting with no data read — unless an equality delete is
+    * outstanding, which costs one count over the table. */
   def tableRowCount(spark: SparkSession, tableDir: String): Long =
-    readMeta(spark, tableDir).manifests.filter(_.content == 0)
-      .map(_.totalRows).sum
+    liveRowCount(spark, readMeta(spark, tableDir))
 
   /** One request of the metadata-aggregate pushdown: a bare row count,
     * or the MIN/MAX of a named column. */

@@ -202,6 +202,88 @@ class IcebergSqlWriteSpec extends SparkSuite {
       .head().getLong(0) === 1000L)
   }
 
+  /** Run `body` as a SQL dynamic partition overwrite with AQE off;
+    * the jobs it submitted. */
+  private def dynamicOverwriteJobs(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && "sqlw-dynamic" ==
+            e.properties.getProperty("spark.jobGroup.id"))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup("sqlw-dynamic", "dynamic overwrite")
+      try body finally sc.clearJobGroup()
+      Thread.sleep(500) // drain the listener bus
+      jobs.get()
+    } finally {
+      sc.removeSparkListener(l)
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+    }
+  }
+
+  test("a dynamic overwrite drops touched partitions' files by path: one job, the write") {
+    val dir = tmp()
+    IcebergLite.createTable(spark, (1L to 20L)
+      .map(i => (i, if (i % 2 == 0) "a" else "b", i * 10L))
+      .toDF("id", "lang", "n"), dir, partitionBy = Seq("lang"))
+    Catalog.registerIcebergTable(spark, "sqlw_dyn_ref", dir)
+    def dataFiles() = IcebergLite.metaTable(spark, dir, "files")
+      .filter(col("content") === 0)
+      .select(col("file_path"), col("partition").getItem("lang"))
+      .as[(String, String)].collect().toSet
+    val before = dataFiles()
+    (101L to 104L).map(i => (i, "a", i)).toDF("id", "lang", "n")
+      .createOrReplaceTempView("sqlw_dyn_src")
+    val jobs = dynamicOverwriteJobs(
+      spark.sql("INSERT OVERWRITE sqlw_dyn_ref SELECT * FROM sqlw_dyn_src"))
+    // no match count and no survivor rewrite: the a file drops unread
+    assert(jobs === 1)
+    val after = dataFiles()
+    assert(before.filter(_._2 == "b").subsetOf(after))
+    assert((before.filter(_._2 == "a") & after).isEmpty)
+    assert(IcebergLite.readTable(spark, dir).select("id").as[Long].collect()
+      .sorted.toSeq === (1L to 19L by 2L) ++ (101L to 104L))
+  }
+
+  test("a dynamic overwrite filters older-spec files row by row; outstanding deletes hold") {
+    import graft.sources.IcebergTransforms
+    import org.apache.spark.sql.types.LongType
+    val dir = tmp()
+    def lang(i: Long) = if (i % 2 == 0) "a" else "b"
+    IcebergLite.createTable(spark, (1L to 20L).map(i => (i, lang(i), i))
+      .toDF("id", "lang", "n"), dir, partitionBy = Seq("lang"))
+    // an outstanding position delete in each partition
+    assert(IcebergLite.deleteWhereMOR(spark, dir, col("id").isin(3L, 4L)) === 2L)
+    val spec = Seq("lang", "bucket[2]:id")
+    IcebergLite.evolveSpec(spark, dir, spec)
+    IcebergLite.appendSnapshot(spark, (21L to 40L).map(i => (i, lang(i), i))
+      .toDF("id", "lang", "n"), dir, partitionBy = spec)
+    Catalog.registerIcebergTable(spark, "sqlw_dyn_evo", dir)
+    def bucket(i: Long) = IcebergTransforms.applyValue("bucket[2]", LongType, i)
+    val source = Seq(100L, 102L).map(i => (i, "a", -i))
+    val touched = source.map(r => (r._2, bucket(r._1))).toSet
+    source.toDF("id", "lang", "n").createOrReplaceTempView("sqlw_dyn_evo_src")
+    val jobs = dynamicOverwriteJobs(
+      spark.sql("INSERT OVERWRITE sqlw_dyn_evo SELECT * FROM sqlw_dyn_evo_src"))
+    // the write, the match count over the older-spec files, the rewrite
+    assert(jobs === 3)
+    val want = (1L to 40L).filterNot(Set(3L, 4L))
+      .map(i => (i, lang(i), i))
+      .filterNot(r => touched((r._2, bucket(r._1)))) ++ source
+    assert(IcebergLite.readTable(spark, dir).select("id", "lang", "n")
+      .as[(Long, String, Long)].collect().sorted.toSeq === want.sorted)
+    assert(IcebergLite.metaTable(spark, dir, "files")
+      .filter(col("content") =!= 0).count() === 0L)
+  }
+
   test("UPDATE writes position deletes and new rows, no data rewrite") {
     val (name, dir) = freshTable()
     val dataFilesBefore = IcebergLite.metaTable(spark, dir, "files")

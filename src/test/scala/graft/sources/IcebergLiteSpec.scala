@@ -1918,4 +1918,79 @@ class IcebergLiteSpec extends SparkSuite {
       batches.flatMap(_.select("id", "part").as[(Long, String)].collect()).toSet)
     batches.foreach(_.unpersist())
   }
+
+  test("tableRowCount counts live rows: position deletes subtract") {
+    val dir = tmp()
+    IcebergLite.createTable(spark,
+      (1L to 10L).map(i => (i, if (i % 2 == 0) "en" else "de", i * 10L))
+        .toDF("id", "lang", "n"), dir, partitionBy = Seq("lang"))
+    assert(IcebergLite.deleteWhereMOR(spark, dir, col("id") <= 3L) === 3L)
+    assert(IcebergLite.readTable(spark, dir).count() === 7L)
+    assert(IcebergLite.tableRowCount(spark, dir) === 7L)
+    // an equality delete's matches are counted by a read
+    IcebergLite.equalityDeleteMOR(spark, dir, Seq(4L, 5L, 99L).toDF("id"))
+    assert(IcebergLite.tableRowCount(spark, dir) === 5L)
+  }
+
+  test("an equality delete of 50 keys writes one delete file, with AQE on and off") {
+    for (aqe <- Seq("true", "false")) {
+      val dir = tmp()
+      IcebergLite.createTable(spark, (1L to 200L).map(i => (i, "en", i))
+        .toDF("id", "lang", "n"), dir)
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      try {
+        assert(IcebergLite.equalityDeleteMOR(spark, dir,
+          (1L to 50L).flatMap(i => Seq(i, i)).toDF("id")) === 50L)
+      } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+      val deletes = IcebergLite.metaTable(spark, dir, "files")
+        .filter(col("content") === 2).select("record_count").as[Long]
+        .collect().toSeq
+      assert(deletes === Seq(50L), s"AQE $aqe")
+      assert(IcebergLite.readTable(spark, dir).count() === 150L)
+    }
+  }
+
+  test("a keyed equality delete on a table with no data file only records its key") {
+    val dir = tmp()
+    IcebergLite.createEmptyTable(spark,
+      batch1.toDF("id", "lang", "n").schema, dir)
+    // nothing to delete, so the key columns are never resolved
+    assert(IcebergLite.equalityDeleteMOR(spark, dir, Seq("x").toDF("nope"),
+      Some("k1")) === 0L)
+    assert(IcebergLite.snapshotIds(spark, dir) === Seq(1L, 2L))
+    assert(IcebergLite.equalityDeleteMOR(spark, dir, Seq("x").toDF("nope"),
+      Some("k1")) === 0L)
+    assert(IcebergLite.snapshotIds(spark, dir) === Seq(1L, 2L))
+  }
+
+  test("every DataFrame write API records Iceberg's snapshot operation") {
+    val dir = tmp()
+    def op(): String = IcebergLite.metaTable(spark, dir, "snapshots")
+      .orderBy(col("snapshot_id").desc).head().getAs[String]("operation")
+    IcebergLite.createTable(spark, (batch1 ++ batch2).toDF("id", "lang", "n"),
+      dir, partitionBy = Seq("lang"))
+    assert(op() === "append")
+    IcebergLite.appendSnapshot(spark, Seq((6L, "fr", 60L)).toDF("id", "lang", "n"),
+      dir, partitionBy = Seq("lang"))
+    assert(op() === "append")
+    // the en file keeps ids 1 and 5: a survivor rewrite adds a data file
+    assert(IcebergLite.deleteWhere(spark, dir, col("id") === 3L) === 1L)
+    assert(op() === "overwrite")
+    // the whole de file goes, nothing is rewritten
+    assert(IcebergLite.deleteWhere(spark, dir, col("lang") === "de") === 1L)
+    assert(op() === "delete")
+    assert(IcebergLite.updateWhere(spark, dir, col("id") === 1L,
+      Seq("n" -> lit(11L))) === 1L)
+    assert(op() === "overwrite")
+    assert(IcebergLite.deleteWhereMOR(spark, dir, col("id") === 4L) === 1L)
+    assert(op() === "delete")
+    assert(IcebergLite.equalityDeleteMOR(spark, dir, Seq(5L).toDF("id")) === 1L)
+    assert(op() === "delete")
+    assert(IcebergLite.compactSmallFiles(spark, dir, 1L << 30) > 0L)
+    assert(op() === "replace")
+    IcebergLite.compact(spark, dir)
+    assert(op() === "replace")
+    assert(IcebergLite.readTable(spark, dir).select("id", "n").as[(Long, Long)]
+      .collect().toSet === Set((1L, 11L), (6L, 60L)))
+  }
 }

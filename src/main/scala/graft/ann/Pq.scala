@@ -305,20 +305,6 @@ object Pq {
         iters, excludeSelf, codebooks0),
       corpus, probes, idCol, vecCol, k)
 
-  /** [[ivfPqTopKLearned]] shortlist + [[rerankExact]]. */
-  def ivfPqTopKLearnedRerank(corpus: DataFrame, probes: DataFrame,
-                             idCol: String, vecCol: String, k: Int, m: Int,
-                             kSub: Int, dim: Int, nLists: Int, nProbe: Int,
-                             shortlist: Int, iters: Int = 3,
-                             excludeSelf: Boolean = true,
-                             codebooks0: Option[DataFrame] = None,
-                             routing0: Option[(DataFrame, DataFrame)] = None)
-      : DataFrame =
-    rerankExact(
-      ivfPqTopKLearned(corpus, probes, idCol, vecCol, shortlist, m, kSub,
-        dim, nLists, nProbe, iters, excludeSelf, codebooks0, routing0),
-      corpus, probes, idCol, vecCol, k)
-
   /** [[pqTopKPortable]] shortlist + INTEGER-EXACT rerank on the
     * quantized substrate — the portable twin of [[pqTopKLearnedRerank]]
     * (which reranks by float cosine): ADC ranks a `shortlist`-deep

@@ -5,17 +5,18 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, StagedTable, StagingTableCatalog, SupportsNamespaces, SupportsRead, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.{Expressions, Literal, Transform}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, V1Scan}
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsOverwrite, V1Write, Write, WriteBuilder}
+import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
+import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder, SupportsPushDownAggregates}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsOverwrite, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
+import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -505,7 +506,11 @@ object GraftTableCatalog {
 }
 
 /** One IcebergLite table seen through the V2 `Table` interface;
-  * `snapshotId` pins a time-travel read (write capabilities drop). */
+  * `snapshotId` pins a time-travel read (write capabilities drop). It
+  * holds ONE table state, which every step of a statement takes — the
+  * scan, the write's layout, staging names and writers, the commit
+  * ([[IcebergLite.commitWrite]]) — so a statement never mixes two
+  * table versions and reads the metadata json at most once. */
 class GraftIcebergTable(ident: Identifier, val tableDir: String,
                         val snapshotId: Option[Long])
     extends Table with SupportsRead with SupportsWrite
@@ -514,6 +519,21 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
 
   private def spark = SparkSession.active
+
+  private var held: Option[IcebergLite.TableMeta] = None
+
+  /** The held state, read on first use. A builder call (`refresh`)
+    * re-reads it when the version hint has moved, so a registered
+    * name's long-lived relation and a reused DataFrame plan on the
+    * current table too; a pinned table never refreshes. */
+  private def meta(refresh: Boolean = false): IcebergLite.TableMeta =
+    synchronized {
+      if (refresh && snapshotId.isEmpty)
+        held = held.map(IcebergLite.current(spark, _))
+      held = held.orElse(
+        Some(IcebergLite.readMeta(spark, tableDir, snapshotId)))
+      held.get
+    }
 
   override def name(): String = ident.toString
   /** `__file` and `__pos`: each row's data file and position in it, the
@@ -527,18 +547,16 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
           f.dataType
         override def isNullable: Boolean = false
       }).toArray
-  override def schema(): StructType =
-    IcebergLite.tableSchema(spark, tableDir)
+  override def schema(): StructType = IcebergLite.declaredSchema(meta())
   override def partitioning(): Array[Transform] =
-    IcebergLite.tablePartitionSpec(spark, tableDir)
-      .map(GraftTableCatalog.toTransform).toArray
+    meta().specItems.map(GraftTableCatalog.toTransform).toArray
   override def properties(): util.Map[String, String] = {
     val m = new util.HashMap[String, String]()
     m.put(TableCatalog.PROP_PROVIDER, "iceberg")
-    val sort = IcebergLite.tableSortOrder(spark, tableDir)
-    if (sort.nonEmpty) m.put("sort-order", sort.mkString(","))
-    val bloom = IcebergLite.tableBloomCols(spark, tableDir)
-    if (bloom.nonEmpty) m.put("bloom-columns", bloom.mkString(","))
+    Seq("sort-order" -> meta().sortOrderCols,
+      "bloom-columns" -> meta().bloomCols).foreach { case (k, cols) =>
+      if (cols.nonEmpty) m.put(k, cols.mkString(","))
+    }
     m
   }
   override def capabilities(): util.Set[TableCapability] =
@@ -551,30 +569,27 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder = {
-    // ONE metadata read per scan build: the full schema is the default
-    // read schema and what aggregate types and pred columns are checked
-    // against
-    val fullSchema = schema()
-    new GraftScanBuilder(fullSchema)
-        with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
+    // the scan's one table state: the full schema is the default read
+    // schema and what aggregate types and pred columns are checked
+    // against; the aggregate answer and the file set come from it too
+    val state = meta(refresh = true)
+    val fullSchema = IcebergLite.declaredSchema(state)
+    new GraftScanBuilder(fullSchema) with SupportsPushDownAggregates {
       // the pushed metadata-aggregate answer: (schema, one row of
       // values), cached per Aggregation instance so
       // supportCompletePushDown / pushAggregation / build all see ONE
-      // answer — recomputing per callback could mix snapshots under a
-      // concurrent commit
+      // answer and the manifests are read once
       private var aggAnswer: Option[(StructType, Seq[Any])] = None
-      private var aggAnsweredFor
-          : org.apache.spark.sql.connector.expressions.aggregate
-            .Aggregation = _
+      private var aggAnsweredFor: Aggregation = _
 
       /** METADATA-ONLY aggregate pushdown: a bare `COUNT(*)` /
         * `MIN(col)` / `MAX(col)` over int/long/date/timestamp (no
         * group-by, no filters, no outstanding MOR deletes, current
         * snapshot) is answered from manifest accounting / recorded
         * file bounds — on a 100 TB table a KB metadata read instead of
-        * a full scan. The WHOLE aggregation resolves from ONE metadata
-        * snapshot (IcebergLite.exactAggsFromMetadata), so a concurrent
-        * commit can never tear `count(*), max(id)` across two states.
+        * a full scan. The WHOLE aggregation resolves from the scan's
+        * table state (IcebergLite.exactAggsFromMetadata), so a commit
+        * can never tear `count(*), max(id)` across two states.
         * Everything else refuses, conservatively: COUNT(col) needs
         * null counts, string bounds are truncated prefixes, floats
         * have NaN/-0.0 aggregate-order hazards, filtered counts need
@@ -583,9 +598,8 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
         * (pushFilters returns all as residuals), so Spark only offers
         * the aggregate when NO filter sits between it and the scan.
         */
-      private def metadataAggAnswer(
-          agg: org.apache.spark.sql.connector.expressions.aggregate
-            .Aggregation): Option[(StructType, Seq[Any])] = {
+      private def metadataAggAnswer(agg: Aggregation)
+          : Option[(StructType, Seq[Any])] = {
         import org.apache.spark.sql.connector.expressions.NamedReference
         import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
         import org.apache.spark.sql.types.{LongType, StructField}
@@ -616,13 +630,11 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
             reqs += IcebergLite.MetaMinMax(name, wantMax)
           case _ => return None
         }
-        IcebergLite.exactAggsFromMetadata(spark, tableDir, reqs.result())
+        IcebergLite.exactAggsFromMetadata(spark, state, reqs.result())
           .map(values => (StructType(fields.result()), values))
       }
 
-      private def answerAgg(
-          agg: org.apache.spark.sql.connector.expressions.aggregate
-            .Aggregation): Boolean = {
+      private def answerAgg(agg: Aggregation): Boolean = {
         if (!(agg eq aggAnsweredFor)) {
           aggAnswer = metadataAggAnswer(agg)
           aggAnsweredFor = agg
@@ -630,24 +642,20 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
         aggAnswer.isDefined
       }
 
-      override def supportCompletePushDown(
-          agg: org.apache.spark.sql.connector.expressions.aggregate
-            .Aggregation): Boolean = answerAgg(agg)
+      override def supportCompletePushDown(agg: Aggregation): Boolean =
+        answerAgg(agg)
 
-      override def pushAggregation(
-          agg: org.apache.spark.sql.connector.expressions.aggregate
-            .Aggregation): Boolean = answerAgg(agg)
+      override def pushAggregation(agg: Aggregation): Boolean =
+        answerAgg(agg)
 
       override def build(): Scan = aggAnswer match {
         case Some((aggSchema, values)) =>
           // the pushed metadata-aggregate answer: ONE local row, zero
           // file reads, zero tasks (LocalScan plans as LocalTableScan)
-          new org.apache.spark.sql.connector.read.LocalScan {
+          new LocalScan {
             override def readSchema(): StructType = aggSchema
-            override def rows(): Array[
-                org.apache.spark.sql.catalyst.InternalRow] =
-              Array(org.apache.spark.sql.catalyst.InternalRow
-                .fromSeq(values))
+            override def rows(): Array[InternalRow] =
+              Array(InternalRow.fromSeq(values))
           }
         case None =>
           // nested-field filters (`s.x = 3` pushes as column "s.x") have
@@ -660,7 +668,7 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
           // (DPP) and KeyGroupedPartitioning for storage-partitioned
           // joins, and reads through ParquetFileFormat directly
           new GraftNativeBatchScan(spark, name(),
-            IcebergLite.nativeScanInfo(spark, tableDir, preds, snapshotId),
+            IcebergLite.nativeScanInfo(spark, state, preds),
             required, pushed.toSeq)
       }
     }
@@ -673,23 +681,23 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
   // DELETE with no WHERE never gets here: Spark truncates a
   // TruncatableTable instead.
 
-  override def newRowLevelOperationBuilder(
-      info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
-      : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
+  override def newRowLevelOperationBuilder(info: RowLevelOperationInfo)
+      : RowLevelOperationBuilder = {
     require(snapshotId.isEmpty,
       s"${info.command()} on ${name()}: time-travel reads are immutable")
-    () => new GraftDeltaOperation(name(), tableDir, info.command())
+    val state = meta(refresh = true)
+    () => new GraftDeltaOperation(name(), state, info.command())
   }
 
   // ---- write: INSERT, INSERT OVERWRITE and writeTo, natively ------------
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new GraftWriteBuilder(spark, name(), tableDir, info)
+    new GraftWriteBuilder(spark, name(), meta(refresh = true), info)
 
   // ---- TRUNCATE TABLE and a DELETE with no WHERE ---------------------------
 
   override def truncateTable(): Boolean = {
-    IcebergLite.truncateTable(spark, tableDir)
+    IcebergLite.truncateTable(spark, meta(refresh = true))
     true
   }
 }
@@ -710,28 +718,24 @@ object GraftIcebergTable {
 
 /** A read-only V2 facade over ONE [[IcebergLite.metaTable]] kind —
   * `SELECT * FROM <cat>.<table>__snapshots` etc.; rows resolve at scan
-  * time, so the view is current as of each query. */
+  * time, so the view is current as of each query: the local rows of
+  * one metadata read, a `LocalTableScan` with no job. */
 class GraftMetaTable(ident: Identifier, tableDir: String, kind: String)
     extends Table with SupportsRead {
   private def spark = SparkSession.active
   override def name(): String = ident.toString
   override def schema(): StructType =
-    IcebergLite.metaTable(spark, tableDir, kind).schema
+    IcebergLite.metaRows(spark, tableDir, kind)._1
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = new ScanBuilder {
-    override def build(): Scan = new V1Scan {
-      private val schema0 = schema()
+      : ScanBuilder = () => {
+    val (schema0, rows0) = IcebergLite.metaRows(spark, tableDir, kind)
+    val toRow = CatalystTypeConverters.createToCatalystConverter(schema0)
+    new LocalScan {
       override def readSchema(): StructType = schema0
-      override def toV1TableScan[T <: BaseRelation with TableScan](
-          context: SQLContext): T =
-        new BaseRelation with TableScan {
-          override def sqlContext: SQLContext = context
-          override def schema: StructType = schema0
-          override def buildScan(): RDD[Row] =
-            IcebergLite.metaTable(context.sparkSession, tableDir, kind).rdd
-        }.asInstanceOf[T]
+      override def rows(): Array[InternalRow] =
+        rows0.map(toRow(_).asInstanceOf[InternalRow]).toArray
     }
   }
 }

@@ -58,8 +58,11 @@ class GraftHadoopConf(@transient var value: Configuration)
   * session-configured `ParquetFileFormat` factory in the partitionBy
   * directory layout, each file collecting its manifest statistics
   * (rows, size, bounds, Bloom bits) in the task, so the commit builds
-  * its entries from the task messages and reads nothing back. */
-class GraftDeltaOperation(tableName: String, tableDir: String, cmd: Command)
+  * its entries from the task messages and reads nothing back. The scan,
+  * the write and the commit all take `meta`, the table state the
+  * statement's table held ([[GraftIcebergTable]]). */
+class GraftDeltaOperation(tableName: String, meta: IcebergLite.TableMeta,
+                          cmd: Command)
     extends SupportsDelta {
 
   private def spark = SparkSession.active
@@ -72,25 +75,18 @@ class GraftDeltaOperation(tableName: String, tableDir: String, cmd: Command)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
-    new GraftScanBuilder(IcebergLite.tableSchema(spark, tableDir)) {
+    new GraftScanBuilder(IcebergLite.declaredSchema(meta)) {
       override def build(): org.apache.spark.sql.connector.read.Scan =
         new GraftNativeBatchScan(spark, tableName,
-          IcebergLite.nativeScanInfo(spark, tableDir,
+          IcebergLite.nativeScanInfo(spark, meta,
             pushed.toSeq.flatMap(GraftTableCatalog.filterPreds)),
           required, pushed.toSeq)
     }
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
-      override def build(): DeltaWrite = {
-        // a DELETE's delta carries row ids only: no row to cluster,
-        // order or write
-        val (specItems, sortCols) =
-          if (info.schema().isEmpty) (Nil, Nil)
-          else IcebergLite.writeLayout(spark, tableDir)
-        new GraftDeltaWrite(spark, tableName, tableDir, info.schema(),
-          specItems, sortCols)
-      }
+      override def build(): DeltaWrite =
+        new GraftDeltaWrite(spark, tableName, meta, info.schema())
     }
 }
 
@@ -109,8 +105,7 @@ class GraftDeltaOperation(tableName: String, tableDir: String, cmd: Command)
   * empty `rowSchema`, no spec or sort columns): each data file's
   * deletes land in one task, ordered by row id. */
 class GraftDeltaWrite(spark: SparkSession, tableName: String,
-                      tableDir: String, rowSchema: StructType,
-                      specItems: Seq[String], sortCols: Seq[String])
+                      meta: IcebergLite.TableMeta, rowSchema: StructType)
     extends DeltaWrite with RequiresDistributionAndOrdering {
 
   override def description(): String = s"GraftDelta $tableName"
@@ -119,8 +114,12 @@ class GraftDeltaWrite(spark: SparkSession, tableName: String,
     Expressions.column(GraftNativeBatchScan.FileCol)
   private val rowIdCols: Seq[Expression] =
     Seq(fileCol, Expressions.column(GraftNativeBatchScan.PosCol))
-  private val transforms: Seq[Expression] =
-    specItems.map(GraftTableCatalog.toTransform)
+  // a DELETE's delta carries row ids only: no row to cluster, order or
+  // write
+  private val (transforms, sortCols): (Seq[Expression], Seq[String]) =
+    if (rowSchema.isEmpty) (Nil, Nil)
+    else (meta.specItems.map(GraftTableCatalog.toTransform),
+      meta.sortOrderCols)
 
   override def requiredDistribution(): Distribution =
     Distributions.clustered((fileCol +: (
@@ -136,15 +135,8 @@ class GraftDeltaWrite(spark: SparkSession, tableName: String,
     (rowIdCols ++ transforms ++ sortCols.map(Expressions.column))
       .map(e => Expressions.sort(e, SortDirection.ASCENDING)).toArray
 
-  override def toBatch(): DeltaBatchWrite = {
-    // staging dirs keyed to the snapshot this statement will commit
-    // (single-writer discipline, as everywhere in IcebergLite); "-w"
-    // keeps them clear of same-snapshot API writes
-    val snapshotId = IcebergLite.nextSnapshotIdOf(spark, tableDir)
-    new GraftDeltaBatchWrite(spark, tableDir,
-      s"$tableDir/data/s$snapshotId-w", s"$tableDir/data/deletes-s$snapshotId-w",
-      rowSchema)
-  }
+  override def toBatch(): DeltaBatchWrite =
+    new GraftDeltaBatchWrite(spark, meta, rowSchema)
 }
 
 /** NATIVE V2 batch write of a graft catalog table: INSERT INTO, INSERT
@@ -154,9 +146,11 @@ class GraftDeltaWrite(spark: SparkSession, tableName: String,
   * every session and for both name kinds (Iceberg's Spark writes take
   * the same route). Spark's analyzer has aligned the rows to the table
   * under its store-assignment rule. The builder records what the write
-  * replaces; [[IcebergLite.commitWrite]] applies it. */
+  * replaces; [[IcebergLite.commitWrite]] applies it on `meta`, the
+  * table state the layout, the staging names and the writers came
+  * from. */
 class GraftWriteBuilder(spark: SparkSession, tableName: String,
-                        tableDir: String, info: LogicalWriteInfo)
+                        meta: IcebergLite.TableMeta, info: LogicalWriteInfo)
     extends WriteBuilder with SupportsOverwrite with SupportsTruncate
     with SupportsDynamicOverwrite {
 
@@ -184,14 +178,12 @@ class GraftWriteBuilder(spark: SparkSession, tableName: String,
   // a relation resolved before the schema evolved (a registered name's
   // view) would write the old columns
   override def build(): Write = {
-    val current = IcebergLite.tableSchema(spark, tableDir).fieldNames.toSeq
+    val current = IcebergLite.declaredSchema(meta).fieldNames.toSeq
     require(info.schema().fieldNames.toSeq == current,
       s"write to $tableName: the rows have columns " +
         s"${info.schema().fieldNames.mkString(", ")} but the table now has " +
         s"${current.mkString(", ")}; register the name again")
-    val (specItems, sortCols) = IcebergLite.writeLayout(spark, tableDir)
-    new GraftWrite(spark, tableName, tableDir, info.schema(), specItems,
-      sortCols, mode)
+    new GraftWrite(spark, tableName, meta, info.schema(), mode)
   }
 }
 
@@ -203,9 +195,9 @@ class GraftWriteBuilder(spark: SparkSession, tableName: String,
   * DataFrame route's repartition, which AQE coalesces but never splits,
   * so both routes write the same files (a rebalance would split large
   * partitions). */
-class GraftWrite(spark: SparkSession, tableName: String, tableDir: String,
-                 rowSchema: StructType, specItems: Seq[String],
-                 sortCols: Seq[String], mode: IcebergLite.WriteMode)
+class GraftWrite(spark: SparkSession, tableName: String,
+                 meta: IcebergLite.TableMeta, rowSchema: StructType,
+                 mode: IcebergLite.WriteMode)
     extends Write with RequiresDistributionAndOrdering {
 
   override def description(): String = s"GraftWrite $tableName"
@@ -214,9 +206,9 @@ class GraftWrite(spark: SparkSession, tableName: String, tableDir: String,
   private def asc(e: Expression): SortOrder =
     Expressions.sort(e, SortDirection.ASCENDING)
   private val transforms: Seq[Expression] =
-    specItems.map(GraftTableCatalog.toTransform)
+    meta.specItems.map(GraftTableCatalog.toTransform)
   private val sortOrder: Seq[SortOrder] =
-    sortCols.map(c => asc(Expressions.column(c)))
+    meta.sortOrderCols.map(c => asc(Expressions.column(c)))
 
   override def requiredDistribution(): Distribution =
     if (sortOrder.nonEmpty) Distributions.ordered(sortOrder.toArray)
@@ -228,24 +220,23 @@ class GraftWrite(spark: SparkSession, tableName: String, tableDir: String,
   override def requiredOrdering(): Array[SortOrder] =
     (transforms.map(asc) ++ sortOrder).toArray
 
-  // staged under the snapshot this statement will commit, where the
-  // position-delta write stages its rows
-  override def toBatch(): BatchWrite = new GraftBatchWrite(spark, tableDir,
-    s"$tableDir/data/s${IcebergLite.nextSnapshotIdOf(spark, tableDir)}-w",
-    rowSchema, mode)
+  override def toBatch(): BatchWrite =
+    new GraftBatchWrite(spark, meta, rowSchema, mode)
 }
 
-class GraftBatchWrite(spark: SparkSession, tableDir: String, dataDir: String,
+class GraftBatchWrite(spark: SparkSession, meta: IcebergLite.TableMeta,
                       rowSchema: StructType, mode: IcebergLite.WriteMode)
     extends BatchWrite {
 
+  private val dataDir = GraftBatchWrite.staging(meta)
+
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory =
-    IcebergLite.dataWriterFactory(spark, tableDir, dataDir, rowSchema)
+    IcebergLite.dataWriterFactory(spark, meta, dataDir, rowSchema)
 
   // ONE snapshot from the committed task messages only
   override def commit(messages: Array[WriterCommitMessage]): Unit =
-    IcebergLite.commitWrite(spark, tableDir,
+    IcebergLite.commitWrite(spark, meta,
       messages.toSeq.collect { case m: GraftWriteCommit => m.files }.flatten,
       mode = mode)
 
@@ -254,6 +245,12 @@ class GraftBatchWrite(spark: SparkSession, tableDir: String, dataDir: String,
 }
 
 object GraftBatchWrite {
+  /** A statement's staging directory: keyed to the snapshot it will
+    * commit (single-writer discipline, as everywhere in IcebergLite);
+    * "-w" keeps it clear of same-snapshot API writes. */
+  def staging(meta: IcebergLite.TableMeta, kind: String = "s"): String =
+    s"${meta.dir}/data/$kind${meta.nextSnapshotId}-w"
+
   /** An aborted write's staging directories go. */
   def dropStaging(spark: SparkSession, dirs: String*): Unit =
     dirs.foreach { d =>
@@ -278,16 +275,18 @@ case class GraftDataFile(path: String, partition: Seq[Any], rowCount: Long,
 /** Commit message: the data files one task wrote. */
 case class GraftWriteCommit(files: Seq[GraftDataFile]) extends WriterCommitMessage
 
-class GraftDeltaBatchWrite(spark: SparkSession, tableDir: String,
-                           dataDir: String, deleteDir: String,
+class GraftDeltaBatchWrite(spark: SparkSession, meta: IcebergLite.TableMeta,
                            rowSchema: StructType)
     extends DeltaBatchWrite {
+
+  private val dataDir = GraftBatchWrite.staging(meta)
+  private val deleteDir = GraftBatchWrite.staging(meta, "deletes-s")
 
   override def createBatchWriterFactory(phys: PhysicalWriteInfo)
       : DeltaWriterFactory =
     GraftDeltaWriterFactory(
       if (rowSchema.isEmpty) None
-      else Some(IcebergLite.dataWriterFactory(spark, tableDir, dataDir,
+      else Some(IcebergLite.dataWriterFactory(spark, meta, dataDir,
         rowSchema)),
       GraftDataWriterFactory.forTable(spark, new Path(deleteDir),
         GraftDeltaWriter.PositionSchema, Nil,
@@ -298,7 +297,7 @@ class GraftDeltaBatchWrite(spark: SparkSession, tableDir: String,
   // speculative attempt's files and counts never enter it
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val done = messages.toSeq.collect { case m: GraftDeltaCommit => m }
-    IcebergLite.commitWrite(spark, tableDir, done.flatMap(_.data),
+    IcebergLite.commitWrite(spark, meta, done.flatMap(_.data),
       done.flatMap(_.deletes), counts = Seq(
         IcebergLite.UpdatedRowsKey -> done.map(_.updated).sum,
         IcebergLite.DeletedRowsKey -> done.map(_.deleted).sum,

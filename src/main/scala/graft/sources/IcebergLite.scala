@@ -780,16 +780,14 @@ object IcebergLite {
     }.toSeq.flatten
   }
 
-  /** The writer factory of a NATIVE V2 write into the table at
-    * `tableDir`: the current contract (spec, field ids, Bloom columns)
-    * over the statement's write schema, landing under `dataDir`. */
-  def dataWriterFactory(spark: SparkSession, tableDir: String,
-                        dataDir: String,
-                        writeSchema: StructType): GraftDataWriterFactory = {
-    val meta = readMeta(spark, tableDir)
+  /** The writer factory of a NATIVE V2 write into the table `meta`:
+    * its contract (spec, field ids, Bloom columns) over the statement's
+    * write schema, landing under `dataDir`. */
+  private[sources] def dataWriterFactory(spark: SparkSession,
+      meta: TableMeta, dataDir: String,
+      writeSchema: StructType): GraftDataWriterFactory =
     GraftDataWriterFactory.forTable(spark, new Path(dataDir), writeSchema,
       meta.partitionSpec, meta.fieldIds, meta.bloomCols)
-  }
 
   /** Manifest entries (status ADDED) for written data files, plus the
     * Bloom sidecar when the table has Bloom columns: records sorted by
@@ -1140,19 +1138,21 @@ object IcebergLite {
     * the partition spec the manifest's files were written under — after
     * spec evolution a list legitimately mixes manifests of different
     * generations, and every reader resolves each through ITS spec. */
-  private case class MRef(path: String, len: Long, nFiles: Int,
-                          addedBy: Long, nRows: Long, content: Int,
-                          specId: Int = 0,
-                          /** EXISTING (carried) entries — nonzero only
-                            * on rewrite manifests; nFiles/nRows count
-                            * ADDED entries per the spec field names. */
-                          existingFiles: Int = 0,
-                          existingRows: Long = 0L) {
+  private[sources] case class MRef(path: String, len: Long, nFiles: Int,
+                                   addedBy: Long, nRows: Long, content: Int,
+                                   specId: Int = 0,
+                                   /** EXISTING (carried) entries — nonzero only
+                                     * on rewrite manifests; nFiles/nRows count
+                                     * ADDED entries per the spec field names. */
+                                   existingFiles: Int = 0,
+                                   existingRows: Long = 0L) {
     def totalFiles: Long = nFiles.toLong + existingFiles
     def totalRows: Long = nRows + existingRows
   }
 
-  private case class TableMeta(
+  /** One table state: a metadata version with its current (or pinned)
+    * snapshot's manifests ([[GraftIcebergTable]] holds one). */
+  private[sources] case class TableMeta(
       /** the table directory (names the table in plans and logs) */
       dir: String,
       version: Int,
@@ -1190,6 +1190,8 @@ object IcebergLite {
     /** The DEFAULT spec — what new writes partition by. */
     def partitionSpec: Seq[IcebergTransforms.PartField] =
       specOf(defaultSpecId)
+    /** The default spec in [[createTable]]'s transform syntax. */
+    def specItems: Seq[String] = partitionSpec.map(renderSpec)
     def specOf(id: Int): Seq[IcebergTransforms.PartField] =
       specs.find(_._1 == id).map(_._2).getOrElse(
         sys.error(s"partition spec $id not in table metadata " +
@@ -1205,13 +1207,25 @@ object IcebergLite {
       topFields(schemaNode).map(f2 => f2._2 -> f2._1).toMap
   }
 
-  private def readMeta(spark: SparkSession, tableDir: String,
-                       snapshotId: Option[Long] = None): TableMeta = {
-    val root = new Path(tableDir)
-    val metaDir = new Path(root, "metadata")
-    val version = new String(
-      readBytes(spark, new Path(metaDir, "version-hint.text")), "UTF-8")
-      .trim.toInt
+  /** Full metadata reads ([[readMeta]]) so far, in this JVM. */
+  private[sources] val metaReads = new java.util.concurrent.atomic.AtomicLong
+
+  /** The metadata version the version hint names: one small read. */
+  private def versionHint(spark: SparkSession, tableDir: String): Int =
+    new String(readBytes(spark,
+      new Path(tableDir, "metadata/version-hint.text")), "UTF-8").trim.toInt
+
+  /** `base` while the version hint still names it, else a fresh read. */
+  private[sources] def current(spark: SparkSession, base: TableMeta)
+      : TableMeta =
+    if (versionHint(spark, base.dir) == base.version) base
+    else readMeta(spark, base.dir)
+
+  private[sources] def readMeta(spark: SparkSession, tableDir: String,
+                                snapshotId: Option[Long] = None): TableMeta = {
+    metaReads.incrementAndGet()
+    val metaDir = new Path(tableDir, "metadata")
+    val version = versionHint(spark, tableDir)
     val node = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(readBytes(spark, new Path(metaDir, s"v$version.metadata.json")))
     require(node.get("format-version").asInt() == 1,
@@ -1417,7 +1431,7 @@ object IcebergLite {
 
   // ---- copy-on-write maintenance ----------------------------------------
 
-  private def declaredSchema(meta: TableMeta): StructType =
+  private[sources] def declaredSchema(meta: TableMeta): StructType =
     StructType(meta.schemaNode.get("fields").elements().asScala.map(f =>
       StructField(f.get("name").asText(), sparkType(f.get("type")),
         !f.get("required").asBoolean())).toSeq)
@@ -1582,8 +1596,11 @@ object IcebergLite {
     * snapshots still time-travel to the full data. Returns the live row
     * count that was dropped, which the snapshot summary records under
     * [[DeletedRowsKey]]. */
-  def truncateTable(spark: SparkSession, tableDir: String): Long = {
-    val meta = readMeta(spark, tableDir)
+  def truncateTable(spark: SparkSession, tableDir: String): Long =
+    truncateTable(spark, readMeta(spark, tableDir))
+
+  private[sources] def truncateTable(spark: SparkSession,
+      meta: TableMeta): Long = {
     val n = liveRowCount(spark, meta)
     commitWrite(spark, meta, replacedBy(spark, meta, ReplaceAll, Nil)._1
       .copy(counts = Seq(DeletedRowsKey -> n)))
@@ -1627,17 +1644,18 @@ object IcebergLite {
     * skipping — a partition-targeted statement scans its partition,
     * never the table) finds the files holding LIVE matches (merge-on-
     * read deletes applied first — a row already deleted cannot match
-    * again). */
+    * again). Filtering on `predicate` itself pushes it to the scan; a
+    * row where it is NULL drops: not matched. */
   private def cowTargets(spark: SparkSession, meta: TableMeta,
                          files: Seq[NativeFileInfo],
                          predicate: org.apache.spark.sql.Column)
       : (Long, Set[String]) = {
-    import org.apache.spark.sql.functions.{coalesce, lit, sum}
+    import org.apache.spark.sql.functions.{lit, sum}
     val cand = candidateFiles(spark, meta, predicate, files)
     val hitAgg =
       if (cand.isEmpty) Array.empty[org.apache.spark.sql.Row]
       else readFiles(spark, meta, cand)
-        .filter(coalesce(predicate, lit(false)))
+        .filter(predicate)
         .groupBy("__file").agg(sum(lit(1L)).as("__m"))
         .collect()
     (hitAgg.map(_.getLong(1)).sum, hitAgg.map(_.getString(0)).toSet)
@@ -1812,14 +1830,15 @@ object IcebergLite {
   def deleteWhereMOR(spark: SparkSession,
                      tableDir: String,
                      predicate: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    import org.apache.spark.sql.functions.col
     val meta = readMeta(spark, tableDir)
     val files = liveFileEntries(spark, meta)
     if (files.isEmpty) return 0L // empty table: nothing to delete
     val cand = candidateFiles(spark, meta, predicate, files)
     if (cand.isEmpty) return 0L
+    // a row where the predicate is NULL drops: not matched
     val matches = readFiles(spark, meta, cand)
-      .filter(coalesce(predicate, lit(false)))
+      .filter(predicate)
       .select(col("__file").as("file_path"), col("__pos").as("pos"))
       .sortWithinPartitions("file_path", "pos")
     // no match: no delete file, and no commit
@@ -1865,13 +1884,15 @@ object IcebergLite {
   /** A native V2 write's commit: the files its committed tasks wrote
     * ([[GraftBatchWrite]], or a position delta, [[GraftDeltaOperation]]),
     * with what `mode` replaces ([[replacedBy]]), published as ONE
-    * snapshot. `counts` land in the summary. */
-  def commitWrite(spark: SparkSession, tableDir: String,
-                  dataFiles: Seq[GraftDataFile],
-                  deleteFiles: Seq[GraftDataFile] = Nil,
-                  mode: WriteMode = Append,
-                  counts: Seq[(String, Long)] = Nil): Unit = {
-    val meta = readMeta(spark, tableDir)
+    * snapshot on `base`, the state the statement planned on — or, when
+    * another commit has moved the version hint since, on the metadata
+    * the hint names ([[current]]). `counts` land in the summary. */
+  private[sources] def commitWrite(spark: SparkSession, base: TableMeta,
+                                   dataFiles: Seq[GraftDataFile],
+                                   deleteFiles: Seq[GraftDataFile] = Nil,
+                                   mode: WriteMode = Append,
+                                   counts: Seq[(String, Long)] = Nil): Unit = {
+    val meta = current(spark, base)
     val (replaced, _) = replacedBy(spark, meta, mode, dataFiles)
     commitWrite(spark, meta, replaced.copy(data = dataFiles ++ replaced.data,
       posDeletes = deleteFiles, counts = counts))
@@ -2173,40 +2194,21 @@ object IcebergLite {
   private def scanInfo(meta: TableMeta, files: Seq[NativeFileInfo],
                        deletes: Option[NativeDeletes]): NativeScanInfo = {
     val schema = declaredSchema(meta)
-    NativeScanInfo(schema, meta.fieldIds, meta.partitionSpec.map(renderSpec),
+    NativeScanInfo(schema, meta.fieldIds, meta.specItems,
       typedSpec(meta.partitionSpec, schema), meta.defaultSpecId,
       meta.sortOrderCols, files, deletes)
   }
 
-  /** Plan a NATIVE V2 batch scan of the current snapshot (or
-    * `snapshotId`), over files of every schema/spec generation, each
-    * with the merge-on-read deletes that apply to it ([[withDeletes]]).
-    * File skipping is the SAME [[pruneFiles]] pass the DataFrame
-    * readers use (manifest bounds, partition transforms, Bloom
-    * sidecars). */
-  private[sources] def nativeScanInfo(spark: SparkSession, tableDir: String,
-                                      preds: Seq[Pred] = Nil,
-                                      snapshotId: Option[Long] = None)
-      : NativeScanInfo = {
-    val meta = readMeta(spark, tableDir, snapshotId)
+  /** Plan a NATIVE V2 batch scan of `meta`'s snapshot, over files of
+    * every schema/spec generation, each with the merge-on-read deletes
+    * that apply to it ([[withDeletes]]). File skipping is the SAME
+    * [[pruneFiles]] pass the DataFrame readers use (manifest bounds,
+    * partition transforms, Bloom sidecars). */
+  private[sources] def nativeScanInfo(spark: SparkSession, meta: TableMeta,
+                                      preds: Seq[Pred] = Nil)
+      : NativeScanInfo =
     withDeletes(spark, meta, pruneFiles(spark, meta, preds)._1,
       coversWholeTable = preds.isEmpty)
-  }
-
-  /** The current partition spec (rendered as [[tablePartitionSpec]]
-    * renders it) and sort order, from ONE metadata read: what the
-    * native V2 writes cluster and order their rows by. */
-  private[sources] def writeLayout(spark: SparkSession, tableDir: String)
-      : (Seq[String], Seq[String]) = {
-    val meta = readMeta(spark, tableDir)
-    (meta.partitionSpec.map(renderSpec), meta.sortOrderCols)
-  }
-
-  /** The snapshot id the NEXT commit will take — the native V2 write
-    * keys its staging directory to it (single-writer discipline, as
-    * everywhere on this metadata chain). */
-  def nextSnapshotIdOf(spark: SparkSession, tableDir: String): Long =
-    readMeta(spark, tableDir).nextSnapshotId
 
   /** Rewrite every live file into one fresh snapshot — the small-file
     * compaction pass after many incremental appends. Content-preserving
@@ -2726,8 +2728,8 @@ object IcebergLite {
   case object MetaCount extends MetaAgg
   final case class MetaMinMax(col: String, wantMax: Boolean) extends MetaAgg
 
-  /** Answer a WHOLE pushed aggregation from ONE metadata snapshot —
-    * `readMeta` once, each manifest read once, every expression
+  /** Answer a WHOLE pushed aggregation from ONE table state — `meta`,
+    * the scan's own, each manifest read once, every expression
     * answered from the same state. (Answering each expression with an
     * independent metadata read could return a row mixing two snapshots
     * under a concurrent commit — a torn read the scan path, which pins
@@ -2749,10 +2751,9 @@ object IcebergLite {
     * Returned values align with `reqs`: counts as Long, MIN/MAX as the
     * Catalyst-internal value (date = days int, timestamp = micros
     * long), null for a provably-empty table (SQL NULL aggregate). */
-  def exactAggsFromMetadata(spark: SparkSession, tableDir: String,
-                            reqs: Seq[MetaAgg]): Option[Seq[Any]] = {
+  private[sources] def exactAggsFromMetadata(spark: SparkSession,
+      meta: TableMeta, reqs: Seq[MetaAgg]): Option[Seq[Any]] = {
     if (reqs.isEmpty) return None
-    val meta = readMeta(spark, tableDir)
     if (meta.manifests.exists(_.content != 0)) return None
     val fields = topFields(meta.schemaNode)
     // resolve every MIN/MAX up front (cheap refusals before any
@@ -2943,7 +2944,7 @@ object IcebergLite {
   /** The current default partition spec, rendered in [[createTable]]'s
     * transform syntax (what appends must pass as `partitionBy`). */
   def tablePartitionSpec(spark: SparkSession, tableDir: String): Seq[String] =
-    readMeta(spark, tableDir).partitionSpec.map(renderSpec)
+    readMeta(spark, tableDir).specItems
 
   /** Snapshot ids, oldest first — the time-travel surface. */
   def snapshotIds(spark: SparkSession, tableDir: String): Seq[Long] =
@@ -3167,10 +3168,7 @@ object IcebergLite {
   /** The table's declared schema (from the metadata json, not from any
     * data file — the schema-as-contract Iceberg property). */
   def tableSchema(spark: SparkSession, tableDir: String): StructType =
-    StructType(readMeta(spark, tableDir).schemaNode.get("fields")
-      .elements().asScala.map(f =>
-        StructField(f.get("name").asText(), sparkType(f.get("type")),
-          !f.get("required").asBoolean())).toSeq)
+    declaredSchema(readMeta(spark, tableDir))
 
   // ---- metadata tables (the operational surface) --------------------------
 
@@ -3187,11 +3185,18 @@ object IcebergLite {
     * kinds; `snapshots` always shows the full retained log. */
   def metaTable(spark: SparkSession, tableDir: String, kind: String,
                 snapshotId: Option[Long] = None): DataFrame = {
+    val (schema, rows) = metaRows(spark, tableDir, kind, snapshotId)
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** The schema and rows of a [[metaTable]], from one metadata read. */
+  private[sources] def metaRows(spark: SparkSession, tableDir: String,
+      kind: String, snapshotId: Option[Long] = None)
+      : (StructType, Seq[org.apache.spark.sql.Row]) = {
     import org.apache.spark.sql.Row
     val meta = readMeta(spark, tableDir, snapshotId)
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    def frame(schema: StructType, rows: Seq[Row]): DataFrame =
-      spark.createDataFrame(rows.asJava, schema)
+    def frame(schema: StructType, rows: Seq[Row]) = (schema, rows)
     kind match {
       case "snapshots" =>
         frame(StructType(Seq(

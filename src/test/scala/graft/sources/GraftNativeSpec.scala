@@ -1016,7 +1016,7 @@ class GraftNativeSpec extends SparkSuite {
       IcebergLite.deleteWhereMOR(spark, dir, col("id") < deleted)
       assert(IcebergLite.readTable(spark, dir).count() === 200000L - deleted)
       val scan = new GraftFileSetTable(table,
-          IcebergLite.nativeScanInfo(spark, dir))
+          IcebergLite.nativeScanInfo(spark, IcebergLite.readMeta(spark, dir)))
         .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
         .build().toBatch
       val bytes = new java.io.ByteArrayOutputStream()

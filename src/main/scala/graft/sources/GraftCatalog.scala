@@ -11,9 +11,8 @@ import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchT
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, StagedTable, StagingTableCatalog, SupportsNamespaces, SupportsRead, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.{Expressions, Literal, Transform}
-import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
-import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder, SupportsPushDownAggregates}
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsOverwrite, V1Write, Write, WriteBuilder}
+import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsOverwrite, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{Filter, InsertableRelation}
@@ -523,7 +522,8 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
   private var held: Option[IcebergLite.TableMeta] = None
 
   /** The held state, read on first use. A builder call (`refresh`)
-    * re-reads it when the version hint has moved, so a registered
+    * re-reads it when the version hint no longer names its metadata
+    * file ([[IcebergLite.current]]), so a registered
     * name's long-lived relation and a reused DataFrame plan on the
     * current table too; a pinned table never refreshes. */
   private def meta(refresh: Boolean = false): IcebergLite.TableMeta =
@@ -574,13 +574,16 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
     // against; the aggregate answer and the file set come from it too
     val state = meta(refresh = true)
     val fullSchema = IcebergLite.declaredSchema(state)
-    new GraftScanBuilder(fullSchema) with SupportsPushDownAggregates {
+    new GraftScanBuilder(fullSchema)
+        with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
       // the pushed metadata-aggregate answer: (schema, one row of
       // values), cached per Aggregation instance so
       // supportCompletePushDown / pushAggregation / build all see ONE
       // answer and the manifests are read once
       private var aggAnswer: Option[(StructType, Seq[Any])] = None
-      private var aggAnsweredFor: Aggregation = _
+      private var aggAnsweredFor
+          : org.apache.spark.sql.connector.expressions.aggregate
+            .Aggregation = _
 
       /** METADATA-ONLY aggregate pushdown: a bare `COUNT(*)` /
         * `MIN(col)` / `MAX(col)` over int/long/date/timestamp (no
@@ -598,8 +601,9 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
         * (pushFilters returns all as residuals), so Spark only offers
         * the aggregate when NO filter sits between it and the scan.
         */
-      private def metadataAggAnswer(agg: Aggregation)
-          : Option[(StructType, Seq[Any])] = {
+      private def metadataAggAnswer(
+          agg: org.apache.spark.sql.connector.expressions.aggregate
+            .Aggregation): Option[(StructType, Seq[Any])] = {
         import org.apache.spark.sql.connector.expressions.NamedReference
         import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
         import org.apache.spark.sql.types.{LongType, StructField}
@@ -634,7 +638,9 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
           .map(values => (StructType(fields.result()), values))
       }
 
-      private def answerAgg(agg: Aggregation): Boolean = {
+      private def answerAgg(
+          agg: org.apache.spark.sql.connector.expressions.aggregate
+            .Aggregation): Boolean = {
         if (!(agg eq aggAnsweredFor)) {
           aggAnswer = metadataAggAnswer(agg)
           aggAnsweredFor = agg
@@ -642,11 +648,13 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
         aggAnswer.isDefined
       }
 
-      override def supportCompletePushDown(agg: Aggregation): Boolean =
-        answerAgg(agg)
+      override def supportCompletePushDown(
+          agg: org.apache.spark.sql.connector.expressions.aggregate
+            .Aggregation): Boolean = answerAgg(agg)
 
-      override def pushAggregation(agg: Aggregation): Boolean =
-        answerAgg(agg)
+      override def pushAggregation(
+          agg: org.apache.spark.sql.connector.expressions.aggregate
+            .Aggregation): Boolean = answerAgg(agg)
 
       override def build(): Scan = aggAnswer match {
         case Some((aggSchema, values)) =>
@@ -681,8 +689,9 @@ class GraftIcebergTable(ident: Identifier, val tableDir: String,
   // DELETE with no WHERE never gets here: Spark truncates a
   // TruncatableTable instead.
 
-  override def newRowLevelOperationBuilder(info: RowLevelOperationInfo)
-      : RowLevelOperationBuilder = {
+  override def newRowLevelOperationBuilder(
+      info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
+      : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
     require(snapshotId.isEmpty,
       s"${info.command()} on ${name()}: time-travel reads are immutable")
     val state = meta(refresh = true)

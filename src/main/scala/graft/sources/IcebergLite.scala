@@ -1182,7 +1182,11 @@ object IcebergLite {
       snapshotTs: Map[Long, Long] = Map.empty,
       /** the `snapshot-log`: (timestamp-ms, snapshot-id) entries, one
         * per change of main's head — the AS OF TIMESTAMP surface. */
-      snapshotLog: Seq[(Long, Long)] = Nil) {
+      snapshotLog: Seq[(Long, Long)] = Nil,
+      /** (modification time, length) of the metadata json read: a
+        * recreated table restarts at v1, so the version alone does not
+        * name a state ([[current]]) */
+      stamp: (Long, Long) = (-1L, -1L)) {
     /** Bloom-filtered columns (a persisted contract, like sort order). */
     def bloomCols: Seq[String] =
       props.get(BloomColsProp).toSeq
@@ -1215,19 +1219,32 @@ object IcebergLite {
     new String(readBytes(spark,
       new Path(tableDir, "metadata/version-hint.text")), "UTF-8").trim.toInt
 
-  /** `base` while the version hint still names it, else a fresh read. */
+  /** The metadata json of `version` and its (modification time, length). */
+  private def metaFile(spark: SparkSession, tableDir: String, version: Int)
+      : (Path, (Long, Long)) = {
+    val p = new Path(tableDir, s"metadata/v$version.metadata.json")
+    val st = fs(spark, p).getFileStatus(p)
+    (p, (st.getModificationTime, st.getLen))
+  }
+
+  /** `base` while the version hint still names its metadata file, else a
+    * fresh read. */
   private[sources] def current(spark: SparkSession, base: TableMeta)
-      : TableMeta =
-    if (versionHint(spark, base.dir) == base.version) base
+      : TableMeta = {
+    val version = versionHint(spark, base.dir)
+    if (version == base.version &&
+        metaFile(spark, base.dir, version)._2 == base.stamp) base
     else readMeta(spark, base.dir)
+  }
 
   private[sources] def readMeta(spark: SparkSession, tableDir: String,
                                 snapshotId: Option[Long] = None): TableMeta = {
     metaReads.incrementAndGet()
-    val metaDir = new Path(tableDir, "metadata")
     val version = versionHint(spark, tableDir)
+    // stamped before the read: a file replaced in between re-reads later
+    val (metaPath, stamp) = metaFile(spark, tableDir, version)
     val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(readBytes(spark, new Path(metaDir, s"v$version.metadata.json")))
+      .readTree(readBytes(spark, metaPath))
     require(node.get("format-version").asInt() == 1,
       "only Iceberg format v1 supported")
     val schemaNode = node.get("schema")
@@ -1320,7 +1337,7 @@ object IcebergLite {
       }.getOrElse(Map.empty)
     TableMeta(tableDir, version, schemaNode, specs, defaultSpecId, wantId,
       snapshots, manifests, lastColumnId, sortOrderCols, refs, props,
-      snapshotTs, snapshotLog)
+      snapshotTs, snapshotLog, stamp)
   }
 
   /** Read the table at its current (or a given) snapshot. The data-file

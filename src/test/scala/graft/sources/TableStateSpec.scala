@@ -2,7 +2,8 @@ package graft.sources
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, GraftParquetShim, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftParquetShim, GraftPlanShim,
+  SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.col
 import org.apache.spark.unsafe.types.UTF8String
@@ -112,6 +113,26 @@ class TableStateSpec extends SparkSuite {
     }
   }
 
+  test("a registered name over a recreated table reads and writes the new table") {
+    val dir = s"$wh/recreated"
+    IcebergLite.createEmptyTable(spark,
+      Seq((0L, "")).toDF("id", "v").schema, dir)
+    Catalog.registerIcebergTable(spark, "recreated_reg", dir)
+    def ids(): Seq[Long] =
+      spark.sql("SELECT id FROM recreated_reg").as[Long].collect().sorted.toSeq
+    assert(ids() === Nil)
+    // the directory starts again at v1, the version the name holds
+    IcebergLite.createTable(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
+      dir)
+    assert(IcebergLite.snapshotIds(spark, dir) === Seq(1L))
+    assert(ids() === Seq(1L, 2L))
+    spark.sql("INSERT INTO recreated_reg VALUES (3, 'c')")
+    spark.sql("DELETE FROM recreated_reg WHERE id = 1")
+    assert(ids() === Seq(2L, 3L))
+    assert(IcebergLite.readTable(spark, dir).select("id").as[Long].collect()
+      .sorted.toSeq === Seq(2L, 3L))
+  }
+
   test("a commit on a stale base publishes on the metadata the hint names") {
     val dir = s"$wh/stale_base"
     IcebergLite.createTable(spark, Seq((1L, "a")).toDF("id", "v"), dir)
@@ -135,11 +156,11 @@ class TableStateSpec extends SparkSuite {
     val q = s.sql("SELECT * FROM scat.mt__snapshots")
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.startsWith("LocalTableScan"), plan)
-    var jobs = 0
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
+        jobs.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -149,8 +170,8 @@ class TableStateSpec extends SparkSuite {
       assert(got === Seq((1L, "append"), (2L, "append")))
       // at most the relation's schema, then the scan's rows
       assert(IcebergLite.metaReads.get - before <= 2L)
-      Thread.sleep(200)
-      assert(jobs === 0)
+      GraftPlanShim.drainListeners(spark)
+      assert(jobs.get === 0)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -171,9 +192,7 @@ class TableStateSpec extends SparkSuite {
     spark.listenerManager.register(listener)
     try {
       assert(IcebergLite.deleteWhere(spark, dir, col("lang") === "a") === 2L)
-      var spins = 0
-      while (listener.plans.synchronized(listener.plans.isEmpty) &&
-          spins < 50) { spins += 1; Thread.sleep(50) }
+      GraftPlanShim.drainListeners(spark)
     } finally spark.listenerManager.unregister(listener)
     val plans = listener.plans.synchronized(listener.plans.toList)
     assert(plans.exists(p => p.contains("GraftNativeScan") &&
